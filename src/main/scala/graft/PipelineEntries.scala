@@ -6,11 +6,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.{Dedup, Multimodal, Sessionize, Similarity, TextAnalysis}
+import graft.prepare.ArtifactStore._
 import graft.streaming.StreamOps
 
 /** Training-data pipeline operator entries (dedup, similarity search,
   * text analysis, multimodal, sessionization, streaming) and their DuckDB
-  * oracles. Merged into [[SparkEntry.queries]].
+  * oracles. Merged into [[SparkEntry.queries]]. The prepare-once
+  * artifacts they read live in [[graft.prepare.ArtifactStore]].
   *
   * Oracle notes:
   *  - DuckDB `regexp_replace` needs the 'g' flag to mean replace-all
@@ -23,471 +25,6 @@ import graft.streaming.StreamOps
   *    their recall against exact ground truth.
   */
 object PipelineEntries {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    graft.sources.ParquetNanos.read(s, s"$dir/documents.parquet")
-
-  /** Deterministic corpus cap for the O(N²) VERIFICATION BASELINES
-    * (dedup_prefix, dedup_simhash, dedup_embedding_cosine): beyond
-    * `cap` rows, both engines restrict to the same id-modulo sample
-    * (m = ceil(n/cap), keep id % m == 0). m == 1 at the shipped small
-    * SFs, so sf0.01/sf0.1 outputs are byte-identical to the uncapped
-    * form; at the 10x+ scale fixtures the baselines — whose oracles
-    * exhaustively enumerate pairs and whose own contract is
-    * recall-verification on a sample, never production dedup — get a
-    * bounded input that the single-node oracle can restate (the
-    * previous GRAFT_VERIFY_SKIP rows now get real verdicts at every
-    * scale). Plain modulo (not a hash) so the DuckDB oracle states the
-    * identical sample; the MakeSfN fixtures offset replica ids by
-    * multiples of 10^7, so an id-modulo sample keeps whole replica
-    * groups together and the sampled corpus still contains near-dups. */
-  private[graft] def moduloCap(df: DataFrame, idCol: String, cap: Long,
-                               memoKey: Option[String] = None): DataFrame = {
-    // m is a corpus constant; `memoKey` callers (the entries, keyed per
-    // (session, sfDir, table)) pay the row-count job once per session
-    // instead of once per entry CONSTRUCTION — un-memoized, the eager
-    // count() landed inside Bench's timed region on every pass and in
-    // every Verify build (round-12 advice).
-    def computeM: Long = {
-      val n = df.count()
-      if (n <= cap) 1L else (n + cap - 1) / cap
-    }
-    val m = memoKey match {
-      case Some(k) => moduloCapMemo.computeIfAbsent(
-        df.sparkSession.sparkContext.applicationId + ":" + k + ":" + cap,
-        _ => java.lang.Long.valueOf(computeM)).longValue()
-      case None => computeM
-    }
-    if (m == 1L) df else df.filter(pmod(col(idCol), lit(m)) === 0)
-  }
-  private val moduloCapMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-
-  /** Shared pipeline intermediates as WRITTEN prepare artifacts.
-    *
-    * The expensive corpus-scale stages behind the dedup/ANN entries —
-    * the hashed-shingle signature table, the shared-shingle pair counts,
-    * the verified jaccard>=0.5 pair set, the shingle document
-    * frequencies, the IVF index — are prepare-once-query-many, exactly
-    * like the rollup layouts. They are therefore materialized as ZSTD
-    * parquet under `target/prepared/pipeline/<corpus>/<name>` on first
-    * use and READ back on every use after that, including from a fresh
-    * session/JVM: the build runs once per corpus, not once per session.
-    * (`rm -rf target/prepared` invalidates, same as the rollups — the
-    * CLAUDE.md gate note.) Oracles are unaffected: DuckDB recomputes
-    * from raw text, and the hash-verified jaccard equals the
-    * string-verified one (hashing preserves set cardinalities w.h.p.).
-    *
-    * The per-(session, key) memo keeps repeated queries from re-listing
-    * the directory. */
-  private val artifactMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-  private val artifactLock = new Object
-  /** Bump whenever the BUILD LOGIC of any artifact changes (edits to
-    * Dedup / Similarity / Quantization / this file): the version is part
-    * of the on-disk path, so parquet written by an older build is never
-    * silently reused across JVMs — the gates would otherwise validate
-    * stale results. The derived-artifact CHAIN all rides this one
-    * version (residual_codes <- ivf_centroids + residual_codebooks;
-    * ivfpq_codes <- ivf_centroids + pq_codebooks; pq_codes <-
-    * pq_codebooks_i2; ivf_centroids_base <- ivfTrain), so an edit to
-    * trainPq / encodePq / ivfTrain / encode WITHOUT a bump silently
-    * reuses stale coded corpora that the oracle then "confirms" (it
-    * reads the same stale parquet) — advisor, round 19. */
-  private[graft] val ArtifactVersion = 7
-  private def artifactRoot(dir: String): String =
-    s"target/prepared/pipeline/v$ArtifactVersion/" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
-  private def artifactPath(dir: String, name: String): String =
-    s"${artifactRoot(dir)}/$name"
-
-  /** Placeholder in oracle SQL for the corpus's absolute artifact root:
-    * oracles of entries whose trained state is parquet-persisted (the
-    * residual IVF+PQ index) read that state instead of unrolling the
-    * training — [[graft.Verify]] substitutes the token per sfDir before
-    * dumping oracle_sql.json, so the DuckDB gate sees a plain path. */
-  private[graft] val ArtifactToken = "__GRAFT_PIPELINE_ART__"
-  private[graft] def resolveOracle(sql: String, dir: String): String =
-    sql.replace(ArtifactToken,
-      new java.io.File(artifactRoot(dir)).getAbsolutePath)
-  private def artifact(s: SparkSession, dir: String, name: String)
-                      (build: => DataFrame): DataFrame = {
-    val key = s.sparkContext.applicationId + ":" + dir + ":" + name
-    // NOT computeIfAbsent: artifact builds are recursive (pair_counts
-    // builds from docSigs, which re-enters this map under a different
-    // key), and a nested computeIfAbsent on the same ConcurrentHashMap
-    // throws IllegalStateException("Recursive update") or livelocks when
-    // the keys land in the same bin. get + reentrant-synchronized build +
-    // put: nested lookups never run inside a CHM mapping function.
-    val hit = artifactMemo.get(key)
-    if (hit != null) return hit
-    artifactLock.synchronized {
-      val again = artifactMemo.get(key)
-      if (again != null) return again
-      val path = artifactPath(dir, name)
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        build.write.mode("overwrite")
-          .option("compression", "zstd").parquet(path)
-      // Session-lifetime persist of the scan: artifacts are corpus-
-      // constant inputs shared by several entries per pass, and lazy —
-      // blocks materialize on first use and stay resident across passes.
-      // Deliberately NOT Dedup.pooledPersist: Bench releases pooled
-      // intermediates between passes to measure the operator, but
-      // re-reading a constant index table per pass is not part of any
-      // operator's cost (round-8 bench showed +31% on the blocked
-      // jaccard from exactly that re-read).
-      val df = s.read.parquet(path)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      artifactMemo.put(key, df)
-      df
-    }
-  }
-
-  /** Hashed-shingle signature table (Dedup.signatures): the headline
-    * dedup queries (minhash, exact/blocked n-gram jaccard, clusters) all
-    * start from it, so the tokenize+shingle+hash corpus scan — the
-    * single most expensive dedup stage — runs once per corpus ever
-    * (~16 bytes/shingle on disk: trivial next to the corpus). */
-  private def docSigs(s: SparkSession, dir: String): DataFrame =
-    artifact(s, dir, "signatures")(
-      Dedup.signatures(docs(s, dir), "doc_id", "text", n = 3))
-
-  /** Replica-fraction gate for the MinHash exact-replica pre-pass,
-    * measured ONCE per (session, corpus) off the persisted signature
-    * artifact's `g` digest. The fraction is a corpus constant; leaving
-    * the decision to [[Dedup.minhashPairsFromSigs]]'s adaptive default
-    * would re-pay a 2-stage aggregate + collect on EVERY query execution
-    * (bench r11: +0.5 s per warm dedup_minhash pass at sf0.1). */
-  private val replicaGateMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]
-  private def replicaGate(s: SparkSession, dir: String): Boolean =
-    replicaGateMemo.computeIfAbsent(
-      s.sparkContext.applicationId + ":" + dir,
-      _ => {
-        import org.apache.spark.sql.types.DoubleType
-        val row = docSigs(s, dir)
-          .agg(count(lit(1)).cast(DoubleType),
-            count_distinct(col("g")).cast(DoubleType)).collect()(0)
-        java.lang.Boolean.valueOf(row.getDouble(1) <= 0.8 * row.getDouble(0))
-      }).booleanValue()
-
-  /** Shared-shingle pair-count table (Dedup.pairCountsFromSigs over
-    * [[docSigs]]): the inverted-index self-join + count aggregation is
-    * the single expensive stage behind EVERY set-overlap near-dup
-    * measure — exact Jaccard (two thresholds: the 0.3 report and the
-    * 0.5 cluster edges) and containment all filter these five integer
-    * columns. One written join pays for all of them; each measure is
-    * then a codegen'd arithmetic filter over a parquet scan. */
-  private def docPairCounts(s: SparkSession, dir: String): DataFrame =
-    artifact(s, dir, "pair_counts")(
-      Dedup.pairCountsFromSigs(docSigs(s, dir)))
-
-  /** Verified near-dup pair table (exact jaccard >= 0.5 over
-    * [[docPairCounts]]): cluster resolution and representative
-    * materialization both consume exactly this pair set — the written
-    * `pairs/` artifact of a cluster-scale dedup pipeline. */
-  private def jaccardPairs05(s: SparkSession, dir: String): DataFrame =
-    artifact(s, dir, "pairs_j05")(
-      Dedup.jaccardFromPairCounts(docPairCounts(s, dir), threshold = 0.5))
-
-  /** Shingle document-frequency table over the exact-text
-    * REPRESENTATIVES of [[docSigs]] (Dedup.repSignatures): the blocked
-    * jaccard's candidate filter and the stop-shingle profile both read
-    * this |vocab| table. Rep-based since round 13 — the blocked
-    * contract counts df over distinct-text representatives, so replica
-    * factors never inflate a shingle past dfCap. */
-  private def docShingleDf(s: SparkSession, dir: String): DataFrame =
-    artifact(s, dir, "shingle_df")(
-      Dedup.shingleDocFreq(Dedup.repSignatures(docSigs(s, dir))._2))
-
-  /** Shared rep-collapse index over [[docSigs]] — three prepare-once
-    * artifacts (round 20) consumed by every rep-based set-overlap pass
-    * (blocked jaccard, stop-profile pairs, stop-profile families):
-    * `rep_map` (g, id, cnt), `rep_sigs` (id, hs), and `rep_inverted`
-    * (id, g, c) — the df-CLASSIFIED inverted index (rep-based df >= 2).
-    * Before round 20 each invocation re-derived all three per pass
-    * (a corpus aggregate + a join + an explode-join-persist); both the
-    * rare-candidate branch (c <= dfCap) and the stop-profile branch
-    * (c > dfCap) are now filters over the persisted classified index —
-    * the [[docShingleDf]]/[[docPairCounts]] discipline. Cap-agnostic:
-    * the operators apply their own dfCap filters, so blocked (cap 10)
-    * and the stop passes (cap 5) read the same three tables. */
-  private val repIdxMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Dedup.RepIndex]
-  private def repIndex(s: SparkSession, dir: String): Dedup.RepIndex = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    val hit = repIdxMemo.get(key)
-    if (hit != null) return hit
-    artifactLock.synchronized {
-      val again = repIdxMemo.get(key)
-      if (again != null) return again
-      val rep = artifact(s, dir, "rep_map")(
-        Dedup.repSignatures(docSigs(s, dir))._1)
-      val repSigs = artifact(s, dir, "rep_sigs")(
-        Dedup.repSignatures(docSigs(s, dir))._2)
-      val inverted = artifact(s, dir, "rep_inverted")(
-        repSigs.select(col("id"), explode(col("hs")).as("g"))
-          .join(docShingleDf(s, dir).filter(col("c") >= 2), Seq("g"))
-          .select(col("id"), col("g"), col("c")))
-      val v = Dedup.RepIndex(rep, repSigs, inverted)
-      repIdxMemo.put(key, v)
-      v
-    }
-  }
-
-  /** IVF index (Lloyd-trained centroids + bucketed corpus) — index
-    * TRAINING is prepare-phase work written once per corpus
-    * (`ivf_centroids`, `ivf_buckets`); the per-query cost is nprobe
-    * bucket joins + exact re-rank. Centroids are nlist x dim — bounded
-    * driver state by contract, collected from the written table. */
-  // NOT computeIfAbsent, for all three trained-state memos below: the
-  // build closures run Spark actions and re-enter artifact() (and could
-  // re-enter EACH OTHER from a future artifact build), and a nested
-  // re-entry inside a ConcurrentHashMap mapping function throws
-  // IllegalStateException("Recursive update") or livelocks. Same
-  // get + reentrant-synchronized-build + put discipline as artifact()
-  // itself, on the same lock (reentrant, so artifact() calls inside the
-  // build are safe).
-  private val ivfMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Seq[Float]], DataFrame)]
-  private def ivfIndex(s: SparkSession, dir: String): (Array[Seq[Float]], DataFrame) = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    val hit = ivfMemo.get(key)
-    if (hit != null) return hit
-    artifactLock.synchronized {
-      val again = ivfMemo.get(key)
-      if (again != null) return again
-      val centDf = artifact(s, dir, "ivf_centroids") {
-        val trained = Similarity.ivfTrain(embeddings(s, dir),
-          "vec_id", "embedding", nlist = 16, iters = 3)
-        import s.implicits._
-        trained.toSeq.zipWithIndex
-          .map { case (v, i) => (i, v) }.toDF("bucket", "centroid")
-      }
-      val cent: Array[Seq[Float]] = centDf.orderBy(col("bucket"))
-        .select(col("centroid")).collect().map(_.getSeq[Float](0))
-      val bucketed = artifact(s, dir, "ivf_buckets")(
-        Similarity.ivfBucketedCorpus(embeddings(s, dir),
-          "vec_id", "embedding", cent))
-      val v = (cent, bucketed)
-      ivfMemo.put(key, v)
-      v
-    }
-  }
-  private def embeddings(s: SparkSession, dir: String): DataFrame =
-    graft.sources.ParquetNanos.read(s, s"$dir/embeddings.parquet")
-
-  /** IVF centroids trained on ann_ivf_increment's BASE slice
-    * (vec_id % 10 >= 2) — prepare-phase artifact (`ivf_centroids_base`,
-    * round 20): the increment entry previously re-ran the full Lloyd
-    * training (init collect + 3 rounds, a driver aggregate+collect per
-    * round) on EVERY invocation; the nightly-append query path only
-    * ASSIGNS the increment to the existing centroids. Same
-    * write/collect-back discipline as [[ivfIndex]]: every value is
-    * float-representable (float-rounded Lloyd means; init vectors are
-    * corpus floats), so the parquet round trip is bit-exact and the
-    * DuckDB oracle reads literally the same trained state. */
-  private val ivfBaseMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Seq[Float]]]
-  private def ivfBaseCentroids(s: SparkSession, dir: String): Array[Seq[Float]] = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    val hit = ivfBaseMemo.get(key)
-    if (hit != null) return hit
-    artifactLock.synchronized {
-      val again = ivfBaseMemo.get(key)
-      if (again != null) return again
-      val centDf = artifact(s, dir, "ivf_centroids_base") {
-        val trained = Similarity.ivfTrain(
-          embeddings(s, dir).filter(pmod(col("vec_id"), lit(10)) >= 2),
-          "vec_id", "embedding", nlist = 16, iters = 3)
-        import s.implicits._
-        trained.toSeq.zipWithIndex
-          .map { case (v, i) => (i, v) }.toDF("bucket", "centroid")
-      }
-      val cent: Array[Seq[Float]] = centDf.orderBy(col("bucket"))
-        .select(col("centroid")).collect().map(_.getSeq[Float](0))
-      ivfBaseMemo.put(key, cent)
-      cent
-    }
-  }
-
-  /** Residual-PQ codebooks over the [[ivfIndex]] centroids (the FAISS
-    * IndexIVFPQ trained state), persisted as `residual_codebooks`
-    * (s, j, cent: array<double>) and COLLECTED BACK from the written
-    * table, so the engine and the DuckDB oracle consume literally the
-    * same parquet state — every codebook value is float-representable
-    * (trainPq float-rounds means; init subvectors are corpus floats), so
-    * the write/read round trip is bit-exact. m*k*(dim/m) doubles: driver
-    * state stays codebook-sized by contract. */
-  private val residualCbMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Array[Double]]]]
-  private def residualCodebooks(s: SparkSession, dir: String,
-                                cent: Array[Seq[Float]]): Array[Array[Array[Double]]] = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    val hit = residualCbMemo.get(key)
-    if (hit != null) return hit
-    artifactLock.synchronized {
-      val again = residualCbMemo.get(key)
-      if (again != null) return again
-      val cbDf = artifact(s, dir, "residual_codebooks") {
-        val trained = graft.operators.Quantization.trainResidualCodebooks(
-          embeddings(s, dir), "vec_id", "embedding", cent,
-          m = 8, kCodes = 16, iters = 3)
-        import s.implicits._
-        trained.zipWithIndex.flatMap { case (sub, si) =>
-          sub.zipWithIndex.map { case (cw, j) => (si, j, cw.toSeq) }
-        }.toSeq.toDF("s", "j", "cent")
-      }
-      val rows = cbDf.collect()
-      val m = rows.map(_.getInt(0)).max + 1
-      val kk = rows.map(_.getInt(1)).max + 1
-      // completeness: a truncated/partial artifact read would otherwise
-      // leave null cells surfacing as an opaque NPE far from the cause
-      // (advisor, round 19)
-      require(rows.length == m * kk,
-        s"residual_codebooks incomplete: ${rows.length} rows for ${m}x$kk")
-      val out = Array.ofDim[Array[Double]](m, kk)
-      rows.foreach { r =>
-        out(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
-      }
-      residualCbMemo.put(key, out)
-      out
-    }
-  }
-
-  /** Plain (non-residual) PQ codebooks over the corpus vectors,
-    * persisted per (artifact name, iters) as `(s, j, cent:
-    * array<double>)` and COLLECTED BACK from the written table — the
-    * [[residualCodebooks]] discipline: every value is
-    * float-representable (trainPq float-rounds means; init subvectors
-    * are corpus floats), so the write/read round trip is bit-exact and
-    * the DuckDB oracle consumes literally the same parquet state.
-    * Two instances exist because two entries trained with different
-    * iteration counts long before the artifacts did: `pq_codebooks`
-    * (iters=3, ann_ivfpq_topk) and `pq_codebooks_i2` (iters=2,
-    * ann_pq_topk) — the artifact must reproduce each entry's historical
-    * values exactly. */
-  private val pqCbMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Array[Double]]]]
-  private def pqCodebooksAt(s: SparkSession, dir: String,
-                            name: String, iters: Int): Array[Array[Array[Double]]] = {
-    val key = s.sparkContext.applicationId + ":" + dir + ":" + name
-    val hit = pqCbMemo.get(key)
-    if (hit != null) return hit
-    artifactLock.synchronized {
-      val again = pqCbMemo.get(key)
-      if (again != null) return again
-      val cbDf = artifact(s, dir, name) {
-        val trained = graft.operators.Quantization.trainPq(
-          embeddings(s, dir), "vec_id", "embedding", m = 8, k = 16,
-          iters = iters)
-        import s.implicits._
-        trained.zipWithIndex.flatMap { case (sub, si) =>
-          sub.zipWithIndex.map { case (cw, j) => (si, j, cw.toSeq) }
-        }.toSeq.toDF("s", "j", "cent")
-      }
-      val rows = cbDf.collect()
-      val m = rows.map(_.getInt(0)).max + 1
-      val kk = rows.map(_.getInt(1)).max + 1
-      // completeness: a truncated/partial artifact read would otherwise
-      // leave null cells surfacing as an opaque NPE far from the cause
-      // (advisor, round 19)
-      require(rows.length == m * kk,
-        s"$name incomplete: ${rows.length} rows for ${m}x$kk")
-      val out = Array.ofDim[Array[Double]](m, kk)
-      rows.foreach { r =>
-        out(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
-      }
-      pqCbMemo.put(key, out)
-      out
-    }
-  }
-  private def pqCodebooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqCodebooksAt(s, dir, "pq_codebooks", iters = 3)
-
-  /** Flat-PQ code table for ann_pq_topk — `(n_id, codes)` persisted once
-    * per corpus (`pq_codes`) from the iters=2 codebooks; the flat ADC
-    * scan reads this instead of re-encoding the corpus per query. */
-  private def pqCoded2(s: SparkSession, dir: String)
-      : (Array[Array[Array[Double]]], DataFrame) = {
-    val cb = pqCodebooksAt(s, dir, "pq_codebooks_i2", iters = 2)
-    val codes = artifact(s, dir, "pq_codes")(
-      embeddings(s, dir).select(col("vec_id").as("n_id"),
-        graft.operators.Quantization.encodePq(col("embedding"), cb)
-          .as("codes")))
-    (cb, codes)
-  }
-
-  /** IVF+PQ coded corpus — `(n_id, bucket, codes)` persisted once per
-    * corpus (`ivfpq_codes`), built from the shared [[ivfIndex]] centroids
-    * and [[pqCodebooks]]. Round-19: ann_ivfpq_topk previously re-TRAINED
-    * both quantizers and re-ENCODED the whole corpus on every invocation
-    * (the exact shape the round-16 int8 finding prescribed away); the
-    * query path now scans this narrow code table and re-ranks only the
-    * refine*k shortlist against the float vectors. Buckets and codes are
-    * deterministic integer functions of persisted float state, so the
-    * write/read round trip is exact. */
-  private def ivfPqCoded(s: SparkSession, dir: String)
-      : (Array[Seq[Float]], Array[Array[Array[Double]]], DataFrame) = {
-    val (cent, _) = ivfIndex(s, dir)
-    val cb = pqCodebooks(s, dir)
-    val coded = artifact(s, dir, "ivfpq_codes")(
-      graft.operators.Quantization.pqCodedCorpus(
-        embeddings(s, dir), "vec_id", "embedding", cent, cb))
-    (cent, cb, coded)
-  }
-
-  /** Residual IVF+PQ coded corpus — `(n_id, bucket, codes)` persisted
-    * once per corpus (`residual_codes`) from the shared [[ivfIndex]]
-    * centroids and [[residualCodebooks]]; same round-19 rationale as
-    * [[ivfPqCoded]] (the residual entry persisted only its TRAINED state
-    * and still re-assigned + re-encoded the corpus per query). */
-  private def residualCoded(s: SparkSession, dir: String,
-                            cent: Array[Seq[Float]],
-                            cb: Array[Array[Array[Double]]]): DataFrame =
-    artifact(s, dir, "residual_codes")(
-      graft.operators.Quantization.residualCodedCorpus(
-        embeddings(s, dir), "vec_id", "embedding", cent, cb))
-
-  /** Int8 scalar-quantization index: per-dim (min, max) ranges and the
-    * ENCODED CODE COLUMN, both parquet-persisted at artifact-build time
-    * (the `ivf_centroids` discipline). Quantization is prepare-phase
-    * work paid once per corpus — the query path scans the 4x-smaller
-    * code table and never re-encodes (round-16 judge finding #2: the
-    * previous per-query re-encode made ann_int8_topk the one
-    * comparable-workload bench row >2x its DuckDB twin). Ranges are
-    * collected back from the WRITTEN table so the engine's plan
-    * literals and the DuckDB oracle consume literally the same state
-    * (every value is float-representable — corpus float min/max — so
-    * the write/read round trip is bit-exact). */
-  private val int8Memo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[(Double, Double)], DataFrame)]
-  private def int8Index(s: SparkSession, dir: String): (Array[(Double, Double)], DataFrame) = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    val hit = int8Memo.get(key)
-    if (hit != null) return hit
-    artifactLock.synchronized {
-      val again = int8Memo.get(key)
-      if (again != null) return again
-      val rangeDf = artifact(s, dir, "int8_ranges") {
-        val tr = graft.operators.Quantization.trainRanges(
-          embeddings(s, dir), "embedding")
-        import s.implicits._
-        tr.zipWithIndex.map { case ((mn, mx), i) => (i, mn, mx) }.toSeq
-          .toDF("pos", "mn", "mx")
-      }
-      val rows = rangeDf.collect()
-      val ranges = new Array[(Double, Double)](rows.length)
-      rows.foreach(r => ranges(r.getInt(0)) = (r.getDouble(1), r.getDouble(2)))
-      val codes = artifact(s, dir, "int8_codes")(
-        embeddings(s, dir).select(col("vec_id").as("n_id"),
-          graft.operators.Quantization.encode(col("embedding"), ranges)
-            .as("codes")))
-      val v = (ranges, codes)
-      int8Memo.put(key, v)
-      v
-    }
-  }
 
   /** Hash-sharded greedy sequence packing over (doc_id, lang, n_tokens):
     * route each doc to a deterministic shard (portable md5-56 of doc_id
@@ -873,7 +410,7 @@ object PipelineEntries {
     // pairs; banding recall for hamming<=3 is GUARANTEED (pigeonhole over
     // 4 bands), so candidate pruning cannot change the output
     "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashPairs(moduloCap(docs(s, dir), "doc_id", 5000L, Some(dir + ":documents")),
+      Dedup.simhashPairs(moduloCap(docs(s, dir), "doc_id", 5000L, Some(dir -> "documents")),
           "doc_id", "text", maxHamming = 3,
           portableHash = true)
         .select(col("a_id"), col("b_id"),
@@ -931,13 +468,13 @@ object PipelineEntries {
     // exact-recall prefix-filtered pairs (PPJoin): the oracle is the
     // EXHAUSTIVE J>=0.7 pair set — passing proves zero recall loss
     "dedup_prefix" -> ((s, dir) =>
-      Dedup.prefixJaccardPairs(moduloCap(docs(s, dir), "doc_id", 5000L, Some(dir + ":documents")),
+      Dedup.prefixJaccardPairs(moduloCap(docs(s, dir), "doc_id", 5000L, Some(dir -> "documents")),
         "doc_id", "text", n = 3, threshold = 0.7)),
 
     // exact all-pairs cosine — the VERIFICATION BASELINE for the banded
     // LSH scale path below (O(N^2); never the production path)
     "dedup_embedding_cosine" -> ((s, dir) =>
-      Dedup.embeddingCosinePairs(moduloCap(embeddings(s, dir), "vec_id", 2000L, Some(dir + ":embeddings")),
+      Dedup.embeddingCosinePairs(moduloCap(embeddings(s, dir), "vec_id", 2000L, Some(dir -> "embeddings")),
         "vec_id", "embedding", threshold = 0.45)),
 
     // scale path: banded portable sign-LSH candidates + exact cosine
@@ -1667,23 +1204,6 @@ object PipelineEntries {
     * whose merge logic only shows up across batches (stream_upsert).
     * The staged files are micros timestamps (ParquetNanos already
     * converted), so the stream schema is plain TimestampType. */
-  /** Stage the deterministic clip table as 4 range-partitioned parquet
-    * files for the media file-stream source (path carries
-    * ArtifactVersion: the clip bytes are BUILT from the video fixture
-    * formula, so an unbumped formula edit must not silently reuse stale
-    * blobs the way a verbatim events copy safely can). */
-  private def mediaStreamDir(s: SparkSession, dir: String): String = {
-    val name0 = new java.io.File(dir).getName
-    val d = s"/root/repo/target/tmp/media_stream_v${ArtifactVersion}_$name0"
-    if (!new java.io.File(s"$d/_SUCCESS").exists()) {
-      Multimodal.videoMediaTable(s, docs(s, dir), "doc_id")
-        .select(col("media_id"), col("blob"))
-        .repartitionByRange(4, col("media_id"))
-        .write.mode("overwrite").parquet(d)
-    }
-    d
-  }
-
   private def eventsStream4(s: SparkSession, dir: String): (String, DataFrame) = {
     val name0 = new java.io.File(dir).getName
     val streamDir = new java.io.File(s"/root/repo/target/tmp/events_stream4_$name0")

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.prepare.ArtifactStore
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -79,28 +80,13 @@ object Verify {
         System.err.println(s"[verify] $name SKIPPED (GRAFT_VERIFY_SKIP)")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Resolve the pipeline-artifact path token per sfDir: oracles of
-    // entries with parquet-persisted trained state (residual IVF+PQ)
-    // read that state by absolute path in the DuckDB gate.
-    val json = SparkEntry.oracleSql.filterNot { case (k, _) => skip(k) }
-      .map { case (k, v) =>
-        s"${q(k)}: ${q(PipelineEntries.resolveOracle(v, sfDir))}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // entries with parquet-persisted trained state (IVF/PQ/int8) read
+    // that state by absolute path in the DuckDB gate.
+    ArtifactStore.writeOracleJson(s"$outDir/oracle_sql.json", sfDir,
+      SparkEntry.oracleSql.filterNot { case (k, _) => skip(k) })
     val timesJson = times.toSeq.sortBy(-_._2)
-      .map { case (k, v) => s"${q(k)}: ${"%.3f".format(v)}" }
+      .map { case (k, v) => s"${ArtifactStore.jsonString(k)}: ${"%.3f".format(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_times.json"), timesJson)
     def rmAll(f: java.io.File): Unit = {

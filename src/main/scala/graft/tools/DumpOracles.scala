@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 /** Dev tool: write SparkEntry.oracleSql to <outDir>/oracle_sql.json
   * WITHOUT executing any query — tools/bench_oracle.py only needs the
   * SQL map, so scale-fixture DuckDB timing runs don't have to pay a
@@ -13,20 +11,8 @@ object DumpOracles {
     val outDir = if (args.length > 0) args(0) else "/root/repo/target/verify_out"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     new java.io.File(outDir).mkdirs()
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql.toSeq.sortBy(_._1)
-      .map { case (n, sql) =>
-        s"${q(n)}: ${q(graft.PipelineEntries.resolveOracle(sql, sfDir))}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.prepare.ArtifactStore.writeOracleJson(s"$outDir/oracle_sql.json",
+      sfDir, graft.SparkEntry.oracleSql.toSeq.sortBy(_._1))
     println(s"wrote $outDir/oracle_sql.json")
   }
 }

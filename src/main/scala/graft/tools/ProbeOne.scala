@@ -1,5 +1,4 @@
 package graft.tools
-import java.nio.file.{Files, Paths}
 /** Dev probe: dump one or more SparkEntry queries (comma-separated) +
   * their oracles for tools/check.py — the targeted inner loop next to
   * the full graft.Verify run. */
@@ -15,20 +14,8 @@ object ProbeOne {
       graft.SparkEntry.queries(name)(spark, sfDir)
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = names.toSeq
-      .flatMap(n => graft.SparkEntry.oracleSql.get(n).map(sql =>
-        s"${q(n)}: ${q(graft.PipelineEntries.resolveOracle(sql, sfDir))}"))
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.prepare.ArtifactStore.writeOracleJson(s"$outDir/oracle_sql.json",
+      sfDir, names.toSeq.flatMap(n => graft.SparkEntry.oracleSql.get(n).map(n -> _)))
     spark.stop()
   }
 }

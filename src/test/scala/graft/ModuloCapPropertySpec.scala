@@ -4,7 +4,7 @@ import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.propBoolean
 
 /** Properties of the deterministic id-modulo corpus cap
-  * (PipelineEntries.moduloCap) that the no-skip-list verdicts of the
+  * (prepare.ArtifactStore.moduloCap) that the no-skip-list verdicts of the
   * O(N²) verification baselines hang on: the DuckDB oracles RESTATE the
   * sample as `id % m == 0` with `m = ceil(n/cap)`, so oracle parity
   * requires the Spark side to select exactly that set — and to be the
@@ -27,7 +27,7 @@ object ModuloCapPropertySpec extends Properties("modulo-cap") {
     Prop.forAll(genCase) { case (ids, cap) =>
       import SparkSpecBase.implicits._
       val df = ids.toDF("doc_id").repartition(4)
-      val got = PipelineEntries.moduloCap(df, "doc_id", cap)
+      val got = prepare.ArtifactStore.moduloCap(df, "doc_id", cap)
         .collect().map(_.getLong(0)).sorted.toSeq
       // the oracle-side restatement, in plain Scala
       val n = ids.size.toLong

@@ -759,9 +759,9 @@ class PlanAuditSpec extends SparkSpec {
       val qe = SparkEntry.queries(q)(spark, sfDir).queryExecution
       val all = nodes(qe.sparkPlan)
       val gJoins = all.collect {
-        case b: BroadcastHashJoinExec if longG(b.leftKeys) => b
-        case s: ShuffledHashJoinExec if longG(s.leftKeys) => s
-        case s: SortMergeJoinExec if longG(s.leftKeys) => s }
+        case b: BroadcastHashJoinExec if longG(b.leftKeys) || longG(b.rightKeys) => b
+        case s: ShuffledHashJoinExec if longG(s.leftKeys) || longG(s.rightKeys) => s
+        case s: SortMergeJoinExec if longG(s.leftKeys) || longG(s.rightKeys) => s }
       assert(gJoins.isEmpty,
         s"$q: a join re-appeared on the long shingle key g (the stop " +
           s"profile must be a filter over the classified index) —\n" +
