@@ -24,7 +24,7 @@ final case class ZLayoutDef(
     xCol: String,
     tsCol: String,
     path: String) {
-  def exists: Boolean = new java.io.File(s"$path/_zmeta.json").exists()
+  def exists: Boolean = ZOrder.layoutExists(SparkSession.active, path)
 }
 
 /** Routes a DSL query to a z-ordered layout when provably exact.

@@ -230,7 +230,7 @@ object Prepare {
       val name = d.getPath.getName
       val layoutPath = s"$outRoot/zorder/$name"
       specByName.get(name) match {
-        case Some(zs) if new java.io.File(s"$layoutPath/_zmeta.json").exists() =>
+        case Some(zs) if ZOrder.layoutExists(spark, layoutPath) =>
           ZOrder.appendZOrdered(spark,
             derived.withColumn(ZOrderRouter.SecCol,
               unix_timestamp(col(zs.tsCol))),

@@ -1,5 +1,6 @@
 package graft.prepare
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,10 +20,13 @@ import org.apache.spark.sql.functions._
   *    (`z_cell` — one directory per grid cell), sort within partitions
   *    by the fine key (tight row-group min/max on both dimensions).
   *  - READ: enumerate the cells whose rectangle intersects the query
-  *    box (driver-side, at most 2^cellBits tests), filter
-  *    `z_cell IN (covering)` — partition-level pruning visible as
-  *    PartitionFilters — and keep the EXACT box predicates as residual
-  *    filters, so results never depend on the covering enumeration.
+  *    box (driver-side, at most 2^cellBits tests), list the live cells
+  *    with one `listStatus` of the layout root, and read only the live
+  *    covering cell directories — file listing and planning grow with
+  *    the covering, not with the grid. Filter `z_cell IN (covering)` —
+  *    partition-level pruning visible as PartitionFilters — and keep the
+  *    EXACT box predicates as residual filters, so results never depend
+  *    on the covering enumeration.
   *
   * Grid bounds travel with the layout (`_zmeta.json`): the reader must
   * normalize with the writer's bounds or cell ids would not line up.
@@ -123,6 +127,24 @@ object ZOrder {
       "(e.g. epoch nanos -> seconds) before z-ordering")
   }
 
+  /** The FileSystem of a layout path — derived from the path, not the
+    * default FS (Wrong-FS on non-local roots otherwise — the
+    * Catalog.versionStamp idiom). */
+  private def layoutFs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Does `path` hold a z layout (its `_zmeta.json`)? Routing
+    * ([[graft.engine.ZLayoutDef.exists]]) and refresh-time append key on
+    * this, through the path's own FS: a `java.io` check misses on a
+    * non-local root and silently turns both off. */
+  def layoutExists(spark: SparkSession, path: String): Boolean =
+    layoutFs(spark, path).exists(new Path(path, "_zmeta.json"))
+
+  /** The `z_cell=` directories directly under the layout root. */
+  private def cellDirs(fs: FileSystem, root: Path): Array[FileStatus] =
+    fs.listStatus(root).filter(s =>
+      s.isDirectory && s.getPath.getName.startsWith("z_cell="))
+
   /** Write `df` z-ordered on two long-typed columns. Idempotent per
     * (base definition, bounds, cellBits) via the same canonicalized-plan
     * marker discipline as [[Bucketing.writeBucketed]]. `cellBits` must
@@ -208,17 +230,15 @@ object ZOrder {
     * rather than skip. */
   def appendZOrdered(spark: SparkSession, delta: DataFrame, path: String,
                      xCol: String, yCol: String): Unit = {
-    val meta = readMeta(path)
+    val meta = readMeta(spark, path)
     // Recover interrupted compaction swaps BEFORE the append: a crashed
     // swap leaves a cell as `.old_` only, and appending into that cell
     // would recreate the live dir with delta-only rows — after which
     // recovery's live-exists inference would drop the backup and lose
     // the cell's pre-crash rows (BinPack append-ordering invariant).
-    // FS from the layout path, not the default FS (Wrong-FS on non-local
-    // roots otherwise — the Catalog.versionStamp idiom)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    BinPack.recoverSwaps(fs, new org.apache.hadoop.fs.Path(path))
+    val fs = layoutFs(spark, path)
+    val root = new Path(path)
+    BinPack.recoverSwaps(fs, root)
     val z = mortonCol(
       gridCoordClamped(col(xCol), meta.xMin, meta.xMax, FineBits),
       gridCoordClamped(col(yCol), meta.yMin, meta.yMax, FineBits))
@@ -231,8 +251,8 @@ object ZOrder {
       .partitionBy("z_cell")
       .option("compression", "zstd")
       .parquet(path)
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("_graft_def_")).foreach(_.delete())
+    fs.listStatus(root).filter(_.getPath.getName.startsWith("_graft_def_"))
+      .foreach(s => fs.delete(s.getPath, false))
   }
 
   /** Bin-pack fragmented cells of a z layout (the [[appendZOrdered]]
@@ -247,17 +267,14 @@ object ZOrder {
                       xCol: String, yCol: String,
                       targetBytes: Long = 128L * 1024 * 1024,
                       maxFiles: Int = 4): Int = {
-    val meta = readMeta(path)
-    // path-derived FS (see appendZOrdered)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(path)
+    val meta = readMeta(spark, path)
+    val fs = layoutFs(spark, path)
+    val root = new Path(path)
     BinPack.recoverSwaps(fs, root)
     val z = mortonCol(
       gridCoordClamped(col(xCol), meta.xMin, meta.xMax, FineBits),
       gridCoordClamped(col(yCol), meta.yMin, meta.yMax, FineBits))
-    fs.listStatus(root).filter(s =>
-      s.isDirectory && s.getPath.getName.startsWith("z_cell=")).count { d =>
+    cellDirs(fs, root).count { d =>
       BinPack.packDir(spark, fs, d.getPath, targetBytes, maxFiles) {
         (df, nOut) =>
           df.withColumn("__z", z)
@@ -268,13 +285,17 @@ object ZOrder {
     }
   }
 
-  def readMeta(path: String): ZMeta = {
-    val s = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$path/_zmeta.json")), "UTF-8")
+  /** The layout's grid bounds, read through the path's own FS. */
+  def readMeta(spark: SparkSession, path: String): ZMeta = {
+    val in = layoutFs(spark, path).open(new Path(path, "_zmeta.json"))
+    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
     def f(k: String): Long =
       s"""\"$k\":(-?\\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
     ZMeta(f("xMin"), f("xMax"), f("yMin"), f("yMax"), f("cellBits").toInt)
   }
+
+  /** [[readMeta]] under the active session. */
+  def readMeta(path: String): ZMeta = readMeta(SparkSession.active, path)
 
   /** The cell ids whose grid rectangle intersects the query box — a
     * SUPERSET of the cells holding box rows (gridCoord is monotone), so
@@ -309,17 +330,30 @@ object ZOrder {
                    yCol: String,
                    boxes: Seq[(Long, Long, Long, Long)]): DataFrame = {
     require(boxes.nonEmpty, "boxScanMulti needs at least one box")
-    val meta = readMeta(path)
+    val meta = readMeta(spark, path)
     val cells = boxes.flatMap { case (xLo, xHi, yLo, yHi) =>
       coveringCells(meta, xLo, xHi, yLo, yHi) }.distinct.sorted
     val residual = boxes.map { case (xLo, xHi, yLo, yHi) =>
       col(xCol).cast("long").between(xLo, xHi) &&
         col(yCol).cast("long").between(yLo, yHi)
     }.reduce(_ || _)
-    // ParquetNanos.read per the repo invariant: the layout is Spark-self-
-    // written (micros timestamps), so footer detection is a no-op today,
-    // but the layout may carry a raw ts column copied from a nanos source.
-    graft.sources.ParquetNanos.read(spark, path)
+    // Read the live covering cell directories, not the root: a root read
+    // lists every cell on every query, and past Spark's
+    // parallelPartitionDiscovery.threshold (32 paths) that listing is a
+    // Spark job with one task per cell. One listStatus of the root finds
+    // the live cells; it is never cached, so a refresh that fills an
+    // empty cell is seen by the next query. An empty covering reads one
+    // live cell for the layout's schema, pruned to nothing by the z_cell
+    // filter below (a layout with no cell at all has no schema, and the
+    // read refuses it). ParquetNanos per the repo invariant: the layout
+    // is Spark-self-written (micros timestamps), but it may carry a raw
+    // ts column copied from a nanos source.
+    val live = cellDirs(layoutFs(spark, path), new Path(path))
+      .flatMap(_.getPath.getName.stripPrefix("z_cell=").toLongOption).toSet
+    val covering = cells.filter(live)
+    val leaves = (if (covering.nonEmpty) covering else live.minOption.toSeq)
+      .map(c => new Path(path, s"z_cell=$c").toString)
+    graft.sources.ParquetNanos.read(spark, path, leaves)
       .filter(col("z_cell").isin(cells: _*))
       .filter(residual)
   }

@@ -5,7 +5,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.concurrent.TrieMap
@@ -29,7 +29,14 @@ object ParquetNanos {
 
   /** Names of TIMESTAMP(NANOS) fields in the parquet file(s) at `path`. */
   def nanosFields(spark: SparkSession, path: String): Set[String] =
-    cache.getOrElseUpdate(path, {
+    footerNanos(spark, path, path)
+
+  /** Footer detection of the first data file at `path` (the file itself,
+    * or the first one directly inside the directory), memoized under
+    * `key`. */
+  private def footerNanos(spark: SparkSession, key: String,
+                          path: String): Set[String] =
+    cache.getOrElseUpdate(key, {
       val conf = spark.sparkContext.hadoopConfiguration
       val p = new Path(path)
       val fs = p.getFileSystem(conf)
@@ -53,13 +60,30 @@ object ParquetNanos {
 
   /** Read parquet, converting any TIMESTAMP(NANOS) columns to
     * TimestampType (micros, floor like DuckDB). */
-  def read(spark: SparkSession, path: String): DataFrame = {
+  def read(spark: SparkSession, path: String): DataFrame =
+    load(spark, nanosFields(spark, path))(_.parquet(path))
+
+  /** Leaf-paths form: read only the partition directories `leaves` of
+    * the hive-partitioned table at `basePath` (partition columns still
+    * discovered from the leaf names, relative to `basePath`), so the
+    * file listing touches the leaves and never the rest of the tree.
+    * Footer detection reads one file of the first leaf, memoized under
+    * `basePath`: every leaf of one table shares its schema. */
+  def read(spark: SparkSession, basePath: String,
+           leaves: Seq[String]): DataFrame = {
+    require(leaves.nonEmpty, s"no leaf paths to read under $basePath")
+    load(spark, footerNanos(spark, basePath, leaves.head))(
+      _.option("basePath", basePath).parquet(leaves: _*))
+  }
+
+  private def load(spark: SparkSession, nanos: Set[String])(
+      open: DataFrameReader => DataFrame): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // TIMESTAMP(MICROS, isAdjustedToUTC=false) columns must surface as
     // TimestampType (UTC session == naive wall clock), not NTZ — same
     // values DuckDB sees, and parquet filter pushdown keeps working.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val probe = spark.read.parquet(path)
+    val probe = open(spark.read)
     // Spark-WRITTEN parquet embeds its own schema in the footer
     // (org.apache.spark.sql.parquet.row.metadata), which OVERRIDES the
     // NTZ-inference conf above: a file whose embedded schema says
@@ -80,9 +104,9 @@ object ParquetNanos {
         val fixed = StructType(probe.schema.fields.map(f =>
           if (f.dataType == TimestampNTZType) f.copy(dataType = TimestampType)
           else f))
-        spark.read.schema(fixed).parquet(path)
+        open(spark.read.schema(fixed))
       }
-    nanosFields(spark, path).foldLeft(df) { (d, c) =>
+    nanos.foldLeft(df) { (d, c) =>
       d.withColumn(c, timestamp_micros(expr(s"`$c` div 1000")))
     }
   }

@@ -488,6 +488,51 @@ class EngineSpec extends SparkSpec {
       s"cells still fragmented after refresh-time compaction: ${cellFiles.max}")
   }
 
+  test("a live engine sees rows a refresh appends into a z cell absent at prepare time") {
+    import graft.prepare.{Prepare, ZOrder}
+    val src = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")
+    // high users early in the month are held back: their cells do not
+    // exist in the prepared layout, while the grid bounds still span
+    // every user and day (sf0.001: users 0..14 over January)
+    val hole = col("user_id") >= 8 &&
+      col("ts") < lit("2024-01-10 00:00:00").cast("timestamp")
+    val root = "target/tmp/spec_zrefresh_fill"
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(rootPath, true)
+    Prepare.run(spark, src.filter(!hole), root, zorder = Prepare.defaultZOrder)
+    val eng = new graft.engine.Engine(spark,
+      graft.schema.PreparedCatalog(root), Prepare.defaultAggregates(),
+      zlayouts = Prepare.zLayoutDefs(root))
+    val json =
+      """{"select":["event_id"],"from":"events",
+         "where":[{"col":"user_id","op":"between","val":[9,12]},
+                  {"col":"ts","op":"gte","val":"2024-01-02 00:00:00"},
+                  {"col":"ts","op":"lt","val":"2024-01-07 00:00:00"}]}"""
+    val d = eng.zlayouts.head
+    val meta = ZOrder.readMeta(d.path)
+    val covering = graft.engine.ZOrderRouter.matches(QueryJson.parse(json), d).get
+      .flatMap(b => ZOrder.coveringCells(meta, b.xLo, b.xHi, b.yLo, b.yHi))
+      .distinct.map(c => new java.io.File(s"${d.path}/z_cell=$c"))
+    assert(covering.nonEmpty && !covering.exists(_.exists()),
+      s"fixture: some covering cell already exists: $covering")
+    def routed(): Set[Long] = {
+      val got = eng.executeJson(json).collect().map(_.getLong(0)).toSet
+      assert(eng.lastRoute == Engine.ZRouted(d.name), eng.lastRoute.toString)
+      got
+    }
+    assert(routed().isEmpty)
+    Prepare.refresh(spark, src.filter(hole), root)
+    assert(covering.exists(_.exists()), "the delta filled no covering cell")
+    val want = src
+      .filter(col("user_id").between(9, 12) &&
+        col("ts") >= lit("2024-01-02 00:00:00").cast("timestamp") &&
+        col("ts") < lit("2024-01-07 00:00:00").cast("timestamp"))
+      .select(col("event_id")).collect().map(_.getLong(0)).toSet
+    assert(want.nonEmpty, "vacuous: box matched no rows")
+    assert(routed() === want)
+  }
+
   test("compaction bin-packs fragmented partitions without changing content") {
     import graft.prepare.Prepare
     val src = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")

@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.engine.Engine
@@ -78,13 +82,54 @@ class PlanAuditSpec extends SparkSpec {
          "where":[{"col":"user_id","op":"between","val":[40,90]},
                   {"col":"ts","op":"gte","val":"2024-01-08 00:00:00"},
                   {"col":"ts","op":"lt","val":"2024-01-13 00:00:00"}]}"""
-    val df = eng.executeJson(json)
+    // building plus planning the routed DataFrame launches no Spark job
+    // wider than one task: the file listing touches the covering cells
+    // only (a layout-root read lists all 64 cells in a 64-task job)
+    val marker = "plan-audit-zroute-marker"
+    val markerSeen = new CountDownLatch(1)
+    val wideJobs = new ConcurrentLinkedQueue[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          markerSeen.countDown()
+        else {
+          val tasks = e.stageInfos.map(_.numTasks).sum
+          if (tasks > 1) wideJobs.add(tasks)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val df = try {
+      val built = eng.executeJson(json)
+      built.queryExecution.executedPlan
+      // listener events arrive in submission order: once the marker
+      // job's start is seen, every job the build launched was counted
+      spark.sparkContext.setJobGroup(marker, marker)
+      spark.range(1).count()
+      spark.sparkContext.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never seen")
+      built
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(wideJobs.isEmpty, s"multi-task jobs while building: $wideJobs")
     // the engine chose the z layout, not the fact scan
     assert(eng.lastRoute == Engine.ZRouted("z_user_ts"), eng.lastRoute.toString)
     // 2-D pruning is in the plan: covering-cell IN-list as PartitionFilters
     val pf = df.queryExecution.sparkPlan.toString.linesIterator
       .filter(_.contains("PartitionFilters")).mkString("\n")
     assert(pf.contains("z_cell"), pf)
+    // the scan's file index is rooted at exactly the covering cells that
+    // exist on disk, never at the layout root
+    val d = eng.zlayouts.find(_.name == "z_user_ts").get
+    val meta = graft.prepare.ZOrder.readMeta(d.path)
+    val liveCovering = graft.engine.ZOrderRouter
+      .matches(graft.dsl.QueryJson.parse(json), d).get
+      .flatMap(b => graft.prepare.ZOrder.coveringCells(meta, b.xLo, b.xHi, b.yLo, b.yHi))
+      .distinct.map(c => new java.io.File(s"${d.path}/z_cell=$c"))
+      .filter(_.isDirectory).map(_.getCanonicalPath).toSet
+    val rootPaths = df.queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec => s.relation.location.rootPaths
+    }.flatten.map(p => new java.io.File(p.toUri.getPath).getCanonicalPath).toSet
+    assert(liveCovering.nonEmpty, "vacuous: no covering cell exists")
+    assert(rootPaths === liveCovering)
     // exactness: identical rows to the same DSL query on the raw table
     val routed = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

@@ -68,6 +68,22 @@ class TimestampLayoutSpec extends SparkSpec {
       (1 to 100).count(i => i % 28 + 1 >= 20))
   }
 
+  test("leaf-paths read: NTZ-embedded partitions surface as TimestampType, only the leaves read") {
+    import SparkSpecBase.implicits._
+    val dir = "target/tmp/spec_ntz_leaves"
+    (1 to 40).map(i => (i.toLong, i % 4,
+        java.sql.Timestamp.valueOf(f"2024-01-${i % 28 + 1}%02d 12:00:00.000001")))
+      .toDF("id", "p", "ts")
+      .withColumn("ts", col("ts").cast(TimestampNTZType))
+      .write.mode("overwrite").partitionBy("p").parquet(dir)
+    val df = graft.sources.ParquetNanos.read(spark, dir, Seq(s"$dir/p=1", s"$dir/p=3"))
+    assert(df.schema("ts").dataType == TimestampType, df.schema.simpleString)
+    val got = df.select(col("id"), col("p"), col("ts").cast(StringType))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
+    assert(got == (1 to 40).filter(i => i % 4 == 1 || i % 4 == 3).map(i =>
+      (i.toLong, i % 4, f"2024-01-${i % 28 + 1}%02d 12:00:00.000001")).toSet)
+  }
+
   test("withDerived accepts TimestampNTZ frames (non-parquet sources)") {
     import SparkSpecBase.implicits._
     val df = Seq((1L, java.sql.Timestamp.valueOf("2024-03-10 07:45:00")))

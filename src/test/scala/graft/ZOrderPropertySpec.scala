@@ -87,6 +87,39 @@ object ZOrderPropertySpec extends Properties("zorder") {
         s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}"
     }
 
+  // a layout whose points lie on the diagonal x == y: a point's two grid
+  // coordinates are equal, so only the 8 diagonal cells of the 8x8 grid
+  // exist and boxes off the diagonal have no live covering cell
+  private lazy val diagonal: (String, org.apache.spark.sql.types.StructType) = {
+    import SparkSpecBase.implicits._
+    val dir = java.nio.file.Files
+      .createTempDirectory("zorder_diag").toString + "/layout"
+    ZOrder.writeZOrdered(spark, (0L until 4096L).map(i => (i, i, i))
+      .toDF("id", "x", "y"), dir, "x", "y", cellBits = 6)
+    (dir, graft.sources.ParquetNanos.read(spark, dir).schema)
+  }
+
+  // no shrinking: a shrunk box leaves the absent region, and the
+  // counterexample would no longer show the failing case
+  property("boxScan over absent cells (incl. out-of-range) == empty, layout schema, one cell read") =
+    Prop.forAllNoShrink(
+      Gen.choose(-5000L, 1023L), Gen.choose(-5000L, 1023L),
+      Gen.choose(2048L, 20000L), Gen.choose(2048L, 20000L)) {
+      (x1, x2, y1, y2) =>
+      val (dir, schema) = diagonal
+      val df = ZOrder.boxScan(spark, dir, "x", "y",
+        math.min(x1, x2), math.max(x1, x2), math.min(y1, y2), math.max(y1, y2))
+      val roots = df.queryExecution.sparkPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.relation.location.rootPaths
+      }.flatten
+      val cells = new java.io.File(dir).listFiles().count(_.getName.startsWith("z_cell="))
+      (cells == 8 && df.collect().isEmpty && df.schema == schema &&
+        roots.size == 1 && roots.head.getName.startsWith("z_cell=")) :|
+        s"box x=[$x1,$x2] y=[$y1,$y2] cells=$cells roots=$roots " +
+          s"schema=${df.schema.simpleString}"
+    }
+
   // --- adversarial ranges near Long.MaxValue (round-14 advice #4) ---
 
   private val limit = Long.MaxValue >> ZOrder.FineBits
