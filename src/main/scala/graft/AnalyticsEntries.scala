@@ -129,7 +129,7 @@ object AnalyticsEntries {
     // -> sort-merge join with zero exchange (see Bucketing)
     "ext_bucketed_join" -> ((s, dir) => {
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val wh = s"/root/repo/target/warehouse/$sf"
+      val wh = s"target/warehouse/$sf"
       graft.prepare.Bucketing.writeBucketed(s,
         graft.sources.ParquetNanos.read(s, s"$dir/lineitem.parquet")
           .withColumnRenamed("l_orderkey", "o_orderkey"),
@@ -155,7 +155,7 @@ object AnalyticsEntries {
     // seconds, so ts_sec BETWEEN t0 AND t1-1 <=> ts >= t0 AND ts < t1.
     "scan_zorder_box" -> ((s, dir) => {
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val path = s"/root/repo/target/warehouse/$sf/events_zorder"
+      val path = s"target/warehouse/$sf/events_zorder"
       val ev = events(s, dir).withColumn("ts_sec", unix_timestamp(col("ts")))
       graft.prepare.ZOrder.writeZOrdered(s, ev, path, "user_id", "ts_sec",
         cellBits = 6)
@@ -472,7 +472,7 @@ object AnalyticsEntries {
     // snapshot. (Plan pinned by PlanAuditSpec's bucketed-merge test.)
     "ext_merge_upsert_bucketed" -> ((s, dir) => {
       val sf = new java.io.File(dir).getName.replace(".", "_")
-      val wh = s"/root/repo/target/warehouse/$sf"
+      val wh = s"target/warehouse/$sf"
       graft.prepare.Bucketing.writeBucketed(s,
         tbl(s, dir, "customer")
           .filter(pmod(col("c_custkey"), lit(3)) =!= 0)

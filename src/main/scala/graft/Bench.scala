@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main. Prints ONE JSON line:
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}
@@ -118,6 +118,26 @@ object Bench {
   /** Warm timed passes per query; the reported number is the minimum. */
   val WarmPasses = 3
 
+  /** One timed pass of entry `name`: build its DataFrame and execute it
+    * AS WRITTEN. A DataFrame .count() lets Catalyst prune every
+    * cardinality-preserving projection/window, so a SELECT-shaped entry
+    * times a bare parquet row count (caught at sf10 in round 12:
+    * text_quality "0.13 s" was a pruned scan while the DuckDB side's
+    * fetchall paid 45 s of real scoring — and the same held for
+    * gopher_rules, moving_avg, pack_sequences at every scale). toRdd
+    * executes the full physical plan — every column of every row
+    * materializes (UnsafeRow) — without collecting results to the
+    * driver, matching the oracle's full-materialization protocol.
+    * Returns the wall seconds, the row count and the executed DataFrame
+    * (whose plan is then AQE-final). */
+  def timeOne(spark: SparkSession, sfDir: String, name: String)
+      : (Double, Long, DataFrame) = {
+    val start = System.nanoTime()
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    val rows = df.queryExecution.toRdd.count()
+    ((System.nanoTime() - start) / 1e9, rows, df)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -135,24 +155,10 @@ object Bench {
     SparkEntry.preparedEngine(spark, sfDir) // prepare phase (not timed per-query)
     val prepareSec = (System.nanoTime() - t0) / 1e9
 
-    val qs = SparkEntry.queries
-    def timeOne(name: String): Double = {
-      val start = System.nanoTime()
-      // Execute the query AS WRITTEN: a DataFrame .count() lets Catalyst
-      // prune every cardinality-preserving projection/window, so a
-      // SELECT-shaped entry times a bare parquet row count (caught at
-      // sf10 in round 12: text_quality "0.13 s" was a pruned scan while
-      // the DuckDB side's fetchall paid 45 s of real scoring — and the
-      // same held for gopher_rules, moving_avg, pack_sequences at every
-      // scale). toRdd executes the full physical plan — every column of
-      // every row materializes (UnsafeRow) — without collecting results
-      // to the driver, matching the oracle's full-materialization
-      // protocol.
-      try { qs(name)(spark, sfDir).queryExecution.toRdd.count() }
+    def timed(name: String): Double =
+      try timeOne(spark, sfDir, name)._1
       catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); return -1.0 }
-      (System.nanoTime() - start) / 1e9
-    }
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
 
     /** Measure one group: untimed JIT-warmup pass, one timed cold pass,
       * then [[WarmPasses]] timed warm passes (pass-wise, so the passes
@@ -161,11 +167,11 @@ object Bench {
       * pooled persists — shared prepare-once tables survive by design. */
     def measure(group: Seq[String], release: () => Unit)
         : (Seq[(String, Double)], Map[String, Seq[Double]]) = {
-      group.foreach(timeOne) // untimed JIT warmup for this group only
+      group.foreach(timed) // untimed JIT warmup for this group only
       release()
-      val cold = group.map(n => n -> timeOne(n))
+      val cold = group.map(n => n -> timed(n))
       val warm = (1 to WarmPasses).map { _ =>
-        release(); group.map(n => n -> timeOne(n)).toMap
+        release(); group.map(n => n -> timed(n)).toMap
       }
       (cold, group.map(n => n -> warm.map(_(n))).toMap)
     }

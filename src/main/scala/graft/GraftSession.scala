@@ -57,8 +57,8 @@ object GraftSession {
       // Runtime Bloom-filter join pruning keeps the STOCK gates
       // (injection on; application-side scan >= 10 GiB, creation side
       // <= 10 MB) — a DELIBERATE measured negative, round 20. Four
-      // ProbeTpchBloom sittings at the 100x fixture with the gates
-      // dropped (tpch_bloom_sf10_r20*.json): the filter injects into
+      // sittings at the 100x fixture with the gates dropped
+      // (tpch_bloom_sf10_r20*.json, PLANS.md "One dev probe"): the filter injects into
       // tpch_q5/q10/q21 with identical row counts, but only q5 wins
       // repeatably (~20-32%); q10 loses 10-20% every sitting (bloom
       // build + probe overhead exceeds the pruning) and q21 flips sign

@@ -1110,7 +1110,7 @@ object PipelineEntries {
     // maxFilesPerTrigger=1 drives 4 real merge rounds.
     "stream_upsert" -> ((s, dir) => {
       val (name0, src) = eventsStream4(s, dir)
-      val outDir = s"/root/repo/target/tmp/stream_upsert_$name0"
+      val outDir = s"target/tmp/stream_upsert_$name0"
       val snap = s"$outDir/snapshot"
       val ordered = Seq(col("ts"), col("event_id"))
       val pay = Seq("ts", "event_id", "event_type", "value")
@@ -1152,7 +1152,7 @@ object PipelineEntries {
     // re-runs no-ops — exactly-once on the result sink.
     "stream_dedup_near" -> ((s, dir) => {
       val name0 = new java.io.File(dir).getName
-      val streamDir = new java.io.File(s"/root/repo/target/tmp/docs_stream2_$name0")
+      val streamDir = new java.io.File(s"target/tmp/docs_stream2_$name0")
       if (!streamDir.exists()) {
         graft.sources.ParquetNanos.read(s, s"$dir/documents.parquet")
           .filter(pmod(col("doc_id"), lit(10)) < 2)
@@ -1166,7 +1166,7 @@ object PipelineEntries {
       val src = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(streamDir.toString)
       val corpusSigs = docSigs(s, dir).filter(pmod(col("id"), lit(10)) >= 2)
-      val outDir = s"/root/repo/target/tmp/stream_dedup_near_$name0"
+      val outDir = s"target/tmp/stream_dedup_near_$name0"
       val resDir = s"$outDir/pairs"
       val q = src.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1185,7 +1185,7 @@ object PipelineEntries {
 
     "stream_file_sink" -> ((s, dir) => {
       val name0 = new java.io.File(dir).getName
-      val outDir = s"/root/repo/target/tmp/stream_sink_$name0"
+      val outDir = s"target/tmp/stream_sink_$name0"
       val q = eventsStream(s, dir)
         .filter(col("event_type") === "error")
         .select(col("event_id"), col("user_id"))
@@ -1206,7 +1206,7 @@ object PipelineEntries {
     * converted), so the stream schema is plain TimestampType. */
   private def eventsStream4(s: SparkSession, dir: String): (String, DataFrame) = {
     val name0 = new java.io.File(dir).getName
-    val streamDir = new java.io.File(s"/root/repo/target/tmp/events_stream4_$name0")
+    val streamDir = new java.io.File(s"target/tmp/events_stream4_$name0")
     if (!streamDir.exists()) {
       graft.sources.ParquetNanos.read(s, s"$dir/events.parquet")
         .repartitionByRange(4, col("event_id"))
@@ -1235,7 +1235,7 @@ object PipelineEntries {
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType), StructField("props", StringType)))
     val name0 = new java.io.File(dir).getName
-    val streamDir = new java.io.File(s"/root/repo/target/tmp/events_stream_$name0")
+    val streamDir = new java.io.File(s"target/tmp/events_stream_$name0")
     if (!new java.io.File(streamDir, "events.parquet").exists()) {
       streamDir.mkdirs()
       java.nio.file.Files.copy(

@@ -58,7 +58,7 @@ object SparkEntry {
                                     cacheResults: Boolean = true): Engine = {
     val root = preparedRoots.getOrElseUpdate(sfDir, this.synchronized {
       val name = new java.io.File(sfDir).getName
-      val r = s"/root/repo/target/prepared/$name"
+      val r = s"target/prepared/$name"
       // marker is versioned with the default-aggregates + layout set: a
       // layout from an older build (missing a rollup or the z-order
       // secondary) must rebuild, not break
@@ -1088,7 +1088,7 @@ object SparkEntry {
                            permissive: Boolean): DataFrame = {
     val src = tbl(s, dir, "events").drop("props")
     val name = new java.io.File(dir).getName
-    val csvDir = s"/root/repo/target/tmp/events_csv_$name"
+    val csvDir = s"target/tmp/events_csv_$name"
     val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     if (!new java.io.File(s"$csvDir/_SUCCESS").exists()) {
       src.write.mode("overwrite")
@@ -1115,7 +1115,7 @@ object SparkEntry {
   private def jsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val src = tbl(s, dir, "events").drop("props")
     val name = new java.io.File(dir).getName
-    val outDir = s"/root/repo/target/tmp/events_jsonl_$name"
+    val outDir = s"target/tmp/events_jsonl_$name"
     val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     if (!new java.io.File(s"$outDir/_SUCCESS").exists()) {
       src.write.mode("overwrite").option("timestampFormat", tsFmt).json(outDir)
@@ -1136,7 +1136,7 @@ object SparkEntry {
   private def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val src = tbl(s, dir, "events").drop("props")
     val name = new java.io.File(dir).getName
-    val outDir = s"/root/repo/target/tmp/events_orc_$name"
+    val outDir = s"target/tmp/events_orc_$name"
     if (!new java.io.File(s"$outDir/_SUCCESS").exists()) {
       src.write.mode("overwrite").orc(outDir)
     }

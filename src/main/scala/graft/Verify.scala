@@ -11,12 +11,6 @@ object Verify {
     val spark = GraftSession.builder(cpus).appName("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // GRAFT_VERIFY_SKIP: comma-separated entry names to leave out of a
-    // run — used for the O(N^2) verification BASELINES (and their
-    // equally quadratic oracles) when dumping large scale fixtures
-    // (sf1+), where the scale-path entries remain fully checked.
-    val skipEnv = sys.env.getOrElse("GRAFT_VERIFY_SKIP", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
     // GRAFT_VERIFY_ONLY: dev knob — run just these entries (and restrict
     // oracle_sql.json to them) for fast single-entry oracle iteration.
     // The driver never sets it; an unset value is the full run.
@@ -24,18 +18,12 @@ object Verify {
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
     // A typo'd ONLY must fail LOUDLY: unknown names would make skip the
     // full key set and the run would verify nothing while exiting green
-    // (advisor, round 18). Same check for SKIP — a typo there silently
-    // verifies an entry the caller believed excluded.
+    // (advisor, round 18).
     val unknownOnly = only.diff(SparkEntry.queries.keySet)
     require(unknownOnly.isEmpty,
       s"GRAFT_VERIFY_ONLY names not in SparkEntry.queries: ${unknownOnly.mkString(",")}")
-    val unknownSkip = skipEnv.diff(SparkEntry.queries.keySet)
-    require(unknownSkip.isEmpty,
-      s"GRAFT_VERIFY_SKIP names not in SparkEntry.queries: ${unknownSkip.mkString(",")}")
-    if (only.nonEmpty && skipEnv.nonEmpty)
-      System.err.println("[verify] GRAFT_VERIFY_ONLY set: GRAFT_VERIFY_SKIP is ignored")
     val skip: Set[String] =
-      if (only.nonEmpty) SparkEntry.queries.keySet.diff(only) else skipEnv
+      if (only.nonEmpty) SparkEntry.queries.keySet.diff(only) else Set.empty
     // Per-entry wall seconds (plan + execute + write): verify already runs
     // every entry, so recording times here closes the perf blind spot on
     // the ~150 entries the bench headline never touches — diffed
@@ -44,7 +32,7 @@ object Verify {
     // UNTIMED warm-up: parquet reader/writer, shuffle+join machinery and
     // first-use codegen-compiler classloading otherwise land on whichever
     // entry happens to run first (tpch_q3 in a fresh JVM: first run 3.0 s
-    // vs 0.8 s warm at sf0.01 — measured via ProbePlan), skewing the
+    // vs 0.8 s warm at sf0.01 — PLANS.md round-15 addendum 4), skewing the
     // round-over-round verify_times diff. One small scan+join+agg+sort+
     // write over the KB-sized dims pays those costs before the clock
     // starts; per-entry plan compilation stays attributed to its entry.
@@ -58,6 +46,9 @@ object Verify {
       nation.join(region, nation("n_regionkey") === region("r_regionkey"))
         .groupBy("r_name").count().orderBy("r_name")
         .coalesce(1).write.mode("overwrite").parquet(warmupDir)
+    }
+    def rmAll(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rmAll)); f.delete(): Unit
     }
     SparkEntry.queries.foreach { case (name, fn) =>
       if (!skip(name)) {
@@ -73,11 +64,7 @@ object Verify {
         // Remove any stale output from an earlier full run into the same
         // outDir: a leftover dir with the entry filtered out of
         // oracle_sql.json would read as a passing rows-only check.
-        def rmRec(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rmRec)); f.delete(): Unit
-        }
-        rmRec(new java.io.File(s"$outDir/$name"))
-        System.err.println(s"[verify] $name SKIPPED (GRAFT_VERIFY_SKIP)")
+        rmAll(new java.io.File(s"$outDir/$name"))
       }
     }
     // Resolve the pipeline-artifact path token per sfDir: oracles of
@@ -89,9 +76,6 @@ object Verify {
       .map { case (k, v) => s"${ArtifactStore.jsonString(k)}: ${"%.3f".format(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_times.json"), timesJson)
-    def rmAll(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmAll)); f.delete(): Unit
-    }
     rmAll(new java.io.File(warmupDir))
     spark.stop()
   }

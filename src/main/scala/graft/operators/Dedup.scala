@@ -40,7 +40,7 @@ object Dedup {
     * re-deriving per branch (overlappable compute) beats one checkpoint
     * write + multi-branch read (barrier + block memory).
     *
-    * The crossover is MEASURED, not assumed (ProbeStagedCrossover,
+    * The crossover is MEASURED, not assumed (PLANS.md round 18,
     * min-of-3 over minhashPairsFromSigs, parity-gated;
     * BASELINE_MEASURED round-18): staged/direct = 0.88x at 500 docs and
     * 0.93x at 5k docs (a wash inside the floor), then 0.52x at 15k,
@@ -982,7 +982,7 @@ object Dedup {
     // arrays). Digest to a compact join key. No join at all before the
     // per-id aggregation: the pre-round-20 broadcast-the-stop-vocab
     // join (itself the fix for the measured 80 s g-shuffle skew at a
-    // 1M-member family, ProbeStopFamilies round-18) is subsumed by the
+    // 1M-member family, PLANS.md dedup_stop_profile_families) is subsumed by the
     // classified index — c rides every (id, g) row, so the profile
     // pass is per-doc parallel with zero exchanges before groupBy(id).
     val stops = idx.inverted.filter(col("c") > dfCap)

@@ -295,7 +295,7 @@ object Quantization {
     * here). Exact float cosine re-ranks the ADC shortlist, so emitted
     * values are exact; only WHICH candidates the shortlist holds is
     * approximate — recall measured against brute force in
-    * ProbeAnnRecall / PipelineSpec. */
+    * PLANS.md round-15 addendum 6 / PipelineSpec. */
   def ivfPqResidualTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                         vecCol: String, k: Int,
                         nlist: Int = 16, nprobe: Int = 4,

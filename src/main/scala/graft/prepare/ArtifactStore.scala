@@ -148,9 +148,9 @@ object ArtifactStore {
     * form; at the 10x+ scale fixtures the baselines — whose oracles
     * exhaustively enumerate pairs and whose own contract is
     * recall-verification on a sample, never production dedup — get a
-    * bounded input that the single-node oracle can restate (the
-    * previous GRAFT_VERIFY_SKIP rows now get real verdicts at every
-    * scale). Plain modulo (not a hash) so the DuckDB oracle states the
+    * bounded input that the single-node oracle can restate (every
+    * entry gets a real verdict at every scale; Verify has no skip
+    * list). Plain modulo (not a hash) so the DuckDB oracle states the
     * identical sample; the MakeSfN fixtures offset replica ids by
     * multiples of 10^7, so an id-modulo sample keeps whole replica
     * groups together and the sampled corpus still contains near-dups. */

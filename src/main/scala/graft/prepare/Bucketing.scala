@@ -21,28 +21,32 @@ object Bucketing {
     * fingerprint written as a marker file next to the data, so an edit
     * to the base definition (filter, schema, bucket count) REWRITES the
     * layout instead of silently merging against the stale one (round-12
-    * advice — the plain tableExists check had exactly that hole). */
+    * advice — the plain tableExists check had exactly that hole). A
+    * relative `path` resolves against the working directory, data and
+    * marker alike (Spark would put a relative table location under the
+    * warehouse dir). */
   def writeBucketed(spark: SparkSession, df: DataFrame, table: String,
                     key: String, numBuckets: Int, path: String): Unit = {
+    val dir = new java.io.File(path).getAbsolutePath
     val basis =
       df.queryExecution.analyzed.canonicalized.toString + "|" + key + "|" + numBuckets
     val defHash = java.security.MessageDigest.getInstance("MD5")
       .digest(basis.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val marker = new java.io.File(s"$path/_graft_def_$defHash")
+    val marker = new java.io.File(s"$dir/_graft_def_$defHash")
     if (spark.catalog.tableExists(table) && marker.exists()) return
     if (spark.catalog.tableExists(table)) spark.sql(s"DROP TABLE `$table`")
     df.write
       .mode(SaveMode.Overwrite)
       .bucketBy(numBuckets, key)
       .sortBy(key)
-      .option("path", path)
+      .option("path", dir)
       .option("compression", "zstd")
       .saveAsTable(table)
     // stale fingerprints from an older definition die with the rewrite
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("_graft_def_") && f.getName != marker.getName)
       .foreach(_.delete())
-    marker.getParentFile.mkdirs() // relative paths resolve against cwd
+    marker.getParentFile.mkdirs()
     marker.createNewFile()
     ()
   }

@@ -158,9 +158,13 @@ object ZOrder {
       s"|$xCol|$yCol|$cellBits|$FineBits"
     val defHash = java.security.MessageDigest.getInstance("MD5")
       .digest(basis.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val marker = new java.io.File(s"$path/_graft_def_$defHash")
-    if (marker.exists() && new java.io.File(s"$path/_zmeta.json").exists())
-      return
+    // metadata and markers go through the path's own FS, like every
+    // read of them: java.io would miss (or mis-resolve) a qualified root
+    val fs = layoutFs(spark, path)
+    val root = new Path(path)
+    val marker = new Path(root, s"_graft_def_$defHash")
+    val metaPath = new Path(root, "_zmeta.json")
+    if (fs.exists(marker) && fs.exists(metaPath)) return
 
     // grid bounds from the data — one narrow aggregate, written into the
     // layout's metadata so readers normalize identically
@@ -189,15 +193,12 @@ object ZOrder {
 
     val metaJson = s"""{"xMin":${meta.xMin},"xMax":${meta.xMax},""" +
       s""""yMin":${meta.yMin},"yMax":${meta.yMax},"cellBits":$cellBits}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$path/_zmeta.json"),
-      metaJson.getBytes("UTF-8"))
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("_graft_def_") &&
-        f.getName != marker.getName)
-      .foreach(_.delete())
-    marker.createNewFile()
-    ()
+    val out = fs.create(metaPath, true)
+    try out.write(metaJson.getBytes("UTF-8")) finally out.close()
+    fs.listStatus(root).map(_.getPath)
+      .filter(p => p.getName.startsWith("_graft_def_") && p.getName != marker.getName)
+      .foreach(fs.delete(_, false))
+    fs.create(marker, true).close()
   }
 
   /** [[gridCoord]] with the input CLAMPED into [min, max] before the

@@ -61,7 +61,7 @@ object BenchStream {
 
     // stream_media_decode's rows/s basis is CLIPS ingested (decode work
     // per clip is ~frames x pixels, measured separately by
-    // ProbeVideoStride); the staged clip dir is input fixture, not state
+    // PLANS.md round-15 addendum 4); the staged clip dir is input fixture, not state
     val allDocRows = graft.sources.ParquetNanos
       .read(spark, s"$sfDir/documents.parquet").count()
 
@@ -71,10 +71,10 @@ object BenchStream {
       ("stream_window_agg", inputRows, Nil),
       ("stream_dedup", inputRows, Nil),
       ("stream_upsert", inputRows,
-        Seq(s"/root/repo/target/tmp/stream_upsert_$sfName")),
+        Seq(s"target/tmp/stream_upsert_$sfName")),
       ("stream_sessionize", inputRows, Nil),
       ("stream_dedup_near", docRows,
-        Seq(s"/root/repo/target/tmp/stream_dedup_near_$sfName")),
+        Seq(s"target/tmp/stream_dedup_near_$sfName")),
       ("stream_media_decode", allDocRows, Nil))
 
     val qs = graft.SparkEntry.queries
@@ -116,7 +116,7 @@ object BenchStream {
   private def latencyPhase(spark: org.apache.spark.sql.SparkSession,
                            sfDir: String, sfName: String): Unit = {
     import spark.implicits._
-    val stageDir = new java.io.File(s"/root/repo/target/tmp/events_stream16_$sfName")
+    val stageDir = new java.io.File(s"target/tmp/events_stream16_$sfName")
     if (!stageDir.exists()) {
       spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")
@@ -191,7 +191,7 @@ object BenchStream {
                          sfDir: String, sfName: String): Unit = {
     val nSlices = 24
     val stageDir =
-      new java.io.File(s"/root/repo/target/tmp/events_timeslices_$sfName")
+      new java.io.File(s"target/tmp/events_timeslices_$sfName")
     if (!stageDir.exists()) {
       spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       val ev = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")

@@ -8,7 +8,7 @@ package graft.tools
   * Usage: runMain graft.tools.DumpOracles <outDir> [sfDir] */
 object DumpOracles {
   def main(args: Array[String]): Unit = {
-    val outDir = if (args.length > 0) args(0) else "/root/repo/target/verify_out"
+    val outDir = if (args.length > 0) args(0) else "target/verify_out"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     new java.io.File(outDir).mkdirs()
     graft.prepare.ArtifactStore.writeOracleJson(s"$outDir/oracle_sql.json",

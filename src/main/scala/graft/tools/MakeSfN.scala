@@ -22,7 +22,7 @@ object MakeSfN {
 
   def main(args: Array[String]): Unit = {
     val inDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val outDir = if (args.length > 1) args(1) else "/root/repo/target/sf1"
+    val outDir = if (args.length > 1) args(1) else "target/sf1"
     val k = if (args.length > 2) args(2).toInt else 10
     val spark = graft.GraftSession.builder("32").appName("make-sfn").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -34,7 +34,7 @@ object MakeSkew {
 
   def main(args: Array[String]): Unit = {
     val inDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val outDir = if (args.length > 1) args(1) else "/root/repo/target/skew10"
+    val outDir = if (args.length > 1) args(1) else "target/skew10"
     val k = if (args.length > 2) args(2).toInt else 100
     val hotPct = if (args.length > 3) args(3).toInt else 20
     val spark = graft.GraftSession.builder("32").appName("make-skew").getOrCreate()

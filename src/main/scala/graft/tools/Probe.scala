@@ -1,48 +1,127 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
-/** Dev probe for the verify loop — drives the public Engine API. */
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import graft.{Bench, GraftSession, SparkEntry}
+
+/** The dev probe: time named `SparkEntry.queries` entries and show what
+  * their AQE-final plans did, under optional Spark conf overrides.
+  *
+  * {{{
+  * runMain graft.tools.Probe <entry[,entry...]> <sfDir> [passes] [spark.conf.key=value ...]
+  * }}}
+  *
+  * Per entry: one cold pass (first contact in this JVM: JIT, prepared
+  * layouts, pipeline artifacts), then `passes` warm passes, all timed by
+  * [[graft.Bench.timeOne]] with pooled dedup intermediates released
+  * before each warm pass; the row count; the AQE-final shuffle-exchange
+  * count (the number `PlanFingerprintSpec` pins); the final plan's
+  * join/exchange/aggregate/scan skeleton with broadcast sizes; and the
+  * effective value of each overridden conf. PLANS.md ("One dev probe")
+  * maps each retired single-purpose probe to its recorded finding and
+  * to the `Probe` command that reproduces its entry-level number. */
 object Probe {
-  def main(args: Array[String]): Unit = {
-    // deliberately NOT setting nanosAsLong here: ParquetNanos.read must
-    // set it dynamically (the driver's own session may lack it)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val e = graft.engine.Engine.forDir(spark, "/root/testdata/sf0.001")
-    try { e.executeJson("""{"select":[]}""") } catch { case ex: Throwable => println("P1 " + ex.getClass.getSimpleName + ": " + ex.getMessage) }
-    try { e.executeJson("""{"select":["event_type",{"COUNT":"*"}],"from":"events","group_by":["event_type"],"order_by":[{"col":"no_such","dir":"desc"}]}""").collect() } catch { case ex: Throwable => println("P2 " + ex.getClass.getSimpleName + ": " + ex.getMessage) }
-    try { e.executeJson("""{"select":[{"COUNT":"*"}],"from":"events","where":[{"col":"bogus","op":"eq","val":1}]}""").collect() } catch { case ex: Throwable => println("P3 " + ex.getClass.getSimpleName + ": " + ex.getMessage) }
-    val df = e.executeJson("""{"select":["event_type",{"SUM":"value"}],"from":"events","group_by":["event_type"],"order_by":[{"col":"SUM(value)","dir":"desc"}]}""")
-    println("P4 top: " + df.collect().head)
-    val t0=System.nanoTime
-    e.executeJson("""{"select":["event_type",{"SUM":"value"}],"from":"events","group_by":["event_type"],"order_by":[{"col":"SUM(value)","dir":"desc"}]}""").collect()
-    println(f"P4 cached route=${e.lastRoute} in ${(System.nanoTime-t0)/1e6}%.1f ms")
-    val pe = graft.SparkEntry.preparedEngine(spark, "/root/testdata/sf0.001")
-    val routed = pe.executeJson("""{"select":["day",{"SUM":"value"}],"from":"events","where":[{"col":"event_type","op":"eq","val":"purchase"},{"col":"day","op":"eq","val":"2024-01-15"}],"group_by":["day"]}""")
-    println("P5 route=" + pe.lastRoute + " rows=" + routed.collect().toList)
-    spark.stop()
+
+  final case class Record(entry: String, coldS: Double, warmS: Seq[Double],
+                          rows: Long, exchanges: Int, skeleton: Seq[String],
+                          broadcasts: Seq[String], confs: Seq[(String, String)])
+
+  private val Usage = "usage: graft.tools.Probe <entry[,entry...]> <sfDir> [passes] " +
+    "[spark.conf.key=value ...]"
+
+  /** Probe `names` at `sfDir`. Every input is checked before any job
+    * runs: unknown entry names, a non-positive pass count, and override
+    * keys that are not runtime-settable Spark SQL confs (a typo'd key
+    * would otherwise be set silently and change nothing). The overrides
+    * hold for the whole run and are restored afterwards. */
+  def run(spark: SparkSession, names: Seq[String], sfDir: String, passes: Int,
+          overrides: Seq[(String, String)] = Nil): Seq[Record] = {
+    requireInputs(names, passes)
+    val notSettable = overrides.map(_._1).filterNot(spark.conf.isModifiable)
+    require(notSettable.isEmpty,
+      s"not runtime-settable Spark SQL confs: ${notSettable.mkString(",")}")
+    val previous = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
+    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val confs = overrides.map { case (k, _) => k -> spark.conf.get(k) }
+      names.map { name =>
+        val (coldS, rows, df) = Bench.timeOne(spark, sfDir, name)
+        val warmS = (1 to passes).map { _ =>
+          graft.operators.Dedup.releaseIntermediates()
+          Bench.timeOne(spark, sfDir, name)._1
+        }
+        val broadcasts = broadcastExchanges(df).map { b =>
+          def metric(m: String) = b.metrics.get(m).fold(-1L)(_.value)
+          s"rows=${metric("numOutputRows")} bytes=${metric("dataSize")}"
+        }
+        Record(name, coldS, warmS, rows, shuffleExchanges(df),
+          skeleton(finalPlan(df)), broadcasts, confs)
+      }
+    } finally previous.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
   }
-}
-/** Probe for the Catalyst rewrite: raw spark.sql over the prepared fact
-  * table must scan the rollup instead. */
-object ProbeRewrite {
+
+  private def requireInputs(names: Seq[String], passes: Int): Unit = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(names.nonEmpty && unknown.isEmpty,
+      s"entries not in SparkEntry.queries: ${unknown.mkString(",")}")
+    require(passes >= 1, s"passes must be >= 1, got $passes")
+  }
+
+  /** The AQE-final physical plan of an executed DataFrame (its current
+    * plan when AQE is off or the DataFrame has not run yet). */
+  def finalPlan(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }
+
+  /** Shuffle exchanges in the AQE-final plan of an executed DataFrame. */
+  def shuffleExchanges(df: DataFrame): Int =
+    finalPlan(df).toString.linesIterator.count(l =>
+      l.contains("Exchange hashpartitioning") ||
+      l.contains("Exchange rangepartitioning") ||
+      l.contains("Exchange SinglePartition"))
+
+  /** Broadcast exchanges of an executed DataFrame's final plan. The walk
+    * enters AQE query stages: a stage is a leaf node, so a plain
+    * `foreach` over the final plan never reaches the exchange inside. */
+  def broadcastExchanges(df: DataFrame): Seq[BroadcastExchangeExec] =
+    StageWalk.collect(df.queryExecution.executedPlan) { case b: BroadcastExchangeExec => b }
+
+  private object StageWalk extends AdaptiveSparkPlanHelper
+
+  private def skeleton(plan: SparkPlan): Seq[String] =
+    plan.toString.linesIterator.filter(l => l.contains("Join") ||
+      l.contains("Exchange") || l.contains("HashAggregate") ||
+      l.contains("Sort ") || l.contains("FileScan")).toSeq
+
+  /** One `key=value` conf override; anything else fails loudly. */
+  def parseOverride(kv: String): (String, String) = kv.split("=", 2) match {
+    case Array(k, v) if k.trim.nonEmpty && v.nonEmpty => k.trim -> v
+    case _ => throw new IllegalArgumentException(
+      s"conf override '$kv' is not key=value; $Usage")
+  }
+
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[4]")
-      .config("spark.sql.legacy.parquet.nanosAsLong","true")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.preparedEngine(spark, "/root/testdata/sf0.001")
-    val root = "/root/repo/target/prepared/sf0.001"
-    val rule = graft.catalyst.AggRewriteRule.configure(spark, s"$root/events",
-      graft.prepare.Prepare.defaultAggregates(),
-      name => spark.read.parquet(s"$root/aggregates/$name"))
-    spark.read.parquet(s"$root/events").createOrReplaceTempView("events_fact")
-    val df = spark.sql("SELECT event_type, sum(value) s, avg(value) a FROM events_fact GROUP BY event_type ORDER BY event_type")
-    df.show(5, false)
-    println("R1 fired=" + rule.fired)
-    println("R2 plan-scans-rollup=" + df.queryExecution.executedPlan.toString.contains("agg_type_day_value"))
-    spark.stop()
+    val positional = args.takeWhile(!_.contains('=')).take(3)
+    require(positional.length >= 2, Usage)
+    val names = positional(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val passes = positional.lift(2).fold(Bench.WarmPasses)(p =>
+      p.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"passes '$p' is not an integer; $Usage")))
+    val overrides = args.drop(positional.length).map(parseOverride).toSeq
+    requireInputs(names, passes)
+    val spark = GraftSession.create("graft-probe")
+    try run(spark, names, positional(1), passes, overrides).foreach { r =>
+      println(f"PROBE ${r.entry} cold=${r.coldS}%.3f s warm=" +
+        r.warmS.map(t => f"$t%.3f").mkString("[", ",", "]") +
+        f" min=${r.warmS.min}%.3f s rows=${r.rows} exchanges=${r.exchanges}")
+      r.confs.foreach { case (k, v) => println(s"  CONF $k = $v") }
+      r.skeleton.foreach(l => println(s"  PLAN $l"))
+      r.broadcasts.foreach(b => println(s"  BROADCAST $b"))
+    } finally spark.stop()
   }
 }

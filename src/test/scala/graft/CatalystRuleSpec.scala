@@ -13,7 +13,7 @@ class CatalystRuleSpec extends SparkSpec {
   private lazy val root: String = {
     // reuse the prepared layout builder from SparkEntry
     SparkEntry.preparedEngine(spark, sfDir)
-    s"/root/repo/target/prepared/${new java.io.File(sfDir).getName}"
+    s"target/prepared/${new java.io.File(sfDir).getName}"
   }
 
   private lazy val rule: AggRewriteRule = {

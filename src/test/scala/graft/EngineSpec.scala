@@ -58,6 +58,20 @@ class EngineSpec extends SparkSpec {
     assert(days == days.sorted.reverse) // secondary key within primary
   }
 
+  test("ill-formed queries fail loudly with a CompileException naming the column") {
+    val cases = Seq(
+      "bogus" -> """{"select":[{"COUNT":"*"}],"from":"events",
+         "where":[{"col":"bogus","op":"eq","val":1}]}""",
+      "user_id" -> """{"select":["user_id",{"COUNT":"*"}],"from":"events",
+         "group_by":["event_type"]}""",
+      "no_such" -> """{"select":["event_type",{"COUNT":"*"}],"from":"events",
+         "group_by":["event_type"],"order_by":[{"col":"no_such","dir":"desc"}]}""")
+    cases.foreach { case (column, json) =>
+      val e = intercept[Compiler.CompileException](engine.executeJson(json))
+      assert(e.getMessage.contains(column), e.getMessage)
+    }
+  }
+
   test("LIMIT is honored (ref bug #6)") {
     assert(engine.executeJson(
       """{"select":["event_id"],"from":"events",

@@ -52,7 +52,8 @@ class JaccardSpec extends SparkSpec {
   }
 
   test("stop-profile pass recovers the boilerplate class the df-cap provably loses") {
-    // Fixture shaped like ProbeDedupSkew's adversarial mix, shrunk:
+    // Fixture shaped like the dedup skew rung's adversarial mix (PLANS.md
+    // round 17, judge #5), shrunk:
     //  - boilerplate family (ids 100..105): 30 shared shingles whose df
     //    (6) exceeds the cap (3) — similarity entirely on above-cap
     //    shingles, so the blocked generator has no rare seed and MISSES

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.tools.Probe
+
 /** Plan-fingerprint regression net over the whole headline set: the
   * AQE-final shuffle-exchange count per entry, pinned in source. A new
   * exchange in any headline plan (a lost broadcast, a window that
@@ -11,10 +16,13 @@ package graft
   * (that's an improvement — update the pin); an increase needs either a
   * fix or a justified re-pin with the reasoning in the commit.
   *
-  * Counts are AQE-final (collect() first) at sf0.001 under the shared
+  * Counts are AQE-final (executed first) at sf0.001 under the shared
   * test session, with pooled dedup intermediates dropped first so suite
   * ordering cannot change which upstream stages appear as cached scans.
-  * Regenerate with `runMain graft.tools.ProbeExchanges`. */
+  * Regenerate with `runMain graft.tools.Probe <headline entries>
+  * <sf0.001 dir> 1` (its `exchanges=` field). The probe's session confs
+  * can read higher (ext_merge_upsert_bucketed: 2 against its pin of 1);
+  * a count is a regression only when this spec fails. */
 class PlanFingerprintSpec extends SparkSpec {
 
   private val pinned: Map[String, Int] = Map(
@@ -76,16 +84,10 @@ class PlanFingerprintSpec extends SparkSpec {
     "tpch_q5" -> 5,
     "tpch_q9" -> 3)
 
-  private def shuffleExchanges(name: String): Int = {
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    plan.linesIterator.count(l =>
-      l.contains("Exchange hashpartitioning") ||
-      l.contains("Exchange rangepartitioning") ||
-      l.contains("Exchange SinglePartition"))
-  }
+  /** The AQE-final count through the dev probe's own pass and counter,
+    * so the regenerate command above is what this spec runs. */
+  private def shuffleExchanges(name: String): Int =
+    Probe.shuffleExchanges(Bench.timeOne(spark, sfDir, name)._3)
 
   test("headline executed-plan shuffle-exchange counts never increase") {
     graft.operators.Dedup.releaseIntermediates()
@@ -99,5 +101,49 @@ class PlanFingerprintSpec extends SparkSpec {
     }
     assert(regressed.isEmpty,
       s"shuffle-exchange regressions:\n${regressed.mkString("\n")}")
+  }
+
+  test("Probe rejects bad input before any job; its r9_agg_sum record matches the pin") {
+    val marker = "plan-fingerprint-spec-marker"
+    val markerSeen = new CountDownLatch(1)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          markerSeen.countDown()
+        else jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // a valid entry first: a lazy check would run it before failing
+      intercept[IllegalArgumentException](
+        Probe.run(spark, Seq("r9_agg_sum", "no_such_entry"), sfDir, 1))
+      intercept[IllegalArgumentException](
+        Probe.run(spark, Seq("r9_agg_sum"), sfDir, 0))
+      intercept[IllegalArgumentException](Probe.run(spark, Seq("r9_agg_sum"),
+        sfDir, 1, Seq("spark.sql.shufle.partitions" -> "1")))
+      Seq("spark.sql.shuffle.partitions", "=1", "spark.sql.shuffle.partitions=")
+        .foreach(kv => intercept[IllegalArgumentException](Probe.parseOverride(kv)))
+      intercept[IllegalArgumentException](Probe.main(
+        Array("r9_agg_sum", sfDir, "1", "spark.sql.shuffle.partitions")))
+      intercept[IllegalArgumentException](Probe.main(Array("no_such_entry", sfDir)))
+      // listener events arrive in submission order: once the marker
+      // job's start is seen, any job the rejected calls launched was counted
+      spark.sparkContext.setJobGroup(marker, marker)
+      spark.range(1).count()
+      spark.sparkContext.clearJobGroup()
+      assert(markerSeen.await(30, TimeUnit.SECONDS), "marker job never seen")
+      assert(jobs.get == 0, s"${jobs.get} jobs ran before the input checks failed")
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    val Seq(r) = Probe.run(spark, Seq("r9_agg_sum"), sfDir, 1,
+      Seq("spark.sql.shuffle.partitions" -> "3"))
+    assert(r.rows == SparkEntry.queries("r9_agg_sum")(spark, sfDir).collect().length)
+    assert(r.exchanges == pinned("r9_agg_sum"))
+    assert(r.confs == Seq("spark.sql.shuffle.partitions" -> "3"))
+    assert(r.warmS.length == 1 && r.coldS > 0)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions,
+      "override not restored")
   }
 }

@@ -87,18 +87,9 @@ class TpchSuiteSpec extends SparkSpec {
     assert(!plan.contains("Expand"), plan)
     assert(plan.contains("ShuffledHashJoin"), plan)
     // no broadcast exchange may build from a lineitem scan
-    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    df.count() // finalize AQE
-    val finalPlan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    finalPlan.foreach {
-      case b: BroadcastExchangeExec =>
-        assert(!b.child.toString.contains("lineitem"),
-          s"lineitem broadcast:\n$b")
-      case _ =>
+    df.collect() // finalize AQE
+    graft.tools.Probe.broadcastExchanges(df).foreach { b =>
+      assert(!b.child.toString.contains("lineitem"), s"lineitem broadcast:\n$b")
     }
   }
 

@@ -120,6 +120,33 @@ object ZOrderPropertySpec extends Properties("zorder") {
           s"schema=${df.schema.simpleString}"
     }
 
+  // a file:-qualified root: the metadata and def marker go through the
+  // root's own FS (java.nio would read "file:/..." as a relative path);
+  // that FS writes hidden .crc siblings, which the cell listing skips
+  property("writeZOrdered under a file:-qualified root: meta readable, rewrite a no-op") = {
+    import SparkSpecBase.implicits._
+    val local = java.nio.file.Files
+      .createTempDirectory("zorder_qualified").toString + "/layout"
+    val root = "file:" + local
+    val df = (0L until 1000L).map(i => (i, i % 97, i * 3)).toDF("id", "x", "y")
+    def files(): Set[String] = {
+      def walk(f: java.io.File): Seq[String] =
+        Option(f.listFiles()).toSeq.flatten.flatMap(c => c.getPath +: walk(c))
+      walk(new java.io.File(local)).toSet
+    }
+    ZOrder.writeZOrdered(spark, df, root, "x", "y", cellBits = 4)
+    val written = files()
+    ZOrder.writeZOrdered(spark, df, root, "x", "y", cellBits = 4)
+    val ids = ZOrder.boxScan(spark, root, "x", "y", 0L, 96L, 0L, 2997L)
+      .select(col("id")).collect().map(_.getLong(0)).toSet
+    val meta = ZOrder.readMeta(spark, root)
+    (ZOrder.layoutExists(spark, root) &&
+      meta == ZOrder.ZMeta(0L, 96L, 0L, 2997L, 4) &&
+      files() == written && written.exists(_.endsWith(".crc")) &&
+      ids == (0L until 1000L).toSet) :|
+      s"meta=$meta ids=${ids.size} rewritten=${files() != written}"
+  }
+
   // --- adversarial ranges near Long.MaxValue (round-14 advice #4) ---
 
   private val limit = Long.MaxValue >> ZOrder.FineBits

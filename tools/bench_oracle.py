@@ -5,7 +5,8 @@ CORRECTNESS gate uses, warm best-of-N).
 
 Usage: python3 tools/bench_oracle.py [sfdir] [outdir] [passes]
   expects <outdir>/oracle_sql.json from a prior `runMain graft.Verify`
-  (or ProbeOne) dump; times only the graft.Bench headline set.
+  (or `runMain graft.tools.DumpOracles <outdir> <sfdir>`, which writes it
+  without running any query); times only the graft.Bench headline set.
 """
 import json, os, sys, glob, time, threading
 import duckdb
