@@ -425,9 +425,7 @@ object PipelineEntries {
     // LOW-df shingles, so the cap prunes only non-dup pair fanout)
     "dedup_ngram_blocked" -> ((s, dir) =>
       Dedup.ngramJaccardPairsBlockedFromSigs(docSigs(s, dir),
-        threshold = 0.3, dfCap = 10,
-        docFreq = Some(docShingleDf(s, dir)),
-        index = Some(repIndex(s, dir)))),
+        threshold = 0.3, dfCap = 10, index = Some(repIndex(s, dir)))),
 
     // the df-cap's measured honest boundary (round-17 hot-shingle rung):
     // pairs whose similarity lives ONLY on above-cap shingles — the
@@ -439,13 +437,12 @@ object PipelineEntries {
     // sf0.01 corpus has NO df>10 shingle at all — a cap-10 twin would be
     // trivially-green 0 rows, exactly the weak-check class the gates
     // exist to avoid (measured: cap 5 → 13 verified rep pairs at
-    // sf0.01, 241 at sf0.1). The shared shingle_df artifact is
-    // cap-agnostic (raw rep-based counts; the operator applies the cap),
-    // so both entries read the same prepare-once table.
+    // sf0.01, 241 at sf0.1). The shared rep index is cap-agnostic
+    // (raw rep-based counts; the operator applies the cap), so both
+    // entries read the same prepare-once tables.
     "dedup_stop_profile" -> ((s, dir) =>
       Dedup.stopProfilePairsFromSigs(docSigs(s, dir),
-        threshold = 0.3, dfCap = 5,
-        docFreq = Some(docShingleDf(s, dir)), bucketCap = 1000,
+        threshold = 0.3, dfCap = 5, bucketCap = 1000,
         index = Some(repIndex(s, dir)))),
 
     // the family-level product the stop-profile pass's scale contract
@@ -453,10 +450,9 @@ object PipelineEntries {
     // expansion is quadratic BY DEFINITION): the family itself —
     // (family_id = min member doc id, doc_id, family_size), linear at
     // any family size, no self-join, no cap, no lost mass. Same dfCap=5
-    // basis and shared shingle_df artifact as dedup_stop_profile.
+    // basis and shared rep index as dedup_stop_profile.
     "dedup_stop_profile_families" -> ((s, dir) =>
       Dedup.stopProfileFamilies(docSigs(s, dir), dfCap = 5,
-        docFreq = Some(docShingleDf(s, dir)),
         index = Some(repIndex(s, dir)))),
 
     // exact sliding-window substring dup at arbitrary alignment —

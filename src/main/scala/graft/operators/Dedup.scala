@@ -4,19 +4,31 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Deduplication operators for training-data pipelines: exact,
-  * MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
+/** Deduplication operators for training-data pipelines: exact and
+  * substring-window dedup, MinHash+LSH, SimHash, n-gram Jaccard (exact,
+  * df-capped, PPJoin prefix, stop-profile), incremental and
+  * embedding-cosine near-dup.
   *
-  * Scale design (the whole point): every method is
-  * candidate-generation-by-key + verify-within-bucket. Nothing ever
-  * compares all N^2 pairs:
-  *  - exact: one hash-groupBy shuffle on a 16-byte digest, not the text;
-  *  - MinHash/LSH: band buckets bound the join fan-out;
-  *  - SimHash: 16-bit band keys, Hamming verify inside buckets;
-  *  - n-gram Jaccard: inverted-index join on rare shingles;
-  *  - embedding: LSH or block-join on quantized prefix.
-  * All candidate joins are shuffle joins on compact keys; verification is
-  * a codegen'd expression over the pair.
+  * Scale design (the whole point): no pass compares all N^2 pairs
+  * (the labelled embedding baseline aside). Every pair-producing pass is
+  * the same four steps, and the last two are one shared core:
+  *  1. a key generator, owned by the caller: MinHash band hashes,
+  *     SimHash bands, sign-LSH band buckets ([[Similarity]]), rare
+  *     shingles, prefix shingles, stop-shingle profile digests;
+  *  2. a bound on bucket size, owned by the caller: band width, the df
+  *     cap, the prefix length, the profile `bucketCap`;
+  *  3. [[keyPairs]], the in-bucket pair expansion: one self-join on the
+  *     key and one pair aggregate, giving every unordered pair sharing a
+  *     key once, with each side's payload and its shared-key count (the
+  *     stop-profile pass, one bucket per rep, and the PPJoin prefix,
+  *     whose length filter prunes inside the join, expand on their own);
+  *  4. [[verifyPairs]], the exact score over each side's payload joined
+  *     back by id (or an arithmetic filter over `shared`).
+  * Callers with bounded buckets hint the core's input shuffle_hash.
+  * Replica-heavy corpora ([[replicaHeavy]]) run the passes over one
+  * representative per exact-text group and expand the pairs back
+  * relationally ([[expandRepPairs]]). All joins are shuffle joins on
+  * compact keys; verification is a codegen'd expression over the pair.
   */
 object Dedup {
 
@@ -84,6 +96,60 @@ object Dedup {
   def releaseIntermediates(): Unit = {
     var df = pooled.poll()
     while (df != null) { df.unpersist(false); df = pooled.poll() }
+  }
+
+  // --------------------------------------------------- candidate-pair core
+
+  /** In-bucket pair expansion. `keyed` rows are `(id, <key cols>,
+    * <extra cols>)`; the result has one row per unordered pair
+    * `a_id < b_id` sharing a key value: `(a_id, b_id, a_<extra>...,
+    * b_<extra>..., shared)`, extras carried per side, `shared` the number
+    * of key values in common (the pair aggregate dedups pairs meeting in
+    * several buckets). Fan-out is quadratic in a bucket's size, so the
+    * caller bounds the buckets, and picks the join: bounded callers hint
+    * `keyed` shuffle_hash (the hint reaches both sides); the unbounded
+    * [[pairCountsFromSigs]] does not, as a hash build does not spill. */
+  private[graft] def keyPairs(keyed: DataFrame, key: Seq[String]): DataFrame = {
+    val extra = keyed.columns.toSeq.filterNot(c => c == "id" || key.contains(c))
+    def side(p: String): DataFrame = keyed.select(
+      key.map(col) ++ ("id" +: extra).map(c => col(c).as(s"${p}_$c")): _*)
+    val carried = Seq("a", "b").flatMap(p =>
+      extra.map(c => first(col(s"${p}_$c")).as(s"${p}_$c")))
+    val aggs = carried :+ count(lit(1)).as("shared")
+    side("a").join(side("b"), key)
+      .filter(col("a_id") < col("b_id"))
+      .groupBy(col("a_id"), col("b_id"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Candidate verification: join `side` `(id, v)` back onto `cand`'s
+    * `a_id` and `b_id`, score each pair with `score(a_v, b_v)`, keep the
+    * pairs scoring at least `threshold`, and return `(a_id, b_id, name)`
+    * with the score rounded to 4 places. As with [[keyPairs]], a caller
+    * wanting shuffle_hash verify joins hints `side`. */
+  private[graft] def verifyPairs(cand: DataFrame, side: DataFrame,
+      score: (Column, Column) => Column, threshold: Double, name: String): DataFrame = {
+    val a = side.select(col("id").as("a_id"), col("v").as("a_v"))
+    val b = side.select(col("id").as("b_id"), col("v").as("b_v"))
+    cand.join(a, "a_id").join(b, "b_id")
+      .withColumn(name, score(col("a_v"), col("b_v")))
+      .filter(col(name) >= threshold)
+      .select(col("a_id"), col("b_id"), round(col(name), 4).as(name))
+  }
+
+  /** The exact-replica gate of every pre-pass: true when `df` holds at
+    * most 0.8 distinct `digest` values per row. The pre-pass saves
+    * quadratic work in proportion to the replica fraction but costs a
+    * fixed few stages (rep semi-join, expansion joins), so mostly
+    * distinct corpora (the sf0.1 fixture: 8 dup groups in 5000 docs)
+    * skip it and replica-heavy ones (real crawls; the 10x stress
+    * fixture) take it. One 2-number narrow aggregate and a collect;
+    * callers that query one corpus repeatedly measure it once and pass
+    * the answer in as `replicaGate`. */
+  private[graft] def replicaHeavy(df: DataFrame, digest: Column): Boolean = {
+    val r = df.agg(count(lit(1)).cast(DoubleType),
+      count_distinct(digest).cast(DoubleType)).collect()(0)
+    r.getDouble(1) <= 0.8 * r.getDouble(0)
   }
 
   // --------------------------------------------------------------- exact
@@ -155,12 +221,8 @@ object Dedup {
     // stages by the replica factor. `replicaGate` short-circuits the
     // adaptive 2-number aggregate for callers that already measured
     // the corpus (PipelineEntries memoizes it per corpus).
-    val usePrePass = replicaGate.getOrElse {
-      val r = raw.agg(count(lit(1)).cast(DoubleType),
-        count_distinct(md5(to_binary(col("__text"), lit("utf-8"))))
-          .cast(DoubleType)).collect()(0)
-      r.getDouble(1) <= 0.8 * r.getDouble(0)
-    }
+    val usePrePass = replicaGate.getOrElse(
+      replicaHeavy(raw, md5(to_binary(col("__text"), lit("utf-8")))))
     // The (doc_id, n_g) rep table: narrow digest aggregate — only
     // (digest, id) ride the shuffle, one row per DISTINCT text comes
     // out. Persisted because BOTH branches join it (keyed + fingerprint)
@@ -211,7 +273,8 @@ object Dedup {
     // everywhere), n_g is dropped from the shuffled row entirely.
     val keyed = weighted.select(col("doc_id"), col("n_g"),
       graft.functions.SubstrWindowKeys
-        .substrWindowKeys(lower(col("__text")), w, MersenneP).as("ks"))
+        .substrWindowKeys(lower(col("__text")), w,
+          graft.functions.MinhashSig.MersenneP).as("ks"))
     def explodeKeys(d: DataFrame, extra: Seq[Column]): DataFrame = d
       .select(extra :+ shiftleft(col("doc_id"), PosBits).as("__hi") :+
         posexplode(col("ks")): _*)
@@ -271,17 +334,10 @@ object Dedup {
 
   // ------------------------------------------------------------- shingles
 
-  /** Distinct word n-gram shingles of lowercased text.
-    *
-    * NOTE: as a single Column expression this re-tokenizes per shingle
-    * position when evaluated inline (interpreted HOF semantics — see
-    * [[graft.functions.Staging]]); fine for a handful of rows. The bulk
-    * operators below all use [[shingleDf]], which stages tokens as a
-    * bound attribute first. */
-  def wordShingles(text: Column, n: Int = 3): Column =
-    shingleOf(TextAnalysis.tokens(lower(text)), n)
-
-  /** Shingle expression over an ALREADY-BOUND token-array column. */
+  /** Distinct word n-gram shingles over an ALREADY-BOUND token-array
+    * column (inline over raw text it would re-tokenize per shingle
+    * position — interpreted HOF semantics, see
+    * [[graft.functions.Staging]]; [[shingleDf]] stages the tokens). */
   def wordShingleOf(t: Column, n: Int): Column = shingleOf(t, n)
   private def shingleOf(t: Column, n: Int): Column = {
     val cnt = size(t)
@@ -342,40 +398,7 @@ object Dedup {
         col("g"))
   }
 
-  /** Distinct character n-gram shingles of lowercased text. */
-  def charShingles(text: Column, n: Int = 5): Column = {
-    val t = lower(text)
-    array_distinct(
-      transform(sequence(lit(1), greatest(length(t) - lit(n - 1), lit(1))),
-        i => t.substr(i, lit(n))))
-  }
-
   // ---------------------------------------------------------- MinHash LSH
-
-  /** Fixed multiply-shift constants for the MinHash permutation family
-    * (odd multipliers + offsets from a seeded PRNG, materialized at plan
-    * time — identical on every executor, no broadcast). */
-  /** Mersenne prime 2^31-1: the Carter-Wegman modulus. All arithmetic
-    * stays under 2^62 so ANSI long math never overflows. */
-  private val MersenneP = 2147483647L
-
-  private def mixConsts = graft.functions.MinhashSig.mixConsts
-
-  /** MinHash signature: each shingle string is hashed ONCE (xxhash64,
-    * reduced mod p); the `numHashes` permutations are Carter-Wegman
-    * universal hashes (a_i*h+b_i mod p) of that base value — the modular
-    * reduction is what makes each permutation's argmin independent
-    * (plain multiply-add is order-preserving and would collapse the
-    * signature to one effective hash). */
-  def minhashSignature(shingles: Column, numHashes: Int = 32): Column = {
-    val base = transform(shingles, s => pmod(xxhash64(s), lit(MersenneP)))
-    transform(sequence(lit(0), lit(numHashes - 1)), i =>
-      aggregate(base, lit(Long.MaxValue), (acc, h) =>
-        least(acc, pmod(
-          h * element_at(lit(mixConsts.map(_._1).toArray), i + 1)
-            + element_at(lit(mixConsts.map(_._2).toArray), i + 1),
-          lit(MersenneP)))))
-  }
 
   /** Near-duplicate pairs via banded LSH over MinHash signatures.
     *
@@ -429,32 +452,19 @@ object Dedup {
     // digest here instead.
     val withG = withSetDigest(hs)
 
-    /** Banding + exact-jaccard verification over `sigs` (id, hs).
-      * Signature via the RELATIONAL formulation: explode the hash set
-      * and take `numHashes` codegen'd MIN aggregates per doc, then
-      * repack the array. Whole-stage codegen beats the interpreted
-      * aggregate-inside-transform HOF by ~3x, and the map-side partial
-      * mins keep the shuffle at one row per doc. The hs shingle array
-      * is NOT carried through the explode or the banding:
-      * per-element/per-band row copies would duplicate the array
-      * ~|shingles|+|bands| times through the min-agg and bucket
-      * shuffles (measured ~20% slower at sf0.1; far worse once the
-      * duplication crosses real network shuffles). Verification joins
-      * the signature table back by id instead — the same shape blocked
-      * jaccard uses. shuffle_hash throughout: the banded self-join and
-      * both verify joins are equal-width keyed shuffles where SMJ's
-      * per-partition sorts are pure overhead. */
+    /** Banding + exact-jaccard verification over `sigs` (id, hs). The
+      * signature is native and one-pass ([[graft.functions.MinhashSig]]:
+      * the numHashes Carter-Wegman mins inside the row, no explode +
+      * groupBy(id) of MIN aggregates). The empty-hs filter drops docs
+      * with no shingles (hs is a STORED column, so the filter cannot
+      * re-evaluate anything heavy). The hs array is NOT carried through
+      * the banding — per-band row copies would duplicate it through the
+      * bucket shuffle (measured ~20% slower at sf0.1) — verification
+      * joins it back by id instead ([[verifyPairs]]). Pooled-persisted:
+      * both sides of the banded self-join read the signature table.
+      * shuffle_hash on both the self-join and the verify joins: equal-
+      * width keyed shuffles where SMJ's sorts are pure overhead. */
     def bandedVerify(sigs: DataFrame): DataFrame = {
-      // Native one-pass signature ([[graft.functions.MinhashSig]]):
-      // the numHashes Carter-Wegman mins compute inside the row — the
-      // old relational formulation (explode the hash set, groupBy(id)
-      // with numHashes MIN aggregates) paid one row per (doc, shingle)
-      // through an aggregate map plus a by-id exchange for the same
-      // array. The empty-hs filter mirrors the explode's doc-dropping
-      // (hs is a STORED column, so the filter costs nothing and cannot
-      // re-evaluate anything heavy). Still pooled-persisted: BOTH sides
-      // of the banded self-join below consume the signature table —
-      // one row per doc, trivial to cache at any corpus size.
       val withSig = pooledPersist(staged(sigs
         .filter(size(col("hs")) > 0)
         .select(col("id"), graft.functions.MinhashSig
@@ -467,39 +477,15 @@ object Dedup {
               b => xxhash64(concat_ws("_",
                 slice(g, b * rowsPerBand + 1, lit(rowsPerBand))), b)))))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-      val a = banded.select(col("band"), col("bucket"), col("id").as("a_id"))
-      val b = banded.select(col("band"), col("bucket"), col("id").as("b_id"))
-      val candidates = a.join(b.hint("shuffle_hash"), Seq("band", "bucket"))
-        .filter(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id"))
-        .dropDuplicates("a_id", "b_id")
-      val aSh = sigs.select(col("id").as("a_id"), col("hs").as("a_sh"))
-      val bSh = sigs.select(col("id").as("b_id"), col("hs").as("b_sh"))
-      candidates.join(aSh.hint("shuffle_hash"), "a_id")
-        .join(bSh.hint("shuffle_hash"), "b_id")
-        .withColumn("jaccard", graft.functions.JaccardSimilarity.jaccardNative(
-          col("a_sh"), col("b_sh")))
-        .filter(col("jaccard") >= threshold)
-        .select(col("a_id"), col("b_id"),
-          round(col("jaccard"), 4).as("jaccard"))
+      verifyPairs(keyPairs(banded.hint("shuffle_hash"), Seq("band", "bucket")),
+        sigs.select(col("id"), col("hs").as("v")).hint("shuffle_hash"),
+        graft.functions.JaccardSimilarity.jaccardNative, threshold, "jaccard")
     }
 
-    // ADAPTIVE gate (one 2-number narrow aggregate — the arrays never
-    // ride it): the pre-pass saves quadratic band/verify work
-    // proportional to the replica fraction but costs a fixed few stages
-    // (rep semi-join, expansion joins), so corpora that are mostly
-    // distinct (the sf0.1 fixture: 8 dup groups in 5000 docs) run the
-    // plain banding over the full signature table, and replica-heavy
-    // corpora (real crawls; the sf1 stress fixture at 10x replication)
-    // run it over representatives only. `replicaGate` short-circuits the
-    // aggregate for callers that already measured the corpus.
-    val usePrePass = replicaGate.getOrElse {
-      val gateRow = withG
-        .agg(count(lit(1)).cast(DoubleType), count_distinct(col("g"))
-          .cast(DoubleType)).collect()(0)
-      val (total, groups) = (gateRow.getDouble(0), gateRow.getDouble(1))
-      groups <= 0.8 * total
-    }
+    // ADAPTIVE gate over the `g` digest (the arrays never ride it);
+    // `replicaGate` short-circuits it for callers that already measured
+    // the corpus.
+    val usePrePass = replicaGate.getOrElse(replicaHeavy(withG, col("g")))
     if (!usePrePass) return bandedVerify(withG)
 
     // rep selection is a NARROW aggregate (g, id only); the rep
@@ -508,31 +494,10 @@ object Dedup {
     // Both persisted ([[repSignatures]]): the explode and both
     // verify-join sides of bandedVerify consume repSigs.
     val (rep, repSigs) = repSignatures(withG)
-    val repPairs = bandedVerify(repSigs)
-    // ---- expansion back over replica groups ---------------------------
-    // within a group: every pair, jaccard exactly 1.0 (identical sets —
-    // the same value jaccardNative returns for them); across groups:
-    // every member pair inherits the representatives' jaccard. Groups
-    // are disjoint, so the union is duplicate-free, like the original
-    // all-docs banding output.
-    val members = withG.select(col("g"), col("id"))
-    val dupGroups = rep.filter(col("cnt") >= 2).select(col("g"))
-    val internal = members.join(dupGroups.hint("shuffle_hash"), "g")
-      .select(col("g"), col("id").as("xa"))
-      .join(members.select(col("g"), col("id").as("xb")).hint("shuffle_hash"),
-        "g")
-      .filter(col("xa") < col("xb"))
-      .select(col("xa").as("a_id"), col("xb").as("b_id"),
-        lit(1.0).as("jaccard"))
-    val repG = rep.select(col("id"), col("g"))
-    val cross = repPairs
-      .join(repG.select(col("id").as("a_id"), col("g").as("ga")), "a_id")
-      .join(repG.select(col("id").as("b_id"), col("g").as("gb")), "b_id")
-      .join(members.select(col("g").as("ga"), col("id").as("xa")), "ga")
-      .join(members.select(col("g").as("gb"), col("id").as("xb")), "gb")
-      .select(least(col("xa"), col("xb")).as("a_id"),
-        greatest(col("xa"), col("xb")).as("b_id"), col("jaccard"))
-    internal.unionByName(cross)
+    // expansion back over replica groups: within a group every pair at
+    // jaccard exactly 1.0 (the value jaccardNative returns for identical
+    // sets), across groups every member pair at its reps' jaccard
+    expandRepPairs(bandedVerify(repSigs), rep, withG.select(col("g"), col("id")))
   }
 
   /** Ensure a signature table carries a set-equality digest column `g`:
@@ -557,25 +522,6 @@ object Dedup {
   }
 
   // -------------------------------------------------------------- SimHash
-
-  /** 64-bit SimHash over word shingles: per-bit majority vote of shingle
-    * hashes, folded with integer bit ops only. */
-  def simhash(shingles: Column): Column = {
-    // votes: array of 64 counters; each shingle's hash contributes +1/-1
-    val votes = aggregate(
-      shingles,
-      array_repeat(lit(0), 64),
-      (acc, s) => {
-        val h = xxhash64(s)
-        transform(acc, (v, i) =>
-          v + when(call_function("shiftright", h, i).bitwiseAND(1) === 1, 1)
-            .otherwise(-1))
-      })
-    aggregate(
-      transform(votes, (v, i) =>
-        when(v > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
-      lit(0L), (acc, bit) => acc.bitwiseOR(bit))
-  }
 
   /** Hamming distance between two 64-bit signatures. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -605,10 +551,10 @@ object Dedup {
     val bits = if (portableHash) 56 else 64
     val bandBits = bits / 4
     val bandMask = (1L << bandBits) - 1
-    // relational simhash: explode shingles, `bits` codegen'd
-    // conditional-sum votes per doc (static shift amounts), fold the sign
-    // bits — same result as the Column-level simhash(), all in generated
-    // code with map-side partial sums
+    // relational simhash (per-bit majority vote of shingle hashes):
+    // explode shingles, `bits` codegen'd conditional-sum votes per doc
+    // (static shift amounts), fold the sign bits — all in generated code
+    // with map-side partial sums
     val sh = shingleDf(df, idCol, textCol, 3)
     val exploded = sh.select(col("id"), explode(col("sh")).as("s"))
       .withColumn("h",
@@ -627,13 +573,7 @@ object Dedup {
         call_function("shiftright", col("sig"), b * bandBits)
           .bitwiseAND(lit(bandMask)))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    val a = banded.select(col("band"), col("bucket"),
-      col("id").as("a_id"), col("sig").as("a_sig"))
-    val b = banded.select(col("band"), col("bucket"),
-      col("id").as("b_id"), col("sig").as("b_sig"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("a_id") < col("b_id"))
-      .dropDuplicates("a_id", "b_id")
+    keyPairs(banded, Seq("band", "bucket"))
       .withColumn("hamming", hamming64(col("a_sig"), col("b_sig")))
       .filter(col("hamming") <= maxHamming)
       .select(col("a_id"), col("b_id"), col("hamming"))
@@ -668,17 +608,10 @@ object Dedup {
     * on stop-shingles; at corpus scale generate candidates with
     * [[ngramJaccardPairsBlockedFromSigs]]'s df-cap or MinHash banding
     * instead. This exact table is the oracle-checkable ground truth. */
-  def pairCountsFromSigs(sigs: DataFrame): DataFrame = {
-    val sh = sigs.select(col("id"), size(col("hs")).as("n_sh"), col("hs"))
-    val inv = sh.select(col("id"), col("n_sh"), explode(col("hs")).as("g"))
-    val a = inv.select(col("g"), col("id").as("a_id"), col("n_sh").as("a_n"))
-    val b = inv.select(col("g"), col("id").as("b_id"), col("n_sh").as("b_n"))
-    a.join(b, Seq("g"))
-      .filter(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("shared"),
-        first(col("a_n")).as("a_n"), first(col("b_n")).as("b_n"))
-  }
+  def pairCountsFromSigs(sigs: DataFrame): DataFrame =
+    keyPairs(sigs.select(col("id"), size(col("hs")).as("n"), col("hs"))
+        .select(col("id"), col("n"), explode(col("hs")).as("g")), Seq("g"))
+      .select(col("a_id"), col("b_id"), col("shared"), col("a_n"), col("b_n"))
 
   /** Exact n-gram Jaccard pairs as a filter over [[pairCountsFromSigs]]:
     * jaccard = shared / (|A| + |B| - shared). */
@@ -721,46 +654,13 @@ object Dedup {
     ngramJaccardPairsBlockedFromSigs(
       staged(signatures(df, idCol, textCol, n), stage), threshold, dfCap)
 
-  /** Containment pairs from a pre-computed [[signatures]] table:
-    * |A∩B| / min(|A|,|B|) >= threshold. The asymmetric companion of
-    * Jaccard — catches a short document EMBEDDED in a longer one (quote,
-    * boilerplate wrapper, superset page), which symmetric Jaccard
-    * misses because the union is dominated by the longer side. Same
-    * inverted-index join shape as [[ngramJaccardPairsFromSigs]]. */
-  def containmentPairsFromSigs(sigs: DataFrame,
-                               threshold: Double = 0.8): DataFrame =
-    containmentFromPairCounts(pairCountsFromSigs(sigs), threshold)
-
-  /** [[ngramJaccardPairsBlocked]] from a pre-computed [[signatures]]
-    * table.
-    *
-    * Candidate generation: df-count the shingles, keep the rare ones
-    * (2..dfCap docs), self-join the capped inverted index. All
-    * whole-stage-codegen'd hash joins/aggs on (long, long) rows, and —
-    * the scale-critical property — no row ever exceeds O(1) size (a
-    * collect_list-per-shingle variant would turn a stop-shingle's
-    * posting list into one multi-MB row).
-    *
-    * Verification is COUNT-based, fused into candidate generation: the
-    * pair aggregation that dedups candidates also counts their shared
-    * rare shingles, and the full shared count decomposes exactly as
-    *   shared = shared_rare + |stop(A) ∩ stop(B)|
-    * (a df=1 shingle is in neither class and can never be shared), where
-    * stop(X) is X's df>dfCap shingle list — tiny by construction: a
-    * corpus has few distinct stop-shingles, so the per-doc stop arrays
-    * stay small and broadcastable even when posting lists are huge.
-    * This replaces the earlier distinct-pairs exchange + two full
-    * signature-array joins + per-pair array verification (the dominant
-    * cost at 1M+ candidates; ~2x faster at sf0.1) while producing the
-    * identical pair set — the oracle states the same contract over full
-    * string shingle sets. */
   /** The |vocab| shingle document-frequency table over a [[signatures]]
-    * table — a prepare-once artifact: callers running the blocked
-    * operator more than once per corpus should build this once, persist
-    * or write it, and pass it to [[ngramJaccardPairsBlockedFromSigs]].
-    * For the blocked operator the input must be the REPRESENTATIVE
-    * signature table ([[repSignatures]]): the blocked contract counts
-    * document frequency over distinct-text representatives. */
+    * table — a prepare-once artifact: callers running the rep-based
+    * passes more than once per corpus should build this once, persist
+    * or write it, and pass it to [[repIndexFromSigs]]. The input must be
+    * the REPRESENTATIVE signature table ([[repSignatures]]): the blocked
+    * contract counts document frequency over distinct-text
+    * representatives. */
   def shingleDocFreq(sigs: DataFrame): DataFrame =
     sigs.select(col("id"), explode(col("hs")).as("g"))
       .groupBy(col("g")).agg(count(lit(1)).as("c"))
@@ -816,10 +716,33 @@ object Dedup {
     RepIndex(rep, repSigs, inverted)
   }
 
+  /** [[ngramJaccardPairsBlocked]] from a pre-computed [[signatures]]
+    * table; `index` is the prepare-once [[RepIndex]] (derived here when
+    * absent).
+    *
+    * Candidate generation: keep the rare shingles (2..dfCap docs) of the
+    * df-classified inverted index and expand pairs within each
+    * ([[keyPairs]]). All whole-stage-codegen'd hash joins/aggs on
+    * (long, long) rows, and — the scale-critical property — no row ever
+    * exceeds O(1) size (a collect_list-per-shingle variant would turn a
+    * stop-shingle's posting list into one multi-MB row).
+    *
+    * Verification is COUNT-based, fused into candidate generation: the
+    * pair aggregation that dedups candidates also counts their shared
+    * rare shingles, and the full shared count decomposes exactly as
+    *   shared = shared_rare + |stop(A) ∩ stop(B)|
+    * (a df=1 shingle is in neither class and can never be shared), where
+    * stop(X) is X's df>dfCap shingle list — tiny by construction: a
+    * corpus has few distinct stop-shingles, so the per-doc stop arrays
+    * stay small and broadcastable even when posting lists are huge.
+    * This replaces the earlier distinct-pairs exchange + two full
+    * signature-array joins + per-pair array verification (the dominant
+    * cost at 1M+ candidates; ~2x faster at sf0.1) while producing the
+    * identical pair set — the oracle states the same contract over full
+    * string shingle sets. */
   def ngramJaccardPairsBlockedFromSigs(sigs: DataFrame,
                                        threshold: Double = 0.3,
                                        dfCap: Int = 50,
-                                       docFreq: Option[DataFrame] = None,
                                        index: Option[RepIndex] = None): DataFrame = {
     // ---- exact-replica pre-pass (always on) ---------------------------
     // The df basis AND the candidate universe are the exact-text
@@ -839,38 +762,26 @@ object Dedup {
     // make the pair set depend on corpus statistics — and the oracle
     // restates the same rep-based contract verbatim.
     val withG = withSetDigest(sigs)
-    val idx = index.getOrElse {
-      // |vocab|-sized df; BOTH the rare-candidate filter and the stop-
-      // shingle profile consume it. Fallback df is over repSigs,
-      // matching the documented rep-df contract above and the
-      // stop-profile passes — df over raw sigs would count replicas,
-      // and on a replica-heavy corpus every shingle would blow the cap
-      // (candidate-set collapse) while the supplied-artifact path
-      // stayed rep-based (advisor, round 18). The classified inverted
-      // index joins df ONCE keeping c; an explicit persist (inside
-      // [[repIndexFromSigs]]) makes the two-branch sharing real and
-      // gives AQE exact build-side stats — the exchange-reuse the naive
-      // formulation bets on does not materialize under AQE.
-      repIndexFromSigs(withG, docFreq)
-    }
+    // The fallback index is rep-based like the artifact (df over raw
+    // sigs would count replicas, and on a replica-heavy corpus every
+    // shingle would blow the cap); its explicit persists make the
+    // two-branch sharing of the classified index real and give AQE
+    // exact build-side stats.
+    val idx = index.getOrElse(repIndexFromSigs(withG))
     val (rep, repSigs, invC) = (idx.rep, idx.repSigs, idx.inverted)
     val members = withG.select(col("g"), col("id"))
     val hs = repSigs.select(col("id"), col("hs"))
-    val invR = invC.filter(col("c") <= dfCap).select(col("id"), col("g"))
-    // candidate pairs: rare-shingle inverted-index self-join + pair-count
-    // aggregation. shuffle_hash hinted: the build side is one partition
-    // of the capped index (rows bounded by dfCap per shingle — always
-    // hashable), and skipping SMJ's per-partition sorts measures ~25%
-    // faster at equal exchange count. Measured against a collect_list +
+    // candidate pairs within the rare-shingle buckets. shuffle_hash
+    // hinted: the build side is one partition of the capped index (at
+    // most dfCap docs per shingle — always hashable), and skipping SMJ's
+    // per-partition sorts measures ~25% faster at equal exchange count.
+    // Measured against a collect_list +
     // in-group i<j HOF expansion (one exchange fewer on paper): the HOF
     // variant loses — transform/flatten/slice are CodegenFallback, and
     // the interpreted per-group lambdas cost more than the exchange.
-    val pairs = invR.select(col("g"), col("id").as("a_id"))
-      .join(invR.select(col("g"), col("id").as("b_id")).hint("shuffle_hash"),
-        Seq("g"))
-      .filter(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("shared_rare"))
+    val pairs = keyPairs(invC.filter(col("c") <= dfCap)
+        .select(col("id"), col("g")).hint("shuffle_hash"), Seq("g"))
+      .withColumnRenamed("shared", "shared_rare")
     // per-doc profile WITHOUT joining the corpus against the full
     // |vocab| table: the total is size(hs) (signatures are distinct per
     // doc — identical to counting exploded rows), and only the df>dfCap
@@ -904,8 +815,8 @@ object Dedup {
     * exact-replica groups: within-group pairs are exact replicas
     * (jaccard 1.0 by set identity), cross-group member pairs inherit
     * their representatives' jaccard (identical shingle sets). Groups are
-    * disjoint, so the union is duplicate-free — the same expansion shape
-    * the minhash pre-pass uses inline. `rep` = (g, id, cnt) and
+    * disjoint, so the union is duplicate-free. Shared by the minhash
+    * pre-pass and every rep-based pass. `rep` = (g, id, cnt) and
     * `members` = (g, id) from [[repSignatures]]/[[withSetDigest]]. */
   private def expandRepPairs(repPairs: DataFrame, rep: DataFrame,
                              members: DataFrame): DataFrame = {
@@ -964,38 +875,21 @@ object Dedup {
   def stopProfilePairsFromSigs(sigs: DataFrame,
                                threshold: Double = 0.3,
                                dfCap: Int = 50,
-                               docFreq: Option[DataFrame] = None,
                                bucketCap: Int = 1000,
                                index: Option[RepIndex] = None): DataFrame = {
     val withG = withSetDigest(sigs)
     // df over representatives (the blocked contract's basis); callers
-    // with prepare-once artifacts pass the [[RepIndex]] (or at least
-    // the [[shingleDocFreq]] table) in
-    val idx = index.getOrElse(repIndexFromSigs(withG, docFreq))
-    val (rep, repSigs) = (idx.rep, idx.repSigs)
-    val members = withG.select(col("g"), col("id"))
-    val hs = repSigs.select(col("id"), col("hs"))
-    // per-rep stop profile: the SORTED array of this doc's above-cap
-    // shingle hashes — a FILTER over the df-classified inverted index
-    // (inner semantics ⇒ only docs with a non-empty profile survive;
-    // stop vocab is tiny by construction, so profiles are small
-    // arrays). Digest to a compact join key. No join at all before the
-    // per-id aggregation: the pre-round-20 broadcast-the-stop-vocab
-    // join (itself the fix for the measured 80 s g-shuffle skew at a
-    // 1M-member family, PLANS.md dedup_stop_profile_families) is subsumed by the
-    // classified index — c rides every (id, g) row, so the profile
-    // pass is per-doc parallel with zero exchanges before groupBy(id).
-    val stops = idx.inverted.filter(col("c") > dfCap)
-      .groupBy(col("id"))
-      .agg(sort_array(collect_list(col("g"))).as("stop"))
-    val keyed = pooledPersist(stops.select(col("id"),
-      md5(to_binary(concat_ws(",", col("stop").cast("array<string>")),
-        lit("utf-8"))).as("bk")))
+    // with prepare-once artifacts pass the [[RepIndex]] in
+    val idx = index.getOrElse(repIndexFromSigs(withG))
+    val keyed = pooledPersist(stopProfileKeys(idx, dfCap))
     // buckets of 2..bucketCap members pair up; both the size aggregate
     // and the self-join key on the 16-byte digest, never the profile
     val sized = keyed.groupBy(col("bk")).agg(count(lit(1)).as("n"))
       .filter(col("n") >= 2 && col("n") <= bucketCap)
       .select(col("bk"))
+    // In-bucket expansion outside [[keyPairs]]: each rep has ONE profile,
+    // so a pair meets in exactly one bucket and needs no pair aggregate
+    // (the core's would add an exchange and two aggregates here).
     val inBucket = keyed.join(sized.hint("shuffle_hash"), "bk")
     val cand = inBucket.select(col("bk"), col("id").as("a_id"))
       .join(inBucket.select(col("bk"), col("id").as("b_id"))
@@ -1003,19 +897,34 @@ object Dedup {
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"))
     // exact verification over FULL shingle sets (precision is never
-    // blocking-dependent): candidates join the signature arrays, the
-    // native fused jaccard scores each pair
-    val aSh = hs.select(col("id").as("a_id"), col("hs").as("a_sh"))
-    val bSh = hs.select(col("id").as("b_id"), col("hs").as("b_sh"))
-    val repPairs = cand.join(aSh.hint("shuffle_hash"), "a_id")
-      .join(bSh.hint("shuffle_hash"), "b_id")
-      .withColumn("jaccard", graft.functions.JaccardSimilarity.jaccardNative(
-        col("a_sh"), col("b_sh")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a_id"), col("b_id"),
-        round(col("jaccard"), 4).as("jaccard"))
-    expandRepPairs(repPairs, rep, members)
+    // blocking-dependent)
+    val repPairs = verifyPairs(cand,
+      idx.repSigs.select(col("id"), col("hs").as("v")).hint("shuffle_hash"),
+      graft.functions.JaccardSimilarity.jaccardNative, threshold, "jaccard")
+    expandRepPairs(repPairs, idx.rep, withG.select(col("g"), col("id")))
   }
+
+  /** The stop-profile key generator of [[stopProfilePairsFromSigs]] and
+    * [[stopProfileFamilies]]: `(id, bk)` per representative with a
+    * non-empty above-cap profile, `bk` the md5 of the SORTED array of its
+    * df > dfCap shingle hashes (a digest collision would merge two
+    * buckets, P ~ 2^-128 — the w.h.p. injectivity the hashed-shingle
+    * profiles already rely on). A FILTER over the df-classified inverted
+    * index (inner semantics: only docs with a non-empty profile
+    * survive; stop vocab is tiny by construction, so profiles are small
+    * arrays), with no join before the per-id aggregation: c rides every
+    * (id, g) row, so the pass is per-doc parallel with zero exchanges
+    * before groupBy(id). (History: a g-keyed shuffle join of the stop
+    * vocab measured 148.9 s wall / 80.5 s max task at a 1M-member
+    * family; the round-18 fix broadcast the vocab, 8.8 s / 2.1 s; the
+    * classified index subsumes the broadcast too.) */
+  private def stopProfileKeys(idx: RepIndex, dfCap: Int): DataFrame =
+    idx.inverted.filter(col("c") > dfCap)
+      .groupBy(col("id"))
+      .agg(sort_array(collect_list(col("g"))).as("stop"))
+      .select(col("id"),
+        md5(to_binary(concat_ws(",", col("stop").cast("array<string>")),
+          lit("utf-8"))).as("bk"))
 
   /** Family-level product of the stop-profile pass — the scale contract
     * [[stopProfilePairsFromSigs]] documents: a boilerplate family larger
@@ -1028,9 +937,8 @@ object Dedup {
     * hash-independent cluster key both engines derive identically, so
     * the DuckDB twin needs no access to the hash domain. Linear at ANY
     * family size: one df classification (the shared prepare-once
-    * [[shingleDocFreq]] artifact), one profile groupBy, one count
-    * aggregate, one bucket re-join — no self-join, no cap, no lost
-    * mass. Downstream keeps one doc per family (or runs the pair pass
+    * [[RepIndex]]), one profile groupBy, one count aggregate, one
+    * bucket re-join — no self-join, no cap, no lost mass. Downstream keeps one doc per family (or runs the pair pass
     * within a family when it needs per-pair jaccard) without ever
     * materializing O(n^2) pairs.
     *
@@ -1040,31 +948,14 @@ object Dedup {
     * build side, 2.1 s max task measured at a 1M-member family;
     * extrapolates to minutes at 100M members, where the product is
     * still the only feasible one). Everything upstream is per-doc
-    * parallel after the stop-vocab broadcast. */
+    * parallel ([[stopProfileKeys]]). */
   def stopProfileFamilies(sigs: DataFrame,
                           dfCap: Int = 50,
-                          docFreq: Option[DataFrame] = None,
                           index: Option[RepIndex] = None): DataFrame = {
     val withG = withSetDigest(sigs)
-    val idx = index.getOrElse(repIndexFromSigs(withG, docFreq))
+    val idx = index.getOrElse(repIndexFromSigs(withG))
     val rep = idx.rep
-    // per-rep stop profile, digested — same construction as the pair
-    // pass (a digest collision here would merge two families, P ~ 2^-128
-    // over md5 of the canonical sorted profile — the same w.h.p.
-    // injectivity the hashed-shingle profiles already rely on).
-    // A FILTER over the df-classified inverted index — no join before
-    // the per-id aggregation at all. (History: a g-keyed shuffle join
-    // of the stop vocab measured 148.9 s wall / 80.5 s max task at a
-    // 1M-member family; the round-18 fix broadcast the vocab, 8.8 s /
-    // 2.1 s; the classified index subsumes the broadcast too — c rides
-    // every (id, g) row, so the pass is per-doc parallel with zero
-    // pre-aggregation exchanges.)
-    val stops = idx.inverted.filter(col("c") > dfCap)
-      .groupBy(col("id"))
-      .agg(sort_array(collect_list(col("g"))).as("stop"))
-    val keyed = stops.select(col("id").as("rid"),
-      md5(to_binary(concat_ws(",", col("stop").cast("array<string>")),
-        lit("utf-8"))).as("bk"))
+    val keyed = stopProfileKeys(idx, dfCap).withColumnRenamed("id", "rid")
     // members inherit their representative's profile bucket (replica
     // members share the rep's shingle set, hence its profile)
     val memberBk = pooledPersist(withG.select(col("g"), col("id"))
@@ -1090,7 +981,9 @@ object Dedup {
     * threshold is high (t=0.7 indexes ~30% of each doc, and the indexed
     * shingles are the rarest, so candidate fanout collapses). A length
     * filter (min(|A|,|B|) >= ceil(t*max)) prunes incompatible sizes in
-    * the join itself.
+    * the join itself — which is why this expansion stays outside
+    * [[keyPairs]]: the core's pair aggregate would see every
+    * length-incompatible candidate first.
     *
     * Hashing is the portable md5-56 ([[portableHash56]]) because the
     * global prefix ORDER (df, then hash) must be reproducible by the
@@ -1130,14 +1023,9 @@ object Dedup {
         col("b_n") >= ceilT(col("a_n")))
       .select(col("a_id"), col("b_id"))
       .dropDuplicates("a_id", "b_id")
-    val sigs = inv.groupBy(col("id")).agg(collect_list(col("h")).as("hs"))
-    val aSh = sigs.select(col("id").as("a_id"), col("hs").as("a_sh"))
-    val bSh = sigs.select(col("id").as("b_id"), col("hs").as("b_sh"))
-    cand.join(aSh, "a_id").join(bSh, "b_id")
-      .withColumn("jaccard", graft.functions.JaccardSimilarity.jaccardNative(
-        col("a_sh"), col("b_sh")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a_id"), col("b_id"), round(col("jaccard"), 4).as("jaccard"))
+    verifyPairs(cand,
+      inv.groupBy(col("id")).agg(collect_list(col("h")).as("v")),
+      graft.functions.JaccardSimilarity.jaccardNative, threshold, "jaccard")
   }
 
   // --------------------------------------------------- incremental dedup
@@ -1168,11 +1056,7 @@ object Dedup {
     // [[minhashPairsFromSigs]]); the oracle restatement is unchanged.
     val nG = withSetDigest(newSigs)
     val cG = withSetDigest(corpusSigs)
-    val usePrePass = replicaGate.getOrElse {
-      val r = cG.agg(count(lit(1)).cast(DoubleType),
-        count_distinct(col("g")).cast(DoubleType)).collect()(0)
-      r.getDouble(1) <= 0.8 * r.getDouble(0)
-    }
+    val usePrePass = replicaGate.getOrElse(replicaHeavy(cG, col("g")))
 
     def pairsOf(n: DataFrame, c: DataFrame): DataFrame = {
       val nInv = n.select(col("id").as("new_id"),

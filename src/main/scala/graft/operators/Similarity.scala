@@ -198,18 +198,8 @@ object Similarity {
     // run single-threaded. A hard repartition keeps the expansion wide.
     val parts = math.max(v.sparkSession.sparkContext.defaultParallelism, 32)
     val bandedW = banded.repartition(parts, col("band"), col("bucket"))
-    val cand = bandedW.select(col("band"), col("bucket"), col("id").as("a_id"))
-      .join(bandedW.select(col("band"), col("bucket"), col("id").as("b_id")),
-        Seq("band", "bucket"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"))
-      .dropDuplicates("a_id", "b_id")
-    cand
-      .join(v.select(col("id").as("a_id"), col("v").as("a_v")), "a_id")
-      .join(v.select(col("id").as("b_id"), col("v").as("b_v")), "b_id")
-      .withColumn("cosine", cosine(col("a_v"), col("b_v")))
-      .filter(col("cosine") >= threshold)
-      .select(col("a_id"), col("b_id"), round(col("cosine"), 4).as("cosine"))
+    Dedup.verifyPairs(Dedup.keyPairs(bandedW, Seq("band", "bucket")), v,
+      cosine, threshold, "cosine")
   }
 
   /** Band width (sign bits per band) for a corpus of `n` vectors: the

@@ -73,7 +73,7 @@ object ArtifactStore {
     * edit to trainPq / encodePq / ivfTrain / encode WITHOUT a bump
     * silently reuses stale coded corpora that the oracle then "confirms"
     * (it reads the same stale parquet) — advisor, round 19. */
-  private[graft] val ArtifactVersion = 8
+  private[graft] val ArtifactVersion = 9
   private def artifactRoot(dir: String): String =
     s"target/prepared/pipeline/v$ArtifactVersion/" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
@@ -189,13 +189,7 @@ object ArtifactStore {
     * would re-pay a 2-stage aggregate + collect on EVERY query execution
     * (bench r11: +0.5 s per warm dedup_minhash pass at sf0.1). */
   private[graft] def replicaGate(s: SparkSession, dir: String): Boolean =
-    memo(s, dir, "replica_gate") {
-      import org.apache.spark.sql.types.DoubleType
-      val row = docSigs(s, dir)
-        .agg(count(lit(1)).cast(DoubleType),
-          count_distinct(col("g")).cast(DoubleType)).collect()(0)
-      row.getDouble(1) <= 0.8 * row.getDouble(0)
-    }
+    memo(s, dir, "replica_gate")(Dedup.replicaHeavy(docSigs(s, dir), col("g")))
 
   /** Shared-shingle pair-count table (Dedup.pairCountsFromSigs over
     * [[docSigs]]): the inverted-index self-join + count aggregation is

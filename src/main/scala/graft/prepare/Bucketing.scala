@@ -1,5 +1,6 @@
 package graft.prepare
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Bucketed-table layout for co-located joins.
@@ -18,37 +19,28 @@ object Bucketing {
   /** Write `df` as a bucketed, sorted external table registered in the
     * session catalog. Idempotent per (session, base definition): the
     * early return is keyed on a canonicalized-plan + bucket-count
-    * fingerprint written as a marker file next to the data, so an edit
-    * to the base definition (filter, schema, bucket count) REWRITES the
-    * layout instead of silently merging against the stale one (round-12
-    * advice — the plain tableExists check had exactly that hole). A
-    * relative `path` resolves against the working directory, data and
-    * marker alike (Spark would put a relative table location under the
-    * warehouse dir). */
+    * [[DefMarker]] next to the data, so an edit to the base definition
+    * (filter, schema, bucket count) REWRITES the layout instead of
+    * silently merging against the stale one (round-12 advice — the plain
+    * tableExists check had exactly that hole). A relative `path`
+    * resolves against the working directory, data and marker alike
+    * (Spark would put a relative table location under the warehouse
+    * dir); a qualified one is used as given. */
   def writeBucketed(spark: SparkSession, df: DataFrame, table: String,
                     key: String, numBuckets: Int, path: String): Unit = {
-    val dir = new java.io.File(path).getAbsolutePath
-    val basis =
-      df.queryExecution.analyzed.canonicalized.toString + "|" + key + "|" + numBuckets
-    val defHash = java.security.MessageDigest.getInstance("MD5")
-      .digest(basis.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val marker = new java.io.File(s"$dir/_graft_def_$defHash")
-    if (spark.catalog.tableExists(table) && marker.exists()) return
+    val p = new Path(path)
+    val root = p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+    val mark = new DefMarker(spark, df, root, s"$key|$numBuckets")
+    if (spark.catalog.tableExists(table) && mark.present) return
     if (spark.catalog.tableExists(table)) spark.sql(s"DROP TABLE `$table`")
     df.write
       .mode(SaveMode.Overwrite)
       .bucketBy(numBuckets, key)
       .sortBy(key)
-      .option("path", dir)
+      .option("path", root.toString)
       .option("compression", "zstd")
       .saveAsTable(table)
-    // stale fingerprints from an older definition die with the rewrite
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("_graft_def_") && f.getName != marker.getName)
-      .foreach(_.delete())
-    marker.getParentFile.mkdirs()
-    marker.createNewFile()
-    ()
+    mark.commit()
   }
 
   /** Shuffle-free equi-join of two same-bucketed tables. */

@@ -146,25 +146,20 @@ object ZOrder {
       s.isDirectory && s.getPath.getName.startsWith("z_cell="))
 
   /** Write `df` z-ordered on two long-typed columns. Idempotent per
-    * (base definition, bounds, cellBits) via the same canonicalized-plan
-    * marker discipline as [[Bucketing.writeBucketed]]. `cellBits` must
-    * be even (half per dimension); 6 gives an 8x8 grid = up to 64
-    * partition directories. */
+    * (base definition, bounds, cellBits) via the same [[DefMarker]] as
+    * [[Bucketing.writeBucketed]]. `cellBits` must be even (half per
+    * dimension); 6 gives an 8x8 grid = up to 64 partition directories. */
   def writeZOrdered(spark: SparkSession, df: DataFrame, path: String,
                     xCol: String, yCol: String, cellBits: Int = 6): Unit = {
     require(cellBits > 0 && cellBits % 2 == 0 && cellBits <= 2 * FineBits,
       s"cellBits must be even in (0, ${2 * FineBits}], got $cellBits")
-    val basis = df.queryExecution.analyzed.canonicalized.toString +
-      s"|$xCol|$yCol|$cellBits|$FineBits"
-    val defHash = java.security.MessageDigest.getInstance("MD5")
-      .digest(basis.getBytes("UTF-8")).map("%02x".format(_)).mkString
     // metadata and markers go through the path's own FS, like every
     // read of them: java.io would miss (or mis-resolve) a qualified root
     val fs = layoutFs(spark, path)
     val root = new Path(path)
-    val marker = new Path(root, s"_graft_def_$defHash")
+    val mark = new DefMarker(spark, df, root, s"$xCol|$yCol|$cellBits|$FineBits")
     val metaPath = new Path(root, "_zmeta.json")
-    if (fs.exists(marker) && fs.exists(metaPath)) return
+    if (mark.present && fs.exists(metaPath)) return
 
     // grid bounds from the data — one narrow aggregate, written into the
     // layout's metadata so readers normalize identically
@@ -195,10 +190,7 @@ object ZOrder {
       s""""yMin":${meta.yMin},"yMax":${meta.yMax},"cellBits":$cellBits}"""
     val out = fs.create(metaPath, true)
     try out.write(metaJson.getBytes("UTF-8")) finally out.close()
-    fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith("_graft_def_") && p.getName != marker.getName)
-      .foreach(fs.delete(_, false))
-    fs.create(marker, true).close()
+    mark.commit()
   }
 
   /** [[gridCoord]] with the input CLAMPED into [min, max] before the
@@ -252,8 +244,7 @@ object ZOrder {
       .partitionBy("z_cell")
       .option("compression", "zstd")
       .parquet(path)
-    fs.listStatus(root).filter(_.getPath.getName.startsWith("_graft_def_"))
-      .foreach(s => fs.delete(s.getPath, false))
+    DefMarker.clear(spark, root)
   }
 
   /** Bin-pack fragmented cells of a z layout (the [[appendZOrdered]]

@@ -51,6 +51,52 @@ class JaccardSpec extends SparkSpec {
     assert(viaPlan.toSeq === Seq(2.0 / 6.0, 1.0))
   }
 
+  test("candidate-pair core: keyPairs expands each pair once, verifyPairs keeps and rounds") {
+    // ids 1 and 2 share keys 10, 11 and 12; id 3 shares 12 with both;
+    // key 99 (id 1 only) and key 77 (id 4's only key) have one holder
+    val keyed = Seq(
+      (2L, 10L, "x2"), (1L, 10L, "x1"), (1L, 11L, "x1"), (2L, 11L, "x2"),
+      (3L, 12L, "x3"), (2L, 12L, "x2"), (1L, 12L, "x1"), (1L, 99L, "x1"),
+      (4L, 77L, "x4")).toDF("id", "k", "tag")
+    val pairs = Dedup.keyPairs(keyed, Seq("k"))
+    assert(pairs.columns.toSeq === Seq("a_id", "b_id", "a_tag", "b_tag", "shared"))
+    val rows = pairs.collect().map(r => (r.getLong(0), r.getLong(1),
+      r.getString(2), r.getString(3), r.getLong(4))).toSeq.sortBy(r => (r._1, r._2))
+    assert(rows.forall(r => r._1 < r._2), rows.toString)
+    assert(rows === Seq((1L, 2L, "x1", "x2", 3L), (1L, 3L, "x1", "x3", 1L),
+      (2L, 3L, "x2", "x3", 1L)))
+
+    // score a_v / b_v: 1/3, 1/7, 3/7 — the 0.2 threshold drops the 1/7 pair, the
+    // survivors round to 4 places
+    val side = Seq((1L, 1.0), (2L, 3.0), (3L, 7.0)).toDF("id", "v")
+    val verified = Dedup.verifyPairs(pairs, side, _ / _, 0.2, "ratio")
+    assert(verified.columns.toSeq === Seq("a_id", "b_id", "ratio"))
+    assert(verified.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSeq.sortBy(r => (r._1, r._2)) === Seq((1L, 2L, 0.3333), (2L, 3L, 0.4286)))
+  }
+
+  test("candidate-pair core leaves the join strategy to the caller's hint") {
+    // the unbounded pair_counts expansion must stay a (spillable) sort-merge
+    // join; bounded callers opt into shuffle_hash by hinting their input
+    val keyed = Seq((1L, 10L), (2L, 10L), (3L, 11L)).toDF("id", "k")
+    val side = Seq((1L, 1.0), (2L, 3.0)).toDF("id", "v")
+    def plan(df: org.apache.spark.sql.DataFrame): String = df.queryExecution.sparkPlan.toString
+    def count(p: String, s: String): Int = s.r.findAllMatchIn(p).size
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val plain = plan(Dedup.verifyPairs(Dedup.keyPairs(keyed, Seq("k")), side,
+        _ / _, 0.0, "r"))
+      assert(count(plain, "SortMergeJoin") === 3 && count(plain, "ShuffledHashJoin") === 0, plain)
+      val hinted = plan(Dedup.verifyPairs(Dedup.keyPairs(keyed.hint("shuffle_hash"), Seq("k")),
+        side.hint("shuffle_hash"), _ / _, 0.0, "r"))
+      assert(count(hinted, "ShuffledHashJoin .*BuildRight") === 3 &&
+        count(hinted, "SortMergeJoin") === 0, hinted)
+      val sigs = Seq((1L, Seq(1L, 2L)), (2L, Seq(2L, 3L))).toDF("id", "hs")
+      assert(count(plan(Dedup.pairCountsFromSigs(sigs)), "ShuffledHashJoin") === 0)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   test("stop-profile pass recovers the boilerplate class the df-cap provably loses") {
     // Fixture shaped like the dedup skew rung's adversarial mix (PLANS.md
     // round 17, judge #5), shrunk:

@@ -21,8 +21,8 @@ import graft.tools.Probe
   * ordering cannot change which upstream stages appear as cached scans.
   * Regenerate with `runMain graft.tools.Probe <headline entries>
   * <sf0.001 dir> 1` (its `exchanges=` field). The probe's session confs
-  * can read higher (ext_merge_upsert_bucketed: 2 against its pin of 1);
-  * a count is a regression only when this spec fails. */
+  * can read higher (ext_merge_upsert_bucketed: 2 against its pin of 1,
+  * see its pin); a count is a regression only when this spec fails. */
 class PlanFingerprintSpec extends SparkSpec {
 
   private val pinned: Map[String, Int] = Map(
@@ -60,6 +60,11 @@ class PlanFingerprintSpec extends SparkSpec {
     "ext_funnel" -> 2,
     "ext_global_agg" -> 0,
     "ext_merge_upsert" -> 2,
+    // a GraftSession probe reads 2: its
+    // spark.sql.adaptive.coalescePartitions.initialPartitionNum (8 x
+    // cores) shuffles the delta side wider than the table's
+    // shuffle.partitions buckets, so the bucketed base side re-shuffles
+    // too; the probe with that conf set to the core count reads 1
     "ext_merge_upsert_bucketed" -> 1,
     "ext_moving_avg" -> 1,
     "ext_pack_sequences" -> 1,

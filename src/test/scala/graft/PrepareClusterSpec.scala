@@ -64,4 +64,32 @@ class PrepareClusterSpec extends SparkSpec {
     val expect = base.filter(col("o_orderkey") < 500).count()
     assert(n2 == expect && n2 != n1, s"stale bucketed layout reused: $n2 vs $expect")
   }
+
+  // a file:-qualified root: data and def marker go through the root's own
+  // FS (java.io would resolve "file:/..." as a path under the working
+  // directory)
+  test("writeBucketed under a file:-qualified root: same definition a no-op, a changed one rewrites") {
+    import graft.prepare.Bucketing
+    val local = java.nio.file.Files
+      .createTempDirectory("bkt_qualified").toString + "/layout"
+    val root = "file:" + local
+    val tbl = "bkt_qualified_spec"
+    val base = graft.sources.ParquetNanos.read(spark, s"$sfDir/orders.parquet")
+    def files(): Set[String] =
+      Option(new java.io.File(local).listFiles()).toSeq.flatten.map(_.getName).toSet
+    def markers(): Set[String] = files().filter(_.startsWith("_graft_def_"))
+    Bucketing.writeBucketed(spark, base.filter(col("o_orderkey") < 100),
+      tbl, "o_orderkey", 4, root)
+    val written = files()
+    val n1 = spark.table(tbl).count()
+    assert(markers().size == 1 && written.exists(_.startsWith("part-")), written.toString)
+    Bucketing.writeBucketed(spark, base.filter(col("o_orderkey") < 100),
+      tbl, "o_orderkey", 4, root)
+    assert(files() == written, "identical definition rewrote the layout")
+    Bucketing.writeBucketed(spark, base.filter(col("o_orderkey") < 500),
+      tbl, "o_orderkey", 4, root)
+    val n2 = spark.table(tbl).count()
+    assert(n2 == base.filter(col("o_orderkey") < 500).count() && n2 != n1)
+    assert(markers().size == 1 && markers() != written.filter(_.startsWith("_graft_def_")))
+  }
 }
