@@ -1,59 +1,110 @@
 package graft.catalyst
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions.{col, count => fcount, lit, max => fmax, min => fmin, sum => fsum}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.engine.AggTableDef
+import graft.dsl.QueryIR.{AggFn, AggItem, BLit, CmpOp, ColItem, Cond, DLit, ILit, Lit,
+  Query, SLit, SelectItem, Eq => EqOp, Gt => GtOp, Gte => GteOp, In => InOp, Lt => LtOp,
+  Lte => LteOp, Neq => NeqOp, Avg => AvgFn, Count => CountFn, Max => MaxFn, Min => MinFn,
+  Sum => SumFn}
+import graft.engine.{AggTableDef, AggregateRouter}
 
-/** Catalyst materialized-view rewrite: `Aggregate(Filter(Scan(events)))`
-  * over the fact table is rewritten onto a pre-computed rollup table when
-  * the containment proof holds.
+/** Catalyst front end of rollup routing: a translator, not a prover.
   *
-  * This is the idiomatic-Catalyst restatement of the reference's
-  * "query planner" (its five hard-coded dict matchers,
-  * query_engine.py:73-232) — but at the *logical plan* level, so it fires
-  * for ANY front-end (our DSL, spark.sql, raw DataFrame code), not just
-  * queries phrased through the engine. OSS Spark has no built-in
-  * materialized-view rewriting; this rule adds it via
-  * `SparkSessionExtensions.injectOptimizerRule`.
+  * `Aggregate(Filter* / attribute-only Project* / fact scan)` over the
+  * registered fact relation (identified by its file-source root path) is
+  * translated into the DSL's [[graft.dsl.QueryIR.Query]] form; the
+  * containment proof is [[AggregateRouter.matches]] and the
+  * re-aggregation algebra is [[AggregateRouter.executeOn]] — the same
+  * code the DSL route runs, so a soundness fix lands once for both front
+  * ends. The rewritten subplan replaces the aggregate under a `Project`
+  * that restores each original output's name, exprId and data type.
   *
-  * Soundness: the rewrite fires only when
-  *  1. the aggregate's child is (Filter over)? the registered fact
-  *     relation (identified by its file-source root path);
-  *  2. every filter conjunct is `attr op literal` on a rollup key, or is
-  *     exactly a conjunct of the rollup's own build filter;
-  *  3. grouping keys are a subset of rollup keys;
-  *  4. every aggregate is SUM/MIN/MAX/AVG/COUNT over a rollup measure (or
-  *     COUNT(*)/COUNT(1)), rewritten by the standard partial-aggregate
-  *     algebra (SUM->SUM of partial sums, COUNT->SUM of partial counts,
-  *     AVG->SUM/SUM, MIN/MAX->MIN/MAX of partial bounds).
-  * Anything else leaves the plan untouched. This containment check is the
-  * fix for the reference's filter-dropping matchers (SURVEY §4.3 #2-3).
+  * This is the idiomatic-Catalyst restatement of the reference's "query
+  * planner" (its five hard-coded dict matchers, query_engine.py:73-232),
+  * but at the *logical plan* level, so it fires for ANY front end
+  * (spark.sql, raw DataFrame code), not just queries phrased through the
+  * engine. OSS Spark has no built-in materialized-view rewriting.
+  *
+  * Translation: grouping attributes -> `groupBy`; output attributes ->
+  * `ColItem`; `attr op literal` conjuncts -> `Cond` (`Not(EqualTo)` ->
+  * neq, `In`/`InSet` -> in, a literal on the left flips the comparison,
+  * a date literal -> an ISO string the compiler casts back); COUNT(*),
+  * COUNT(1), COUNT/SUM/AVG/MIN/MAX of an attribute without DISTINCT or
+  * FILTER -> `AggItem` (a grouping-only aggregate gets a COUNT(*) the
+  * splice drops). An inferred `IsNotNull(a)` is dropped when another
+  * conjunct constrains `a` (every DSL op already rejects nulls). Any other
+  * shape (PLANS.md "One containment proof" lists them) leaves the plan
+  * untouched, and nothing throws out of the optimizer.
   */
-case class AggRewriteRule(
-    spark: SparkSession,
-    factPath: () => Option[String],
-    defs: () => Seq[AggTableDef],
-    rollup: String => DataFrame) extends Rule[LogicalPlan] {
+case class AggRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
+
+  private val reg = AggRewriteRule.registryFor(spark)
 
   /** Count of successful rewrites (for tests/inspection). */
   @volatile var fired: Long = 0
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val path = factPath().getOrElse(return plan)
+    val path = reg.factPath.getOrElse(return plan)
     plan.transformDown {
-      case agg: Aggregate =>
-        tryRewrite(agg, path).getOrElse(agg)
+      case agg: Aggregate => rewrite(agg, path).getOrElse(agg)
     }
   }
 
-  // ----------------------------------------------------------- matching
+  private def rewrite(agg: Aggregate, path: String): Option[LogicalPlan] = for {
+    q <- translate(agg, path)
+    (d, residual) <- reg.defs.iterator
+      .flatMap(d => AggregateRouter.matches(q, d).map(d -> _)).nextOption()
+    sub <- Try(AggregateRouter.executeOn(q, d, residual, reg.rollupLoader(d.name))
+      .queryExecution.analyzed).toOption
+  } yield {
+    fired += 1
+    // zip stops at agg.output: a COUNT(*) added by translate is dropped
+    Project(agg.output.zip(sub.output).map { case (o, s) =>
+      Alias(if (s.dataType == o.dataType) s else Cast(s, o.dataType), o.name)(exprId = o.exprId)
+    }, sub)
+  }
+
+  // -------------------------------------------------------- translation
+
+  private def translate(agg: Aggregate, path: String): Option[Query] = {
+    val conjuncts = childFilters(agg.child, path).getOrElse(return None)
+    val groupBy = agg.groupingExpressions.map {
+      case a: AttributeReference => a.name
+      case _ => return None
+    }
+    val select: Seq[SelectItem] = agg.aggregateExpressions.map {
+      case a: AttributeReference => ColItem(a.name)
+      case Alias(AggregateExpression(fn, _, false, None, _), _) =>
+        aggItem(fn).getOrElse(return None)
+      case _ => return None
+    }
+    if (select.distinct.size != select.size) return None
+    // a grouping-only aggregate (a DISTINCT, or the inner aggregate of a
+    // count whose functions column pruning removed) is stated with a
+    // COUNT(*) that the splice's Project drops
+    val stated =
+      if (select.exists(_.isInstanceOf[AggItem])) select else select :+ AggItem(CountFn, "*")
+    val (notNull, rest) = conjuncts.partition(_.isInstanceOf[IsNotNull])
+    val conds = rest.map(e => cond(e).getOrElse(return None))
+    val constrained = notNull.forall {
+      case IsNotNull(a: AttributeReference) => conds.exists(_.col == a.name)
+      case _ => false
+    }
+    // the layout convention: the fact table's catalog name is the last
+    // segment of its root path (`<root>/events`)
+    if (constrained)
+      Some(Query(stated, path.stripSuffix("/").split('/').last, conds, groupBy))
+    else None
+  }
 
   private def isFactScan(plan: LogicalPlan, path: String): Boolean = plan match {
     case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
@@ -61,157 +112,80 @@ case class AggRewriteRule(
     case _ => false
   }
 
-  /** Decompose the aggregate's child into (conjuncts, fact scan output). */
-  private def childFilters(plan: LogicalPlan, path: String)
-      : Option[Seq[Expression]] = plan match {
-    case Filter(cond, child) =>
-      childFilters(child, path).map(splitConjuncts(cond) ++ _)
-    case SubqueryAlias(_, child) => childFilters(child, path)
-    case Project(projectList, child)
-        if projectList.forall(_.isInstanceOf[AttributeReference]) =>
-      childFilters(child, path)
-    case rel if isFactScan(rel, path) => Some(Nil)
-    case _ => None
-  }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case other => Seq(other)
-  }
-
-  /** A filter conjunct usable on the rollup: attr op literal over column
-    * `name`. Returns (columnName, rebuild: Expression => Expression) where
-    * rebuild re-roots the predicate onto a new attribute. */
-  private def usableConjunct(e: Expression): Option[(String, Attribute => Expression)] = {
-    def lift(attr: AttributeReference, f: Attribute => Expression) =
-      Some((attr.name.toLowerCase, f))
-    e match {
-      case EqualTo(a: AttributeReference, l: Literal) => lift(a, EqualTo(_, l))
-      case EqualTo(l: Literal, a: AttributeReference) => lift(a, EqualTo(l, _))
-      case Not(EqualTo(a: AttributeReference, l: Literal)) => lift(a, x => Not(EqualTo(x, l)))
-      case GreaterThan(a: AttributeReference, l: Literal) => lift(a, GreaterThan(_, l))
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) => lift(a, GreaterThanOrEqual(_, l))
-      case LessThan(a: AttributeReference, l: Literal) => lift(a, LessThan(_, l))
-      case LessThanOrEqual(a: AttributeReference, l: Literal) => lift(a, LessThanOrEqual(_, l))
-      case GreaterThan(l: Literal, a: AttributeReference) => lift(a, LessThan(_, l))
-      case LessThan(l: Literal, a: AttributeReference) => lift(a, GreaterThan(_, l))
-      case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        lift(a, In(_, vs))
-      case InSet(a: AttributeReference, vs) => lift(a, InSet(_, vs))
-      case IsNotNull(a: AttributeReference) => lift(a, IsNotNull(_))
+  /** The aggregate child's filter conjuncts, if it bottoms out in the
+    * fact scan. */
+  private def childFilters(plan: LogicalPlan, path: String): Option[Seq[Expression]] =
+    plan match {
+      case Filter(c, child) => childFilters(child, path).map(splitConjunctivePredicates(c) ++ _)
+      case SubqueryAlias(_, child) => childFilters(child, path)
+      case Project(projectList, child) if projectList.forall(_.isInstanceOf[AttributeReference]) =>
+        childFilters(child, path)
+      case rel if isFactScan(rel, path) => Some(Nil)
       case _ => None
     }
-  }
 
-  /** Rewrite one aggregate function call onto rollup partial columns. */
-  private def rewriteAggFn(fn: AggregateFunction, d: AggTableDef,
-                           attrOf: String => Option[Attribute]): Option[Expression] = {
-    def measureName(e: Expression): Option[String] = e match {
-      case a: AttributeReference
-          if d.measures.exists(_.equalsIgnoreCase(a.name)) => Some(
-        d.measures.find(_.equalsIgnoreCase(a.name)).get)
-      case Cast(a: AttributeReference, _, _, _)
-          if d.measures.exists(_.equalsIgnoreCase(a.name)) => Some(
-        d.measures.find(_.equalsIgnoreCase(a.name)).get)
+  private def aggItem(fn: AggregateFunction): Option[AggItem] = {
+    def on(f: AggFn, e: Expression) = e match {
+      case a: AttributeReference => Some(AggItem(f, a.name))
       case _ => None
     }
-    def sumOf(c: String, resultType: Option[DataType] = None): Option[Expression] =
-      attrOf(c).map { a =>
-        val s = Sum(a).toAggregateExpression()
-        resultType.filter(_ != s.dataType).map(Cast(s, _)).getOrElse(s)
-      }
-    // COUNT -> SUM(partial counts) must coalesce to 0: SUM over an empty
-    // selection is NULL, COUNT over an empty scan is 0
-    def countOf(c: String): Option[Expression] =
-      sumOf(c, Some(LongType)).map(s => Coalesce(Seq(s, Literal(0L, LongType))))
     fn match {
-      case Count(Seq(Literal(_, _))) | Count(Nil) => countOf(d.cntStar)
-      case Count(Seq(e)) => measureName(e).flatMap(m => countOf(d.cntCol(m)))
-      case s @ Sum(e, _) => measureName(e).flatMap(m => sumOf(d.sumCol(m), Some(s.dataType)))
-      case a @ Average(e, _) =>
-        measureName(e).flatMap { m =>
-          for (sc <- attrOf(d.sumCol(m)); cc <- attrOf(d.cntCol(m))) yield {
-            val div = Divide(
-              Cast(Sum(sc).toAggregateExpression(), DoubleType),
-              Cast(Sum(cc).toAggregateExpression(), DoubleType))
-            if (a.dataType != DoubleType) Cast(div, a.dataType) else div
-          }
-        }
-      case Min(e) => measureName(e).flatMap(m => attrOf(d.minCol(m)).map(x =>
-        Min(x).toAggregateExpression()))
-      case Max(e) => measureName(e).flatMap(m => attrOf(d.maxCol(m)).map(x =>
-        Max(x).toAggregateExpression()))
+      case Count(Seq(l: Literal)) if l.value != null => Some(AggItem(CountFn, "*"))
+      case Count(Seq(e)) => on(CountFn, e)
+      case Sum(e, _) => on(SumFn, e)
+      case Average(e, _) => on(AvgFn, e)
+      case Min(e) => on(MinFn, e)
+      case Max(e) => on(MaxFn, e)
       case _ => None
     }
   }
 
-  private def tryRewrite(agg: Aggregate, path: String): Option[LogicalPlan] = {
-    val conjuncts = childFilters(agg.child, path).getOrElse(return None)
-
-    // groupings must be plain attributes
-    val groupNames = agg.groupingExpressions.map {
-      case a: AttributeReference => a.name
-      case _ => return None
+  /** `(op, left, right)` of a binary comparison the DSL can state. */
+  private object Cmp {
+    def unapply(e: Expression): Option[(CmpOp, Expression, Expression)] = e match {
+      case EqualTo(l, r) => Some((EqOp, l, r))
+      case Not(EqualTo(l, r)) => Some((NeqOp, l, r))
+      case LessThan(l, r) => Some((LtOp, l, r))
+      case LessThanOrEqual(l, r) => Some((LteOp, l, r))
+      case GreaterThan(l, r) => Some((GtOp, l, r))
+      case GreaterThanOrEqual(l, r) => Some((GteOp, l, r))
+      case _ => None
     }
-
-    defs().iterator.flatMap { d =>
-      rewriteOnto(agg, d, conjuncts, groupNames)
-    }.nextOption()
   }
 
-  private def rewriteOnto(agg: Aggregate, d: AggTableDef,
-                          conjuncts: Seq[Expression],
-                          groupNames: Seq[String]): Option[LogicalPlan] = {
-    val keySet = d.keys.map(_.toLowerCase).toSet
-    if (d.filter.nonEmpty) return None // only unfiltered rollups at plan level
-    if (!groupNames.forall(g => keySet.contains(g.toLowerCase))) return None
+  private val flipped: Map[CmpOp, CmpOp] = Map(EqOp -> EqOp, NeqOp -> NeqOp,
+    LtOp -> GtOp, LteOp -> GteOp, GtOp -> LtOp, GteOp -> LteOp)
 
-    // every conjunct must be attr-op-literal on a rollup key
-    val usable = conjuncts.map(c => usableConjunct(c) match {
-      case Some((name, rebuild)) if keySet.contains(name) => (name, rebuild)
-      case _ => return None
-    })
-
-    // every aggregate expression: grouping attr passthrough or agg call
-    val rollupDf = rollup(d.name)
-    val rollupPlan = rollupDf.queryExecution.analyzed
-    def attrOf(name: String): Option[Attribute] =
-      rollupPlan.output.find(_.name.equalsIgnoreCase(name))
-
-    val rewrittenAggs: Seq[NamedExpression] = agg.aggregateExpressions.map {
-      case a: AttributeReference =>
-        attrOf(a.name).map(n => Alias(n, a.name)(exprId = a.exprId))
-          .getOrElse(return None)
-      // isDistinct=false and filter=None only: COUNT(DISTINCT m) and
-      // `agg FILTER (WHERE ...)` cannot be answered from rollup partials
-      // (partial sums lose per-row distinctness / the filter predicate),
-      // so they must fall through to the scan path untouched.
-      case al @ Alias(AggregateExpression(fn, _, false, None, _), name) =>
-        rewriteAggFn(fn, d, attrOf)
-          .map(e => Alias(e, name)(exprId = al.exprId))
-          .getOrElse(return None)
-      case al @ Alias(Cast(AggregateExpression(fn, _, false, None, _), dt, tz, ansi), name) =>
-        rewriteAggFn(fn, d, attrOf)
-          .map(e => Alias(Cast(e, dt, tz, ansi), name)(exprId = al.exprId))
-          .getOrElse(return None)
-      case _ => return None
+  private def cond(e: Expression): Option[Cond] = {
+    def leaf(a: AttributeReference, op: CmpOp, ls: Seq[Expression]): Option[Cond] = {
+      val vs = ls.map {
+        case l: Literal => lit(l).getOrElse(return None)
+        case _ => return None
+      }
+      Some(Cond(a.name, op, vs))
     }
+    e match {
+      case In(a: AttributeReference, vs) => leaf(a, InOp, vs)
+      case InSet(a: AttributeReference, vs) => leaf(a, InOp, vs.toSeq.map(Literal(_, a.dataType)))
+      case Cmp(op, a: AttributeReference, l: Literal) => leaf(a, op, Seq(l))
+      case Cmp(op, l: Literal, a: AttributeReference) => leaf(a, flipped(op), Seq(l))
+      case _ => None
+    }
+  }
 
-    // filters re-rooted onto rollup attributes
-    val rebuiltFilter = usable
-      .map { case (name, rebuild) => rebuild(attrOf(name).getOrElse(return None)) }
-      .reduceOption(And)
-    val filtered = rebuiltFilter.map(Filter(_, rollupPlan)).getOrElse(rollupPlan)
-
-    val newGroupings = groupNames.map(g => attrOf(g).getOrElse(return None))
-    fired += 1
-    Some(Aggregate(newGroupings, rewrittenAggs, filtered))
+  private def lit(l: Literal): Option[Lit] = (l.value, l.dataType) match {
+    case (s: UTF8String, _) => Some(SLit(s.toString))
+    case (d: Int, DateType) => Some(SLit(java.time.LocalDate.ofEpochDay(d.toLong).toString))
+    case (v: java.lang.Number, ByteType | ShortType | IntegerType | LongType) => Some(ILit(v.longValue))
+    case (v: java.lang.Number, FloatType | DoubleType) => Some(DLit(v.doubleValue))
+    case (b: Boolean, BooleanType) => Some(BLit(b))
+    case _ => None
   }
 }
 
 object AggRewriteRule {
 
-  /** Mutable per-session registry the injected rule reads (extensions are
+  /** Mutable per-session registry the rule reads (extensions are
     * installed at session build time, before any layout exists). */
   final class Registry {
     @volatile var factPath: Option[String] = None
@@ -228,12 +202,10 @@ object AggRewriteRule {
     * equivalent to SparkSessionExtensions.injectOptimizerRule but usable
     * after session construction). Idempotent. */
   def install(spark: SparkSession): AggRewriteRule = {
-    val reg = registryFor(spark)
     val existing = spark.experimental.extraOptimizations
       .collectFirst { case r: AggRewriteRule => r }
     existing.getOrElse {
-      val rule = AggRewriteRule(spark,
-        () => reg.factPath, () => reg.defs, name => reg.rollupLoader(name))
+      val rule = AggRewriteRule(spark)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ rule
       rule

@@ -20,12 +20,7 @@ import org.apache.spark.sql.SparkSessionExtensions
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
-    extensions.injectOptimizerRule { session =>
-      val reg = AggRewriteRule.registryFor(session)
-      AggRewriteRule(session,
-        () => reg.factPath, () => reg.defs,
-        name => reg.rollupLoader(name))
-    }
+    extensions.injectOptimizerRule(AggRewriteRule(_))
     // SQL surface for the native codegen cosine: any front-end (spark.sql,
     // JDBC, views) can call cosine_sim(a, b) and get the fused loop
     extensions.injectFunction(GraftExtensions.cosineSimDescriptor)

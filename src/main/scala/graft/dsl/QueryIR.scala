@@ -11,7 +11,9 @@ package graft.dsl
   * typed case classes so the compiler ([[graft.engine.Compiler]]) and the
   * aggregate router ([[graft.engine.AggregateRouter]]) can pattern-match
   * safely and prove rewrite containment (the reference's loose dict matchers
-  * silently dropped filters — query_engine.py:166-182, 216-232).
+  * silently dropped filters — query_engine.py:166-182, 216-232). It is also
+  * the form the Catalyst front end ([[graft.catalyst.AggRewriteRule]])
+  * translates plans into, so both front ends share the router's one proof.
   */
 object QueryIR {
 
@@ -85,6 +87,16 @@ object QueryIR {
   final case class BLit(v: Boolean) extends Lit
   case object NullLit extends Lit
 
+  /** Stable rendering of a literal, shared by every condition key (the
+    * result-cache key and the router's condition-set comparison). */
+  def litKey(l: Lit): String = l match {
+    case SLit(v) => "s:" + v
+    case ILit(v) => "i:" + v
+    case DLit(v) => "d:" + v
+    case BLit(v) => "b:" + v
+    case NullLit => "null"
+  }
+
   /** A WHERE predicate. The reference's closed DSL admits only a flat
     * AND-list of conditions (claude.md:124 "No nested conditions (e.g.,
     * OR, NOT)"); OR/NOT/AND trees are a strict extension here. The
@@ -122,23 +134,24 @@ object QueryIR {
     def plainCols: Seq[ColItem] = select.collect { case c: ColItem => c }
     def isAggregate: Boolean = aggregates.nonEmpty
 
+    /** The WHERE as leaf conditions when it is a flat conjunction; None
+      * when any OR/NOT/AND tree is present. Routing proofs are only valid
+      * for conjunctions of leaves, so they refuse on None. */
+    def flatConds: Option[Seq[Cond]] = {
+      val conds = where.collect { case c: Cond => c }
+      if (conds.size == where.size) Some(conds) else None
+    }
+
     /** Canonical string key for the result cache — stable field order and
       * rendering, the analogue of the reference's
       * md5(json.dumps(query, sort_keys=True)) (query_engine.py:63-67). */
     def canonicalKey: String = {
-      def lit(l: Lit): String = l match {
-        case SLit(v) => "s:" + v
-        case ILit(v) => "i:" + v
-        case DLit(v) => "d:" + v
-        case BLit(v) => "b:" + v
-        case NullLit => "null"
-      }
       val sel = select.map {
         case ColItem(n) => "c:" + n
         case a: AggItem => "a:" + a.outputName
       }.mkString(",")
       def predKey(p: Pred): String = p match {
-        case Cond(c, op, vs) => s"$c|$op|${vs.map(lit).mkString("^")}"
+        case Cond(c, op, vs) => s"$c|$op|${vs.map(litKey).mkString("^")}"
         case AndPred(ps) => ps.map(predKey).mkString("and(", ";", ")")
         case OrPred(ps) => ps.map(predKey).mkString("or(", ";", ")")
         case NotPred(p0) => s"not(${predKey(p0)})"

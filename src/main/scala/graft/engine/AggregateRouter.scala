@@ -56,16 +56,8 @@ final case class AggTableDef(
 object AggregateRouter {
 
   /** Canonical form of a condition for set-equality comparison. */
-  private def condKey(c: Cond): String = {
-    val vs = c.values.map {
-      case SLit(v) => "s:" + v
-      case ILit(v) => "i:" + v
-      case DLit(v) => "d:" + v
-      case BLit(v) => "b:" + v
-      case NullLit => "null"
-    }
-    s"${c.col.toLowerCase}|${c.op}|${vs.mkString("^")}"
-  }
+  private def condKey(c: Cond): String =
+    s"${c.col.toLowerCase}|${c.op}|${c.values.map(litKey).mkString("^")}"
 
   /** Can `q` be answered exactly from `d`? Returns the residual conditions
     * (those not baked into the rollup's filter — they must reference only
@@ -89,8 +81,7 @@ object AggregateRouter {
     if (q.plainCols.exists(c => !q.groupBy.exists(_.equalsIgnoreCase(c.name))))
       return None
 
-    val conds = q.where.collect { case c: Cond => c }
-    if (conds.size != q.where.size) return None // obligation 0
+    val conds = q.flatConds.getOrElse(return None) // obligation 0
 
     val defKeys = d.filter.map(condKey).toSet
     val qKeys = conds.map(condKey).toSet
@@ -115,9 +106,15 @@ object AggregateRouter {
     * reference implements for publisher_day_country_revenue only
     * (query_engine.py:269-273, R15) — here generalized to every rollup. */
   def execute(spark: SparkSession, q: Query, d: AggTableDef,
-              residual: Seq[Cond], catalog: Catalog): DataFrame = {
-    import graft.engine.Compiler.{condColumn, applyOrderAndLimit}
-    val table = catalog.table(spark, d.name)
+              residual: Seq[Cond], catalog: Catalog): DataFrame =
+    executeOn(q, d, residual, catalog.table(spark, d.name))
+
+  /** Re-aggregate `q` over an explicit rollup DataFrame — the one
+    * partial-aggregate algebra, shared by [[execute]] and the Catalyst
+    * rule ([[graft.catalyst.AggRewriteRule]]), which splices this plan
+    * in place of the fact aggregate it translated. */
+  def executeOn(q: Query, d: AggTableDef, residual: Seq[Cond], table: DataFrame): DataFrame = {
+    import graft.engine.Compiler.{aggregateAndSelect, applyOrderAndLimit, condColumn}
     val filtered = residual.foldLeft(table)((df, c) => df.filter(condColumn(df, c)))
 
     // COUNT decomposes as SUM of partial counts, but SUM over an EMPTY
@@ -133,16 +130,6 @@ object AggregateRouter {
       case AggItem(Max, m) => max(col(d.maxCol(m)))
     }).as(a.outputName)
 
-    val aggCols = q.aggregates.map(derived)
-    val grouped =
-      if (q.groupBy.nonEmpty)
-        filtered.groupBy(q.groupBy.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
-      else filtered.agg(aggCols.head, aggCols.tail: _*)
-
-    val outCols = q.select.map {
-      case ColItem(n) => col(n)
-      case a: AggItem => col(a.outputName)
-    }
-    applyOrderAndLimit(grouped.select(outCols: _*), q)
+    applyOrderAndLimit(aggregateAndSelect(filtered, q, q.aggregates.map(derived)), q)
   }
 }

@@ -57,8 +57,9 @@ object Compiler {
   }
 
   /** Compile one WHERE condition against `df`'s schema. Shared with
-    * [[AggregateRouter]] so routed and scanned plans agree exactly on
-    * filter semantics. */
+    * [[AggregateRouter]] (the DSL route and, through it, the Catalyst
+    * rule's translated conditions) so routed and scanned plans agree
+    * exactly on filter semantics. */
   def condColumn(df: DataFrame, c: Cond): Column = {
     val field = df.schema.fields.find(_.name.equalsIgnoreCase(c.col))
       .getOrElse(fail(s"unknown filter column: ${c.col}"))
@@ -113,32 +114,32 @@ object Compiler {
     // CombineFilters merges them into one predicate.
     val filtered = q.where.foldLeft(base)((df, c) => df.filter(predColumn(df, c)))
 
-    // GROUP BY / aggregate / project.
-    val projected: DataFrame =
-      if (q.isAggregate) {
-        val aggCols = q.aggregates.map(aggColumn)
-        val grouped =
-          if (q.groupBy.nonEmpty)
-            filtered.groupBy(q.groupBy.map(col): _*)
-              .agg(aggCols.head, aggCols.tail: _*)
-          else // global aggregation — supported, unlike the reference
-            filtered.agg(aggCols.head, aggCols.tail: _*)
-        // restore the SELECT's column order (plain cols must be grouping
-        // keys; anything else is ill-formed per the closed DSL)
-        val outCols = q.select.map {
-          case ColItem(n) =>
-            if (!q.groupBy.exists(_.equalsIgnoreCase(n)))
-              fail(s"non-aggregated select column '$n' not in group_by")
-            col(n)
-          case a: AggItem => col(a.outputName)
-        }
-        grouped.select(outCols: _*)
-      } else {
-        // plain projection (non-agg path, query_engine.py:494-502)
+    val projected =
+      if (q.isAggregate) aggregateAndSelect(filtered, q, q.aggregates.map(aggColumn))
+      else // plain projection (non-agg path, query_engine.py:494-502)
         filtered.select(q.plainCols.map(c => col(c.name)): _*)
-      }
-
     applyOrderAndLimit(projected, q)
+  }
+
+  /** GROUP BY / aggregate / project, shared by the scan and routed paths:
+    * `aggCols` (one per `q.aggregates`, each named by its `outputName`)
+    * grouped by `q.groupBy`, or globally — supported, unlike the
+    * reference — then the SELECT's column order restored. Plain columns
+    * must be grouping keys; anything else is ill-formed per the closed
+    * DSL. */
+  def aggregateAndSelect(filtered: DataFrame, q: Query, aggCols: Seq[Column]): DataFrame = {
+    val grouped =
+      if (q.groupBy.nonEmpty)
+        filtered.groupBy(q.groupBy.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
+      else filtered.agg(aggCols.head, aggCols.tail: _*)
+    val outCols = q.select.map {
+      case ColItem(n) =>
+        if (!q.groupBy.exists(_.equalsIgnoreCase(n)))
+          fail(s"non-aggregated select column '$n' not in group_by")
+        col(n)
+      case a: AggItem => col(a.outputName)
+    }
+    grouped.select(outCols: _*)
   }
 
   /** ORDER BY + LIMIT, shared by the scan and routed paths.

@@ -197,8 +197,7 @@ object ZOrderRouter {
   def matches(q: Query, d: ZLayoutDef): Option[Seq[Box]] = {
     if (!q.from.equalsIgnoreCase(d.sourceTable)) return None
     if (!d.exists) return None
-    val conds = q.where.collect { case c: Cond => c }
-    if (conds.size != q.where.size) return None // flat conjunction only
+    val conds = q.flatConds.getOrElse(return None) // flat conjunction only
     val tsConds = conds.filter(_.col.equalsIgnoreCase(d.tsCol)) ++
       dayAsTsConds(conds, "day").map(_.copy(col = d.tsCol))
     def epochOrPassthrough(l: Lit): Option[Long] = l match {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.catalyst.AggRewriteRule
@@ -57,6 +59,60 @@ class CatalystRuleSpec extends SparkSpec {
     val n = df.count()
     assert(rule.fired > before, "rule did not fire on key-filtered agg")
     assert(n > 0)
+  }
+
+  /** Rows of `df` as strings, doubles rounded to 4 places. */
+  private def rowSet(df: DataFrame): Set[String] =
+    df.collect().map(_.toSeq.map {
+      case d: Double => f"$d%.4f"
+      case v => String.valueOf(v)
+    }.mkString("|")).toSet
+
+  /** The same aggregate over the raw, unregistered fact data. */
+  private def rawEvents = graft.schema.DirCatalog(sfDir).table(spark, "events")
+
+  /** Root paths of every file scan in the optimized plan (the plan's
+    * string form truncates long locations). */
+  private def scanRoots(df: DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location.rootPaths.map(_.toString)
+    }.flatten
+
+  private def scansFact(df: DataFrame): Boolean =
+    scanRoots(df).exists(_.endsWith(s"$root/events"))
+
+  test("serves the FILTERED rollup agg_purchase_day through the router's proof") {
+    rule
+    val before = rule.fired
+    def q(events: DataFrame) =
+      events.filter(col("event_type") === "purchase").groupBy(col("day"))
+        .agg(sum(col("value")).as("s"), count(lit(1)).as("c"), max(col("value")).as("m"))
+    val df = q(factDf)
+    val got = rowSet(df)
+    assert(rule.fired > before, "rule did not fire on the purchase-filtered agg")
+    assert(scanRoots(df).exists(_.endsWith("/agg_purchase_day")) && !scansFact(df),
+      df.queryExecution.optimizedPlan.toString)
+    assert(got.nonEmpty && got == rowSet(q(rawEvents)))
+    // under a count, column pruning leaves a grouping-only aggregate
+    assert(df.count() == got.size)
+  }
+
+  test("shapes the DSL form cannot state leave the plan untouched, answers unchanged") {
+    rule
+    val shapes: Seq[DataFrame => DataFrame] = Seq(
+      // a standalone IS NOT NULL on a key: no DSL op states it
+      _.filter(col("day").isNotNull).groupBy(col("event_type")).agg(sum(col("value")).as("s")),
+      // one aggregate under two aliases: two outputs, one AggItem
+      _.groupBy(col("event_type")).agg(sum(col("value")).as("a"), sum(col("value")).as("b")),
+      // a cast-wrapped measure: the partial sums hold the uncast values
+      _.groupBy(col("event_type")).agg(sum(col("value").cast("int")).as("s")))
+    shapes.foreach { shape =>
+      val before = rule.fired
+      val df = shape(factDf)
+      val got = rowSet(df)
+      assert((rule.fired > before) != scansFact(df), df.queryExecution.optimizedPlan.toString)
+      assert(got.nonEmpty && got == rowSet(shape(rawEvents)))
+    }
   }
 
   test("rewrites filters on keys of ANY matching rollup (user_id via agg_user_type)") {

@@ -4,7 +4,11 @@ import org.scalacheck.{Gen, Prop, Properties}
 
 import org.apache.spark.sql.DataFrame
 
-import graft.engine.Engine
+import graft.catalyst.AggRewriteRule
+import graft.dsl.QueryIR.{Cond, Gt, ILit, Lt, Query}
+import graft.dsl.QueryJson
+import graft.engine.{Compiler, Engine}
+import graft.prepare.Prepare
 import graft.schema.DirCatalog
 
 /** Property-based differential testing: random queries within the closed
@@ -207,4 +211,57 @@ object DslPropertySpec extends Properties("dsl-vs-sql") {
     if (!ok) println(s"ROUTE-MISMATCH route=${prepared.lastRoute}\n  json=$json")
     ok
   }
+
+  // ---- the two front ends agree: the same query built with the DataFrame
+  // ---- API over the prepared fact parquet, with the Catalyst rule
+  // ---- configured, is rewritten exactly when the DSL routes
+
+  /** The rule pointed at the prepared layout, and its fact table read
+    * straight from parquet (no catalog, no derived columns). */
+  private lazy val ruleAndFact: (AggRewriteRule, DataFrame) = {
+    SparkEntry.preparedEngine(spark, SparkSpecBase.sfDir, cacheResults = false)
+    val root = s"target/prepared/${new java.io.File(SparkSpecBase.sfDir).getName}"
+    val rule = AggRewriteRule.configure(spark, s"$root/events",
+      Prepare.defaultAggregates(), name => spark.read.parquet(s"$root/aggregates/$name"))
+    (rule, spark.read.parquet(s"$root/events"))
+  }
+
+  /** A routable query, half the time with one residual on a non-key
+    * column, so both front ends must also agree on refusing. */
+  private val genAgreement: Gen[Query] = for {
+    json <- genRoutable
+    offKey <- Gen.option(Gen.oneOf(
+      Gen.choose(0, 500).map(v => Cond("value", Gt, Seq(ILit(v.toLong)))),
+      Gen.choose(0, 1500).map(v => Cond("user_id", Lt, Seq(ILit(v.toLong))))))
+  } yield {
+    val q = QueryJson.parse(json)
+    q.copy(where = q.where ++ offKey)
+  }
+
+  /** Queries whose contradictory filter (e.g. two different `event_type`
+    * equalities) Catalyst folds to an empty relation: no fact aggregate
+    * is left to rewrite, so only their answers are compared. */
+  private val folded = new java.util.concurrent.atomic.AtomicInteger
+
+  property("Catalyst rule fires exactly when the DSL routes; both equal the scan") =
+    Prop.forAll(genAgreement) { q =>
+      val prepared = SparkEntry.preparedEngine(spark, SparkSpecBase.sfDir,
+        cacheResults = false)
+      val routed = prepared.execute(q)
+      val didRoute = prepared.lastRoute.toString.contains("Routed")
+      val (rule, fact) = ruleAndFact
+      val before = rule.fired
+      val viaApi = Compiler.compileOn(spark, q, fact)
+      val isFolded = viaApi.queryExecution.optimizedPlan.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
+      }.isEmpty
+      val fired = rule.fired > before // read after optimization ran the rule
+      if (isFolded) println(s"CATALYST-FOLDED #${folded.incrementAndGet()} query=$q")
+      val scanned = engine.execute(q)
+      val ok = (isFolded || fired == didRoute) &&
+        tolerantEqual(viaApi, scanned) && tolerantEqual(routed, scanned)
+      if (!ok) println(s"FRONT-END-MISMATCH fired=$fired route=${prepared.lastRoute}" +
+        s" folded=$isFolded\n  query=$q")
+      ok
+    }
 }
