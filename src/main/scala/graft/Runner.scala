@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 
 import graft.engine.Engine
 import graft.prepare.Prepare
-import graft.schema.{DirCatalog, PreparedCatalog}
 
 /** CLI runner mirroring the reference's main.py contract
   * (main.py:89-118): read a JSON array of DSL queries, execute each, and
@@ -13,9 +12,9 @@ import graft.schema.{DirCatalog, PreparedCatalog}
   * Usage:
   *   runMain graft.Runner <queries.json> <dataDir> <outDir> [preparedRoot]
   *
-  * With a prepared root the engine routes onto the rollup tables
-  * (the reference's --optimized-dir mode); without, it scans
-  * `<dataDir>/<table>.parquet` directly.
+  * With a prepared root the engine routes onto the rollup tables and
+  * the z-ordered layout (the reference's --optimized-dir mode); without,
+  * it scans `<dataDir>/<table>.parquet` directly.
   */
 object Runner {
   def main(args: Array[String]): Unit = {
@@ -27,8 +26,7 @@ object Runner {
     spark.sparkContext.setLogLevel("WARN")
 
     val engine = args.lift(3) match {
-      case Some(preparedRoot) =>
-        new Engine(spark, PreparedCatalog(preparedRoot), Prepare.defaultAggregates())
+      case Some(preparedRoot) => Prepare.engine(spark, preparedRoot)
       case None => Engine.forDir(spark, dataDir)
     }
     val json = new String(

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import graft.engine.Engine
 import graft.operators.Relational
 import graft.prepare.Prepare
-import graft.schema.{DirCatalog, PreparedCatalog}
+import graft.schema.DirCatalog
 import graft.sources.CsvSource
 
 /** Driver contract — one `queries` entry per implemented operator
@@ -74,8 +74,7 @@ object SparkEntry {
     // call would discard the ResultCache between queries, turning every
     // repeat query into a re-execution instead of a LocalRelation hit
     preparedEngines.getOrElseUpdate((sfDir, cacheResults),
-      new Engine(s, PreparedCatalog(root), Prepare.defaultAggregates(), cacheResults,
-        zlayouts = Prepare.zLayoutDefs(root)))
+      Prepare.engine(s, root, cacheResults))
   }
 
   private def dslPrepared(json: String, renames: (String, String)*)

@@ -37,20 +37,34 @@ final case class AggTableDef(
   def maxCol(m: String) = s"max_$m"
   val cntStar = "cnt_star"
 
+  /** The stored partial columns, each with the aggregate that builds it
+    * from source rows and the one that merges it across two rollups of
+    * this def: every partial is algebraic (sum of sums, sum of counts,
+    * min of mins, max of maxes). */
+  private def partials: Seq[(String, Column, Column => Column)] =
+    measures.flatMap { m =>
+      Seq[(String, Column, Column => Column)](
+        (sumCol(m), sum(col(m)), sum),
+        (cntCol(m), count(col(m)), sum),
+        (minCol(m), min(col(m)), min),
+        (maxCol(m), max(col(m)), max))
+    } :+ ((cntStar, count(lit(1)), sum(_: Column)))
+
+  private def byKeys(df: DataFrame, aggs: Seq[Column]): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+
   /** The rollup's own materialization plan (used by Prepare). */
   def build(source: DataFrame): DataFrame = {
     import graft.engine.Compiler.condColumn
     val filtered = filter.foldLeft(source)((df, c) => df.filter(condColumn(df, c)))
-    val aggs: Seq[Column] =
-      measures.flatMap { m =>
-        Seq(
-          sum(col(m)).as(sumCol(m)),
-          count(col(m)).as(cntCol(m)),
-          min(col(m)).as(minCol(m)),
-          max(col(m)).as(maxCol(m)))
-      } :+ count(lit(1)).as(cntStar)
-    filtered.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    byKeys(filtered, partials.map { case (name, agg, _) => agg.as(name) })
   }
+
+  /** Merge two rollup tables of this def (incremental refresh: old rollup
+    * plus the delta's), so history never needs recomputing. */
+  def merge(old: DataFrame, delta: DataFrame): DataFrame =
+    byKeys(old.unionByName(delta),
+      partials.map { case (name, _, merged) => merged(col(name)).as(name) })
 }
 
 object AggregateRouter {

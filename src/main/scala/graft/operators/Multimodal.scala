@@ -1,30 +1,42 @@
 package graft.operators
 
+import java.awt.image.BufferedImage
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal (image/audio/video) column plumbing.
   *
   * Media are opaque `binary` columns plus a typed metadata struct, and the
-  * image path is REAL: [[pngMediaTable]] encodes deterministic RGB images
-  * to PNG bytes with the JDK-builtin `javax.imageio` writer on the
-  * executors, [[decodeFeatures]] decodes those bytes back with
-  * `ImageIO.read` and extracts per-channel pixel statistics, and
-  * [[decodeResize]] decodes, nearest-neighbor-downsamples the decoded
-  * raster, RE-encodes to PNG and decodes again — so every value it emits
-  * has survived two encode/decode round trips. PNG is lossless, which is
-  * what makes the oracle exact: decoded pixels equal the generation
-  * formula, so DuckDB can restate the expected statistics from the
-  * formula alone while the Spark side exercises the actual codec.
+  * codecs are REAL, all JDK-builtin: PNG and animated GIF through
+  * `javax.imageio`, WAV through `javax.sound.sampled`, and MJPEG-style
+  * clips of PNG frames. Every codec is lossless, which is what makes the
+  * oracles exact: decoded values equal the generation formula, so DuckDB
+  * restates the expected statistics from the formula alone while the
+  * Spark side exercises the actual codec.
   *
-  * The Spark-side shape is what matters at scale: batch iteration via
-  * mapPartitions (the Scala analogue of arrow-batched Pandas UDFs:
-  * amortized per-partition setup — `ImageIO.setUseCache(false)` once, no
-  * per-row interpreter crossings), and partition sizing
-  * ([[repartitionForMedia]]) so a partition of blobs fits executor
-  * memory. Swapping PNG for JPEG/video means swapping the codec call in
-  * the partition loop; the plumbing, schema and oracle discipline stay.
+  * Every builder and decoder is one skeleton around three shared pieces:
+  *  1. one partition loop (`perRow`): the output schema, its encoder, the
+  *     `mapPartitions` batch pass (the Scala analogue of arrow-batched
+  *     Pandas UDFs: amortized per-partition setup, no per-row interpreter
+  *     crossings) and `ImageIO.setUseCache(false)` once per partition. The
+  *     four `*MediaTable` builders reach it through `mediaTable` (input
+  *     `id`), the eight decoders through `decoder` (input
+  *     `media_id, blob`);
+  *  2. one corrupt-media policy, inside that loop: strict streams a blob's
+  *     rows lazily and fails the job loudly; `lenient` materializes them
+  *     first and skips the whole blob on any non-fatal failure;
+  *  3. one image read and one pixel reducer: `readImage` turns ImageIO's
+  *     null into an IOException, and `rgbSums` / `absDiffSums` are the only
+  *     code that reads pixels.
+  * An operator only says how one blob becomes rows. The codec bodies and
+  * the GIF reader stay outside the skeleton. Partition sizing
+  * ([[repartitionForMedia]]) keeps a partition of blobs inside executor
+  * memory at any corpus size.
   */
 object Multimodal {
 
@@ -61,6 +73,107 @@ object Multimodal {
         lit("application/octet-stream").as("mime"),
         octet_length(col(payloadCol)).cast(LongType).as("n_bytes")).as("meta"))
 
+  // ------------------------------------------------------ the skeleton
+
+  private def fields(t: DataType, names: String*): Seq[StructField] =
+    names.map(StructField(_, t))
+
+  /** The one partition loop. `rows` turns one input row into its output
+    * rows; the corrupt-media policy decides what a failure does:
+    *  - strict (`lenient = false`): rows stream lazily, and a failure
+    *    fails the job loudly;
+    *  - lenient: at corpus scale SOME blobs are corrupt, and one bad
+    *    container must not kill a 1000-executor job. An input row's output
+    *    is materialized BEFORE it is emitted (a lazy iterator would emit a
+    *    clip's early frames and then throw on a later corrupt one), and
+    *    the whole row is skipped on any non-fatal failure. Rejects are
+    *    recoverable relationally: anti-join input media_ids against the
+    *    output. */
+  private def perRow(in: DataFrame, out: Seq[StructField], lenient: Boolean)(
+      rows: Row => Iterator[Row]): DataFrame =
+    in.mapPartitions { part =>
+      javax.imageio.ImageIO.setUseCache(false) // no temp-file cache per read
+      part.flatMap { r =>
+        if (!lenient) rows(r)
+        else try rows(r).toVector.iterator
+        catch { case NonFatal(_) => Iterator.empty }
+      }
+    }(RowEncoder.encoderFor(StructType(out)))
+
+  /** Media table of executor-encoded blobs, one per row of `df` keyed by
+    * the non-negative long `idCol`. Only the blob bytes ever sit in a row;
+    * `meta` is (mime, n_bytes) followed by the integer `extra` fields,
+    * valued by `extraOf(id)`. */
+  private def mediaTable(df: DataFrame, idCol: String, mime: String, extra: String*)(
+      encode: Long => Array[Byte], extraOf: Long => Seq[Int]): DataFrame = {
+    val meta = StructType(
+      fields(StringType, "mime") ++ fields(LongType, "n_bytes") ++ fields(IntegerType, extra: _*))
+    val out = fields(LongType, "media_id") ++ fields(BinaryType, "blob") :+ StructField("meta", meta)
+    perRow(df.select(col(idCol).cast(LongType)), out, lenient = false) { r =>
+      val id = r.getLong(0)
+      val blob = encode(id)
+      Iterator.single(Row(id, blob, Row.fromSeq(Seq(mime, blob.length.toLong) ++ extraOf(id))))
+    }
+  }
+
+  /** Decoder over `(media_id, blob)`: `out` lists the output columns after
+    * the leading `media_id`, and `blobRows(id, blob)` yields one blob's
+    * full output rows. */
+  private def decoder(media: DataFrame, out: Seq[StructField], lenient: Boolean = false)(
+      blobRows: (Long, Array[Byte]) => Iterator[Row]): DataFrame =
+    perRow(media.select(col("media_id"), col("blob")),
+      fields(LongType, "media_id") ++ out, lenient) { r =>
+      blobRows(r.getLong(0), r.getAs[Array[Byte]](1))
+    }
+
+  /** `ImageIO.read`, except that unrecognizable bytes raise an IOException
+    * naming `what`: ImageIO returns null for them, not an exception. */
+  private def readImage(bytes: Array[Byte], what: => String): BufferedImage = {
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    if (img == null) throw new java.io.IOException(s"undecodable $what")
+    img
+  }
+
+  /** Per-channel (r, g, b) pixel sums over a decoded raster. */
+  private def rgbSums(img: BufferedImage): (Long, Long, Long) = {
+    var (sr, sg, sb) = (0L, 0L, 0L)
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) {
+        val v = img.getRGB(x, y)
+        sr += (v >> 16) & 0xFF
+        sg += (v >> 8) & 0xFF
+        sb += v & 0xFF
+        x += 1
+      }
+      y += 1
+    }
+    (sr, sg, sb)
+  }
+
+  /** Per-channel sums of absolute pixel differences between two decoded
+    * frames of the same size. */
+  private def absDiffSums(cur: BufferedImage, prev: BufferedImage): (Long, Long, Long) = {
+    var (dr, dg, db) = (0L, 0L, 0L)
+    var y = 0
+    while (y < cur.getHeight) {
+      var x = 0
+      while (x < cur.getWidth) {
+        val a = cur.getRGB(x, y)
+        val b = prev.getRGB(x, y)
+        dr += math.abs(((a >> 16) & 0xFF) - ((b >> 16) & 0xFF))
+        dg += math.abs(((a >> 8) & 0xFF) - ((b >> 8) & 0xFF))
+        db += math.abs((a & 0xFF) - (b & 0xFF))
+        x += 1
+      }
+      y += 1
+    }
+    (dr, dg, db)
+  }
+
+  // ------------------------------------------------------------- image
+
   /** Executor-side PNG encode of the deterministic raster for `id` —
     * a real `javax.imageio` compress, not a fake payload. */
   private def encodePng(id: Long): Array[Byte] =
@@ -70,129 +183,55 @@ object Multimodal {
   /** Media table of real PNG blobs, one image per row of `df` keyed by a
     * non-negative long `idCol`. Encoding runs distributed in
     * mapPartitions; only the ~0.5 KB PNG bytes ever sit in a row. */
-  def pngMediaTable(spark: SparkSession, df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("blob", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("mime", StringType),
-        StructField("n_bytes", LongType),
-        StructField("width", IntegerType),
-        StructField("height", IntegerType))))))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    df.select(col(idCol).cast(LongType)).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false) // no temp-file cache per read
-      rows.map { r =>
-        val id = r.getLong(0)
-        val png = encodePng(id)
-        Row(id, png, Row("image/png", png.length.toLong, imgW(id), imgH(id)))
-      }
-    }(enc)
-  }
+  def pngMediaTable(spark: SparkSession, df: DataFrame, idCol: String): DataFrame =
+    mediaTable(df, idCol, "image/png", "width", "height")(
+      encodePng, id => Seq(imgW(id), imgH(id)))
 
   /** REAL decode + feature extraction: `ImageIO.read` over the PNG bytes,
-    * then per-channel pixel sums over the decoded raster. Runs via
-    * mapPartitions — per-partition decoder setup, one batch pass, the
-    * exact seat a vectorized JPEG/video decode takes at 100 TB.
+    * then per-channel pixel sums over the decoded raster.
     *
     * `lenient = false` (default): an undecodable blob fails the job
-    * loudly. `lenient = true`: corrupt rows are skipped (the 100 TB
-    * corrupt-media policy — see [[decodeVideoFrames]]); rejects = input
-    * media_ids anti-joined against the output. */
+    * loudly. `lenient = true`: corrupt rows are skipped (the shared
+    * corrupt-media policy); rejects = input media_ids anti-joined against
+    * the output. */
   def decodeFeatures(spark: SparkSession, media: DataFrame,
-                     lenient: Boolean = false): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("n_px", LongType),
-      StructField("sum_r", LongType),
-      StructField("sum_g", LongType),
-      StructField("sum_b", LongType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    media.select(col("media_id"), col("blob")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        def decode(): Row = {
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-          if (img == null)
-            throw new java.io.IOException(s"undecodable image blob $id")
-          val (w, h) = (img.getWidth, img.getHeight)
-          var (sr, sg, sb) = (0L, 0L, 0L)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val v = img.getRGB(x, y)
-              sr += (v >> 16) & 0xFF; sg += (v >> 8) & 0xFF; sb += v & 0xFF
-              x += 1
-            }
-            y += 1
-          }
-          Row(id, w, h, w.toLong * h, sr, sg, sb)
-        }
-        if (!lenient) Iterator.single(decode())
-        else try Iterator.single(decode())
-        catch { case scala.util.control.NonFatal(_) => Iterator.empty }
-      }
-    }(enc)
-  }
+                     lenient: Boolean = false): DataFrame =
+    decoder(media, fields(IntegerType, "width", "height") ++
+      fields(LongType, "n_px", "sum_r", "sum_g", "sum_b"), lenient) { (id, blob) =>
+      val img = readImage(blob, s"image blob $id")
+      val (w, h) = (img.getWidth, img.getHeight)
+      val (sr, sg, sb) = rgbSums(img)
+      Iterator.single(Row(id, w, h, w.toLong * h, sr, sg, sb))
+    }
 
   /** REAL resize: decode the PNG, nearest-neighbor-downsample the decoded
     * raster by integer `factor` (out(x,y) = in(factor*x, factor*y) — the
     * one resampling kernel with an exact relational restatement), then
     * RE-encode to PNG and decode AGAIN before computing the output pixel
     * sums, so the emitted values prove a full encode->decode->resize->
-    * encode->decode round trip through the codec. */
+    * encode->decode round trip through the codec. The downsample copies
+    * raw pixels within the decoded image's own color model, so it is
+    * exact for every pixel format the reader returns. */
   def decodeResize(spark: SparkSession, media: DataFrame, factor: Int): DataFrame = {
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("out_w", IntegerType),
-      StructField("out_h", IntegerType),
-      StructField("sum_r", LongType),
-      StructField("sum_g", LongType),
-      StructField("sum_b", LongType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    media.select(col("media_id"), col("blob")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val id = r.getLong(0)
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        val ow = math.max(1, img.getWidth / factor)
-        val oh = math.max(1, img.getHeight / factor)
-        val small = new java.awt.image.BufferedImage(
-          ow, oh, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < oh) {
-          var x = 0
-          while (x < ow) {
-            small.setRGB(x, y, img.getRGB(x * factor, y * factor))
-            x += 1
-          }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream(512)
-        javax.imageio.ImageIO.write(small, "png", bos)
-        val back = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(bos.toByteArray))
-        var (sr, sg, sb) = (0L, 0L, 0L)
-        y = 0
-        while (y < oh) {
-          var x = 0
-          while (x < ow) {
-            val v = back.getRGB(x, y)
-            sr += (v >> 16) & 0xFF; sg += (v >> 8) & 0xFF; sb += v & 0xFF
-            x += 1
-          }
-          y += 1
-        }
-        Row(id, ow, oh, sr, sg, sb)
+    decoder(media, fields(IntegerType, "out_w", "out_h") ++
+      fields(LongType, "sum_r", "sum_g", "sum_b")) { (id, blob) =>
+      val img = readImage(blob, s"image blob $id")
+      val ow = math.max(1, img.getWidth / factor)
+      val oh = math.max(1, img.getHeight / factor)
+      val src = img.getRaster
+      val dst = src.createCompatibleWritableRaster(ow, oh)
+      var px: AnyRef = null
+      for (y <- 0 until oh; x <- 0 until ow) {
+        px = src.getDataElements(x * factor, y * factor, px)
+        dst.setDataElements(x, y, px)
       }
-    }(enc)
+      val small = new BufferedImage(img.getColorModel, dst, img.isAlphaPremultiplied, null)
+      val bos = new java.io.ByteArrayOutputStream(512)
+      javax.imageio.ImageIO.write(small, "png", bos)
+      val (sr, sg, sb) = rgbSums(readImage(bos.toByteArray, s"resized image $id"))
+      Iterator.single(Row(id, ow, oh, sr, sg, sb))
+    }
   }
 
   // ------------------------------------------------------------- audio
@@ -237,60 +276,32 @@ object Multimodal {
 
   /** Media table of real WAV blobs (PCM16 mono, 8 kHz), one clip per row
     * of `df` keyed by non-negative long `idCol`. */
-  def wavMediaTable(spark: SparkSession, df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("blob", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("mime", StringType),
-        StructField("n_bytes", LongType),
-        StructField("n_samples", IntegerType))))))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    df.select(col(idCol).cast(LongType)).mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val wav = encodeWav(Array.tabulate(audioN(id))(audioSample(id, _)))
-        Row(id, wav, Row("audio/wav", wav.length.toLong, audioN(id)))
-      }
-    }(enc)
-  }
+  def wavMediaTable(spark: SparkSession, df: DataFrame, idCol: String): DataFrame =
+    mediaTable(df, idCol, "audio/wav", "n_samples")(
+      id => encodeWav(Array.tabulate(audioN(id))(audioSample(id, _))), id => Seq(audioN(id)))
 
   /** REAL audio decode + feature extraction: WAV bytes -> PCM samples ->
     * integer-exact clip statistics (abs-sum, energy, zero crossings —
     * the standard VAD/loudness primitives). PCM16-in-WAV is lossless, so
     * the oracle restates the waveform formula relationally.
     *
-    * `lenient`: same corrupt-media policy as [[decodeFeatures]] —
-    * unparsable clips skip instead of failing the job. */
+    * `lenient`: the shared corrupt-media policy — unparsable clips skip
+    * instead of failing the job. */
   def decodeAudioFeatures(spark: SparkSession, media: DataFrame,
-                          lenient: Boolean = false): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("n_samples", LongType),
-      StructField("sum_abs", LongType),
-      StructField("sum_sq", LongType),
-      StructField("zero_cross", LongType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    media.select(col("media_id"), col("blob")).mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        def decode(): Row = {
-          val s = decodeWav(r.getAs[Array[Byte]](1))
-          var (sa, sq, zc) = (0L, 0L, 0L)
-          var i = 0
-          while (i < s.length) {
-            sa += math.abs(s(i)); sq += s(i).toLong * s(i)
-            if (i > 0 && (s(i) < 0) != (s(i - 1) < 0)) zc += 1
-            i += 1
-          }
-          Row(id, s.length.toLong, sa, sq, zc)
-        }
-        if (!lenient) Iterator.single(decode())
-        else try Iterator.single(decode())
-        catch { case scala.util.control.NonFatal(_) => Iterator.empty }
+                          lenient: Boolean = false): DataFrame =
+    decoder(media, fields(LongType, "n_samples", "sum_abs", "sum_sq", "zero_cross"),
+      lenient) { (id, blob) =>
+      val s = decodeWav(blob)
+      var (sa, sq, zc) = (0L, 0L, 0L)
+      var i = 0
+      while (i < s.length) {
+        sa += math.abs(s(i))
+        sq += s(i).toLong * s(i)
+        if (i > 0 && (s(i) < 0) != (s(i - 1) < 0)) zc += 1
+        i += 1
       }
-    }(enc)
-  }
+      Iterator.single(Row(id, s.length.toLong, sa, sq, zc))
+    }
 
   /** REAL audio downsample: decode, keep every `factor`-th sample
     * (out(k) = in(factor*k) — exactly restatable), RE-encode to WAV and
@@ -299,26 +310,13 @@ object Multimodal {
   def decodeAudioDownsample(spark: SparkSession, media: DataFrame,
                             factor: Int): DataFrame = {
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("n_out", LongType),
-      StructField("sum_abs", LongType),
-      StructField("sum_sq", LongType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    media.select(col("media_id"), col("blob")).mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val s = decodeWav(r.getAs[Array[Byte]](1))
-        val nOut = math.max(1, s.length / factor)
-        val back = decodeWav(encodeWav(Array.tabulate(nOut)(k => s(k * factor))))
-        var (sa, sq) = (0L, 0L)
-        var i = 0
-        while (i < back.length) {
-          sa += math.abs(back(i)); sq += back(i).toLong * back(i); i += 1
-        }
-        Row(id, back.length.toLong, sa, sq)
-      }
-    }(enc)
+    decoder(media, fields(LongType, "n_out", "sum_abs", "sum_sq")) { (id, blob) =>
+      val s = decodeWav(blob)
+      val nOut = math.max(1, s.length / factor)
+      val back = decodeWav(encodeWav(Array.tabulate(nOut)(k => s(k * factor))))
+      Iterator.single(Row(id, back.length.toLong,
+        back.map(v => math.abs(v).toLong).sum, back.map(v => v.toLong * v).sum))
+    }
   }
 
   // ------------------------------------------------------------- video
@@ -410,14 +408,14 @@ object Multimodal {
   /** Decode every frame of a clip, IOException (not an opaque NPE) on
     * undecodable bytes — shared by the whole-clip decode family so the
     * corrupt-media policy is uniform (round-15 advice #2). */
-  private def decodeAllFrames(id: Long,
-                              blob: Array[Byte]): Array[java.awt.image.BufferedImage] =
+  private def decodeAllFrames(id: Long, blob: Array[Byte]): Array[BufferedImage] =
     videoFrameBytes(blob).zipWithIndex.map { case (p, f) =>
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(p))
-      if (img == null)
-        throw new java.io.IOException(s"undecodable frame $f of clip $id")
-      img
+      readImage(p, s"frame $f of clip $id")
     }
+
+  /** (frame_idx, width, height): the leading columns of every per-frame
+    * decoder. */
+  private val frameCols = fields(IntegerType, "frame_idx", "width", "height")
 
   // -------------------------------------------------------- animated GIF
 
@@ -506,27 +504,9 @@ object Multimodal {
   /** Media table of STANDARD animated GIFs (one clip per row of `df`,
     * keyed by non-negative long `idCol`), encoded distributed via the
     * JDK GIF writer. Same clip geometry as [[videoMediaTable]]. */
-  def gifMediaTable(spark: SparkSession, df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("blob", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("mime", StringType),
-        StructField("n_bytes", LongType),
-        StructField("n_frames", IntegerType),
-        StructField("width", IntegerType),
-        StructField("height", IntegerType))))))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    df.select(col(idCol).cast(LongType)).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val id = r.getLong(0)
-        val clip = encodeGif(id)
-        Row(id, clip,
-          Row("image/gif", clip.length.toLong, vidFrames(id), vidW(id), vidH(id)))
-      }
-    }(enc)
-  }
+  def gifMediaTable(spark: SparkSession, df: DataFrame, idCol: String): DataFrame =
+    mediaTable(df, idCol, "image/gif", "n_frames", "width", "height")(
+      encodeGif, id => Seq(vidFrames(id), vidW(id), vidH(id)))
 
   /** REAL standard-container video decode: ImageIO's multi-frame GIF
     * reader parses the container (no custom framing), every frame is
@@ -534,68 +514,22 @@ object Multimodal {
     * (media_id, frame_idx, width, height, sum_v). `lenient` skips a
     * corrupt clip atomically (the shared policy). */
   def decodeGifFrames(spark: SparkSession, media: DataFrame,
-                      lenient: Boolean = false): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("frame_idx", IntegerType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("sum_v", LongType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    media.select(col("media_id"), col("blob")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        def all(): Iterator[Row] = {
-          val frames = readGifFrames(id, r.getAs[Array[Byte]](1))
-          Iterator.range(0, frames.length).map { f =>
-            val img = frames(f)
-            val (w, h) = (img.getWidth, img.getHeight)
-            var sv = 0L
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                // gray raster: all three channels carry the same value
-                sv += (img.getRGB(x, y) >> 16) & 0xFF
-                x += 1
-              }
-              y += 1
-            }
-            Row(id, f, w, h, sv)
-          }
-        }
-        if (!lenient) all()
-        else try all().toVector.iterator
-        catch { case scala.util.control.NonFatal(_) => Iterator.empty }
+                      lenient: Boolean = false): DataFrame =
+    decoder(media, frameCols ++ fields(LongType, "sum_v"), lenient) { (id, blob) =>
+      val frames = readGifFrames(id, blob)
+      Iterator.range(0, frames.length).map { f =>
+        val img = frames(f)
+        // gray raster: all three channels carry the same value
+        Row(id, f, img.getWidth, img.getHeight, rgbSums(img)._1)
       }
-    }(enc)
-  }
+    }
 
   /** Media table of MJPEG-style clips of real PNG frames, one clip per
     * row of `df` keyed by non-negative long `idCol`. Encoding runs
     * distributed; a clip is a few KB of PNG bytes. */
-  def videoMediaTable(spark: SparkSession, df: DataFrame, idCol: String): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("blob", BinaryType),
-      StructField("meta", StructType(Seq(
-        StructField("mime", StringType),
-        StructField("n_bytes", LongType),
-        StructField("n_frames", IntegerType),
-        StructField("width", IntegerType),
-        StructField("height", IntegerType))))))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    df.select(col(idCol).cast(LongType)).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val id = r.getLong(0)
-        val clip = encodeVideo(id)
-        Row(id, clip,
-          Row("video/x-mjpeg-png", clip.length.toLong, vidFrames(id), vidW(id), vidH(id)))
-      }
-    }(enc)
-  }
+  def videoMediaTable(spark: SparkSession, df: DataFrame, idCol: String): DataFrame =
+    mediaTable(df, idCol, "video/x-mjpeg-png", "n_frames", "width", "height")(
+      encodeVideo, id => Seq(vidFrames(id), vidW(id), vidH(id)))
 
   /** REAL frame sampling + decode + feature extraction: parse the
     * container, ImageIO-decode every `stride`-th frame, reduce each to
@@ -607,111 +541,42 @@ object Multimodal {
     *
     * `lenient = false` (default): any unparsable container or
     * undecodable frame fails the job loudly. `lenient = true`: a corrupt
-    * clip is skipped ATOMICALLY (no partial frames emitted) — the
-    * corrupt-media policy a 100 TB ingest needs; rejects = input
-    * media_ids anti-joined against the output. */
+    * clip is skipped ATOMICALLY (no partial frames emitted) — the shared
+    * corrupt-media policy; rejects = input media_ids anti-joined against
+    * the output. */
   def decodeVideoFrames(spark: SparkSession, media: DataFrame,
                         stride: Int = 1, lenient: Boolean = false): DataFrame = {
     require(stride >= 1, s"stride must be >= 1, got $stride")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("frame_idx", IntegerType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("sum_r", LongType),
-      StructField("sum_g", LongType),
-      StructField("sum_b", LongType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    media.select(col("media_id"), col("blob")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        def decodeAll(): Iterator[Row] = {
-          val frames = videoFrameBytes(r.getAs[Array[Byte]](1))
-          Iterator.range(0, frames.length).filter(_ % stride == 0).map { f =>
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(frames(f)))
-            // ImageIO returns null (no exception) for unrecognizable bytes
-            if (img == null)
-              throw new java.io.IOException(s"undecodable frame $f of clip $id")
-            val (w, h) = (img.getWidth, img.getHeight)
-            var (sr, sg, sb) = (0L, 0L, 0L)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val v = img.getRGB(x, y)
-                sr += (v >> 16) & 0xFF; sg += (v >> 8) & 0xFF; sb += v & 0xFF
-                x += 1
-              }
-              y += 1
-            }
-            Row(id, f, w, h, sr, sg, sb)
-          }
-        }
-        if (!lenient) decodeAll()
-        // lenient: at corpus scale SOME blobs are corrupt, and one bad
-        // container must not kill a 1000-executor job. Clip-level
-        // atomicity: materialize the clip's rows BEFORE emitting (the
-        // lazy iterator would otherwise emit early frames and then
-        // throw on a later corrupt one), skip the whole clip on any
-        // parse/decode failure. Rejects are recoverable relationally:
-        // anti-join input media_ids against the output.
-        else try decodeAll().toVector.iterator
-        catch { case scala.util.control.NonFatal(_) => Iterator.empty }
+    decoder(media, frameCols ++ fields(LongType, "sum_r", "sum_g", "sum_b"),
+      lenient) { (id, blob) =>
+      val frames = videoFrameBytes(blob)
+      Iterator.range(0, frames.length, stride).map { f =>
+        val img = readImage(frames(f), s"frame $f of clip $id")
+        val (sr, sg, sb) = rgbSums(img)
+        Row(id, f, img.getWidth, img.getHeight, sr, sg, sb)
       }
-    }(enc)
+    }
   }
 
   /** REAL temporal feature: decode ALL frames of each clip and sum the
     * absolute per-pixel differences between consecutive DECODED frames
     * per channel — the motion/scene-change primitive. Integer-exact over
     * lossless PNG frames, so the oracle restates it from the formula.
-    * `lenient` follows the shared corrupt-media policy of
-    * [[decodeVideoFrames]]: skip a corrupt clip atomically instead of
-    * failing the job. */
+    * `lenient` skips a corrupt clip atomically (the shared policy). */
   def decodeVideoMotion(spark: SparkSession, media: DataFrame,
-                        lenient: Boolean = false): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("n_frames", LongType),
-      StructField("motion_r", LongType),
-      StructField("motion_g", LongType),
-      StructField("motion_b", LongType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    media.select(col("media_id"), col("blob")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        def one(): Row = {
-          val frames = decodeAllFrames(id, r.getAs[Array[Byte]](1))
-          var (mr, mg, mb) = (0L, 0L, 0L)
-          var f = 1
-          while (f < frames.length) {
-            val (prev, cur) = (frames(f - 1), frames(f))
-            val (w, h) = (cur.getWidth, cur.getHeight)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val a = cur.getRGB(x, y); val b = prev.getRGB(x, y)
-                mr += math.abs(((a >> 16) & 0xFF) - ((b >> 16) & 0xFF))
-                mg += math.abs(((a >> 8) & 0xFF) - ((b >> 8) & 0xFF))
-                mb += math.abs((a & 0xFF) - (b & 0xFF))
-                x += 1
-              }
-              y += 1
-            }
-            f += 1
-          }
-          Row(id, frames.length.toLong, mr, mg, mb)
-        }
-        if (!lenient) Iterator.single(one())
-        else try Iterator.single(one())
-        catch { case scala.util.control.NonFatal(_) => Iterator.empty }
+                        lenient: Boolean = false): DataFrame =
+    decoder(media, fields(LongType, "n_frames", "motion_r", "motion_g", "motion_b"),
+      lenient) { (id, blob) =>
+      val frames = decodeAllFrames(id, blob)
+      var (mr, mg, mb) = (0L, 0L, 0L)
+      for (f <- 1 until frames.length) {
+        val (dr, dg, db) = absDiffSums(frames(f), frames(f - 1))
+        mr += dr
+        mg += dg
+        mb += db
       }
-    }(enc)
-  }
+      Iterator.single(Row(id, frames.length.toLong, mr, mg, mb))
+    }
 
   /** REAL per-pair temporal diffs: decode ALL frames and emit one row per
     * consecutive frame pair — (media_id, frame_idx of the LATER frame,
@@ -721,49 +586,15 @@ object Multimodal {
     * driver-side logic. Integer-exact over lossless PNG frames.
     * `lenient` skips a corrupt clip atomically (the shared policy). */
   def decodeVideoFrameDiffs(spark: SparkSession, media: DataFrame,
-                            lenient: Boolean = false): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("frame_idx", IntegerType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("diff_r", LongType),
-      StructField("diff_g", LongType),
-      StructField("diff_b", LongType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    media.select(col("media_id"), col("blob")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        def all(): Iterator[Row] = {
-          val frames = decodeAllFrames(id, r.getAs[Array[Byte]](1))
-          Iterator.range(1, frames.length).map { f =>
-            val (prev, cur) = (frames(f - 1), frames(f))
-            val (w, h) = (cur.getWidth, cur.getHeight)
-            var (dr, dg, db) = (0L, 0L, 0L)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val a = cur.getRGB(x, y); val b = prev.getRGB(x, y)
-                dr += math.abs(((a >> 16) & 0xFF) - ((b >> 16) & 0xFF))
-                dg += math.abs(((a >> 8) & 0xFF) - ((b >> 8) & 0xFF))
-                db += math.abs((a & 0xFF) - (b & 0xFF))
-                x += 1
-              }
-              y += 1
-            }
-            Row(id, f, w, h, dr, dg, db)
-          }
-        }
-        if (!lenient) all()
-        // clip-level atomicity, as in decodeVideoFrames: materialize
-        // before emitting so a late corrupt frame can't half-emit
-        else try all().toVector.iterator
-        catch { case scala.util.control.NonFatal(_) => Iterator.empty }
+                            lenient: Boolean = false): DataFrame =
+    decoder(media, frameCols ++ fields(LongType, "diff_r", "diff_g", "diff_b"),
+      lenient) { (id, blob) =>
+      val frames = decodeAllFrames(id, blob)
+      Iterator.range(1, frames.length).map { f =>
+        val (dr, dg, db) = absDiffSums(frames(f), frames(f - 1))
+        Row(id, f, frames(f).getWidth, frames(f).getHeight, dr, dg, db)
       }
-    }(enc)
-  }
+    }
 
   /** Partition sizing for blob tables: compute total payload bytes (one
     * aggregate pass) and repartition so each partition holds roughly

@@ -109,19 +109,8 @@ object Quantization {
       .withColumn("qd", transform(col("q_v"), x => x.cast(DoubleType)))
     val scored = dec.crossJoin(broadcast(q))
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("adc8", Similarity.cosine(col("dec"), col("qd")))
-    val shortlist = Relational.topKPerGroup(scored, Seq("q_id"),
-        Seq(("adc8", true), ("n_id", false)), refine * k)
-      .select(col("q_id"), col("q_v"), col("n_id"))
-    // exact re-rank: float vectors ONLY for the refine*k survivors —
-    // broadcast the (|queries| x refine*k)-row shortlist, stream the
-    // float table past it
-    val reranked = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_v"))
-      .join(broadcast(shortlist), Seq("n_id"))
-      .withColumn("cosine", Similarity.cosine(col("q_v"), col("n_v")))
-    Relational.topKPerGroup(reranked, Seq("q_id"),
-        Seq(("cosine", true), ("n_id", false)), k)
-      .select(col("q_id"), col("n_id"), round(col("cosine"), 4).as("cosine"))
+      .withColumn("adc", Similarity.cosine(col("dec"), col("qd")))
+    rerankShortlist(scored, corpus, idCol, vecCol, k, refine)
   }
 
   // ------------------------------------------------ product quantization
@@ -233,9 +222,35 @@ object Quantization {
     * where the interpreted zip_with/aggregate fold it replaced was the
     * dominant per-pair cost). */
   private def adcScore(codes: Column, qlut: Column, qNorm: Column,
-                       normLut: Column, m: Int, kk: Int): Column = {
+                       normLut: Column, kk: Int): Column = {
     def fold(lut: Column) = graft.functions.PqOps.adcFold(codes, lut, kk)
     fold(qlut) / (qNorm * sqrt(fold(normLut)))
+  }
+
+  /** The ADC query side shared by every FromCodes path:
+    * `(q_id, q_v, qlut, qn)` — the per-query lookup table ([[queryLut]])
+    * and the query's L2 norm, computed once per QUERY row. */
+  private def adcQueries(queries: DataFrame, idCol: String, vecCol: String,
+                         codebooks: Array[Array[Array[Double]]]): DataFrame =
+    queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
+      .withColumn("qlut", queryLut(col("q_v"), codebooks))
+      .withColumn("qn", sqrt(aggregate(
+        transform(col("q_v"), x => x.cast(DoubleType) * x.cast(DoubleType)),
+        lit(0.0), (acc, v) => acc + v)))
+
+  /** normLut[s*k + c] = ||codebook[s][c]||², the ADC norm table. */
+  private def normLut(codebooks: Array[Array[Array[Double]]]): Column =
+    typedlit(codebooks.flatMap(_.map(c => c.map(x => x * x).sum)).toSeq)
+
+  /** The probe list of both IVF paths, as an expression over `q_v`: sort
+    * struct(-cos, i) ascending = cosine desc with ties to the LOWEST
+    * centroid id, keep the first `nprobe` centroid ids. */
+  private def probeList(centroids: Array[Seq[Float]], nprobe: Int): Column = {
+    val scoredArr = array(centroids.zipWithIndex.map { case (c, i) =>
+      struct((-Similarity.cosine(col("q_v"), typedlit(c))).as("ns"),
+        lit(i).as("i"))
+    }: _*)
+    transform(slice(array_sort(scoredArr), 1, nprobe), p => p.getField("i"))
   }
 
   /** PQ-ADC approximate top-k with exact re-rank, as ONE plan for any
@@ -264,18 +279,11 @@ object Quantization {
                       vecCol: String, k: Int,
                       codebooks: Array[Array[Array[Double]]],
                       refine: Int = 4): DataFrame = {
-    val m = codebooks.length
-    val kk = codebooks(0).length
-    val normLut = typedlit(codebooks.flatMap(_.map(c => c.map(x => x * x).sum)).toSeq)
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
-      .withColumn("qlut", queryLut(col("q_v"), codebooks))
-      .withColumn("qn", sqrt(aggregate(
-        transform(col("q_v"), x => x.cast(DoubleType) * x.cast(DoubleType)),
-        lit(0.0), (acc, v) => acc + v)))
+    val q = adcQueries(queries, idCol, vecCol, codebooks)
     val scored = codes.crossJoin(broadcast(q))
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("adc",
-        adcScore(col("codes"), col("qlut"), col("qn"), normLut, m, kk))
+      .withColumn("adc", adcScore(col("codes"), col("qlut"), col("qn"),
+        normLut(codebooks), codebooks(0).length))
     rerankShortlist(scored, corpus, idCol, vecCol, k, refine)
   }
 
@@ -386,7 +394,6 @@ object Quantization {
     val centLit = typedlit(centroids.map(_.map(_.toDouble)).toSeq)
     val kk = codebooks(0).length
 
-    val normLut = typedlit(codebooks.flatMap(_.map(c => c.map(x => x * x).sum)).toSeq)
     val cbNorm = typedlit(centroids.map(_.map(x => x.toDouble * x).sum).toSeq)
     val bLut = typedlit(centroids.map { cent =>
       val cd = cent.map(_.toDouble).toArray
@@ -396,25 +403,12 @@ object Quantization {
       }.toSeq
     }.toSeq)
 
-    // probe list: cosine desc, ties -> lowest centroid id (the
-    // ivfPqTopK convention)
-    val probeArr = {
-      val scoredArr = array(centroids.zipWithIndex.map { case (c, i) =>
-        struct((-Similarity.cosine(col("q_v"), typedlit(c))).as("ns"),
-          lit(i).as("i"))
-      }: _*)
-      transform(slice(array_sort(scoredArr), 1, nprobe), p => p.getField("i"))
-    }
     def dotQ(centArr: Column): Column =
       aggregate(zip_with(col("q_v"), centArr,
         (a, b) => a.cast(DoubleType) * b), lit(0.0), (acc, v) => acc + v)
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
-      .withColumn("qlut", queryLut(col("q_v"), codebooks))
-      .withColumn("qn", sqrt(aggregate(
-        transform(col("q_v"), x => x.cast(DoubleType) * x.cast(DoubleType)),
-        lit(0.0), (acc, v) => acc + v)))
+    val q = adcQueries(queries, idCol, vecCol, codebooks)
       .select(col("q_id"), col("q_v"), col("qlut"), col("qn"),
-        explode(probeArr).as("bucket"))
+        explode(probeList(centroids, nprobe)).as("bucket"))
       // <q, c_b> per (query, probed bucket): nprobe dot products per
       // query, on the tiny broadcast side
       .withColumn("qc", dotQ(element_at(centLit, col("bucket") + 1)))
@@ -428,15 +422,15 @@ object Quantization {
           (col("qn") * sqrt(
             element_at(cbNorm, col("bucket") + 1)
               + lit(2.0) * fold(col("codes"), element_at(bLut, col("bucket") + 1))
-              + fold(col("codes"), normLut))))
+              + fold(col("codes"), normLut(codebooks)))))
     rerankShortlist(scored, corpus, idCol, vecCol, k, refine)
   }
 
   /** Exact-cosine re-rank of the per-query ADC shortlist: float vectors
     * are read ONLY for the refine*k survivors — broadcast the
     * (|queries| x refine*k)-row shortlist, stream the float table past
-    * it (the [[int8TopKFromCodes]] re-rank; shared by both FromCodes
-    * query paths). */
+    * it. Shared by every FromCodes query path, int8 included; `scored`
+    * carries the approximate score as `adc`. */
   private def rerankShortlist(scored: DataFrame, corpus: DataFrame,
                               idCol: String, vecCol: String,
                               k: Int, refine: Int): DataFrame = {
@@ -490,31 +484,15 @@ object Quantization {
                          centroids: Array[Seq[Float]],
                          codebooks: Array[Array[Array[Double]]],
                          nprobe: Int = 4, refine: Int = 4): DataFrame = {
-    val m = codebooks.length
-    val kk = codebooks(0).length
-    val normLut = typedlit(codebooks.flatMap(_.map(c => c.map(x => x * x).sum)).toSeq)
-    // probe list per query as an expression: sort struct(-cos, i)
-    // ascending = cosine desc with ties to the LOWEST centroid id
-    val probeArr = {
-      val scoredArr = array(centroids.zipWithIndex.map { case (c, i) =>
-        struct((-Similarity.cosine(col("q_v"), typedlit(c))).as("ns"),
-          lit(i).as("i"))
-      }: _*)
-      transform(slice(array_sort(scoredArr), 1, nprobe), p => p.getField("i"))
-    }
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
-      .withColumn("qlut", queryLut(col("q_v"), codebooks))
-      .withColumn("qn", sqrt(aggregate(
-        transform(col("q_v"), x => x.cast(DoubleType) * x.cast(DoubleType)),
-        lit(0.0), (acc, v) => acc + v)))
+    val q = adcQueries(queries, idCol, vecCol, codebooks)
       .select(col("q_id"), col("q_v"), col("qlut"), col("qn"),
-        explode(probeArr).as("bucket"))
+        explode(probeList(centroids, nprobe)).as("bucket"))
     // candidates = corpus rows in a probed bucket only; each vector has
     // ONE bucket and probes are distinct, so no pair appears twice
     val scored = coded.join(broadcast(q), Seq("bucket"))
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("adc",
-        adcScore(col("codes"), col("qlut"), col("qn"), normLut, m, kk))
+      .withColumn("adc", adcScore(col("codes"), col("qlut"), col("qn"),
+        normLut(codebooks), codebooks(0).length))
     rerankShortlist(scored, corpus, idCol, vecCol, k, refine)
   }
 }

@@ -1,11 +1,11 @@
 package graft.prepare
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.engine.{AggTableDef, ZLayoutDef, ZOrderRouter}
-import graft.schema.EventTime
+import graft.engine.{AggTableDef, Engine, ZLayoutDef, ZOrderRouter}
+import graft.schema.{EventTime, PreparedCatalog}
 
 /** The prepare phase: raw events -> query-optimized layout.
   *
@@ -71,6 +71,14 @@ object Prepare {
                   specs: Seq[ZOrderSpec] = defaultZOrder): Seq[ZLayoutDef] =
     specs.map(zs => ZLayoutDef(zs.name, "events", zs.xCol, zs.tsCol,
       s"$outRoot/zorder/${zs.name}"))
+
+  /** The Engine over a root written by [[run]] with the default rollups
+    * and z layouts — every front end that serves a prepared root builds
+    * it here, so none can drop a route the layout offers. */
+  def engine(spark: SparkSession, outRoot: String,
+             cacheResults: Boolean = true): Engine =
+    new Engine(spark, PreparedCatalog(outRoot), defaultAggregates(), cacheResults,
+      zlayouts = zLayoutDefs(outRoot))
 
   /** Run the full prepare job. `events` is the raw table (CSV or parquet
     * already loaded); derived time columns are added here. */
@@ -166,23 +174,6 @@ object Prepare {
 
   // ------------------------------------------------- incremental refresh
 
-  /** Merge two rollup tables of the same [[AggTableDef]]: every partial
-    * is algebraic (sum of sums, sum of counts, min of mins, max of maxes),
-    * so history never needs recomputing. */
-  def mergeRollups(old: DataFrame, delta: DataFrame, d: AggTableDef): DataFrame = {
-    val aggs: Seq[Column] =
-      d.measures.flatMap { m =>
-        Seq(
-          sum(col(d.sumCol(m))).as(d.sumCol(m)),
-          sum(col(d.cntCol(m))).as(d.cntCol(m)),
-          min(col(d.minCol(m))).as(d.minCol(m)),
-          max(col(d.maxCol(m))).as(d.maxCol(m)))
-      } :+ sum(col(d.cntStar)).as(d.cntStar)
-    old.unionByName(delta)
-      .groupBy(d.keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
   /** Incremental prepare: append `newEvents` to the partitioned fact
     * layout and fold their delta into every rollup — the full-history
     * re-prepare the reference does on every run
@@ -244,8 +235,7 @@ object Prepare {
     aggregates.foreach { d =>
       val path = s"$outRoot/aggregates/${d.name}"
       val tmp = s"$outRoot/aggregates/.tmp_${d.name}"
-      val merged = mergeRollups(
-        spark.read.parquet(path), d.build(derived), d)
+      val merged = d.merge(spark.read.parquet(path), d.build(derived))
       merged.write.mode(SaveMode.Overwrite)
         .option("compression", "zstd").parquet(tmp)
       fs.delete(new org.apache.hadoop.fs.Path(path), true)

@@ -476,6 +476,12 @@ class EngineSpec extends SparkSpec {
       .select(col("event_id")).collect().map(_.getLong(0)).toSet
     assert(got === want, s"stale routed scan: missing=${(want -- got).take(5)}")
     assert(got.nonEmpty, "vacuous: box matched no rows")
+    // the shared prepared-root constructor (graft.Runner, SparkEntry)
+    // takes the same z route
+    val shared = Prepare.engine(spark, root, cacheResults = false)
+    assert(shared.executeJson(json).collect().map(_.getLong(0)).toSet === want)
+    assert(shared.lastRoute == graft.engine.Engine.ZRouted("z_user_ts"),
+      shared.lastRoute.toString)
     // out-of-bounds delta rows are reachable through a clamped box
     val outlierIds = outlier.select(col("event_id"))
       .collect().map(_.getLong(0)).toSet

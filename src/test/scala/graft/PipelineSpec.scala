@@ -640,37 +640,57 @@ class PipelineSpec extends SparkSpec {
     }
     assert(thrown.getMessage != null)
 
-    // image + audio carry the same policy: garbage blobs skip under
-    // lenient, fail strictly otherwise
-    // badId chosen from the table's OWN rows (limit order is not pinned)
-    def corruptOne(df: org.apache.spark.sql.DataFrame): (Long, Int, org.apache.spark.sql.DataFrame) = {
+    // every lenient decoder carries the same policy: a garbage blob skips
+    // under lenient, fails strictly otherwise
+    // badId chosen from the table's OWN rows (limit order is not pinned);
+    // `intact` is the same collected rows, uncorrupted
+    type DF = org.apache.spark.sql.DataFrame
+    def corruptOne(df: DF): (Long, Int, DF, DF) = {
       val rs0 = df.select(col("media_id"), col("blob")).collect()
       val badId = rs0.map(_.getLong(0)).min
+      def local(rs: Array[org.apache.spark.sql.Row]): DF = spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](
+          java.util.Arrays.asList(rs: _*)),
+        df.select(col("media_id"), col("blob")).schema)
       val rs = rs0.map { r =>
         val id = r.getLong(0)
         org.apache.spark.sql.Row(id,
           if (id == badId) Array.tabulate[Byte](32)(i => (i * 41).toByte)
           else r.getAs[Array[Byte]](1))
       }
-      (badId, rs.length, spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          java.util.Arrays.asList(rs: _*)),
-        df.select(col("media_id"), col("blob")).schema))
+      (badId, rs.length, local(rs), local(rs0))
     }
-    val (imgBadId, imgN, imgBad) = corruptOne(
-      Multimodal.pngMediaTable(spark, docs.limit(6), "doc_id"))
-    val imgOut = Multimodal.decodeFeatures(spark, imgBad, lenient = true).collect()
-    assert(imgOut.length == imgN - 1 && !imgOut.map(_.getLong(0)).contains(imgBadId))
-    intercept[org.apache.spark.SparkException] {
-      Multimodal.decodeFeatures(spark, imgBad).collect()
+    val png = Multimodal.pngMediaTable(spark, docs.limit(6), "doc_id")
+    val wav = Multimodal.wavMediaTable(spark, docs.limit(6), "doc_id")
+    val video = Multimodal.videoMediaTable(spark, docs.limit(6), "doc_id")
+    val gif = Multimodal.gifMediaTable(spark, docs.limit(6), "doc_id")
+    val lenientDecoders: Seq[(String, DF, (DF, Boolean) => DF)] = Seq(
+      ("decodeFeatures", png, Multimodal.decodeFeatures(spark, _, _)),
+      ("decodeAudioFeatures", wav, Multimodal.decodeAudioFeatures(spark, _, _)),
+      ("decodeVideoFrames", video, (df, l) => Multimodal.decodeVideoFrames(spark, df, lenient = l)),
+      ("decodeVideoMotion", video, Multimodal.decodeVideoMotion(spark, _, _)),
+      ("decodeVideoFrameDiffs", video, Multimodal.decodeVideoFrameDiffs(spark, _, _)),
+      ("decodeGifFrames", gif, Multimodal.decodeGifFrames(spark, _, _)))
+    lenientDecoders.foreach { case (name, table, decode) =>
+      val (badId, n, bad, intact) = corruptOne(table)
+      val out = decode(bad, true).collect()
+      val rest = decode(intact.filter(col("media_id") =!= badId), false).collect()
+      assert(out.map(_.getLong(0)).toSet == rest.map(_.getLong(0)).toSet &&
+        rest.map(_.getLong(0)).distinct.length == n - 1,
+        s"$name: lenient must drop exactly media_id $badId")
+      assert(out.length == rest.length && !out.map(_.getLong(0)).contains(badId),
+        s"$name: lenient rows diverge from the intact clips' rows")
+      intercept[org.apache.spark.SparkException](decode(bad, false).collect())
     }
-    val (wavBadId, wavN, wavBad) = corruptOne(
-      Multimodal.wavMediaTable(spark, docs.limit(6), "doc_id"))
-    val wavOut = Multimodal.decodeAudioFeatures(spark, wavBad, lenient = true).collect()
-    assert(wavOut.length == wavN - 1 && !wavOut.map(_.getLong(0)).contains(wavBadId))
-    intercept[org.apache.spark.SparkException] {
-      Multimodal.decodeAudioFeatures(spark, wavBad).collect()
+    // decodeResize has no lenient mode; a garbage blob fails with the
+    // shared image read's IOException, not a NullPointerException
+    val (_, _, resizeBad, _) = corruptOne(png)
+    val err = intercept[org.apache.spark.SparkException] {
+      Multimodal.decodeResize(spark, resizeBad, factor = 2).collect()
     }
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(_.isInstanceOf[java.io.IOException]) &&
+      !chain.exists(_.isInstanceOf[NullPointerException]), chain.mkString("\n"))
   }
 
   test("streaming upsert: checkpoint resume across a stop is exactly-once") {
