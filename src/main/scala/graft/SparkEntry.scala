@@ -62,10 +62,10 @@ object SparkEntry {
       // marker is versioned with the default-aggregates + layout set: a
       // layout from an older build (missing a rollup or the z-order
       // secondary) must rebuild, not break
-      if (!new java.io.File(s"$r/_PREPARED_v4").exists()) {
+      if (!new java.io.File(s"$r/_PREPARED_v5").exists()) {
         Prepare.run(s, graft.sources.ParquetNanos.read(s, s"$sfDir/events.parquet"), r,
           zorder = Prepare.defaultZOrder)
-        new java.io.File(s"$r/_PREPARED_v4").createNewFile()
+        new java.io.File(s"$r/_PREPARED_v5").createNewFile()
       }
       r
     })

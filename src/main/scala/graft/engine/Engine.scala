@@ -19,6 +19,18 @@ import graft.schema.Catalog
   * One Engine per long-lived SparkSession; stateless apart from the caches,
   * safe to share across threads.
   *
+  * A routed query is one Spark job. Its input is small by construction
+  * (a rollup, or the covering cells of a z box), and a read no larger
+  * than Spark's smallest scan split (4 MB by default) is one partition ([[graft.sources.ParquetNanos.oneSplit]]
+  * in [[graft.schema.PreparedCatalog]] and [[graft.prepare.ZOrder.boxScanMulti]]):
+  * the plan above it needs no `Exchange`, AQE runs no shuffle stage, and
+  * [[runBatch]]'s `toLocalIterator` runs one job for its one partition.
+  * Schemas come from one driver-side footer read, so building the
+  * DataFrame runs no schema-inference job either. Spread over many
+  * partitions, the same KB-sized answer cost a shuffle stage plus one
+  * result job per partition, each with its own task launch and codegen.
+  * Larger reads keep their scan splits and the exchange plan.
+  *
   * Concurrency contract for refresh-under-live-engine: result-cache
   * staleness is fully closed (entries are KEYED by the layout stamp
   * observed at query start, so a refresh completing mid-query can never
@@ -161,6 +173,7 @@ final class Engine(
       // at a time, so a SELECT-shaped DSL query over a big table streams
       // into the single q{i}.csv (the main.py:51-56 contract) under
       // bounded driver memory instead of materializing the whole result.
+      // It runs one job per partition: one for a routed query.
       val rows = df.toLocalIterator()
       val out = new java.io.PrintWriter(s"$outDir/q${i + 1}.csv", "UTF-8")
       try {

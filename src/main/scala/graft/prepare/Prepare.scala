@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.engine.{AggTableDef, Engine, ZLayoutDef, ZOrderRouter}
 import graft.schema.{EventTime, PreparedCatalog}
+import graft.sources.ParquetNanos
 
 /** The prepare phase: raw events -> query-optimized layout.
   *
@@ -81,12 +82,17 @@ object Prepare {
       zlayouts = zLayoutDefs(outRoot))
 
   /** Run the full prepare job. `events` is the raw table (CSV or parquet
-    * already loaded); derived time columns are added here. */
+    * already loaded); derived time columns are added here. `aggregates`
+    * must include `agg_type_day_value` and `agg_user_type`, the rollups
+    * the `stats` table is derived from (as [[refresh]] always required);
+    * its `rows_<type>` keys count per `event_type` whatever
+    * `partitionCols` is. */
   def run(spark: SparkSession, events: DataFrame, outRoot: String,
           aggregates: Seq[AggTableDef] = defaultAggregates(),
           partitionCols: Seq[String] = Seq("event_type", "day"),
           clusterBy: Seq[String] = Nil,
           zorder: Seq[ZOrderSpec] = Nil): Unit = {
+    requireStatsRollups(aggregates)
     val derived = EventTime.withDerived(events)
 
     // 1. Partitioned fact table. ZSTD + row-group stats, like the
@@ -114,7 +120,7 @@ object Prepare {
     // 2. Rollup tables. Computed from the freshly written partitioned
     //    layout (cheaper re-read: columnar + pruned) — each is one
     //    partial-aggregate shuffle, output is tiny.
-    val fact = EventTime.withDerived(spark.read.parquet(s"$outRoot/events"))
+    val fact = EventTime.withDerived(ParquetNanos.read(spark, s"$outRoot/events"))
     aggregates.foreach { d =>
       d.build(fact).write
         .mode(SaveMode.Overwrite)
@@ -133,25 +139,51 @@ object Prepare {
         zs.xCol, ZOrderRouter.SecCol, zs.cellBits)
     }
 
-    // 3. Dataset statistics, key/value (reference: prepare_optimized.py:
-    //    279-332). One pass, all stats in a single aggregation.
-    val typeCol = partitionCols.head
-    val statsRow = fact.agg(
-      count(lit(1)).as("total_rows"),
-      min(col("day")).cast(StringType).as("min_day"),
-      max(col("day")).cast(StringType).as("max_day"),
-      approx_count_distinct(col("user_id")).as("approx_users")).collect()(0)
-    val perType = fact.groupBy(col(typeCol)).count().collect()
-      .map(r => (s"rows_${r.get(0)}", r.getLong(1).toString))
+    // 3. Dataset statistics, from the rollups just written.
+    writeStats(spark, outRoot)
+    stampVersion(spark, outRoot)
+  }
+
+  private val StatsRollups = Seq("agg_type_day_value", "agg_user_type")
+
+  /** [[writeStats]] reads two of the default rollups: a rollup set
+    * without them fails here, before any layout write. */
+  private def requireStatsRollups(aggregates: Seq[AggTableDef]): Unit = {
+    val missing = StatsRollups.filterNot(n => aggregates.exists(_.name == n))
+    require(missing.isEmpty,
+      s"the stats table is derived from rollups ${missing.mkString(", ")}, " +
+        "which the aggregate set lacks")
+  }
+
+  /** Dataset statistics, key/value (reference: prepare_optimized.py:
+    * 279-332), written to `<outRoot>/stats` by [[run]] and [[refresh]]
+    * alike. They come from the ROLLUPS, never the fact table, so they
+    * cost O(rollup): `agg_type_day_value` carries the total, per-type and
+    * day-range counts; `agg_user_type`'s key set gives the EXACT
+    * distinct user count (`approx_users` keeps its reference name). Each
+    * rollup is read as one partition when it is small (oneSplit), so
+    * each statistic is one Spark job without a shuffle. */
+  private def writeStats(spark: SparkSession, outRoot: String): Unit = {
+    def rollup(name: String) =
+      ParquetNanos.oneSplit(ParquetNanos.read(spark, s"$outRoot/aggregates/$name"))
+    val Seq(typeDay, userType) = StatsRollups
+    val perType = rollup(typeDay).groupBy(col("event_type"))
+      .agg(sum(col("cnt_star")).as("n"),
+        min(col("day")).cast(StringType).as("min_day"),
+        max(col("day")).cast(StringType).as("max_day"))
+      .collect()
+    val users = rollup(userType).agg(countDistinct(col("user_id")))
+      .collect()(0).getLong(0)
+    val days = perType.flatMap(r => Option(r.getString(2)) ++ Option(r.getString(3)))
     import spark.implicits._
     val kv = Seq(
-      ("total_rows", statsRow.getLong(0).toString),
-      ("min_day", statsRow.getString(1)),
-      ("max_day", statsRow.getString(2)),
-      ("approx_users", statsRow.getLong(3).toString)) ++ perType
+      ("total_rows", perType.map(_.getLong(1)).sum.toString),
+      ("min_day", days.minOption.orNull),
+      ("max_day", days.maxOption.orNull),
+      ("approx_users", users.toString)) ++
+      perType.map(r => (s"rows_${r.get(0)}", r.getLong(1).toString))
     kv.toDF("key", "value").coalesce(1).write
       .mode(SaveMode.Overwrite).parquet(s"$outRoot/stats")
-    stampVersion(spark, outRoot)
   }
 
   /** Rewrite `<root>/_graft_version` with a fresh nonce — the LAST step
@@ -187,6 +219,7 @@ object Prepare {
               aggregates: Seq[AggTableDef] = defaultAggregates(),
               partitionCols: Seq[String] = Seq("event_type", "day"),
               zorder: Seq[ZOrderSpec] = defaultZOrder): Unit = {
+    requireStatsRollups(aggregates)
     // FS from the ROOT PATH, not FileSystem.get(conf): the default FS can
     // differ in scheme from outRoot (local default vs an s3a:// root), and
     // the recovery walk would then throw Wrong-FS instead of recovering —
@@ -235,7 +268,7 @@ object Prepare {
     aggregates.foreach { d =>
       val path = s"$outRoot/aggregates/${d.name}"
       val tmp = s"$outRoot/aggregates/.tmp_${d.name}"
-      val merged = d.merge(spark.read.parquet(path), d.build(derived))
+      val merged = d.merge(ParquetNanos.read(spark, path), d.build(derived))
       merged.write.mode(SaveMode.Overwrite)
         .option("compression", "zstd").parquet(tmp)
       fs.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -243,28 +276,7 @@ object Prepare {
         new org.apache.hadoop.fs.Path(path))
     }
 
-    // stats from ROLLUPS, not the fact table (an O(rollup) pass):
-    // agg_type_day_value carries total/per-type/day-range; agg_user_type's
-    // key set gives the EXACT user count (better than the full-prepare
-    // approx_count_distinct it replaces)
-    val typeDay = spark.read.parquet(s"$outRoot/aggregates/agg_type_day_value")
-    val t = typeDay.agg(
-      sum(col("cnt_star")).as("total"),
-      min(col("day")).cast(StringType).as("min_day"),
-      max(col("day")).cast(StringType).as("max_day")).collect()(0)
-    val users = spark.read.parquet(s"$outRoot/aggregates/agg_user_type")
-      .select(col("user_id")).distinct().count()
-    val perType = typeDay.groupBy(col("event_type"))
-      .agg(sum(col("cnt_star")).as("n")).collect()
-      .map(r => (s"rows_${r.get(0)}", r.getLong(1).toString))
-    import spark.implicits._
-    val kv = Seq(
-      ("total_rows", t.getLong(0).toString),
-      ("min_day", t.getString(1)),
-      ("max_day", t.getString(2)),
-      ("approx_users", users.toString)) ++ perType
-    kv.toDF("key", "value").coalesce(1).write
-      .mode(SaveMode.Overwrite).parquet(s"$outRoot/stats")
+    writeStats(spark, outRoot)
     stampVersion(spark, outRoot)
   }
 

@@ -339,14 +339,19 @@ object ZOrder {
     // filter below (a layout with no cell at all has no schema, and the
     // read refuses it). ParquetNanos per the repo invariant: the layout
     // is Spark-self-written (micros timestamps), but it may carry a raw
-    // ts column copied from a nanos source.
+    // ts column copied from a nanos source; its schema comes from one
+    // driver-side footer read, so building the scan runs no Spark job.
     val live = cellDirs(layoutFs(spark, path), new Path(path))
       .flatMap(_.getPath.getName.stripPrefix("z_cell=").toLongOption).toSet
     val covering = cells.filter(live)
     val leaves = (if (covering.nonEmpty) covering else live.minOption.toSeq)
       .map(c => new Path(path, s"z_cell=$c").toString)
-    graft.sources.ParquetNanos.read(spark, path, leaves)
-      .filter(col("z_cell").isin(cells: _*))
-      .filter(residual)
+    // A covering no larger than the smallest scan split is one partition
+    // (ParquetNanos.oneSplit): the query compiled above it then plans no
+    // Exchange and answers in one job of one task.
+    graft.sources.ParquetNanos.oneSplit(
+      graft.sources.ParquetNanos.read(spark, path, leaves)
+        .filter(col("z_cell").isin(cells: _*))
+        .filter(residual))
   }
 }

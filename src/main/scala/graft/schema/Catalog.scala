@@ -81,21 +81,32 @@ final case class DirCatalog(dir: String) extends Catalog {
   * (event_type, day), `<root>/aggregates/<name>/`. Aggregate tables are
   * small by construction and cached on first read (the reference memoizes
   * identically, query_engine.py:526-532).
+  *
+  * Every table is read through [[graft.sources.ParquetNanos.read]], so
+  * its schema comes from one driver-side footer read and no read runs a
+  * schema-inference job. A rollup no larger than Spark's smallest scan
+  * split (4 MB by default) is cached as ONE partition ([[graft.sources.ParquetNanos.oneSplit]]): a routed
+  * query's re-aggregation, filter and sort then need no `Exchange`, and
+  * answering it is one Spark job of one task instead of a shuffle stage
+  * plus a result job per output partition. A larger rollup keeps its
+  * scan splits and the exchange plan.
   */
 final case class PreparedCatalog(root: String) extends Catalog {
   import scala.collection.concurrent.TrieMap
+  import graft.sources.ParquetNanos
   private val aggCache = TrieMap.empty[String, DataFrame]
 
   def table(spark: SparkSession, name: String): DataFrame = name match {
     case "events" =>
       // partition columns (event_type, day) come back from directory
       // discovery; re-derive the remaining time columns from ts.
-      EventTime.withDerived(spark.read.parquet(s"$root/events"))
+      EventTime.withDerived(ParquetNanos.read(spark, s"$root/events"))
     case "stats" =>
-      spark.read.parquet(s"$root/stats")
+      ParquetNanos.read(spark, s"$root/stats")
     case agg =>
       aggCache.getOrElseUpdate(agg, {
-        val df = spark.read.parquet(s"$root/aggregates/$agg")
+        val df = ParquetNanos.oneSplit(
+          ParquetNanos.read(spark, s"$root/aggregates/$agg"))
         df.cache()
         df
       })

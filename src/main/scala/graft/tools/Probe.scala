@@ -1,5 +1,10 @@
 package graft.tools
 
+import java.util.UUID
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
@@ -16,8 +21,10 @@ import graft.{Bench, GraftSession, SparkEntry}
   * Per entry: one cold pass (first contact in this JVM: JIT, prepared
   * layouts, pipeline artifacts), then `passes` warm passes, all timed by
   * [[graft.Bench.timeOne]] with pooled dedup intermediates released
-  * before each warm pass; the row count; the AQE-final shuffle-exchange
-  * count (the number `PlanFingerprintSpec` pins); the final plan's
+  * before each warm pass; the row count; the Spark jobs the last warm
+  * pass launched (a routed DSL query is one); the AQE-final
+  * shuffle-exchange count (the number `PlanFingerprintSpec` pins); the
+  * final plan's
   * join/exchange/aggregate/scan skeleton with broadcast sizes; and the
   * effective value of each overridden conf. PLANS.md ("One dev probe")
   * maps each retired single-purpose probe to its recorded finding and
@@ -25,7 +32,7 @@ import graft.{Bench, GraftSession, SparkEntry}
 object Probe {
 
   final case class Record(entry: String, coldS: Double, warmS: Seq[Double],
-                          rows: Long, exchanges: Int, skeleton: Seq[String],
+                          rows: Long, jobs: Int, exchanges: Int, skeleton: Seq[String],
                           broadcasts: Seq[String], confs: Seq[(String, String)])
 
   private val Usage = "usage: graft.tools.Probe <entry[,entry...]> <sfDir> [passes] " +
@@ -48,20 +55,47 @@ object Probe {
       val confs = overrides.map { case (k, _) => k -> spark.conf.get(k) }
       names.map { name =>
         val (coldS, rows, df) = Bench.timeOne(spark, sfDir, name)
-        val warmS = (1 to passes).map { _ =>
+        val warm = (1 to passes).map { _ =>
           graft.operators.Dedup.releaseIntermediates()
-          Bench.timeOne(spark, sfDir, name)._1
+          jobsOf(spark)(Bench.timeOne(spark, sfDir, name)._1)
         }
         val broadcasts = broadcastExchanges(df).map { b =>
           def metric(m: String) = b.metrics.get(m).fold(-1L)(_.value)
           s"rows=${metric("numOutputRows")} bytes=${metric("dataSize")}"
         }
-        Record(name, coldS, warmS, rows, shuffleExchanges(df),
+        Record(name, coldS, warm.map(_._1), rows, warm.last._2, shuffleExchanges(df),
           skeleton(finalPlan(df)), broadcasts, confs)
       }
     } finally previous.foreach { case (k, v) =>
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
+  }
+
+  /** The result of `f` and the number of Spark jobs launched while it
+    * ran: every job started before a marker job submitted after `f`,
+    * whatever its thread or job group (a job group reaches only threads
+    * created after it is set, so counting by group would miss jobs sent
+    * from an existing pool thread). Listener events arrive in submission
+    * order, so once the marker is seen every earlier job was counted. */
+  def jobsOf[T](spark: SparkSession)(f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val marker = s"graft-probe-marker-${UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          markerSeen.countDown()
+        else jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      val result = f
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(0), 1).count() finally sc.clearJobGroup()
+      require(markerSeen.await(60, TimeUnit.SECONDS), "marker job never seen")
+      (result, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   private def requireInputs(names: Seq[String], passes: Int): Unit = {
@@ -118,7 +152,7 @@ object Probe {
     try run(spark, names, positional(1), passes, overrides).foreach { r =>
       println(f"PROBE ${r.entry} cold=${r.coldS}%.3f s warm=" +
         r.warmS.map(t => f"$t%.3f").mkString("[", ",", "]") +
-        f" min=${r.warmS.min}%.3f s rows=${r.rows} exchanges=${r.exchanges}")
+        f" min=${r.warmS.min}%.3f s rows=${r.rows} jobs=${r.jobs} exchanges=${r.exchanges}")
       r.confs.foreach { case (k, v) => println(s"  CONF $k = $v") }
       r.skeleton.foreach(l => println(s"  PLAN $l"))
       r.broadcasts.foreach(b => println(s"  BROADCAST $b"))

@@ -1,12 +1,11 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.BeforeAndAfterAll
 
 import graft.prepare.ArtifactStore
+import graft.tools.Probe
 
 /** The pipeline artifact store's memo discipline and codebook codec:
   * recursive builds, memo hits that launch no job, and the completeness
@@ -48,31 +47,14 @@ class ArtifactStoreSpec extends SparkSpec with BeforeAndAfterAll {
       builds.incrementAndGet()
       spark.range(10).toDF("id")
     }
-    val marker = "artifact-store-spec-marker"
-    val markerSeen = new CountDownLatch(1)
-    val otherJobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          markerSeen.countDown()
-        else otherJobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val second = ArtifactStore.artifact(spark, corpus, "twice") {
+    val (second, jobs) = Probe.jobsOf(spark)(
+      ArtifactStore.artifact(spark, corpus, "twice") {
         builds.incrementAndGet()
         spark.range(10).toDF("id")
-      }
-      // listener events arrive in submission order: once the marker
-      // job's start is seen, any job the lookup launched was counted
-      spark.sparkContext.setJobGroup(marker, marker)
-      spark.range(1).count()
-      spark.sparkContext.clearJobGroup()
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never seen")
-      assert(second eq first)
-      assert(builds.get === 1)
-      assert(otherJobs.get === 0)
-    } finally spark.sparkContext.removeSparkListener(listener)
+      })
+    assert(second eq first)
+    assert(builds.get === 1)
+    assert(jobs === 0)
   }
 
   test("a codebook table with fewer than m x k rows fails, naming the artifact") {

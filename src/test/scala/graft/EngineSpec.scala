@@ -206,7 +206,7 @@ class EngineSpec extends SparkSpec {
   }
 
   test("runBatch writes q{i}.csv per query (S6 sink, main.py contract)") {
-    val outDir = "/root/repo/target/tmp/batch_out"
+    val outDir = "target/tmp/batch_out"
     val dfs = engine.runBatch(
       """[{"select":["event_type",{"COUNT":"*"}],"from":"events",
            "group_by":["event_type"],
@@ -225,7 +225,7 @@ class EngineSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     val src = DirCatalog(sfDir).table(spark, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    val csvDir = "/root/repo/target/tmp/spec_csv_parts"
+    val csvDir = "target/tmp/spec_csv_parts"
     val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     src.repartition(3).write.mode("overwrite")
       .option("header", "true").option("timestampFormat", tsFmt)
@@ -237,7 +237,7 @@ class EngineSpec extends SparkSpec {
     val read = spark.read.schema(schema)
       .option("header", "true").option("timestampFormat", tsFmt)
       .csv(s"$csvDir/*.csv")
-    val outRoot = "/root/repo/target/tmp/spec_prepared_csv"
+    val outRoot = "target/tmp/spec_prepared_csv"
     graft.prepare.Prepare.run(spark, read, outRoot)
     val eng = new graft.engine.Engine(spark,
       graft.schema.PreparedCatalog(outRoot), graft.prepare.Prepare.defaultAggregates())
@@ -258,8 +258,8 @@ class EngineSpec extends SparkSpec {
     val src = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")
     val half1 = src.filter(pmod(col("event_id"), lit(2)) === 0)
     val half2 = src.filter(pmod(col("event_id"), lit(2)) === 1)
-    val incRoot = "/root/repo/target/tmp/spec_refresh_inc"
-    val fullRoot = "/root/repo/target/tmp/spec_refresh_full"
+    val incRoot = "target/tmp/spec_refresh_inc"
+    val fullRoot = "target/tmp/spec_refresh_full"
     Prepare.run(spark, half1, incRoot)
     Prepare.refresh(spark, half2, incRoot)
     Prepare.run(spark, src, fullRoot)
@@ -279,11 +279,12 @@ class EngineSpec extends SparkSpec {
     def stats(root: String) = spark.read.parquet(s"$root/stats")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val (si, sf) = (stats(incRoot), stats(fullRoot))
-    // approx_users: full prepare uses HLL, refresh derives the EXACT
-    // count from the user rollup — compare the rest
-    (si.keySet - "approx_users").foreach { k =>
-      assert(si(k) == sf(k), s"stat $k: inc=${si(k)} full=${sf(k)}")
-    }
+    // one stats path: both derive every stat from the rollups, so every
+    // key agrees, approx_users (an exact distinct count) included
+    assert(si == sf)
+    assert(sf("approx_users") ==
+      src.agg(countDistinct(col("user_id"))).collect()(0).getLong(0).toString)
+    assert(sf("total_rows") == src.count().toString)
     // and queries over the refreshed layout route + answer identically
     val e1 = new graft.engine.Engine(spark,
       graft.schema.PreparedCatalog(incRoot), Prepare.defaultAggregates())
@@ -308,7 +309,7 @@ class EngineSpec extends SparkSpec {
     val src = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")
     val half1 = src.filter(pmod(col("event_id"), lit(2)) === 0)
     val half2 = src.filter(pmod(col("event_id"), lit(2)) === 1)
-    val root = "/root/repo/target/tmp/spec_refresh_live"
+    val root = "target/tmp/spec_refresh_live"
     Prepare.run(spark, half1, root)
     val eng = new Engine(spark,
       graft.schema.PreparedCatalog(root), Prepare.defaultAggregates())
@@ -365,7 +366,7 @@ class EngineSpec extends SparkSpec {
     val src = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")
     val half1 = src.filter(pmod(col("event_id"), lit(2)) === 0)
     val half2 = src.filter(pmod(col("event_id"), lit(2)) === 1)
-    val root = "/root/repo/target/tmp/spec_refresh_race"
+    val root = "target/tmp/spec_refresh_race"
     Prepare.run(spark, half1, root)
     val eng = new Engine(spark,
       graft.schema.PreparedCatalog(root), Prepare.defaultAggregates())
@@ -406,7 +407,7 @@ class EngineSpec extends SparkSpec {
     val src = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")
     val half1 = src.filter(pmod(col("event_id"), lit(2)) === 0)
     val half2 = src.filter(pmod(col("event_id"), lit(2)) === 1)
-    val root = "/root/repo/target/tmp/spec_refresh_ttl"
+    val root = "target/tmp/spec_refresh_ttl"
     Prepare.run(spark, half1, root)
     class CountingCatalog(inner: graft.schema.Catalog) extends graft.schema.Catalog {
       @volatile var probes = 0
@@ -440,7 +441,7 @@ class EngineSpec extends SparkSpec {
     val src = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")
     val half1 = src.filter(pmod(col("event_id"), lit(2)) === 0)
     val half2 = src.filter(pmod(col("event_id"), lit(2)) === 1)
-    val root = "/root/repo/target/tmp/spec_zrefresh"
+    val root = "target/tmp/spec_zrefresh"
     Prepare.run(spark, half1, root, zorder = Prepare.defaultZOrder)
     val zPath = s"$root/zorder/z_user_ts"
     val metaBefore = ZOrder.readMeta(zPath)
@@ -556,7 +557,7 @@ class EngineSpec extends SparkSpec {
   test("compaction bin-packs fragmented partitions without changing content") {
     import graft.prepare.Prepare
     val src = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")
-    val root = "/root/repo/target/tmp/spec_compact"
+    val root = "target/tmp/spec_compact"
     // repartition(12) fragments every (type, day) partition into ~12 files
     Prepare.run(spark, src.repartition(12), root)
     def leafFileCounts: Seq[Int] = {
@@ -584,7 +585,7 @@ class EngineSpec extends SparkSpec {
   test("interrupted compaction swap: recovery restores the backup, rows never lost") {
     import graft.prepare.Prepare
     val src = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")
-    val root = "/root/repo/target/tmp/spec_swapcrash"
+    val root = "target/tmp/spec_swapcrash"
     Prepare.run(spark, src.repartition(12), root)
     val total = src.count()
     def walk(d: java.io.File): Seq[java.io.File] = {
@@ -626,7 +627,7 @@ class EngineSpec extends SparkSpec {
     // BEFORE writing.
     import graft.prepare.{Prepare, ZOrder}
     val src = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")
-    val root = "/root/repo/target/tmp/spec_appendcrash"
+    val root = "target/tmp/spec_appendcrash"
     Prepare.run(spark, src, root, zorder = Prepare.defaultZOrder)
     val total = src.count()
     def walk(d: java.io.File): Seq[java.io.File] = {
@@ -685,7 +686,7 @@ class EngineSpec extends SparkSpec {
       def table(s: org.apache.spark.sql.SparkSession, n: String) = df
     }
     val eng = new Engine(spark, cat)
-    val outDir = "/root/repo/target/tmp/batch_quoted"
+    val outDir = "target/tmp/batch_quoted"
     eng.runBatch("""[{"select":["c1","c2"],"from":"t",
       "order_by":[{"col":"c2","dir":"asc"}]}]""", outDir)
     val text = scala.io.Source.fromFile(s"$outDir/q1.csv").mkString
@@ -725,7 +726,7 @@ class EngineSpec extends SparkSpec {
       def table(s: org.apache.spark.sql.SparkSession, nm: String) = df
     }
     val eng = new Engine(spark, cat, cacheResults = false)
-    val outDir = "/root/repo/target/tmp/batch_large"
+    val outDir = "target/tmp/batch_large"
     eng.runBatch("""[{"select":["id","m"],"from":"t"}]""", outDir)
     val back = spark.read.option("header", "true").csv(s"$outDir/q1.csv")
     assert(back.count() == n.toLong)

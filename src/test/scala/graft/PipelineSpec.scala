@@ -695,7 +695,7 @@ class PipelineSpec extends SparkSpec {
 
   test("streaming upsert: checkpoint resume across a stop is exactly-once") {
     import org.apache.spark.sql.DataFrame
-    val base = "/root/repo/target/tmp/upsert_restart"
+    val base = "target/tmp/upsert_restart"
     def rmRec(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rmRec)); f.delete(); ()
     }
@@ -893,7 +893,7 @@ class PipelineSpec extends SparkSpec {
       StructField("ts", if (tsNanos) LongType else TimestampType),
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType), StructField("props", StringType)))
-    val streamDir = new java.io.File("/root/repo/target/tmp/spec_stream")
+    val streamDir = new java.io.File("target/tmp/spec_stream")
     streamDir.mkdirs()
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),

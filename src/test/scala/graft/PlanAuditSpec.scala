@@ -1,14 +1,12 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.engine.Engine
 import graft.schema.DirCatalog
+import graft.tools.Probe
 
 /** Physical-plan audits: these assert the *plan shape* that makes the
   * operators viable at 100 TB — partition pruning, parquet filter
@@ -55,7 +53,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(pf.contains("z_cell"), plan)
     // pruning is REAL: the layout holds more cells than the box reads
     val sf = new java.io.File(sfDir).getName.replace(".", "_")
-    val path = s"/root/repo/target/warehouse/$sf/events_zorder"
+    val path = s"target/warehouse/$sf/events_zorder"
     val meta = graft.prepare.ZOrder.readMeta(path)
     val t0 = java.time.Instant.parse("2024-01-08T00:00:00Z").getEpochSecond
     val t1 = java.time.Instant.parse("2024-01-13T00:00:00Z").getEpochSecond
@@ -82,34 +80,16 @@ class PlanAuditSpec extends SparkSpec {
          "where":[{"col":"user_id","op":"between","val":[40,90]},
                   {"col":"ts","op":"gte","val":"2024-01-08 00:00:00"},
                   {"col":"ts","op":"lt","val":"2024-01-13 00:00:00"}]}"""
-    // building plus planning the routed DataFrame launches no Spark job
-    // wider than one task: the file listing touches the covering cells
-    // only (a layout-root read lists all 64 cells in a 64-task job)
-    val marker = "plan-audit-zroute-marker"
-    val markerSeen = new CountDownLatch(1)
-    val wideJobs = new ConcurrentLinkedQueue[Int]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          markerSeen.countDown()
-        else {
-          val tasks = e.stageInfos.map(_.numTasks).sum
-          if (tasks > 1) wideJobs.add(tasks)
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val df = try {
+    // building plus planning the routed DataFrame launches no Spark job:
+    // the file listing touches the covering cells only (a layout-root
+    // read lists all 64 cells in a 64-task job) and the schema comes from
+    // one driver-side footer read (Spark's inference is a job of its own)
+    val (df, buildJobs) = Probe.jobsOf(spark) {
       val built = eng.executeJson(json)
       built.queryExecution.executedPlan
-      // listener events arrive in submission order: once the marker
-      // job's start is seen, every job the build launched was counted
-      spark.sparkContext.setJobGroup(marker, marker)
-      spark.range(1).count()
-      spark.sparkContext.clearJobGroup()
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never seen")
       built
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(wideJobs.isEmpty, s"multi-task jobs while building: $wideJobs")
+    }
+    assert(buildJobs == 0, s"$buildJobs Spark jobs while building and planning")
     // the engine chose the z layout, not the fact scan
     assert(eng.lastRoute == Engine.ZRouted("z_user_ts"), eng.lastRoute.toString)
     // 2-D pruning is in the plan: covering-cell IN-list as PartitionFilters
@@ -282,6 +262,63 @@ class PlanAuditSpec extends SparkSpec {
       plan)
   }
 
+  /** A rollup route and a z route over the small prepared root, each
+    * with an ORDER BY so the answer order is fixed. */
+  private val rollupJson =
+    """{"select":["event_type",{"COUNT":"*"},{"MAX":"value"}],"from":"events",
+       "group_by":["event_type"],"order_by":[{"col":"event_type","dir":"asc"}]}"""
+  private val zJson =
+    """{"select":["event_type",{"COUNT":"*"},{"MIN":"value"}],"from":"events",
+       "where":[{"col":"user_id","op":"between","val":[2,9]},
+                {"col":"ts","op":"gte","val":"2024-01-08 00:00:00"},
+                {"col":"ts","op":"lt","val":"2024-01-20 00:00:00"}],
+       "group_by":["event_type"],"order_by":[{"col":"event_type","dir":"asc"}]}"""
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq
+
+  test("a routed query is one Spark job: no Exchange in its plan, one job in runBatch") {
+    val eng = SparkEntry.preparedEngine(spark, sfDir, cacheResults = false)
+    Seq(rollupJson -> Engine.Routed("agg_type_day_value"),
+        zJson -> Engine.ZRouted("z_user_ts")).foreach { case (json, route) =>
+      val df = eng.executeJson(json)
+      assert(eng.lastRoute == route, eng.lastRoute.toString)
+      // the small read is one partition: no shuffle above it
+      val got = rows(df)
+      assert(!finalPlan(df).contains("Exchange"), finalPlan(df))
+      assert(got.nonEmpty && got == rows(scanEngine.executeJson(json)))
+    }
+    // runBatch: one toLocalIterator job per query, nothing else (no
+    // schema inference, no shuffle stage); the rollup cache was filled
+    // by the collect above
+    val (_, jobs) = Probe.jobsOf(spark)(
+      eng.runBatch(s"[$rollupJson,$zJson]", "target/tmp/spec_one_job_batch"))
+    assert(jobs == 2, s"$jobs Spark jobs for a batch of two routed queries")
+  }
+
+  test("a rollup larger than one scan split keeps its exchange plan and its answer") {
+    val root = "target/prepared/" + new java.io.File(sfDir).getName
+    SparkEntry.preparedEngine(spark, sfDir, cacheResults = false) // the layout
+    val rollupBytes = new java.io.File(s"$root/aggregates/agg_type_day_value")
+      .listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    // either bound of the smallest scan split, set below the rollup
+    Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes").foreach { key =>
+      val prev = spark.conf.get(key)
+      val eng = graft.prepare.Prepare.engine(spark, root, cacheResults = false)
+      try {
+        spark.conf.set(key, math.max(1L, rollupBytes / 2).toString)
+        val df = eng.executeJson(rollupJson)
+        assert(eng.lastRoute == Engine.Routed("agg_type_day_value"), eng.lastRoute.toString)
+        val got = rows(df)
+        assert(finalPlan(df).contains("Exchange"), s"$key: ${finalPlan(df)}")
+        spark.conf.set(key, prev)
+        assert(got == rows(scanEngine.executeJson(rollupJson)), key)
+      } finally {
+        spark.conf.set(key, prev)
+        eng.invalidate()
+      }
+    }
+  }
+
   test("golden queries route the way the reference's benchmark suite expects") {
     // the 5 reference benchmark queries (inputs.py:7-47, schema-mapped):
     // routable shapes hit a rollup, the user_id-band query (whose day
@@ -354,7 +391,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("bucketed join plans with zero exchange on the join inputs") {
-    val wh = "/root/repo/target/warehouse/spec"
+    val wh = "target/warehouse/spec"
     graft.prepare.Bucketing.writeBucketed(spark,
       graft.sources.ParquetNanos.read(spark, s"$sfDir/lineitem.parquet")
         .withColumnRenamed("l_orderkey", "o_orderkey"),

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.tools.Probe
 
 /** Plan-fingerprint regression net over the whole headline set: the
@@ -109,17 +106,7 @@ class PlanFingerprintSpec extends SparkSpec {
   }
 
   test("Probe rejects bad input before any job; its r9_agg_sum record matches the pin") {
-    val marker = "plan-fingerprint-spec-marker"
-    val markerSeen = new CountDownLatch(1)
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          markerSeen.countDown()
-        else jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, jobs) = Probe.jobsOf(spark) {
       // a valid entry first: a lazy check would run it before failing
       intercept[IllegalArgumentException](
         Probe.run(spark, Seq("r9_agg_sum", "no_such_entry"), sfDir, 1))
@@ -132,14 +119,8 @@ class PlanFingerprintSpec extends SparkSpec {
       intercept[IllegalArgumentException](Probe.main(
         Array("r9_agg_sum", sfDir, "1", "spark.sql.shuffle.partitions")))
       intercept[IllegalArgumentException](Probe.main(Array("no_such_entry", sfDir)))
-      // listener events arrive in submission order: once the marker
-      // job's start is seen, any job the rejected calls launched was counted
-      spark.sparkContext.setJobGroup(marker, marker)
-      spark.range(1).count()
-      spark.sparkContext.clearJobGroup()
-      assert(markerSeen.await(30, TimeUnit.SECONDS), "marker job never seen")
-      assert(jobs.get == 0, s"${jobs.get} jobs ran before the input checks failed")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"$jobs jobs ran before the input checks failed")
 
     val partitions = spark.conf.get("spark.sql.shuffle.partitions")
     val Seq(r) = Probe.run(spark, Seq("r9_agg_sum"), sfDir, 1,
@@ -148,6 +129,7 @@ class PlanFingerprintSpec extends SparkSpec {
     assert(r.exchanges == pinned("r9_agg_sum"))
     assert(r.confs == Seq("spark.sql.shuffle.partitions" -> "3"))
     assert(r.warmS.length == 1 && r.coldS > 0)
+    assert(r.jobs >= 1, s"a warm pass that returns rows launched ${r.jobs} jobs")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions,
       "override not restored")
   }

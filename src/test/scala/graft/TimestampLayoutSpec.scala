@@ -27,7 +27,7 @@ class TimestampLayoutSpec extends SparkSpec {
 
   test("Spark-NTZ-written parquet (scale fixtures) keeps values and derives") {
     import SparkSpecBase.implicits._
-    val dir = "/root/repo/target/tmp/spec_ntz_micros"
+    val dir = "target/tmp/spec_ntz_micros"
     val rows = Seq(
       (1L, java.sql.Timestamp.valueOf("2024-01-15 10:30:00.123456")),
       (2L, java.sql.Timestamp.valueOf("2024-06-30 23:59:59.999999")))
@@ -50,7 +50,7 @@ class TimestampLayoutSpec extends SparkSpec {
 
   test("NTZ-embedded parquet: ts filters still push down to the scan") {
     import SparkSpecBase.implicits._
-    val dir = "/root/repo/target/tmp/spec_ntz_pushdown"
+    val dir = "target/tmp/spec_ntz_pushdown"
     (1 to 100).map(i => (i.toLong,
         java.sql.Timestamp.valueOf(f"2024-01-${i % 28 + 1}%02d 12:00:00")))
       .toDF("id", "ts")
@@ -99,7 +99,7 @@ class TimestampLayoutSpec extends SparkSpec {
 
   test("CSV roundtrip preserves micros through a TimestampType schema") {
     import SparkSpecBase.implicits._
-    val dir = "/root/repo/target/tmp/spec_csv_micros"
+    val dir = "target/tmp/spec_csv_micros"
     val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     val src = Seq((1L, java.sql.Timestamp.valueOf("2024-01-15 10:30:00.123456")))
       .toDF("id", "ts")
