@@ -140,7 +140,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_BENCH_ONLY: comma-separated headline subset, for scale
     // fixtures where part of the suite is infeasible BY DESIGN (the
     // exact pair-table baselines are quadratic in the MakeSfN replica
@@ -148,8 +147,7 @@ object Bench {
     // headline; subset artifacts record their subset in the JSON.
     val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val spark = GraftSession.builder(cpus).appName("graft-bench").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create("graft-bench")
 
     val t0 = System.nanoTime()
     SparkEntry.preparedEngine(spark, sfDir) // prepare phase (not timed per-query)

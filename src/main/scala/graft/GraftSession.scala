@@ -75,10 +75,11 @@ object GraftSession {
       .config("spark.log.level", "WARN")
       .config("spark.ui.enabled", "false")
 
-  /** Standard session: cores from SPARK_GRAFT_CPUS (default 32, matching
-    * the target local[32] environment). */
+  /** Standard session, the one reader of SPARK_GRAFT_CPUS: that many
+    * cores, or every core of the machine when it is unset. */
   def create(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val s = builder(cpus).appName(appName).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.Engine
 import graft.prepare.Prepare
 
@@ -21,9 +19,7 @@ object Runner {
     require(args.length >= 3,
       "usage: Runner <queries.json> <dataDir> <outDir> [preparedRoot]")
     val Array(queriesFile, dataDir, outDir) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus).appName("graft-runner").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create("graft-runner")
 
     val engine = args.lift(3) match {
       case Some(preparedRoot) => Prepare.engine(spark, preparedRoot)

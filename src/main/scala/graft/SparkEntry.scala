@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -7,7 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.engine.Engine
 import graft.operators.Relational
-import graft.prepare.Prepare
+import graft.prepare.{DefMarker, Prepare}
 import graft.schema.DirCatalog
 import graft.sources.CsvSource
 
@@ -48,34 +49,28 @@ object SparkEntry {
       })
     }
 
-  /** Engine over a prepared (partitioned + rollups) layout, built once per
-    * sf dir under target/prepared — exercises Prepare, PreparedCatalog and
-    * the aggregate router. */
-  private val preparedRoots = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val preparedEngines =
-    scala.collection.concurrent.TrieMap.empty[(String, Boolean), Engine]
-  private[graft] def preparedEngine(s: SparkSession, sfDir: String,
-                                    cacheResults: Boolean = true): Engine = {
-    val root = preparedRoots.getOrElseUpdate(sfDir, this.synchronized {
-      val name = new java.io.File(sfDir).getName
-      val r = s"target/prepared/$name"
-      // marker is versioned with the default-aggregates + layout set: a
-      // layout from an older build (missing a rollup or the z-order
-      // secondary) must rebuild, not break
-      if (!new java.io.File(s"$r/_PREPARED_v5").exists()) {
-        Prepare.run(s, graft.sources.ParquetNanos.read(s, s"$sfDir/events.parquet"), r,
-          zorder = Prepare.defaultZOrder)
-        new java.io.File(s"$r/_PREPARED_v5").createNewFile()
+  /** `target/prepared/<name of sfDir>`, written by [[Prepare.run]] unless
+    * it carries the [[DefMarker]] of the raw `events.parquet` read, its
+    * location and the build key. */
+  private[graft] def preparedRoot(s: SparkSession, sfDir: String): String =
+    this.synchronized {
+      val r = s"target/prepared/${new java.io.File(sfDir).getName}"
+      val raw = s"$sfDir/events.parquet"
+      val events = graft.sources.ParquetNanos.read(s, raw)
+      val mark = new DefMarker(s, events, new Path(r), new java.io.File(raw).getAbsolutePath)
+      if (!mark.present) {
+        Prepare.run(s, events, r, zorder = Prepare.defaultZOrder)
+        mark.commit()
       }
       r
-    })
-    // ONE long-lived engine per layout (the reference's shape: engine
-    // object + result cache live for the process) — a fresh Engine per
-    // call would discard the ResultCache between queries, turning every
-    // repeat query into a re-execution instead of a LocalRelation hit
-    preparedEngines.getOrElseUpdate((sfDir, cacheResults),
-      Prepare.engine(s, root, cacheResults))
-  }
+    }
+
+  /** One engine per sf dir over [[preparedRoot]], with the result cache
+    * off: every call runs, and an audit sees, the routed plan. */
+  private val preparedEngines = scala.collection.concurrent.TrieMap.empty[String, Engine]
+  private[graft] def preparedEngine(s: SparkSession, sfDir: String): Engine =
+    preparedEngines.getOrElseUpdate(sfDir,
+      Prepare.engine(s, preparedRoot(s, sfDir), cacheResults = false))
 
   private def dslPrepared(json: String, renames: (String, String)*)
       : (SparkSession, String) => DataFrame =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import graft.prepare.ArtifactStore
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -7,9 +6,7 @@ import graft.prepare.ArtifactStore
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(cpus).appName("graft-verify").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create("graft-verify")
     new java.io.File(outDir).mkdirs()
     // GRAFT_VERIFY_ONLY: dev knob — run just these entries (and restrict
     // oracle_sql.json to them) for fast single-entry oracle iteration.

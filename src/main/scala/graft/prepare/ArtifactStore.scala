@@ -14,13 +14,13 @@ import graft.operators.{Dedup, Multimodal, Quantization, Similarity}
   * the verified jaccard>=0.5 pair set, the shingle document
   * frequencies, the IVF index — are prepare-once-query-many, exactly
   * like the rollup layouts. They are therefore materialized as ZSTD
-  * parquet under `target/prepared/pipeline/v<N>/<corpus>/<name>` on
-  * first use and READ back on every use after that, including from a
-  * fresh session/JVM: the build runs once per corpus, not once per
-  * session. (`rm -rf target/prepared` invalidates, same as the
-  * rollups.) Oracles are unaffected: DuckDB recomputes
-  * from raw text, and the hash-verified jaccard equals the
-  * string-verified one (hashing preserves set cardinalities w.h.p.).
+  * parquet under `target/prepared/pipeline/<build key>/<corpus>/<name>`
+  * on first use and READ back on every use after that, including from a
+  * fresh session/JVM: the build runs once per corpus and build, not once
+  * per session (`rm -rf target/prepared` also drops older builds' roots).
+  * Oracles are unaffected: DuckDB recomputes from raw text, and the
+  * hash-verified jaccard equals the string-verified one (hashing
+  * preserves set cardinalities w.h.p.).
   *
   * Every per-session value — artifact scans, the driver-collected
   * trained state decoded from them, corpus-constant gates — lives in one
@@ -62,20 +62,13 @@ object ArtifactStore {
     }
   }
 
-  /** Bump whenever the BUILD LOGIC of any artifact changes (edits to
-    * Dedup / Similarity / Quantization / Multimodal's clip table / this
-    * file): the version is part of the on-disk path, so parquet written
-    * by an older build is never silently reused across JVMs — the gates
-    * would otherwise validate stale results. The derived-artifact CHAIN
-    * all rides this one version (residual_codes <- ivf_centroids +
-    * residual_codebooks; ivfpq_codes <- ivf_centroids + pq_codebooks;
-    * pq_codes <- pq_codebooks_i2; ivf_centroids_base <- ivfTrain), so an
-    * edit to trainPq / encodePq / ivfTrain / encode WITHOUT a bump
-    * silently reuses stale coded corpora that the oracle then "confirms"
-    * (it reads the same stale parquet) — advisor, round 19. */
-  private[graft] val ArtifactVersion = 9
+  /** `target/prepared/pipeline/<build key>/<corpus>`: the key
+    * ([[DefMarker.buildKey]]) moves with any edit to the classes that
+    * build artifacts, so no derived table (e.g. pq_codes <- pq_codebooks_i2)
+    * outlives the code that wrote it, which the oracle, reading the same
+    * parquet, would otherwise "confirm". */
   private def artifactRoot(dir: String): String =
-    s"target/prepared/pipeline/v$ArtifactVersion/" +
+    s"target/prepared/pipeline/${DefMarker.buildKey}/" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
   private[graft] def artifactPath(dir: String, name: String): String =
     s"${artifactRoot(dir)}/$name"

@@ -34,27 +34,28 @@ object Prepare {
   /** Rollups materialized by default for the harness `events` table —
     * the analogues of the reference's five aggregate tables
     * (prepare_optimized.py:111-266, P5-P10): same shapes, our schema. */
-  def defaultAggregates(typeCol: String = "event_type",
-                        valueCol: String = "value"): Seq[AggTableDef] = Seq(
+  def defaultAggregates(): Seq[AggTableDef] = Seq(
     // P5 daily_revenue FAITHFULLY: a FILTERED rollup (the reference's
     // daily_revenue keeps impressions only). Listed first = preferred:
     // the router proves the build filter appears verbatim in the query
     // (obligation 1), so only purchase-filtered queries land here, on a
     // table 5x smaller than the (type, day) cube below.
     AggTableDef("agg_purchase_day", "events",
-      filter = Seq(graft.dsl.QueryIR.Cond(typeCol, graft.dsl.QueryIR.Eq,
+      filter = Seq(graft.dsl.QueryIR.Cond("event_type", graft.dsl.QueryIR.Eq,
         Seq(graft.dsl.QueryIR.SLit("purchase")))),
-      keys = Seq("day"), measures = Seq(valueCol)),
+      keys = Seq("day"), measures = Seq("value")),
     // the unfiltered (type, day) cube subsumes P5 for every other type
     // and serves any coarser type/day grouping (see P8)
     AggTableDef("agg_type_day_value", "events", Nil,
-      keys = Seq(typeCol, "day"), measures = Seq(valueCol)),
+      keys = Seq("event_type", "day"), measures = Seq("value")),
     // P9 advertiser_type_counts analogue: per (user, type) activity cube
     AggTableDef("agg_user_type", "events", Nil,
-      keys = Seq("user_id", typeCol), measures = Seq(valueCol)),
+      keys = Seq("user_id", "event_type"), measures = Seq("value")),
     // P10 minute_revenue analogue: per (day, minute) value rollup
     AggTableDef("agg_day_minute_value", "events", Nil,
-      keys = Seq("day", "minute"), measures = Seq(valueCol)))
+      keys = Seq("day", "minute"), measures = Seq("value")))
+
+  private val PartitionCols = Seq("event_type", "day")
 
   /** Opt-in z-ordered secondary layout: `name` under `<outRoot>/zorder/`,
     * Morton-interleaved on (`xCol`, floor-epoch-seconds of `tsCol`) — the
@@ -68,9 +69,8 @@ object Prepare {
 
   /** Engine-side routing defs for layouts written by [[run]] — path
     * logic lives here so writer and router can never disagree. */
-  def zLayoutDefs(outRoot: String,
-                  specs: Seq[ZOrderSpec] = defaultZOrder): Seq[ZLayoutDef] =
-    specs.map(zs => ZLayoutDef(zs.name, "events", zs.xCol, zs.tsCol,
+  def zLayoutDefs(outRoot: String): Seq[ZLayoutDef] =
+    defaultZOrder.map(zs => ZLayoutDef(zs.name, "events", zs.xCol, zs.tsCol,
       s"$outRoot/zorder/${zs.name}"))
 
   /** The Engine over a root written by [[run]] with the default rollups
@@ -82,23 +82,17 @@ object Prepare {
       zlayouts = zLayoutDefs(outRoot))
 
   /** Run the full prepare job. `events` is the raw table (CSV or parquet
-    * already loaded); derived time columns are added here. `aggregates`
-    * must include `agg_type_day_value` and `agg_user_type`, the rollups
-    * the `stats` table is derived from (as [[refresh]] always required);
-    * its `rows_<type>` keys count per `event_type` whatever
-    * `partitionCols` is. */
+    * already loaded); derived time columns are added here. The rollups
+    * are [[defaultAggregates]]. */
   def run(spark: SparkSession, events: DataFrame, outRoot: String,
-          aggregates: Seq[AggTableDef] = defaultAggregates(),
-          partitionCols: Seq[String] = Seq("event_type", "day"),
           clusterBy: Seq[String] = Nil,
           zorder: Seq[ZOrderSpec] = Nil): Unit = {
-    requireStatsRollups(aggregates)
     val derived = EventTime.withDerived(events)
 
     // 1. Partitioned fact table. ZSTD + row-group stats, like the
     //    reference's writer settings (prepare_optimized.py:88-93).
     //    `clusterBy` (e.g. Seq("user_id")) additionally sorts rows within
-    //    each task by partitionCols + clusterBy — no shuffle; grouping by
+    //    each task by PartitionCols + clusterBy — no shuffle; grouping by
     //    output partition keeps the dynamic writer to one open file at a
     //    time, and the clusterBy ordering gives every file tight
     //    per-row-group min/max stats, so non-partition predicates on
@@ -110,10 +104,10 @@ object Prepare {
     //    and a cluster deployment turns clustering on.
     val clustered =
       if (clusterBy.isEmpty) derived
-      else derived.sortWithinPartitions((partitionCols ++ clusterBy).map(col): _*)
+      else derived.sortWithinPartitions((PartitionCols ++ clusterBy).map(col): _*)
     clustered.write
       .mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
+      .partitionBy(PartitionCols: _*)
       .option("compression", "zstd")
       .parquet(s"$outRoot/events")
 
@@ -121,7 +115,7 @@ object Prepare {
     //    layout (cheaper re-read: columnar + pruned) — each is one
     //    partial-aggregate shuffle, output is tiny.
     val fact = EventTime.withDerived(ParquetNanos.read(spark, s"$outRoot/events"))
-    aggregates.foreach { d =>
+    defaultAggregates().foreach { d =>
       d.build(fact).write
         .mode(SaveMode.Overwrite)
         .option("compression", "zstd")
@@ -144,17 +138,6 @@ object Prepare {
     stampVersion(spark, outRoot)
   }
 
-  private val StatsRollups = Seq("agg_type_day_value", "agg_user_type")
-
-  /** [[writeStats]] reads two of the default rollups: a rollup set
-    * without them fails here, before any layout write. */
-  private def requireStatsRollups(aggregates: Seq[AggTableDef]): Unit = {
-    val missing = StatsRollups.filterNot(n => aggregates.exists(_.name == n))
-    require(missing.isEmpty,
-      s"the stats table is derived from rollups ${missing.mkString(", ")}, " +
-        "which the aggregate set lacks")
-  }
-
   /** Dataset statistics, key/value (reference: prepare_optimized.py:
     * 279-332), written to `<outRoot>/stats` by [[run]] and [[refresh]]
     * alike. They come from the ROLLUPS, never the fact table, so they
@@ -166,13 +149,12 @@ object Prepare {
   private def writeStats(spark: SparkSession, outRoot: String): Unit = {
     def rollup(name: String) =
       ParquetNanos.oneSplit(ParquetNanos.read(spark, s"$outRoot/aggregates/$name"))
-    val Seq(typeDay, userType) = StatsRollups
-    val perType = rollup(typeDay).groupBy(col("event_type"))
+    val perType = rollup("agg_type_day_value").groupBy(col("event_type"))
       .agg(sum(col("cnt_star")).as("n"),
         min(col("day")).cast(StringType).as("min_day"),
         max(col("day")).cast(StringType).as("max_day"))
       .collect()
-    val users = rollup(userType).agg(countDistinct(col("user_id")))
+    val users = rollup("agg_user_type").agg(countDistinct(col("user_id")))
       .collect()(0).getLong(0)
     val days = perType.flatMap(r => Option(r.getString(2)) ++ Option(r.getString(3)))
     import spark.implicits._
@@ -216,10 +198,7 @@ object Prepare {
     * a petabyte. Rollup replacement is write-new-then-atomic-rename so a
     * concurrent reader sees the old or the new table, never a partial. */
   def refresh(spark: SparkSession, newEvents: DataFrame, outRoot: String,
-              aggregates: Seq[AggTableDef] = defaultAggregates(),
-              partitionCols: Seq[String] = Seq("event_type", "day"),
               zorder: Seq[ZOrderSpec] = defaultZOrder): Unit = {
-    requireStatsRollups(aggregates)
     // FS from the ROOT PATH, not FileSystem.get(conf): the default FS can
     // differ in scheme from outRoot (local default vs an s3a:// root), and
     // the recovery walk would then throw Wrong-FS instead of recovering —
@@ -236,7 +215,7 @@ object Prepare {
     val derived = EventTime.withDerived(newEvents)
     derived.write
       .mode(SaveMode.Append)
-      .partitionBy(partitionCols: _*)
+      .partitionBy(PartitionCols: _*)
       .option("compression", "zstd")
       .parquet(s"$outRoot/events")
 
@@ -265,7 +244,7 @@ object Prepare {
       }
     }
 
-    aggregates.foreach { d =>
+    defaultAggregates().foreach { d =>
       val path = s"$outRoot/aggregates/${d.name}"
       val tmp = s"$outRoot/aggregates/.tmp_${d.name}"
       val merged = d.merge(ParquetNanos.read(spark, path), d.build(derived))

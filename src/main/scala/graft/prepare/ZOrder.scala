@@ -146,7 +146,7 @@ object ZOrder {
       s.isDirectory && s.getPath.getName.startsWith("z_cell="))
 
   /** Write `df` z-ordered on two long-typed columns. Idempotent per
-    * (base definition, bounds, cellBits) via the same [[DefMarker]] as
+    * (base definition, cellBits, build) via the same [[DefMarker]] as
     * [[Bucketing.writeBucketed]]. `cellBits` must be even (half per
     * dimension); 6 gives an 8x8 grid = up to 64 partition directories. */
   def writeZOrdered(spark: SparkSession, df: DataFrame, path: String,
@@ -157,7 +157,7 @@ object ZOrder {
     // read of them: java.io would miss (or mis-resolve) a qualified root
     val fs = layoutFs(spark, path)
     val root = new Path(path)
-    val mark = new DefMarker(spark, df, root, s"$xCol|$yCol|$cellBits|$FineBits")
+    val mark = new DefMarker(spark, df, root, s"$xCol|$yCol|$cellBits")
     val metaPath = new Path(root, "_zmeta.json")
     if (mark.present && fs.exists(metaPath)) return
 

@@ -44,8 +44,7 @@ object BenchStream {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val passes = if (args.length > 1) args(1).toInt else 3
-    val spark = graft.GraftSession.builder("32").appName("bench-stream").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("bench-stream")
 
     val sfName = new java.io.File(sfDir).getName
     val inputRows = graft.sources.ParquetNanos

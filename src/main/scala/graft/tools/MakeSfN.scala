@@ -24,8 +24,7 @@ object MakeSfN {
     val inDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "target/sf1"
     val k = if (args.length > 2) args(2).toInt else 10
-    val spark = graft.GraftSession.builder("32").appName("make-sfn").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("make-sfn")
     // INT64 micros (not the INT96 default): keeps DuckDB, the vectorized
     // reader, and the file-stream path on one timestamp layout
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

@@ -37,8 +37,7 @@ object MakeSkew {
     val outDir = if (args.length > 1) args(1) else "target/skew10"
     val k = if (args.length > 2) args(2).toInt else 100
     val hotPct = if (args.length > 3) args(3).toInt else 20
-    val spark = graft.GraftSession.builder("32").appName("make-skew").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("make-skew")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
     val base = graft.sources.ParquetNanos.read(spark, s"$inDir/events.parquet")

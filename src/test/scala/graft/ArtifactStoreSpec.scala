@@ -11,7 +11,7 @@ import graft.tools.Probe
   * recursive builds, memo hits that launch no job, and the completeness
   * check on a partial codebook table. Each run uses a corpus key of its
   * own, so its artifacts land in a fresh directory under the store's
-  * versioned root, removed afterwards. */
+  * build-keyed root, removed afterwards. */
 class ArtifactStoreSpec extends SparkSpec with BeforeAndAfterAll {
   import SparkSpecBase.implicits._
 

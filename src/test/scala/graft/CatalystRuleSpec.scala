@@ -12,11 +12,7 @@ import graft.prepare.Prepare
   * produce identical results, and refuse unsound rewrites. */
 class CatalystRuleSpec extends SparkSpec {
 
-  private lazy val root: String = {
-    // reuse the prepared layout builder from SparkEntry
-    SparkEntry.preparedEngine(spark, sfDir)
-    s"target/prepared/${new java.io.File(sfDir).getName}"
-  }
+  private lazy val root: String = SparkEntry.preparedRoot(spark, sfDir)
 
   private lazy val rule: AggRewriteRule = {
     val r = AggRewriteRule.configure(spark, s"$root/events",

@@ -87,8 +87,10 @@ object DslPropertySpec extends Properties("dsl-vs-sql") {
 
   private val genQuery: Gen[Q] = for {
     groupCols <- Gen.someOf(dims)
-    aggPicks <- Gen.pick(Gen.choose(1, 3).sample.getOrElse(2), aggs)
-    conds <- Gen.listOfN(Gen.choose(0, 3).sample.getOrElse(1), genCond)
+    nAggs <- Gen.choose(1, 3)
+    aggPicks <- Gen.pick(nAggs, aggs)
+    nConds <- Gen.choose(0, 3)
+    conds <- Gen.listOfN(nConds, genCond)
     withOrder <- Gen.oneOf(true, false)
     withLimit <- Gen.oneOf(true, false)
   } yield {
@@ -163,7 +165,8 @@ object DslPropertySpec extends Properties("dsl-vs-sql") {
 
   private val genRoutable: Gen[String] = for {
     groupCols <- Gen.someOf(Seq("event_type", "day"))
-    aggPicks <- Gen.pick(Gen.choose(1, 3).sample.getOrElse(2), aggs)
+    nAggs <- Gen.choose(1, 3)
+    aggPicks <- Gen.pick(nAggs, aggs)
     nConds <- Gen.choose(0, 2)
     conds <- Gen.listOfN(nConds, Gen.oneOf(
       Gen.oneOf(types).map(t => s"""{"col":"event_type","op":"eq","val":"$t"}"""),
@@ -202,8 +205,7 @@ object DslPropertySpec extends Properties("dsl-vs-sql") {
   }
 
   property("routed result equals scanned result") = Prop.forAll(genRoutable) { json =>
-    val prepared = SparkEntry.preparedEngine(spark, SparkSpecBase.sfDir,
-      cacheResults = false)
+    val prepared = SparkEntry.preparedEngine(spark, SparkSpecBase.sfDir)
     val routed = prepared.executeJson(json)
     val didRoute = prepared.lastRoute.toString.contains("Routed")
     val scanned = engine.executeJson(json)
@@ -219,8 +221,7 @@ object DslPropertySpec extends Properties("dsl-vs-sql") {
   /** The rule pointed at the prepared layout, and its fact table read
     * straight from parquet (no catalog, no derived columns). */
   private lazy val ruleAndFact: (AggRewriteRule, DataFrame) = {
-    SparkEntry.preparedEngine(spark, SparkSpecBase.sfDir, cacheResults = false)
-    val root = s"target/prepared/${new java.io.File(SparkSpecBase.sfDir).getName}"
+    val root = SparkEntry.preparedRoot(spark, SparkSpecBase.sfDir)
     val rule = AggRewriteRule.configure(spark, s"$root/events",
       Prepare.defaultAggregates(), name => spark.read.parquet(s"$root/aggregates/$name"))
     (rule, spark.read.parquet(s"$root/events"))
@@ -245,8 +246,7 @@ object DslPropertySpec extends Properties("dsl-vs-sql") {
 
   property("Catalyst rule fires exactly when the DSL routes; both equal the scan") =
     Prop.forAll(genAgreement) { q =>
-      val prepared = SparkEntry.preparedEngine(spark, SparkSpecBase.sfDir,
-        cacheResults = false)
+      val prepared = SparkEntry.preparedEngine(spark, SparkSpecBase.sfDir)
       val routed = prepared.execute(q)
       val didRoute = prepared.lastRoute.toString.contains("Routed")
       val (rule, fact) = ruleAndFact

@@ -178,7 +178,7 @@ class EngineSpec extends SparkSpec {
       """{"select":["day",{"SUM":"value"}],"from":"events",
          "group_by":["day"]}"""), filtered).isEmpty)
     // end-to-end: the engine actually routes there
-    val eng = SparkEntry.preparedEngine(spark, sfDir, cacheResults = false)
+    val eng = SparkEntry.preparedEngine(spark, sfDir)
     eng.executeJson(
       """{"select":["day",{"SUM":"value"}],"from":"events",
          "where":[{"col":"event_type","op":"eq","val":"purchase"}],
@@ -188,10 +188,10 @@ class EngineSpec extends SparkSpec {
   }
 
   test("routed results equal scanned results (incl. AVG decomposition)") {
-    // cacheResults = false: the shared memoized engine's ResultCache may
-    // already hold this canonical query (PlanAuditSpec constructs every
-    // entry through it), which would report CacheHit instead of Routed.
-    val eng = SparkEntry.preparedEngine(spark, sfDir, cacheResults = false)
+    // the shared engine has no result cache: PlanAuditSpec constructs
+    // every entry through it, and a cache hit would report CacheHit
+    // instead of Routed
+    val eng = SparkEntry.preparedEngine(spark, sfDir)
     val json =
       """{"select":["event_type",{"SUM":"value"},{"AVG":"value"},{"COUNT":"*"}],
          "from":"events","group_by":["event_type"]}"""
