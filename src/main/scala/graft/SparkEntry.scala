@@ -697,7 +697,9 @@ object SparkEntry {
     // q11 shape: per-key value vs a scalar fraction of the global total —
     // the 1-row aggregate re-enters as a broadcast nested-loop join
     // (fixtures lack partsupp: value = a nation's suppliers' discounted
-    // revenue per part, threshold 0.15% of the total)
+    // revenue per part, threshold 0.02% of the total — TPC-H scales its
+    // fraction as 0.0001/SF; a fixed 0.02% keeps parts above it at both
+    // sf0.01 and sf0.1, where 0.15% left sf0.1 with none)
     "tpch_q11" -> ((s, dir) => {
       val supval = tbl(s, dir, "lineitem")
         .join(tbl(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
@@ -705,7 +707,7 @@ object SparkEntry {
           col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("l_partkey").as("ps_partkey"))
         .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("value"))
-      val thresh = supval.agg((sum(col("value")) * lit(0.0015)).as("thresh"))
+      val thresh = supval.agg((sum(col("value")) * lit(0.0002)).as("thresh"))
       supval.join(broadcast(thresh), col("value") > col("thresh"))
         .select(col("ps_partkey"), round(col("value"), 4).as("value"))
     }),
@@ -933,9 +935,13 @@ object SparkEntry {
         .select(col("o_custkey").as("c_custkey"))
     }),
 
+    // customers with no URGENT order: every fixture customer has SOME
+    // order, so an anti join against all orders is empty at sf0.01
     "join_anti" -> ((s, dir) => {
       val c = tbl(s, dir, "customer").withColumnRenamed("c_custkey", "o_custkey")
-      Relational.antiJoin(c, tbl(s, dir, "orders"), Seq("o_custkey"))
+      Relational.antiJoin(c,
+        tbl(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT"),
+        Seq("o_custkey"))
         .select(col("o_custkey").as("c_custkey"))
     }),
 
@@ -1011,10 +1017,13 @@ object SparkEntry {
         .intersect(e.filter(col("event_type") === "error").select(col("user_id")))
     }),
 
+    // purchasers with no signup worth over 100: every fixture user has
+    // events of every type, so purchasers EXCEPT all signups is empty
     "ext_except" -> ((s, dir) => {
       val e = events(s, dir)
       e.filter(col("event_type") === "purchase").select(col("user_id"))
-        .except(e.filter(col("event_type") === "signup").select(col("user_id")))
+        .except(e.filter(col("event_type") === "signup" && col("value") > 100)
+          .select(col("user_id")))
     }),
 
     // multiset semantics: EXCEPT ALL / INTERSECT ALL keep duplicates
@@ -1416,7 +1425,7 @@ object SparkEntry {
            JOIN nation n ON s.s_nationkey = n.n_nationkey
            WHERE n.n_name = 'NATION_7' GROUP BY 1)
          SELECT ps_partkey, round(value, 4) AS value FROM supval
-         WHERE value > (SELECT sum(value) * 0.0015 FROM supval)""",
+         WHERE value > (SELECT sum(value) * 0.0002 FROM supval)""",
     "tpch_q13" ->
       """SELECT c_count, count(*) AS custdist FROM (
            SELECT c.c_custkey, count(o.o_orderkey) AS c_count
@@ -1524,7 +1533,8 @@ object SparkEntry {
     "join_semi" ->
       "SELECT c_custkey FROM customer WHERE c_custkey IN (SELECT o_custkey FROM orders)",
     "join_anti" ->
-      "SELECT c_custkey FROM customer c WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)",
+      ("SELECT c_custkey FROM customer c WHERE NOT EXISTS (SELECT 1 FROM orders o " +
+       "WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')"),
     "ext_topk" ->
       "SELECT o_orderkey, round(o_totalprice,4) AS o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10",
     "ext_window_topk_per_group" ->
@@ -1551,7 +1561,7 @@ object SparkEntry {
        "INTERSECT SELECT user_id FROM events WHERE event_type = 'error'"),
     "ext_except" ->
       ("SELECT user_id FROM events WHERE event_type = 'purchase' " +
-       "EXCEPT SELECT user_id FROM events WHERE event_type = 'signup'"),
+       "EXCEPT SELECT user_id FROM events WHERE event_type = 'signup' AND value > 100"),
     "ext_except_all" ->
       ("SELECT user_id FROM events WHERE event_type = 'purchase' " +
        "EXCEPT ALL SELECT user_id FROM events WHERE event_type = 'signup'"),

@@ -60,7 +60,7 @@ object Verify {
       } else {
         // Remove any stale output from an earlier full run into the same
         // outDir: a leftover dir with the entry filtered out of
-        // oracle_sql.json would read as a passing rows-only check.
+        // oracle_sql.json would read as an entry without an oracle.
         rmAll(new java.io.File(s"$outDir/$name"))
       }
     }

@@ -1,60 +1,26 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Native Catalyst expression: membership probe of a long key against a
-  * driver-built [[org.apache.spark.util.sketch.BloomFilter]] riding the
-  * plan as a codegen reference object.
-  *
-  * The candidate-pruning half of the Bloom decontamination scale path
-  * ([[graft.operators.Dedup.contaminationCountsBloom]]): `false` is
-  * definitive (the key is certainly not in the set the filter was built
-  * from — no false negatives by the Bloom contract), `true` is a
-  * candidate that downstream EXACT verification must confirm. Callers
-  * therefore never change results by inserting this filter; they only
-  * shrink the rows reaching the verify join.
-  *
-  * Same canonicalization caveat as [[LshBuckets]]: the filter field
-  * compares by reference, so two probes of the same conceptual set are
-  * only recognized as equal when callers pass the same instance.
-  */
-case class BloomMightContainLong(child: Expression, bloom: BloomFilter)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bloom_might_contain_long expects a bigint key, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    bloom.mightContainLong(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloom", bloom,
-      classOf[BloomFilter].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.mightContainLong($c);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): BloomMightContainLong =
-    copy(child = newChild)
-}
-
 object BloomMightContainLong {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
-  /** Column-API entry point over a bigint key column. */
+  def compute(key: Long, bloom: BloomFilter): Boolean = bloom.mightContainLong(key)
+
+  /** Membership probe of a bigint key against a driver-built
+    * [[org.apache.spark.util.sketch.BloomFilter]] riding the plan as an
+    * object literal.
+    *
+    * The candidate-pruning half of the Bloom decontamination scale path
+    * ([[graft.operators.Dedup.contaminationCountsBloom]]): `false` is
+    * definitive (the key is certainly not in the set the filter was built
+    * from — no false negatives by the Bloom contract), `true` is a
+    * candidate that downstream EXACT verification must confirm. Callers
+    * therefore never change results by inserting this filter; they only
+    * shrink the rows reaching the verify join. */
   def mightContainLong(key: Column, bloom: BloomFilter): Column =
-    ColumnBridge.column(
-      BloomMightContainLong(ColumnBridge.expression(key), bloom))
+    NativeKernel(this, BooleanType, Seq(key -> LongType),
+      Seq(Literal.create(bloom, ObjectType(classOf[BloomFilter]))))
 }

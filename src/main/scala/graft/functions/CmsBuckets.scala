@@ -1,55 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: all `depth` count-min-sketch bucket ids of
-  * a key in one pass — `array<long>`, element d =
-  * `pmod(md5_56("<d>:<key>"), width)`.
-  *
-  * Replaces a crossJoin against the depth dimension where every row
-  * evaluated `pmod(conv(substring(md5(concat(cast, ':', cast)), 1, 14),
-  * 16, 10), width)` — a built string, a full hex digest string, and a
-  * base-16 parse per (row, d). Here the key bytes render once, the `d`
-  * prefix is patched per hash, and the first 7 digest bytes fold
-  * directly to the long ([[graft.operators.Dedup.portableHash56]]'s
-  * value — the DuckDB oracle rebuilds the identical sketch from the
-  * same md5 formula). Pinned by ShingleSigsPropertySpec.
-  */
-case class CmsBuckets(child: Expression, depth: Int, width: Int)
-    extends UnaryExpression {
-  require(depth >= 1 && depth <= 10, s"depth must be in [1, 10], got $depth")
-  require(width >= 1, s"width must be >= 1, got $width")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"cms_buckets expects a string key, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    CmsBuckets.compute(input.asInstanceOf[UTF8String], depth, width)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CmsBuckets.compute($c, $depth, $width);")
-
-  override protected def withNewChildInternal(newChild: Expression): CmsBuckets =
-    copy(child = newChild)
-}
-
 object CmsBuckets {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
-  /** Shared by interpreted eval and generated code. */
   def compute(key: UTF8String, depth: Int, width: Int): GenericArrayData = {
     val kb = key.getBytes
     val buf = new Array[Byte](kb.length + 2)
@@ -72,7 +30,22 @@ object CmsBuckets {
     new GenericArrayData(out)
   }
 
-  /** Column-API entry point; `key` is the already-cast string key. */
-  def cmsBuckets(key: Column, depth: Int, width: Int): Column =
-    ColumnBridge.column(CmsBuckets(ColumnBridge.expression(key), depth, width))
+  /** All `depth` count-min-sketch bucket ids of the already-cast string
+    * `key` in one pass — `array<long>`, element d =
+    * `pmod(md5_56("<d>:<key>"), width)`.
+    *
+    * Replaces a crossJoin against the depth dimension where every row
+    * evaluated `pmod(conv(substring(md5(concat(cast, ':', cast)), 1, 14),
+    * 16, 10), width)` — a built string, a full hex digest string, and a
+    * base-16 parse per (row, d). Here the key bytes render once, the `d`
+    * prefix is patched per hash, and the first 7 digest bytes fold
+    * directly to the long ([[graft.operators.Dedup.portableHash56]]'s
+    * value — the DuckDB oracle rebuilds the identical sketch from the
+    * same md5 formula). Pinned by ShingleSigsPropertySpec. */
+  def cmsBuckets(key: Column, depth: Int, width: Int): Column = {
+    require(depth >= 1 && depth <= 10, s"depth must be in [1, 10], got $depth")
+    require(width >= 1, s"width must be >= 1, got $width")
+    NativeKernel(this, NativeKernel.LongsOut, Seq(key -> StringType),
+      Seq(Literal(depth), Literal(width)))
+  }
 }

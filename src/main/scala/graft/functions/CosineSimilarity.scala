@@ -25,6 +25,10 @@ import org.apache.spark.sql.types._
   * list_cosine_similarity, so all three agree bit-for-bit. The three
   * accumulators (dot, |a|^2, |b|^2) are each an independent index-order
   * fold, so one fused loop equals three separate list_sum folds.
+  *
+  * A hand-built expression, not a [[NativeKernel]] call: it emits the
+  * fused loop inline, and [[graft.catalyst.GraftExtensions]] registers it
+  * for SQL by class.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -2,68 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: all four Gopher quality-rule raw counts
-  * in ONE byte-level pass over the document —
-  * (n_words, sum_word_len, alpha_words, n_stop_distinct).
-  *
-  * The composable formulation (reference semantics: SURVEY §2.4 quality
-  * scoring; Rae et al. 2021 table A1) pays per document: a regex \s+
-  * split materializing the token array, an interpreted HOF filter with a
-  * per-token regex for the alphabetic count, an interpreted HOF
-  * aggregate for the length sum, and a transform+array_distinct+
-  * array_intersect chain for stopword presence — four passes, all
-  * CodegenFallback because HOFs disable whole-stage codegen for the
-  * containing expression. This expression is one JIT-friendly scan with
-  * zero allocation beyond the result row.
-  *
-  * Semantics replicated EXACTLY (the DuckDB oracle restates them and the
-  * equivalence property in GopherStatsPropertySpec pins them against the
-  * composable form):
-  *  - a word is a maximal run of non-whitespace, whitespace being Java
-  *    regex \s = [ \t\n\x0B\f\r] — byte-exact with
-  *    `split(text, "\\s+")` + empty filter (ASCII bytes never occur
-  *    inside UTF-8 multibyte sequences, so the byte scan is exact);
-  *  - word length counts CHARACTERS (non-continuation bytes), matching
-  *    Spark `length()` = UTF8String.numChars on the token;
-  *  - alphabetic word = contains an ASCII letter, matching
-  *    `rlike("[A-Za-z]")`;
-  *  - stopword presence = case-insensitive ASCII match of the whole
-  *    token against {the, and, of, to, in, is, that}, matching
-  *    `lower(token) == stopword` (the 7 stopwords are pure ASCII and no
-  *    Unicode lowercasing maps a non-match into them: the only
-  *    char-count-preserving non-ASCII-to-ASCII foldings, e.g. Kelvin
-  *    K -> k, involve letters absent from the list).
-  */
-case class GopherStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"gopher_stats expects a string input, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = GopherStats.schema
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    GopherStats.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.functions.GopherStats.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): GopherStats =
-    copy(child = newChild)
-}
-
 object GopherStats {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
   val schema: StructType = StructType(Seq(
     StructField("n_words", LongType, nullable = false),
@@ -78,7 +21,6 @@ object GopherStats {
 
   import TextBytes.isWs
 
-  /** Shared by interpreted eval and generated code. */
   def compute(s: UTF8String): InternalRow = {
     val b = s.getBytes
     val n = b.length
@@ -129,55 +71,41 @@ object GopherStats {
     0
   }
 
-  /** Column-API entry point. */
+  /** All four Gopher quality-rule raw counts in ONE byte-level pass over
+    * the document — (n_words, sum_word_len, alpha_words, n_stop_distinct).
+    *
+    * The composable formulation (reference semantics: SURVEY §2.4 quality
+    * scoring; Rae et al. 2021 table A1) pays per document: a regex \s+
+    * split materializing the token array, an interpreted HOF filter with a
+    * per-token regex for the alphabetic count, an interpreted HOF
+    * aggregate for the length sum, and a transform+array_distinct+
+    * array_intersect chain for stopword presence — four passes, all
+    * CodegenFallback because HOFs disable whole-stage codegen for the
+    * containing expression. This kernel is one JIT-friendly scan with
+    * zero allocation beyond the result row.
+    *
+    * Semantics replicated EXACTLY (the DuckDB oracle restates them and the
+    * equivalence property in GopherStatsPropertySpec pins them against the
+    * composable form):
+    *  - a word is a maximal run of non-whitespace, whitespace being Java
+    *    regex \s = [ \t\n\x0B\f\r] — byte-exact with
+    *    `split(text, "\\s+")` + empty filter (ASCII bytes never occur
+    *    inside UTF-8 multibyte sequences, so the byte scan is exact);
+    *  - word length counts CHARACTERS (non-continuation bytes), matching
+    *    Spark `length()` = UTF8String.numChars on the token;
+    *  - alphabetic word = contains an ASCII letter, matching
+    *    `rlike("[A-Za-z]")`;
+    *  - stopword presence = case-insensitive ASCII match of the whole
+    *    token against {the, and, of, to, in, is, that}, matching
+    *    `lower(token) == stopword` (the 7 stopwords are pure ASCII and no
+    *    Unicode lowercasing maps a non-match into them: the only
+    *    char-count-preserving non-ASCII-to-ASCII foldings, e.g. Kelvin
+    *    K -> k, involve letters absent from the list). */
   def gopherStats(text: Column): Column =
-    ColumnBridge.column(GopherStats(ColumnBridge.expression(text)))
-}
-
-/** Native Catalyst expression: the quality-score raw counts in one pass —
-  * (n_words, n_chars, n_punct, stop_hits).
-  *
-  * Replaces the composable form's per-document regex token split + a
-  * 7-stopword padded-substring replace chain (each replace builds a full
-  * string copy) + a \\p{Punct} regexp_count. Semantics byte-exact with
-  * the replaced Columns (pinned by GopherStatsPropertySpec's quality
-  * property; the DuckDB oracle restates the same formula):
-  *  - n_words: as [[GopherStats]] (maximal non-\s runs);
-  *  - n_chars: Spark length() = UTF8String.numChars;
-  *  - n_punct: Java \\p{Punct} = the 32 ASCII punctuation chars
-  *    (0x21-0x2F, 0x3A-0x40, 0x5B-0x60, 0x7B-0x7E) — ASCII bytes never
-  *    occur inside UTF-8 multibyte sequences, so a byte test is exact;
-  *  - stop_hits: sum over the 7 stopwords of the NON-OVERLAPPING
-  *    greedy count of " w " in " " + lower(text) + " " — exactly the
-  *    `(length(p) - length(replace(p, " w "))) / len` counting trick it
-  *    replaces, including its quirk that adjacent matches share a space
-  *    (" the the " counts ONE " the "). Case folding is ASCII: the only
-  *    Unicode-lower mappings into ASCII (Kelvin K -> k; İ -> i +
-  *    combining dot) cannot create a match for this stop list.
-  */
-case class QualityStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"quality_stats expects a string input, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = QualityStats.schema
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    QualityStats.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.functions.QualityStats.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): QualityStats =
-    copy(child = newChild)
+    NativeKernel(this, schema, Seq(text -> StringType))
 }
 
 object QualityStats {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
   val schema: StructType = StructType(Seq(
     StructField("n_words", LongType, nullable = false),
@@ -261,7 +189,26 @@ object QualityStats {
     hits
   }
 
-  /** Column-API entry point. */
+  /** The quality-score raw counts in one pass —
+    * (n_words, n_chars, n_punct, stop_hits).
+    *
+    * Replaces the composable form's per-document regex token split + a
+    * 7-stopword padded-substring replace chain (each replace builds a full
+    * string copy) + a \\p{Punct} regexp_count. Semantics byte-exact with
+    * the replaced Columns (pinned by GopherStatsPropertySpec's quality
+    * property; the DuckDB oracle restates the same formula):
+    *  - n_words: as [[GopherStats.gopherStats]] (maximal non-\s runs);
+    *  - n_chars: Spark length() = UTF8String.numChars;
+    *  - n_punct: Java \\p{Punct} = the 32 ASCII punctuation chars
+    *    (0x21-0x2F, 0x3A-0x40, 0x5B-0x60, 0x7B-0x7E) — ASCII bytes never
+    *    occur inside UTF-8 multibyte sequences, so a byte test is exact;
+    *  - stop_hits: sum over the 7 stopwords of the NON-OVERLAPPING
+    *    greedy count of " w " in " " + lower(text) + " " — exactly the
+    *    `(length(p) - length(replace(p, " w "))) / len` counting trick it
+    *    replaces, including its quirk that adjacent matches share a space
+    *    (" the the " counts ONE " the "). Case folding is ASCII: the only
+    *    Unicode-lower mappings into ASCII (Kelvin K -> k; İ -> i +
+    *    combining dot) cannot create a match for this stop list. */
   def qualityStats(text: Column): Column =
-    ColumnBridge.column(QualityStats(ColumnBridge.expression(text)))
+    NativeKernel(this, schema, Seq(text -> StringType))
 }

@@ -1,72 +1,21 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression: Jaccard similarity of two distinct-element
-  * long arrays (hashed shingle sets), |A∩B| / |A∪B|, 0.0 when the union
-  * is empty.
-  *
-  * The composable formulation (`size(array_intersect(a,b))` twice — once
-  * for the numerator, once inside the union denominator — see
-  * [[graft.operators.Dedup.jaccard]]) builds a hash set AND materializes
-  * the intersection array per evaluation; worse, CollapseProject +
-  * filter pushdown inline the alias into every consumer, so a
-  * verify-filter pipeline evaluates it up to ~6x per candidate pair
-  * (measured: the dominant cost of blocked n-gram verification at sf0.1,
-  * >1M candidate pairs). This expression fuses the whole computation
-  * into one allocation-light loop: copy both arrays, sort, merge-count
-  * the intersection. Duplicated evaluation is then harmless — no hash
-  * set, no intermediate ArrayData, ~O(n log n) on primitive longs.
-  *
-  * Inputs are treated as SETS (the signature tables are array_distinct
-  * by construction); elements may appear in any order.
-  */
-case class JaccardSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jaccard_similarity expects array<bigint> inputs, got " +
-      s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    JaccardSimilarity.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-        ${ev.value} = graft.functions.JaccardSimilarity.compute($a, $b);
-      """
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaccardSimilarity =
-    copy(left = newLeft, right = newRight)
-}
-
 object JaccardSimilarity {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
 
-  /** Shared by interpreted eval and generated code (the codegen template
-    * emits a single static call — keeping the loop in one JIT-compiled
-    * method beats inlining source into every generated class). */
+  /** One JIT-compiled loop shared by every call site (generated code
+    * emits a single static call rather than inlining the loop into each
+    * generated class). */
   def compute(l: ArrayData, r: ArrayData): Double = {
     val na = l.numElements()
     val nb = r.numElements()
     if (na == 0 && nb == 0) return 0.0
+    // toLongArray reads a null slot as 0
+    TextBytes.requireNoNullSlots("jaccard_similarity", l)
+    TextBytes.requireNoNullSlots("jaccard_similarity", r)
     val a = l.toLongArray()
     val b = r.toLongArray()
     java.util.Arrays.sort(a)
@@ -82,8 +31,25 @@ object JaccardSimilarity {
     if (union > 0) inter / union else 0.0
   }
 
-  /** Column-API entry point. */
+  /** Jaccard similarity of two distinct-element long arrays (hashed
+    * shingle sets), |A∩B| / |A∪B|, 0.0 when the union is empty.
+    *
+    * The composable formulation (`size(array_intersect(a,b))` twice — once
+    * for the numerator, once inside the union denominator — see
+    * [[graft.operators.Dedup.jaccard]]) builds a hash set AND materializes
+    * the intersection array per evaluation; worse, CollapseProject +
+    * filter pushdown inline the alias into every consumer, so a
+    * verify-filter pipeline evaluates it up to ~6x per candidate pair
+    * (measured: the dominant cost of blocked n-gram verification at sf0.1,
+    * >1M candidate pairs). This kernel fuses the whole computation into
+    * one allocation-light loop: copy both arrays, sort, merge-count the
+    * intersection. Duplicated evaluation is then harmless — no hash set,
+    * no intermediate ArrayData, ~O(n log n) on primitive longs.
+    *
+    * Inputs are treated as SETS (the signature tables are array_distinct
+    * by construction); elements may appear in any order. A null element
+    * fails loudly. */
   def jaccardNative(a: Column, b: Column): Column =
-    ColumnBridge.column(JaccardSimilarity(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    NativeKernel(this, DoubleType,
+      Seq(a -> NativeKernel.LongsIn, b -> NativeKernel.LongsIn))
 }

@@ -2,59 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: the language-ID raw signals in ONE pass —
-  * (cjk, s_de, s_en, s_es, s_fr).
-  *
-  * Replaces the composable [[graft.operators.TextAnalysis.langId]]
-  * internals, which paid per document: a regex `[\x{4e00}-\x{9fff}]`
-  * count plus TWENTY padded-replace occurrence counts (each building a
-  * full copy of the document to measure it) — the slowest scalar in the
-  * whole suite (16.8 s at sf1 before this). Here the already-lowercased
-  * input (Spark's `lower()` stays outside, as with every native
-  * expression in this package) is scanned once: code points decode for
-  * the CJK range test, and the 20 marker-word needles test only at
-  * literal-space anchor positions, each with its own greedy
-  * non-overlapping cursor — exactly the
-  * `(length(p) - length(replace(p, ' w ', ''))) / len` counting
-  * semantics of [[graft.operators.TextAnalysis.occurrences]] over the
-  * virtually padded " " + text + " ", including the adjacent-matches-
-  * share-a-space quirk. Pinned against the composable formulation by
-  * GopherStatsPropertySpec.
-  *
-  * Marker words are pure-ASCII lowercase; the input is lowercased by
-  * Spark, so no folding happens here at all — byte equality is exact.
-  */
-case class LangStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"lang_stats expects a string input, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = LangStats.schema
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    LangStats.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.functions.LangStats.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): LangStats =
-    copy(child = newChild)
-}
-
 object LangStats {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
   val schema: StructType = StructType(Seq(
     StructField("cjk", LongType, nullable = false),
     StructField("s_de", LongType, nullable = false),
@@ -75,7 +27,6 @@ object LangStats {
   private val needleLang: Array[Int] =
     markers.zipWithIndex.flatMap { case ((_, ws), i) => ws.map(_ => i) }.toArray
 
-  /** Shared by interpreted eval and generated code. */
   def compute(s: UTF8String): InternalRow = {
     val b = s.getBytes
     val n = b.length
@@ -125,7 +76,27 @@ object LangStats {
       cjk, scores(0), scores(1), scores(2), scores(3)))
   }
 
-  /** Column-API entry point; `text` must already be lowercased. */
+  /** The language-ID raw signals of already-lowercased `text` in ONE
+    * pass — (cjk, s_de, s_en, s_es, s_fr).
+    *
+    * Replaces the composable [[graft.operators.TextAnalysis.langId]]
+    * internals, which paid per document: a regex `[\x{4e00}-\x{9fff}]`
+    * count plus TWENTY padded-replace occurrence counts (each building a
+    * full copy of the document to measure it) — the slowest scalar in the
+    * whole suite (16.8 s at sf1 before this). Here the already-lowercased
+    * input (Spark's `lower()` stays outside, as with every native
+    * expression in this package) is scanned once: code points decode for
+    * the CJK range test, and the 20 marker-word needles test only at
+    * literal-space anchor positions, each with its own greedy
+    * non-overlapping cursor — exactly the
+    * `(length(p) - length(replace(p, ' w ', ''))) / len` counting
+    * semantics of [[graft.operators.TextAnalysis.occurrences]] over the
+    * virtually padded " " + text + " ", including the adjacent-matches-
+    * share-a-space quirk. Pinned against the composable formulation by
+    * GopherStatsPropertySpec.
+    *
+    * Marker words are pure-ASCII lowercase; the input is lowercased by
+    * Spark, so no folding happens here at all — byte equality is exact. */
   def langStats(text: Column): Column =
-    ColumnBridge.column(LangStats(ColumnBridge.expression(text)))
+    NativeKernel(this, schema, Seq(text -> StringType))
 }

@@ -23,6 +23,10 @@ import org.apache.spark.sql.types._
   * layout match the composable column exactly. Callers guard
   * dimensionality with requireDim; a mismatched vector here throws
   * rather than silently null-padding like zip_with would.
+  *
+  * A hand-built expression, not a [[NativeKernel]] call: it picks float or
+  * double reads from the resolved child type, which a construction-time
+  * literal cannot know.
   */
 case class LshBuckets(child: Expression, planes: Array[Array[Double]], ppb: Int)
     extends UnaryExpression {
@@ -64,14 +68,8 @@ object LshBuckets {
     val dim = planes(0).length
     require(vec.numElements() == dim,
       s"lsh_buckets: vector length ${vec.numElements()} != plane dim $dim")
-    // one pre-scan (cheap vs the bands*ppb*dim fold): getFloat/getDouble
-    // on a null slot would read garbage — fail loudly instead (see
-    // TextBytes.failNullSlot for the policy)
-    var z = 0
-    while (z < dim) {
-      if (vec.isNullAt(z)) TextBytes.failNullSlot("lsh_buckets", z)
-      z += 1
-    }
+    // one pre-scan, cheap vs the bands*ppb*dim fold
+    TextBytes.requireNoNullSlots("lsh_buckets", vec)
     val bands = planes.length / ppb
     val out = new Array[Long](bands)
     var b = 0

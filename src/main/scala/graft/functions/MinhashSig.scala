@@ -1,71 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
-
-/** Native Catalyst expression: the `numHashes`-element MinHash signature
-  * of a shingle-hash array in ONE pass — `array<long>`.
-  *
-  * Replaces the relational formulation of
-  * [[graft.operators.Dedup.minhashPairsFromSigs]] (explode the hash set,
-  * groupBy(id) with `numHashes` codegen'd MIN aggregates, repack the
-  * array): one row per (doc, shingle) through an aggregate hash map and
-  * a by-id exchange become a tight per-row loop with NO shuffle — the
-  * signature never leaves its row. Value-exact by construction: the same
-  * Carter-Wegman constants ([[MinhashSig.mixConsts]], seed 0x5eed5eed)
-  * and the same arithmetic — min over shingles of
-  * pmod(pmod(h, p) * a_i + b_i, p), p = 2^31-1; hp < 2^31 and a_i < 2^31
-  * keep every product inside long range. Pinned against the relational
-  * form by ShingleSigsPropertySpec.
-  *
-  * Callers must exclude empty arrays first (the relational explode drops
-  * those docs entirely); on an empty input this returns sentinel
-  * Long.MaxValue mins rather than silently fabricating a signature.
-  */
-case class MinhashSig(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-  require(numHashes >= 1 && numHashes <= 64,
-    s"numHashes must be in [1, 64], got $numHashes")
-
-  // containsNull=true is ACCEPTED at analysis time (Catalyst infers it
-  // conservatively for join outputs and HOF-composed arrays even when
-  // no element is ever null) but an ACTUAL null slot fails loudly in
-  // compute() — getLong on a null slot would read garbage under the
-  // declared containsNull=false output (round-13 advice; the loud
-  // runtime guard, TextBytes.failNullSlot, is the enforcement point).
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig expects array<long>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    MinhashSig.compute(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinhashSig.compute($c, $numHashes);")
-
-  override protected def withNewChildInternal(newChild: Expression): MinhashSig =
-    copy(child = newChild)
-}
 
 object MinhashSig {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
   /** Mersenne prime 2^31-1: the Carter-Wegman modulus. */
   val MersenneP = 2147483647L
 
   /** The Carter-Wegman permutation constants (a_i in [1,p), b_i in
     * [0,p)); seed fixed so every session — and the relational
-    * formulation this expression replaced — derives the identical
+    * formulation this kernel replaced — derives the identical
     * signature family. */
   val mixConsts: IndexedSeq[(Long, Long)] = {
     val rnd = new scala.util.Random(0x5eed5eedL)
@@ -76,7 +21,6 @@ object MinhashSig {
   private val as: Array[Long] = mixConsts.map(_._1).toArray
   private val bs: Array[Long] = mixConsts.map(_._2).toArray
 
-  /** Shared by interpreted eval and generated code. */
   def compute(hs: ArrayData, numHashes: Int): GenericArrayData = {
     val n = hs.numElements()
     val out = new Array[Long](numHashes)
@@ -97,7 +41,28 @@ object MinhashSig {
     new GenericArrayData(out)
   }
 
-  /** Column-API entry point over a shingle-hash (`array<long>`) column. */
-  def minhashSig(hs: Column, numHashes: Int): Column =
-    ColumnBridge.column(MinhashSig(ColumnBridge.expression(hs), numHashes))
+  /** The `numHashes`-element MinHash signature of a shingle-hash
+    * (`array<long>`) column in ONE pass — `array<long>`.
+    *
+    * Replaces the relational formulation of
+    * [[graft.operators.Dedup.minhashPairsFromSigs]] (explode the hash set,
+    * groupBy(id) with `numHashes` codegen'd MIN aggregates, repack the
+    * array): one row per (doc, shingle) through an aggregate hash map and
+    * a by-id exchange become a tight per-row loop with NO shuffle — the
+    * signature never leaves its row. Value-exact by construction: the same
+    * Carter-Wegman constants ([[mixConsts]], seed 0x5eed5eed) and the same
+    * arithmetic — min over shingles of pmod(pmod(h, p) * a_i + b_i, p),
+    * p = 2^31-1; hp < 2^31 and a_i < 2^31 keep every product inside long
+    * range. Pinned against the relational form by ShingleSigsPropertySpec.
+    *
+    * Callers must exclude empty arrays first (the relational explode drops
+    * those docs entirely); on an empty input this returns sentinel
+    * Long.MaxValue mins rather than silently fabricating a signature. A
+    * null element fails loudly. */
+  def minhashSig(hs: Column, numHashes: Int): Column = {
+    require(numHashes >= 1 && numHashes <= 64,
+      s"numHashes must be in [1, 64], got $numHashes")
+    NativeKernel(this, NativeKernel.LongsOut, Seq(hs -> NativeKernel.LongsIn),
+      Seq(Literal(numHashes)))
+  }
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -19,6 +19,10 @@ import org.apache.spark.sql.types._
   * ShingleSigsPropertySpec): distances accumulate in strict index order
   * as (v_d - c_d)^2 double sums, and the argmin resolves ties to the
   * LOWEST code exactly like array_min over (distance, code) structs.
+  *
+  * A hand-built expression, not a [[NativeKernel]] call: it picks float or
+  * double reads from the resolved child type, which a construction-time
+  * literal cannot know.
   */
 case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
     extends UnaryExpression {
@@ -50,43 +54,6 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
     copy(child = newChild)
 }
 
-/** Native Catalyst expression: the ADC fold — sum over subspaces s of
-  * `lut[s*k + codes[s]]`, the per-pair half of PQ-ADC scoring.
-  *
-  * Replaces an interpreted `aggregate(zip_with(codes, sequence(...)))`
-  * that ran per CANDIDATE PAIR. Strict index-order double sum, exactly
-  * the composable fold. */
-case class AdcFold(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-  require(k >= 1, s"k must be >= 1, got $k")
-
-  // containsNull accepted at analysis time (join outputs carry it
-  // conservatively) but an ACTUAL null slot fails loudly in adcFold —
-  // see MinhashSig for the policy (TextBytes.failNullSlot)
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(IntegerType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"adc_fold expects (array<int>, array<double>), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(codes: Any, lut: Any): Any =
-    PqOps.adcFold(codes.asInstanceOf[ArrayData], lut.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, l) =>
-      s"${ev.value} = graft.functions.PqOps.adcFold($c, $l, $k);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): AdcFold =
-    copy(left = newLeft, right = newRight)
-}
-
 object PqOps {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -97,13 +64,8 @@ object PqOps {
     val dsub = cb(0)(0).length
     require(vec.numElements() == m * dsub,
       s"pq_encode: vector length ${vec.numElements()} != ${m * dsub}")
-    // one pre-scan (cheap vs the m*k*dsub fold below): getFloat/getDouble
-    // on a null slot would read garbage — fail loudly instead
-    var z = 0
-    while (z < m * dsub) {
-      if (vec.isNullAt(z)) TextBytes.failNullSlot("pq_encode", z)
-      z += 1
-    }
+    // one pre-scan, cheap vs the m*k*dsub fold below
+    TextBytes.requireNoNullSlots("pq_encode", vec)
     val out = new Array[Int](m)
     var s = 0
     while (s < m) {
@@ -132,7 +94,6 @@ object PqOps {
     new GenericArrayData(out)
   }
 
-  /** Shared by interpreted eval and generated code. */
   def adcFold(codes: ArrayData, lut: ArrayData, k: Int): Double = {
     val m = codes.numElements()
     var acc = 0.0
@@ -147,10 +108,19 @@ object PqOps {
     acc
   }
 
-  /** Column-API entry points. */
+  /** Column-API entry point. */
   def pqEncode(vec: Column, codebooks: Array[Array[Array[Double]]]): Column =
     ColumnBridge.column(PqEncode(ColumnBridge.expression(vec), codebooks))
-  def adcFold(codes: Column, lut: Column, k: Int): Column =
-    ColumnBridge.column(AdcFold(
-      ColumnBridge.expression(codes), ColumnBridge.expression(lut), k))
+
+  /** The ADC fold — sum over subspaces s of `lut[s*k + codes[s]]`, the
+    * per-pair half of PQ-ADC scoring.
+    *
+    * Replaces an interpreted `aggregate(zip_with(codes, sequence(...)))`
+    * that ran per CANDIDATE PAIR. Strict index-order double sum, exactly
+    * the composable fold. A null code or LUT slot fails loudly. */
+  def adcFold(codes: Column, lut: Column, k: Int): Column = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    NativeKernel(this, DoubleType, Seq(codes -> ArrayType(IntegerType, containsNull = true),
+      lut -> ArrayType(DoubleType, containsNull = true)), Seq(Literal(k)), fn = "adcFold")
+  }
 }

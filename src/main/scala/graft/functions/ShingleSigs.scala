@@ -1,74 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Literal, XXH64}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: distinct xxhash64 word-n-gram shingle
-  * signatures in ONE pass over the document — `array<long>`, first
-  * occurrence order.
-  *
-  * Replaces the three-projection composable pipeline of
-  * [[graft.operators.Dedup.signatures]] (regex `\s+` tokenize dropping
-  * empties -> HOF transform building every shingle STRING via concat_ws
-  * -> array_distinct -> HOF transform hashing each string), which
-  * materializes the token array, every shingle string, and two
-  * intermediate arrays per document, all interpreted (HOFs are
-  * CodegenFallback). Here the document's tokens are written once into a
-  * normalized buffer (single-space joined), each shingle is a contiguous
-  * SLICE of that buffer (consecutive shingle tokens are adjacent in it),
-  * and the hash runs zero-copy over the slice.
-  *
-  * Value-exact with the composable form (pinned by
-  * ShingleSigsPropertySpec):
-  *  - tokens: maximal runs of non-whitespace, whitespace = Java regex
-  *    \s (ASCII, never inside UTF-8 multibyte sequences — the
-  *    [[GopherStats]] argument). The input must already be lowercased
-  *    by the caller (Spark's own `lower()` stays outside, so Unicode
-  *    case-folding parity is Spark's, not re-implemented here);
-  *  - shingle i (1-based, i <= cnt-n+1) = tokens i..i+n-1 joined by one
-  *    space = concat_ws(" ", slice(t, i, n)); cnt < n degenerates to
-  *    the single whole-document joined string, exactly
-  *    `when(cnt >= n, ...).otherwise(array(concat_ws(" ", t)))`;
-  *  - hash: [[XXH64.hashUTF8String]] with seed 42 — the identical
-  *    primitive the `xxhash64` expression evaluates for a string;
-  *  - distinct: first-occurrence order, as `array_distinct`.
-  */
-case class ShingleSigs(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"shingle width must be >= 1, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"shingle_sigs expects a string input, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleSigs.compute(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ShingleSigs.compute($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleSigs =
-    copy(child = newChild)
-}
-
 object ShingleSigs {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
   private val Seed = 42L // xxhash64's fixed seed
 
   import TextBytes.isWs
 
-  /** Shared by interpreted eval and generated code. */
   def compute(s: UTF8String, n: Int): GenericArrayData = {
     val b = s.getBytes
     val len = b.length
@@ -140,7 +82,36 @@ object ShingleSigs {
     true
   }
 
-  /** Column-API entry point; `text` must already be lowercased. */
-  def shingleSigs(text: Column, n: Int): Column =
-    ColumnBridge.column(ShingleSigs(ColumnBridge.expression(text), n))
+  /** Distinct xxhash64 word-`n`-gram shingle signatures in ONE pass over
+    * the document — `array<long>`, first occurrence order.
+    *
+    * Replaces the three-projection composable pipeline of
+    * [[graft.operators.Dedup.signatures]] (regex `\s+` tokenize dropping
+    * empties -> HOF transform building every shingle STRING via concat_ws
+    * -> array_distinct -> HOF transform hashing each string), which
+    * materializes the token array, every shingle string, and two
+    * intermediate arrays per document, all interpreted (HOFs are
+    * CodegenFallback). Here the document's tokens are written once into a
+    * normalized buffer (single-space joined), each shingle is a contiguous
+    * SLICE of that buffer (consecutive shingle tokens are adjacent in it),
+    * and the hash runs zero-copy over the slice.
+    *
+    * Value-exact with the composable form (pinned by
+    * ShingleSigsPropertySpec):
+    *  - tokens: maximal runs of non-whitespace, whitespace = Java regex
+    *    \s (ASCII, never inside UTF-8 multibyte sequences — the
+    *    [[GopherStats]] argument). The input must already be lowercased
+    *    by the caller (Spark's own `lower()` stays outside, so Unicode
+    *    case-folding parity is Spark's, not re-implemented here);
+    *  - shingle i (1-based, i <= cnt-n+1) = tokens i..i+n-1 joined by one
+    *    space = concat_ws(" ", slice(t, i, n)); cnt < n degenerates to
+    *    the single whole-document joined string, exactly
+    *    `when(cnt >= n, ...).otherwise(array(concat_ws(" ", t)))`;
+    *  - hash: [[XXH64.hashUTF8String]] with seed 42 — the identical
+    *    primitive the `xxhash64` expression evaluates for a string;
+    *  - distinct: first-occurrence order, as `array_distinct`. */
+  def shingleSigs(text: Column, n: Int): Column = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    NativeKernel(this, NativeKernel.LongsOut, Seq(text -> StringType), Seq(Literal(n)))
+  }
 }

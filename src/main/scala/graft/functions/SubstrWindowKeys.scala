@@ -1,73 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Literal, XXH64}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: the substring-dedup window keys of a
-  * document in ONE pass — `array<long>`, one key per w-token sliding
-  * window, empty when the document has fewer than w tokens.
-  *
-  * Replaces the corpus-wide stage of
-  * [[graft.operators.Dedup.substringDupWindows]]: regex `\s+` tokenize
-  * materializing the token array, an interpreted HOF transform hashing
-  * every token (`pmod(xxhash64(tok), p)`), and a second interpreted HOF
-  * transform combining four sampled hashes per window position. Here
-  * tokens are slices of the input bytes (no token array), each is hashed
-  * once into a primitive long array, and the window combine is a tight
-  * loop over it.
-  *
-  * Value-exact with the composable form (pinned by
-  * ShingleSigsPropertySpec):
-  *  - tokens: maximal runs of non-whitespace, whitespace = Java regex \s
-  *    (ASCII — the [[GopherStats]] argument); the caller keeps Spark's
-  *    own `lower()` outside;
-  *  - token hash: [[XXH64.hashUTF8String]] seed 42 over the token's own
-  *    bytes (the identical primitive `xxhash64` evaluates), then
-  *    `pmod(h, mod)` = ((h % mod) + mod) % mod;
-  *  - key at 1-based window position i (i <= cnt-w+1):
-  *    h(i)*1000003 + h(i+(w-1)/3)*524287 + h(i+2(w-1)/3)*8191 +
-  *    h(i+w-1)*131 — with mod = 2^31-1 each term < 2^52, inside long
-  *    range, so the wrap-free sum matches Spark's non-ANSI long
-  *    arithmetic exactly.
-  */
-case class SubstrWindowKeys(child: Expression, w: Int, mod: Long)
-    extends UnaryExpression {
-  require(w >= 2, s"window width must be >= 2, got $w")
-  require(mod > 0, s"modulus must be positive, got $mod")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"substr_window_keys expects a string input, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    SubstrWindowKeys.compute(input.asInstanceOf[UTF8String], w, mod)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SubstrWindowKeys.compute($c, $w, ${mod}L);")
-
-  override protected def withNewChildInternal(newChild: Expression): SubstrWindowKeys =
-    copy(child = newChild)
-}
-
 object SubstrWindowKeys {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
   private val Seed = 42L // xxhash64's fixed seed
 
   import TextBytes.isWs
 
-  /** Shared by interpreted eval and generated code. */
   def compute(s: UTF8String, w: Int, mod: Long): GenericArrayData = {
     val b = s.getBytes
     val len = b.length
@@ -101,7 +44,36 @@ object SubstrWindowKeys {
     new GenericArrayData(out)
   }
 
-  /** Column-API entry point; `text` must already be lowercased. */
-  def substrWindowKeys(text: Column, w: Int, mod: Long): Column =
-    ColumnBridge.column(SubstrWindowKeys(ColumnBridge.expression(text), w, mod))
+  /** The substring-dedup window keys of a document in ONE pass —
+    * `array<long>`, one key per w-token sliding window, empty when the
+    * document has fewer than w tokens.
+    *
+    * Replaces the corpus-wide stage of
+    * [[graft.operators.Dedup.substringDupWindows]]: regex `\s+` tokenize
+    * materializing the token array, an interpreted HOF transform hashing
+    * every token (`pmod(xxhash64(tok), p)`), and a second interpreted HOF
+    * transform combining four sampled hashes per window position. Here
+    * tokens are slices of the input bytes (no token array), each is hashed
+    * once into a primitive long array, and the window combine is a tight
+    * loop over it.
+    *
+    * Value-exact with the composable form (pinned by
+    * ShingleSigsPropertySpec):
+    *  - tokens: maximal runs of non-whitespace, whitespace = Java regex \s
+    *    (ASCII — the [[GopherStats]] argument); the caller keeps Spark's
+    *    own `lower()` outside;
+    *  - token hash: [[XXH64.hashUTF8String]] seed 42 over the token's own
+    *    bytes (the identical primitive `xxhash64` evaluates), then
+    *    `pmod(h, mod)` = ((h % mod) + mod) % mod;
+    *  - key at 1-based window position i (i <= cnt-w+1):
+    *    h(i)*1000003 + h(i+(w-1)/3)*524287 + h(i+2(w-1)/3)*8191 +
+    *    h(i+w-1)*131 — with mod = 2^31-1 each term < 2^52, inside long
+    *    range, so the wrap-free sum matches Spark's non-ANSI long
+    *    arithmetic exactly. */
+  def substrWindowKeys(text: Column, w: Int, mod: Long): Column = {
+    require(w >= 2, s"window width must be >= 2, got $w")
+    require(mod > 0, s"modulus must be positive, got $mod")
+    NativeKernel(this, NativeKernel.LongsOut, Seq(text -> StringType),
+      Seq(Literal(w), Literal(mod)))
+  }
 }

@@ -1,87 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: whitespace-token count in one byte pass.
-  *
-  * Replaces `size(filter(split(text, "\\s+"), t => t =!= ""))` — a regex
-  * split that materializes the full token array, plus an interpreted HOF
-  * filter (CodegenFallback for the whole containing expression) — when
-  * the caller only needs the COUNT. Semantics byte-exact with the
-  * composable form it replaces (same argument as [[GopherStats]], whose
-  * n_words field is this very count; pinned by GopherStatsPropertySpec):
-  * a token is a maximal run of non-whitespace, whitespace being Java
-  * regex \s = [ \t\n\x0B\f\r], all ASCII bytes that never occur inside
-  * UTF-8 multibyte sequences.
-  */
-case class WordCount(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"word_count expects a string input, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    TokenCounts.wordCount(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenCounts.wordCount($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): WordCount =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression: the BPE-ish subword-count heuristic in one
-  * byte pass — sum over whitespace tokens of max(1, ceil(chars/6)).
-  *
-  * Replaces the interpreted HOF fold
-  * `aggregate(tokens(text), 0L, (acc, w) => acc + greatest(1, ceil(length(w)/6.0)))`.
-  * Value-exact: word length counts CHARACTERS (non-continuation bytes) =
-  * Spark `length()`; ceil(chars/6.0) over a positive int is the integer
-  * (chars+5)/6 (double division by 6.0 is exact to well past any document
-  * length, so the composable form's float ceil never diverges); the
-  * greatest(1, _) arm is unreachable for a non-empty token (chars >= 1 =>
-  * ceil >= 1) and empty tokens don't exist (maximal runs). Pinned against
-  * the composable form by GopherStatsPropertySpec.
-  */
-case class BpeCount(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bpe_count expects a string input, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    TokenCounts.bpeCount(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenCounts.bpeCount($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): BpeCount =
-    copy(child = newChild)
-}
-
 object TokenCounts {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
   import TextBytes.isWs
 
-  /** Shared by interpreted eval and generated code. */
   def wordCount(s: UTF8String): Long = {
     val b = s.getBytes
     val n = b.length
@@ -96,7 +21,6 @@ object TokenCounts {
     words
   }
 
-  /** Shared by interpreted eval and generated code. */
   def bpeCount(s: UTF8String): Long = {
     val b = s.getBytes
     val n = b.length
@@ -116,9 +40,32 @@ object TokenCounts {
     sum
   }
 
-  /** Column-API entry points. */
+  /** Whitespace-token count in one byte pass.
+    *
+    * Replaces `size(filter(split(text, "\\s+"), t => t =!= ""))` — a regex
+    * split that materializes the full token array, plus an interpreted HOF
+    * filter (CodegenFallback for the whole containing expression) — when
+    * the caller only needs the COUNT. Semantics byte-exact with the
+    * composable form it replaces (same argument as
+    * [[GopherStats.gopherStats]], whose n_words field is this very count;
+    * pinned by GopherStatsPropertySpec): a token is a maximal run of
+    * non-whitespace, whitespace being Java regex \s = [ \t\n\x0B\f\r],
+    * all ASCII bytes that never occur inside UTF-8 multibyte sequences. */
   def wordCount(text: Column): Column =
-    ColumnBridge.column(WordCount(ColumnBridge.expression(text)))
+    NativeKernel(this, LongType, Seq(text -> StringType), fn = "wordCount")
+
+  /** The BPE-ish subword-count heuristic in one byte pass — sum over
+    * whitespace tokens of max(1, ceil(chars/6)).
+    *
+    * Replaces the interpreted HOF fold
+    * `aggregate(tokens(text), 0L, (acc, w) => acc + greatest(1, ceil(length(w)/6.0)))`.
+    * Value-exact: word length counts CHARACTERS (non-continuation bytes) =
+    * Spark `length()`; ceil(chars/6.0) over a positive int is the integer
+    * (chars+5)/6 (double division by 6.0 is exact to well past any document
+    * length, so the composable form's float ceil never diverges); the
+    * greatest(1, _) arm is unreachable for a non-empty token (chars >= 1 =>
+    * ceil >= 1) and empty tokens don't exist (maximal runs). Pinned against
+    * the composable form by GopherStatsPropertySpec. */
   def bpeCount(text: Column): Column =
-    ColumnBridge.column(BpeCount(ColumnBridge.expression(text)))
+    NativeKernel(this, LongType, Seq(text -> StringType), fn = "bpeCount")
 }

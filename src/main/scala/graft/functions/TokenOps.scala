@@ -1,125 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: whitespace tokenization — `array<string>`.
-  *
-  * Value-exact with `filter(split(text, "\\s+"), t => t =!= "")` (the
-  * [[GopherStats]] byte-exactness argument), without the regex engine,
-  * the dropped-empties filter pass, or per-token string copies: each
-  * token is a zero-copy UTF8String view over the row's byte array.
-  */
-case class Tokens(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"tokens expects a string input, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    TokenOps.tokens(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenOps.tokens($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Tokens =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression: adjacent-token bigram strings of a token
-  * array — `array<string>`, element i = `t(i) + " " + t(i+1)`; empty for
-  * fewer than 2 tokens.
-  *
-  * Value-exact with
-  * `zip_with(slice(t, 1, n-1), slice(t, 2, n-1), (a, b) => concat(a, " ", b))`
-  * — which paid two sliced array copies and an interpreted HOF building
-  * each pair string per element. */
-case class TokenBigrams(child: Expression) extends UnaryExpression {
-
-  // containsNull accepted at analysis time; an ACTUAL null slot fails
-  // loudly in bigrams() (UTF8String.concat would silently yield a null
-  // element under the declared containsNull=false output) — see
-  // MinhashSig for the policy (TextBytes.failNullSlot)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"token_bigrams expects array<string>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    TokenOps.bigrams(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenOps.bigrams($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenBigrams =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression: one BPE merge step over a token array —
-  * every ADJACENT (w1, w2) occurrence becomes the single token "w1_w2",
-  * greedy left-to-right non-overlapping — `array<string>`.
-  *
-  * Value-exact with the padded double-space replace trick it replaced
-  * (`replace(replace(" " + concat_ws(" ", t) + " ", " ", "  "),
-  * " w1  w2 ", " w1_w2 ")` re-tokenized): the doubled spaces make every
-  * occurrence's boundaries disjoint except for one shared pad between
-  * consecutive matches, which is exactly greedy non-overlapping
-  * adjacency over the token sequence — "w w w" with pair (w, w) merges
-  * ONCE. Pinned by ShingleSigsPropertySpec. */
-case class BpeMergePair(child: Expression, w1: String, w2: String)
-    extends UnaryExpression {
-
-  // containsNull accepted at analysis time; an ACTUAL null slot fails
-  // loudly in bpeMerge() — see MinhashSig for the policy
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bpe_merge_pair expects array<string>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val u1 = UTF8String.fromString(w1)
-  @transient private lazy val u2 = UTF8String.fromString(w2)
-  @transient private lazy val uM = UTF8String.fromString(w1 + "_" + w2)
-
-  override def nullSafeEval(input: Any): Any =
-    TokenOps.bpeMerge(input.asInstanceOf[ArrayData], u1, u2, uM)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r1 = ctx.addReferenceObj("w1", u1, "UTF8String")
-    val r2 = ctx.addReferenceObj("w2", u2, "UTF8String")
-    val rm = ctx.addReferenceObj("wm", uM, "UTF8String")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenOps.bpeMerge($c, $r1, $r2, $rm);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeMergePair =
-    copy(child = newChild)
-}
-
 object TokenOps {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
   import TextBytes.isWs
 
-  /** Shared by interpreted eval and generated code. */
   def tokens(s: UTF8String): GenericArrayData = {
     val b = s.getBytes
     val len = b.length
@@ -140,7 +29,6 @@ object TokenOps {
       if (n == out.length) out else java.util.Arrays.copyOf(out, n))
   }
 
-  /** Shared by interpreted eval and generated code. */
   def bigrams(t: ArrayData): GenericArrayData = {
     val n = t.numElements()
     if (n < 2) return new GenericArrayData(Array.empty[AnyRef])
@@ -160,7 +48,6 @@ object TokenOps {
 
   private[functions] val space = UTF8String.fromString(" ")
 
-  /** Shared by interpreted eval and generated code. */
   def bpeMerge(t: ArrayData, w1: UTF8String, w2: UTF8String,
                merged: UTF8String): GenericArrayData = {
     val n = t.numElements()
@@ -180,11 +67,40 @@ object TokenOps {
       if (nOut == n) out else java.util.Arrays.copyOf(out, nOut))
   }
 
-  /** Column-API entry points. */
+  /** Whitespace tokenization — `array<string>`.
+    *
+    * Value-exact with `filter(split(text, "\\s+"), t => t =!= "")` (the
+    * [[GopherStats.gopherStats]] byte-exactness argument), without the
+    * regex engine, the dropped-empties filter pass, or per-token string
+    * copies: each token is a zero-copy UTF8String view over the row's
+    * byte array. */
   def tokens(text: Column): Column =
-    ColumnBridge.column(Tokens(ColumnBridge.expression(text)))
+    NativeKernel(this, NativeKernel.StringsOut, Seq(text -> StringType), fn = "tokens")
+
+  /** Adjacent-token bigram strings of a token array — `array<string>`,
+    * element i = `t(i) + " " + t(i+1)`; empty for fewer than 2 tokens.
+    *
+    * Value-exact with
+    * `zip_with(slice(t, 1, n-1), slice(t, 2, n-1), (a, b) => concat(a, " ", b))`
+    * — which paid two sliced array copies and an interpreted HOF building
+    * each pair string per element. A null token fails loudly
+    * (UTF8String.concat would silently yield a null element). */
   def bigrams(t: Column): Column =
-    ColumnBridge.column(TokenBigrams(ColumnBridge.expression(t)))
+    NativeKernel(this, NativeKernel.StringsOut, Seq(t -> NativeKernel.StringsIn),
+      fn = "bigrams")
+
+  /** One BPE merge step over a token array — every ADJACENT (w1, w2)
+    * occurrence becomes the single token "w1_w2", greedy left-to-right
+    * non-overlapping — `array<string>`.
+    *
+    * Value-exact with the padded double-space replace trick it replaced
+    * (`replace(replace(" " + concat_ws(" ", t) + " ", " ", "  "),
+    * " w1  w2 ", " w1_w2 ")` re-tokenized): the doubled spaces make every
+    * occurrence's boundaries disjoint except for one shared pad between
+    * consecutive matches, which is exactly greedy non-overlapping
+    * adjacency over the token sequence — "w w w" with pair (w, w) merges
+    * ONCE. Pinned by ShingleSigsPropertySpec. A null token fails loudly. */
   def bpeMergePair(t: Column, w1: String, w2: String): Column =
-    ColumnBridge.column(BpeMergePair(ColumnBridge.expression(t), w1, w2))
+    NativeKernel(this, NativeKernel.StringsOut, Seq(t -> NativeKernel.StringsIn),
+      Seq(Literal(w1), Literal(w2), Literal(w1 + "_" + w2)), fn = "bpeMerge")
 }

@@ -1,76 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: the md5 window fingerprints of a document
-  * at the given token positions, in ONE pass — `array<string>` of
-  * lowercase hex digests, aligned with the positions array.
-  *
-  * Replaces the survivor stage of
-  * [[graft.operators.Dedup.substringDupWindows]]: regex re-tokenize of
-  * each surviving document, then per position an interpreted
-  * `slice(t, pos+1, w)` + `concat_ws(" ", ...)` building the window
-  * string before `md5`. Here the document's tokens are written once into
-  * a normalized (single-space joined) buffer and each window fingerprint
-  * is the md5 of a contiguous SLICE of it — no token array, no window
-  * strings. On replica-stress corpora where the `n_g >= 2` arm makes
-  * EVERY window survive, this stage is the operator's dominant cost.
-  *
-  * Value-exact with the composable form (pinned by
-  * ShingleSigsPropertySpec): tokens are maximal non-\s runs (ASCII \s —
-  * the [[GopherStats]] argument; the caller keeps Spark's `lower()`
-  * outside); position p (0-based) covers tokens p..p+w-1 =
-  * `slice(t, p+1, w)`, clamped at the token count exactly as slice
-  * clamps; the digest is md5 over the UTF-8 bytes of the
-  * single-space-joined window, hex-encoded lowercase like Spark's
-  * `md5()`.
-  */
-case class WindowFps(left: Expression, right: Expression, w: Int)
-    extends BinaryExpression {
-  require(w >= 1, s"window width must be >= 1, got $w")
-
-  // containsNull accepted at analysis time; an ACTUAL null position
-  // fails loudly in compute() — see MinhashSig for the policy
-  // (TextBytes.failNullSlot; producer: collect_list, never null slots)
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, ArrayType(IntegerType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"window_fps expects (string, array<int>), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(text: Any, positions: Any): Any =
-    WindowFps.compute(text.asInstanceOf[UTF8String],
-      positions.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, p) =>
-      s"${ev.value} = graft.functions.WindowFps.compute($t, $p, $w);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): WindowFps =
-    copy(left = newLeft, right = newRight)
-}
-
 object WindowFps {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
   import TextBytes.isWs
 
   private val hexDigits = "0123456789abcdef".toCharArray
 
-  /** Shared by interpreted eval and generated code. */
   def compute(s: UTF8String, positions: ArrayData, w: Int): GenericArrayData = {
     val b = s.getBytes
     val len = b.length
@@ -124,8 +64,32 @@ object WindowFps {
     UTF8String.fromBytes(cs)
   }
 
-  /** Column-API entry point; `text` must already be lowercased. */
-  def windowFps(text: Column, positions: Column, w: Int): Column =
-    ColumnBridge.column(WindowFps(
-      ColumnBridge.expression(text), ColumnBridge.expression(positions), w))
+  /** The md5 window fingerprints of a document at the given token
+    * positions, in ONE pass — `array<string>` of lowercase hex digests,
+    * aligned with the positions array. A null position fails loudly.
+    *
+    * Replaces the survivor stage of
+    * [[graft.operators.Dedup.substringDupWindows]]: regex re-tokenize of
+    * each surviving document, then per position an interpreted
+    * `slice(t, pos+1, w)` + `concat_ws(" ", ...)` building the window
+    * string before `md5`. Here the document's tokens are written once into
+    * a normalized (single-space joined) buffer and each window fingerprint
+    * is the md5 of a contiguous SLICE of it — no token array, no window
+    * strings. On replica-stress corpora where the `n_g >= 2` arm makes
+    * EVERY window survive, this stage is the operator's dominant cost.
+    *
+    * Value-exact with the composable form (pinned by
+    * ShingleSigsPropertySpec): tokens are maximal non-\s runs (ASCII \s —
+    * the [[GopherStats]] argument; the caller keeps Spark's `lower()`
+    * outside); position p (0-based) covers tokens p..p+w-1 =
+    * `slice(t, p+1, w)`, clamped at the token count exactly as slice
+    * clamps; the digest is md5 over the UTF-8 bytes of the
+    * single-space-joined window, hex-encoded lowercase like Spark's
+    * `md5()`. */
+  def windowFps(text: Column, positions: Column, w: Int): Column = {
+    require(w >= 1, s"window width must be >= 1, got $w")
+    NativeKernel(this, NativeKernel.StringsOut,
+      Seq(text -> StringType, positions -> ArrayType(IntegerType, containsNull = true)),
+      Seq(Literal(w)))
+  }
 }

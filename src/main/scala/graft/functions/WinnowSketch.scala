@@ -1,70 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Literal, XXH64}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: the winnowing fingerprint sketch
-  * (Schleimer et al. SIGMOD'03) in ONE pass — `array<long>` of the
-  * distinct per-window minimum k-gram hashes, first-occurrence order.
-  *
-  * Replaces [[graft.operators.TextAnalysis.winnowingSketch]]'s staged
-  * HOF pipeline: a transform materializing one UTF8String substring +
-  * hash per character position, then a second transform running
-  * `array_min(slice(...))` per window, then `array_distinct` — all
-  * interpreted, the slowest per-document scalar after langid (31.7 s at
-  * sf1). Here character offsets are decoded once, each k-gram hashes
-  * zero-copy from the original bytes, and the window minimum is a tight
-  * clamped loop.
-  *
-  * Value-exact with the composable form (pinned by
-  * ShingleSigsPropertySpec):
-  *  - k-gram i (1-based, i <= max(numChars-k+1, 1)) = `substr(text, i, k)`
-  *    — CHARACTER-addressed (code points, = UTF8String.numChars), shorter
-  *    at the tail exactly as substr clamps; numChars = 0 still yields the
-  *    single empty k-gram (`greatest(n-k+1, 1)`);
-  *  - hash: `portable = true` → md5-56, the first 14 hex chars of the
-  *    md5 of the gram's UTF-8 bytes as a long
-  *    ([[graft.operators.Dedup.portableHash56]]'s value — the DuckDB
-  *    oracle recomputes it); `portable = false` → xxhash64 (seed 42);
-  *  - windows: min over hashes j..j+w-1, clamped at the tail like
-  *    `slice`; fewer than w hashes → one window over all;
-  *  - distinct: first-occurrence order, as `array_distinct`.
-  */
-case class WinnowSketch(child: Expression, k: Int, w: Int, portable: Boolean)
-    extends UnaryExpression {
-  require(k >= 1 && w >= 1, s"k and w must be >= 1, got k=$k w=$w")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"winnow_sketch expects a string input, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    WinnowSketch.compute(input.asInstanceOf[UTF8String], k, w, portable)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WinnowSketch.compute($c, $k, $w, $portable);")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowSketch =
-    copy(child = newChild)
-}
-
 object WinnowSketch {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
   private val Seed = 42L // xxhash64's fixed seed
 
-  /** Shared by interpreted eval and generated code. */
   def compute(s: UTF8String, k: Int, w: Int, portable: Boolean): GenericArrayData = {
     val b = s.getBytes
     val len = b.length
@@ -133,8 +77,36 @@ object WinnowSketch {
       if (nOut == out.length) out else java.util.Arrays.copyOf(out, nOut))
   }
 
-  /** Column-API entry point (text used as-is — no lowercasing in the
-    * winnowing contract). */
-  def winnowSketch(text: Column, k: Int, w: Int, portable: Boolean): Column =
-    ColumnBridge.column(WinnowSketch(ColumnBridge.expression(text), k, w, portable))
+  /** The winnowing fingerprint sketch (Schleimer et al. SIGMOD'03) of
+    * `text` as-is (no lowercasing in the winnowing contract) in ONE pass —
+    * `array<long>` of the distinct per-window minimum k-gram hashes,
+    * first-occurrence order.
+    *
+    * Replaces [[graft.operators.TextAnalysis.winnowingSketch]]'s staged
+    * HOF pipeline: a transform materializing one UTF8String substring +
+    * hash per character position, then a second transform running
+    * `array_min(slice(...))` per window, then `array_distinct` — all
+    * interpreted, the slowest per-document scalar after langid (31.7 s at
+    * sf1). Here character offsets are decoded once, each k-gram hashes
+    * zero-copy from the original bytes, and the window minimum is a tight
+    * clamped loop.
+    *
+    * Value-exact with the composable form (pinned by
+    * ShingleSigsPropertySpec):
+    *  - k-gram i (1-based, i <= max(numChars-k+1, 1)) = `substr(text, i, k)`
+    *    — CHARACTER-addressed (code points, = UTF8String.numChars), shorter
+    *    at the tail exactly as substr clamps; numChars = 0 still yields the
+    *    single empty k-gram (`greatest(n-k+1, 1)`);
+    *  - hash: `portable = true` → md5-56, the first 14 hex chars of the
+    *    md5 of the gram's UTF-8 bytes as a long
+    *    ([[graft.operators.Dedup.portableHash56]]'s value — the DuckDB
+    *    oracle recomputes it); `portable = false` → xxhash64 (seed 42);
+    *  - windows: min over hashes j..j+w-1, clamped at the tail like
+    *    `slice`; fewer than w hashes → one window over all;
+    *  - distinct: first-occurrence order, as `array_distinct`. */
+  def winnowSketch(text: Column, k: Int, w: Int, portable: Boolean): Column = {
+    require(k >= 1 && w >= 1, s"k and w must be >= 1, got k=$k w=$w")
+    NativeKernel(this, NativeKernel.LongsOut, Seq(text -> StringType),
+      Seq(Literal(k), Literal(w), Literal(portable)))
+  }
 }

@@ -218,7 +218,7 @@ object Quantization {
 
   /** ADC approximate-cosine column from a codes column and the per-query
     * lookup arrays: sum_s lut[s*k + code_s] — 2m array lookups per pair,
-    * native ([[graft.functions.AdcFold]]; this runs per candidate PAIR,
+    * native ([[graft.functions.PqOps.adcFold]]; this runs per candidate PAIR,
     * where the interpreted zip_with/aggregate fold it replaced was the
     * dominant per-pair cost). */
   private def adcScore(codes: Column, qlut: Column, qNorm: Column,

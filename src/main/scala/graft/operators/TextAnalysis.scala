@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
 object TextAnalysis {
 
   /** Whitespace tokens, empty strings dropped. Native single pass
-    * ([[graft.functions.Tokens]] — zero-copy UTF8String slices),
+    * ([[graft.functions.TokenOps.tokens]] — zero-copy UTF8String slices),
     * value-exact with the regex-split formulation (pinned by
     * GopherStatsPropertySpec). */
   def tokens(text: Column): Column =
@@ -32,7 +32,7 @@ object TextAnalysis {
     filter(split(text, "\\s+"), t => t =!= "")
 
   /** Token count (whitespace + BPE-ish heuristic is tokenCountBpe).
-    * Native single-pass byte scan ([[graft.functions.WordCount]] —
+    * Native single-pass byte scan ([[graft.functions.TokenCounts.wordCount]] —
     * codegen'd, LongType), value-exact with `size(tokens(text))`, which
     * paid a regex split materializing the token array plus an interpreted
     * HOF filter per document (CodegenFallback). Equivalence pinned by
@@ -47,7 +47,7 @@ object TextAnalysis {
   /** BPE-ish subword count heuristic: words + long-word overflow (a word
     * of n chars counts ceil(n/6) subwords) — a cheap, deterministic proxy
     * for a real tokenizer's token count. Native single-pass byte scan
-    * ([[graft.functions.BpeCount]]); value-exact with the interpreted HOF
+    * ([[graft.functions.TokenCounts.bpeCount]]); value-exact with the interpreted HOF
     * fold it replaces (see its Scaladoc; pinned by
     * GopherStatsPropertySpec). */
   def tokenCountBpe(text: Column): Column =

@@ -17,7 +17,8 @@ import graft.operators.{Dedup, Multimodal, Quantization, Similarity}
   * parquet under `target/prepared/pipeline/<build key>/<corpus>/<name>`
   * on first use and READ back on every use after that, including from a
   * fresh session/JVM: the build runs once per corpus and build, not once
-  * per session (`rm -rf target/prepared` also drops older builds' roots).
+  * per session. The first write under a build's root deletes the roots
+  * of other builds ([[pruneStaleRoots]]).
   * Oracles are unaffected: DuckDB recomputes from raw text, and the
   * hash-verified jaccard equals the string-verified one (hashing
   * preserves set cardinalities w.h.p.).
@@ -68,10 +69,20 @@ object ArtifactStore {
     * outlives the code that wrote it, which the oracle, reading the same
     * parquet, would otherwise "confirm". */
   private def artifactRoot(dir: String): String =
-    s"target/prepared/pipeline/${DefMarker.buildKey}/" +
-      dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    s"$PipelineRoot/${DefMarker.buildKey}/" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
   private[graft] def artifactPath(dir: String, name: String): String =
     s"${artifactRoot(dir)}/$name"
+  private val PipelineRoot = "target/prepared/pipeline"
+
+  /** Delete every root under `target/prepared/pipeline` but this build's
+    * (the legacy `v9` root included): only the build that wrote a root
+    * reads it, so each edit to a hashed package would otherwise leave a
+    * full set of artifacts behind. Runs before each artifact write, which
+    * happens once per (build, corpus, artifact). */
+  private def pruneStaleRoots(): Unit =
+    Option(new java.io.File(PipelineRoot).listFiles).toSeq.flatten
+      .filter(_.getName != DefMarker.buildKey)
+      .foreach(org.apache.spark.network.util.JavaUtils.deleteRecursively)
 
   /** Placeholder in oracle SQL for the corpus's absolute artifact root:
     * oracles of entries whose trained state is parquet-persisted (the
@@ -111,9 +122,11 @@ object ArtifactStore {
     * return the path. */
   private def writeOnce(dir: String, name: String, build: => DataFrame): String = {
     val path = artifactPath(dir, name)
-    if (!new java.io.File(s"$path/_SUCCESS").exists())
+    if (!new java.io.File(s"$path/_SUCCESS").exists()) {
+      pruneStaleRoots()
       build.write.mode("overwrite")
         .option("compression", "zstd").parquet(path)
+    }
     path
   }
 

@@ -24,8 +24,8 @@ import graft.{Bench, GraftSession, SparkEntry}
   * before each warm pass; the row count; the Spark jobs the last warm
   * pass launched (a routed DSL query is one); the AQE-final
   * shuffle-exchange count (the number `PlanFingerprintSpec` pins); the
-  * final plan's
-  * join/exchange/aggregate/scan skeleton with broadcast sizes; and the
+  * final plan's join/exchange/aggregate/scan skeleton and the operators
+  * that call a native kernel, with broadcast sizes; and the
   * effective value of each overridden conf. PLANS.md ("One dev probe")
   * maps each retired single-purpose probe to its recorded finding and
   * to the `Probe` command that reproduces its entry-level number. */
@@ -130,7 +130,8 @@ object Probe {
   private def skeleton(plan: SparkPlan): Seq[String] =
     plan.toString.linesIterator.filter(l => l.contains("Join") ||
       l.contains("Exchange") || l.contains("HashAggregate") ||
-      l.contains("Sort ") || l.contains("FileScan")).toSeq
+      l.contains("Sort ") || l.contains("FileScan") ||
+      l.contains("static_invoke(graft.")).toSeq
 
   /** One `key=value` conf override; anything else fails loudly. */
   def parseOverride(kv: String): (String, String) = kv.split("=", 2) match {

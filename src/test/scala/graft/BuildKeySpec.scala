@@ -99,4 +99,18 @@ class BuildKeySpec extends SparkSpec {
     write("0" * 32)
     assert(writes == 2)
   }
+
+  test("an artifact write deletes the roots of other builds and keeps its own") {
+    val base = new java.io.File("target/prepared/pipeline")
+    val stale = Seq("v9", "0" * 32).map(n => new java.io.File(base, n))
+    stale.foreach(d => assert(new java.io.File(d, "corpus/x").mkdirs() || d.isDirectory))
+    val dir = s"/build_key_spec/${System.nanoTime}"
+    ArtifactStore.artifact(spark, dir, "probe")(spark.range(3).toDF("id"))
+    val own = new java.io.File(ArtifactStore.artifactPath(dir, "probe"))
+    try {
+      assert(stale.forall(!_.exists), stale.filter(_.exists).mkString(", "))
+      assert(new java.io.File(own, "_SUCCESS").exists)
+      assert(new java.io.File(base, DefMarker.buildKey).isDirectory)
+    } finally org.apache.spark.network.util.JavaUtils.deleteRecursively(own.getParentFile)
+  }
 }

@@ -397,45 +397,6 @@ class EngineSpec extends SparkSpec {
     assert(eng.lastRoute == Engine.CacheHit)
   }
 
-  test("stampTtlMs caps stamp-probe cost: zero probes inside the window, bounded staleness") {
-    // Round-17 judge, What's missing #4: one Hadoop-FS stamp read per
-    // query is one S3 GET per query at high QPS. With a TTL the probe
-    // count is bounded by wall-time/TTL (here: zero probes after
-    // construction), at the documented price of a staleness window no
-    // wider than the TTL.
-    import graft.prepare.Prepare
-    val src = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")
-    val half1 = src.filter(pmod(col("event_id"), lit(2)) === 0)
-    val half2 = src.filter(pmod(col("event_id"), lit(2)) === 1)
-    val root = "target/tmp/spec_refresh_ttl"
-    Prepare.run(spark, half1, root)
-    class CountingCatalog(inner: graft.schema.Catalog) extends graft.schema.Catalog {
-      @volatile var probes = 0
-      def table(s: org.apache.spark.sql.SparkSession, n: String) = inner.table(s, n)
-      override def versionStamp(s: org.apache.spark.sql.SparkSession) = {
-        probes += 1; inner.versionStamp(s)
-      }
-      override def invalidate(s: org.apache.spark.sql.SparkSession): Unit =
-        inner.invalidate(s)
-    }
-    val cat = new CountingCatalog(graft.schema.PreparedCatalog(root))
-    val eng = new Engine(spark, cat, Prepare.defaultAggregates(),
-      stampTtlMs = 600000L)
-    val base = cat.probes // the constructor's initial stamp read
-    assert(base == 1)
-    val scanJson = """{"select":[{"COUNT":"*"}],"from":"events"}"""
-    def scanned(): Long = eng.executeJson(scanJson).collect()(0).getLong(0)
-    val n0 = scanned(); scanned(); scanned()
-    assert(cat.probes == base,
-      s"probed ${cat.probes - base} times inside the TTL window, want 0")
-    assert(n0 == half1.count())
-    // refresh inside the window: the engine serves the PRE-refresh era
-    // (bounded staleness, the documented TTL tradeoff) without probing
-    Prepare.refresh(spark, half2, root)
-    assert(scanned() == n0, "TTL window did not defer invalidation — vacuous")
-    assert(cat.probes == base)
-  }
-
   test("z layout survives refresh by APPEND: no rebuild, no staleness, clamped out-of-bounds delta") {
     import graft.prepare.{Prepare, ZOrder}
     val src = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")

@@ -51,6 +51,19 @@ class JaccardSpec extends SparkSpec {
     assert(viaPlan.toSeq === Seq(2.0 / 6.0, 1.0))
   }
 
+  test("a native kernel given an uncastable input fails at analysis") {
+    // the kernel call declares its input types: a map into minhash_sig
+    // or a bare long into jaccard must be refused by the analyzer, not
+    // reach codegen or the kernel at run time
+    val df = Seq((Map(1L -> 2L), 7L)).toDF("m", "x")
+    Seq(
+      graft.functions.MinhashSig.minhashSig(col("m"), 4),
+      JaccardSimilarity.jaccardNative(col("x"), col("x"))).foreach { c =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](df.select(c))
+      assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), e.getMessage)
+    }
+  }
+
   test("candidate-pair core: keyPairs expands each pair once, verifyPairs keeps and rounds") {
     // ids 1 and 2 share keys 10, 11 and 12; id 3 shares 12 with both;
     // key 99 (id 1 only) and key 77 (id 4's only key) have one holder

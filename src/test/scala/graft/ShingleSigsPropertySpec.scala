@@ -263,12 +263,13 @@ object ShingleSigsPropertySpec extends Properties("shingle-sigs") {
       }.mkString("; ")
     }
 
-  // The null-slot policy (TextBytes.failNullSlot): the native expressions
+  // The null-slot policy (TextBytes.failNullSlot): the native kernels
   // ACCEPT containsNull=true input types (Catalyst infers them
   // conservatively for join outputs and HOF-composed arrays) but an
   // ACTUAL null element must fail loudly — never read garbage under the
-  // declared containsNull=false output. Covers both enforcement styles:
-  // the shared compute helpers (minhash_sig, token_bigrams) and the
+  // declared containsNull=false output, nor a null as 0 (jaccard's
+  // toLongArray). Covers both enforcement styles: the shared compute
+  // helpers (minhash_sig, token_bigrams, jaccard_similarity) and the
   // inline generated-code throw (cosine_similarity).
   property("null array slots fail loudly, never compute") = Prop.secure {
     import SparkSpecBase.implicits._
@@ -293,7 +294,12 @@ object ShingleSigsPropertySpec extends Properties("shingle-sigs") {
         .select(graft.functions.CosineSimilarity
           .cosineNative(col("a"), col("b"))).collect()
     }
-    (mh && bi && cos) :| s"minhash=$mh bigrams=$bi cosine=$cos"
+    val jac = failsLoudly {
+      Seq((Seq(Some(3L), None), Seq(Some(3L), Some(0L)))).toDF("a", "b")
+        .select(graft.functions.JaccardSimilarity
+          .jaccardNative(col("a"), col("b"))).collect()
+    }
+    (mh && bi && cos && jac) :| s"minhash=$mh bigrams=$bi cosine=$cos jaccard=$jac"
   }
 
   property("native WindowFps == slice/concat_ws/md5 form") =
