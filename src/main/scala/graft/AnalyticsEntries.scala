@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.{AsofJoin, Cdc}
+import graft.prepare.ArtifactStore
 
 /** Advanced-analytics operator entries: as-of join, rollup/cube, pivot,
   * exact + approximate percentiles, JSON extraction, windowed moving
@@ -128,15 +129,14 @@ object AnalyticsEntries {
     // bucketed co-located join: both sides pre-bucketed on the join key
     // -> sort-merge join with zero exchange (see Bucketing)
     "ext_bucketed_join" -> ((s, dir) => {
-      val sf = new java.io.File(dir).getName.replace(".", "_")
-      val wh = s"target/warehouse/$sf"
+      val sf = ArtifactStore.corpusKey(dir)
       graft.prepare.Bucketing.writeBucketed(s,
         graft.sources.ParquetNanos.read(s, s"$dir/lineitem.parquet")
           .withColumnRenamed("l_orderkey", "o_orderkey"),
-        s"li_bkt_$sf", "o_orderkey", 8, s"$wh/li_bkt")
+        s"li_bkt_$sf", "o_orderkey", 8, ArtifactStore.artifactPath(dir, "li_bkt"))
       graft.prepare.Bucketing.writeBucketed(s,
         graft.sources.ParquetNanos.read(s, s"$dir/orders.parquet"),
-        s"ord_bkt_$sf", "o_orderkey", 8, s"$wh/ord_bkt")
+        s"ord_bkt_$sf", "o_orderkey", 8, ArtifactStore.artifactPath(dir, "ord_bkt"))
       val joined = graft.prepare.Bucketing.bucketedJoin(
         s, s"li_bkt_$sf", s"ord_bkt_$sf", "o_orderkey")
       joined.groupBy(col("o_orderpriority")).agg(
@@ -154,8 +154,7 @@ object AnalyticsEntries {
     // is the plain filter over the raw table. ts_sec = floor epoch
     // seconds, so ts_sec BETWEEN t0 AND t1-1 <=> ts >= t0 AND ts < t1.
     "scan_zorder_box" -> ((s, dir) => {
-      val sf = new java.io.File(dir).getName.replace(".", "_")
-      val path = s"target/warehouse/$sf/events_zorder"
+      val path = ArtifactStore.artifactPath(dir, "events_zorder")
       val ev = events(s, dir).withColumn("ts_sec", unix_timestamp(col("ts")))
       graft.prepare.ZOrder.writeZOrdered(s, ev, path, "user_id", "ts_sec",
         cellBits = 6)
@@ -471,15 +470,14 @@ object AnalyticsEntries {
     // every subsequent merge; the merge itself never re-shuffles the
     // snapshot. (Plan pinned by PlanAuditSpec's bucketed-merge test.)
     "ext_merge_upsert_bucketed" -> ((s, dir) => {
-      val sf = new java.io.File(dir).getName.replace(".", "_")
-      val wh = s"target/warehouse/$sf"
+      val sf = ArtifactStore.corpusKey(dir)
       graft.prepare.Bucketing.writeBucketed(s,
         tbl(s, dir, "customer")
           .filter(pmod(col("c_custkey"), lit(3)) =!= 0)
           .select(col("c_custkey").as("key"), col("c_acctbal").as("bal")),
         s"merge_base_bkt_$sf", "key",
         s.conf.get("spark.sql.shuffle.partitions").toInt,
-        s"$wh/merge_base_bkt")
+        ArtifactStore.artifactPath(dir, "merge_base_bkt"))
       val base = s.table(s"merge_base_bkt_$sf")
       val delta = Cdc.latestPerKeyAgg(tbl(s, dir, "orders"), Seq("o_custkey"),
           Seq(col("o_orderdate"), col("o_orderkey")),

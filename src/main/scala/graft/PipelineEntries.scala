@@ -1092,9 +1092,9 @@ object PipelineEntries {
 
     // checkpointed streaming file sink: append-mode parquet with
     // exactly-once semantics (the offset log + file-commit manifest make
-    // re-runs and AvailableNow restarts idempotent — re-invoking after
-    // completion writes nothing new). The read-back equals the batch
-    // filter, which is what the oracle states.
+    // AvailableNow restarts idempotent; each invocation starts from an
+    // empty checkpoint and sink). The read-back equals the batch filter,
+    // which is what the oracle states.
     // exactly-once streaming upsert sink: each micro-batch is compacted
     // to latest-per-key (Cdc.latestPerKeyAgg) and merged into a parquet
     // snapshot inside foreachBatch. The merge is idempotent (latest-wins
@@ -1105,8 +1105,8 @@ object PipelineEntries {
     // which is what the oracle states. 4 staged input files ->
     // maxFilesPerTrigger=1 drives 4 real merge rounds.
     "stream_upsert" -> ((s, dir) => {
-      val (name0, src) = eventsStream4(s, dir)
-      val outDir = s"target/tmp/stream_upsert_$name0"
+      val src = eventsStream4(s, dir)
+      val outDir = fresh(dir, "stream_upsert")
       val snap = s"$outDir/snapshot"
       val ordered = Seq(col("ts"), col("event_id"))
       val pay = Seq("ts", "event_id", "event_type", "value")
@@ -1144,25 +1144,22 @@ object PipelineEntries {
     // pairs depend only on that doc + the static corpus, so the batch
     // split cannot change the answer: the appended union equals the
     // one-shot incremental join, which is what the oracle states
-    // (same SQL as dedup_incremental). Checkpoint + AvailableNow make
-    // re-runs no-ops — exactly-once on the result sink.
+    // (same SQL as dedup_incremental). Checkpoint and sink start empty
+    // on every invocation, so a re-run appends each pair exactly once.
     "stream_dedup_near" -> ((s, dir) => {
-      val name0 = new java.io.File(dir).getName
-      val streamDir = new java.io.File(s"target/tmp/docs_stream2_$name0")
-      if (!streamDir.exists()) {
+      val streamDir = staged(dir, "docs_stream2")(
         graft.sources.ParquetNanos.read(s, s"$dir/documents.parquet")
           .filter(pmod(col("doc_id"), lit(10)) < 2)
           .repartitionByRange(2, col("doc_id"))
-          .write.mode("overwrite").parquet(streamDir.toString)
-      }
+          .write.parquet(_))
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType),
         StructField("lang", StringType), StructField("source", StringType),
         StructField("n_chars", LongType)))
       val src = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
+        .parquet(streamDir)
       val corpusSigs = docSigs(s, dir).filter(pmod(col("id"), lit(10)) >= 2)
-      val outDir = s"target/tmp/stream_dedup_near_$name0"
+      val outDir = fresh(dir, "stream_dedup_near")
       val resDir = s"$outDir/pairs"
       val q = src.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1180,8 +1177,7 @@ object PipelineEntries {
     }),
 
     "stream_file_sink" -> ((s, dir) => {
-      val name0 = new java.io.File(dir).getName
-      val outDir = s"target/tmp/stream_sink_$name0"
+      val outDir = fresh(dir, "stream_sink")
       val q = eventsStream(s, dir)
         .filter(col("event_type") === "error")
         .select(col("event_id"), col("user_id"))
@@ -1200,20 +1196,13 @@ object PipelineEntries {
     * whose merge logic only shows up across batches (stream_upsert).
     * The staged files are micros timestamps (ParquetNanos already
     * converted), so the stream schema is plain TimestampType. */
-  private def eventsStream4(s: SparkSession, dir: String): (String, DataFrame) = {
-    val name0 = new java.io.File(dir).getName
-    val streamDir = new java.io.File(s"target/tmp/events_stream4_$name0")
-    if (!streamDir.exists()) {
+  private def eventsStream4(s: SparkSession, dir: String): DataFrame = {
+    val streamDir = staged(dir, "events_stream4")(
       graft.sources.ParquetNanos.read(s, s"$dir/events.parquet")
         .repartitionByRange(4, col("event_id"))
-        .write.mode("overwrite").parquet(streamDir.toString)
-    }
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    (name0, s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(streamDir.toString))
+        .write.parquet(_))
+    s.readStream.schema(StreamOps.eventsSchema()).option("maxFilesPerTrigger", "1")
+      .parquet(streamDir)
   }
 
   /** Stage the sf dir's events.parquet into a directory (file-stream
@@ -1225,21 +1214,13 @@ object PipelineEntries {
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     val tsNanos = graft.sources.ParquetNanos
       .nanosFields(s, s"$dir/events.parquet").contains("ts")
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", if (tsNanos) LongType else TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val name0 = new java.io.File(dir).getName
-    val streamDir = new java.io.File(s"target/tmp/events_stream_$name0")
-    if (!new java.io.File(streamDir, "events.parquet").exists()) {
-      streamDir.mkdirs()
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        java.nio.file.Paths.get(s"$streamDir/events.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val schema = StreamOps.eventsSchema(if (tsNanos) LongType else TimestampType)
+    val streamDir = staged(dir, "events_stream") { p =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.Paths.get(s"$p/events.parquet"))
     }
-    StreamOps.parquetStream(s, streamDir.toString, schema,
+    StreamOps.parquetStream(s, streamDir, schema,
       nanosCols = if (tsNanos) Set("ts") else Set.empty)
   }
 

@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.engine.Engine
 import graft.operators.Relational
-import graft.prepare.{DefMarker, Prepare}
+import graft.prepare.{ArtifactStore, Prepare}
 import graft.schema.DirCatalog
 import graft.sources.CsvSource
 
@@ -49,21 +48,13 @@ object SparkEntry {
       })
     }
 
-  /** `target/prepared/<name of sfDir>`, written by [[Prepare.run]] unless
-    * it carries the [[DefMarker]] of the raw `events.parquet` read, its
-    * location and the build key. */
+  /** The corpus's `prepared` root, written once by [[Prepare.run]] under
+    * the store's stage-once lock: the build key and the fixture identity
+    * of [[ArtifactStore.artifactPath]] are its whole basis. */
   private[graft] def preparedRoot(s: SparkSession, sfDir: String): String =
-    this.synchronized {
-      val r = s"target/prepared/${new java.io.File(sfDir).getName}"
-      val raw = s"$sfDir/events.parquet"
-      val events = graft.sources.ParquetNanos.read(s, raw)
-      val mark = new DefMarker(s, events, new Path(r), new java.io.File(raw).getAbsolutePath)
-      if (!mark.present) {
-        Prepare.run(s, events, r, zorder = Prepare.defaultZOrder)
-        mark.commit()
-      }
-      r
-    }
+    ArtifactStore.staged(sfDir, "prepared")(r =>
+      Prepare.run(s, graft.sources.ParquetNanos.read(s, s"$sfDir/events.parquet"), r,
+        zorder = Prepare.defaultZOrder))
 
   /** One engine per sf dir over [[preparedRoot]], with the result cache
     * off: every call runs, and an audit sees, the routed plan. */
@@ -1085,68 +1076,44 @@ object SparkEntry {
             col("exact_users").cast("double") <= 0.15).as("within_tol")))
   )
 
-  /** CSV roundtrip helper for s1/s2: parquet events -> CSV (microsecond
-    * timestamps preserved) -> read via [[CsvSource]] -> aggregate. */
-  private def csvRoundtrip(s: SparkSession, dir: String,
-                           permissive: Boolean): DataFrame = {
-    val src = tbl(s, dir, "events").drop("props")
-    val name = new java.io.File(dir).getName
-    val csvDir = s"target/tmp/events_csv_$name"
-    val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    if (!new java.io.File(s"$csvDir/_SUCCESS").exists()) {
-      src.write.mode("overwrite")
-        .option("header", "true").option("timestampFormat", tsFmt)
-        .csv(csvDir)
-    }
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val read0 =
-      if (permissive) CsvSource.readPermissive(s, s"$csvDir/*.csv", schema)
-      else s.read.schema(schema).option("header", "true")
-        .option("timestampFormat", tsFmt).option("nullValue", "null")
-        .csv(s"$csvDir/*.csv")
-    val read = graft.schema.EventTime.withDerived(read0)
-    round4(read.groupBy(col("day")).agg(
-      count(lit(1)).as("cnt"), sum(col("value")).as("sum_value")))
+  /** Events without `props`, staged once by `write`, read back from the
+    * staged dir by `read` and totalled per day: the contract of the CSV,
+    * JSON-lines and ORC roundtrips (microsecond timestamps preserved). */
+  private def roundtrip(s: SparkSession, dir: String, name: String)
+                       (write: DataFrameWriter[Row] => String => Unit)
+                       (read: String => DataFrame): DataFrame = {
+    val staged = ArtifactStore.staged(dir, name)(write(tbl(s, dir, "events").drop("props").write))
+    round4(graft.schema.EventTime.withDerived(read(staged)).groupBy(col("day"))
+      .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_value")))
   }
+  private val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+  private val roundtripSchema = StructType(Seq(
+    StructField("event_id", LongType), StructField("ts", TimestampType),
+    StructField("user_id", LongType), StructField("event_type", StringType),
+    StructField("value", DoubleType)))
 
-  /** JSON-lines roundtrip: events -> .jsonl (microsecond timestamps) ->
-    * schema'd read -> aggregate. The JSON source/sink pair every
-    * pipeline needs beside CSV/parquet. */
-  private def jsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val src = tbl(s, dir, "events").drop("props")
-    val name = new java.io.File(dir).getName
-    val outDir = s"target/tmp/events_jsonl_$name"
-    val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    if (!new java.io.File(s"$outDir/_SUCCESS").exists()) {
-      src.write.mode("overwrite").option("timestampFormat", tsFmt).json(outDir)
+  /** s1/s2: parquet events -> CSV -> read via [[CsvSource]] or strict. */
+  private def csvRoundtrip(s: SparkSession, dir: String,
+                           permissive: Boolean): DataFrame =
+    roundtrip(s, dir, "events_csv")(
+      _.option("header", "true").option("timestampFormat", tsFmt).csv) { d =>
+      if (permissive) CsvSource.readPermissive(s, s"$d/*.csv", roundtripSchema)
+      else s.read.schema(roundtripSchema).option("header", "true")
+        .option("timestampFormat", tsFmt).option("nullValue", "null")
+        .csv(s"$d/*.csv")
     }
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val read = graft.schema.EventTime.withDerived(
-      s.read.schema(schema).option("timestampFormat", tsFmt).json(s"$outDir/*.json"))
-    round4(read.groupBy(col("day")).agg(
-      count(lit(1)).as("cnt"), sum(col("value")).as("sum_value")))
-  }
+
+  /** JSON-lines roundtrip: the JSON source/sink pair every pipeline
+    * needs beside CSV/parquet. */
+  private def jsonlRoundtrip(s: SparkSession, dir: String): DataFrame =
+    roundtrip(s, dir, "events_jsonl")(_.option("timestampFormat", tsFmt).json)(d =>
+      s.read.schema(roundtripSchema).option("timestampFormat", tsFmt).json(s"$d/*.json"))
 
   /** S-extension: ORC sink + read-back — Spark's second built-in columnar
     * format beside parquet (column pruning, predicate pushdown, and zlib
-    * compression all apply). Same roundtrip contract as [[jsonlRoundtrip]]. */
-  private def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val src = tbl(s, dir, "events").drop("props")
-    val name = new java.io.File(dir).getName
-    val outDir = s"target/tmp/events_orc_$name"
-    if (!new java.io.File(s"$outDir/_SUCCESS").exists()) {
-      src.write.mode("overwrite").orc(outDir)
-    }
-    val read = graft.schema.EventTime.withDerived(s.read.orc(outDir))
-    round4(read.groupBy(col("day")).agg(
-      count(lit(1)).as("cnt"), sum(col("value")).as("sum_value")))
-  }
+    * compression all apply). */
+  private def orcRoundtrip(s: SparkSession, dir: String): DataFrame =
+    roundtrip(s, dir, "events_orc")(_.orc)(s.read.orc)
 
   // ------------------------------------------------------------- oracles
 

@@ -44,9 +44,8 @@ object Verify {
         .groupBy("r_name").count().orderBy("r_name")
         .coalesce(1).write.mode("overwrite").parquet(warmupDir)
     }
-    def rmAll(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmAll)); f.delete(): Unit
-    }
+    def rmAll(f: java.io.File): Unit =
+      org.apache.spark.network.util.JavaUtils.deleteRecursively(f)
     SparkEntry.queries.foreach { case (name, fn) =>
       if (!skip(name)) {
         val t0 = System.nanoTime()

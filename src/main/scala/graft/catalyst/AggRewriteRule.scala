@@ -49,8 +49,10 @@ case class AggRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] with Pr
 
   private val reg = AggRewriteRule.registryFor(spark)
 
+  private val rewrites = new java.util.concurrent.atomic.AtomicLong
+
   /** Count of successful rewrites (for tests/inspection). */
-  @volatile var fired: Long = 0
+  def fired: Long = rewrites.get
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val path = reg.factPath.getOrElse(return plan)
@@ -66,7 +68,7 @@ case class AggRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] with Pr
     sub <- Try(AggregateRouter.executeOn(q, d, residual, reg.rollupLoader(d.name))
       .queryExecution.analyzed).toOption
   } yield {
-    fired += 1
+    rewrites.incrementAndGet()
     // zip stops at agg.output: a COUNT(*) added by translate is dropped
     Project(agg.output.zip(sub.output).map { case (o, s) =>
       Alias(if (s.dataType == o.dataType) s else Cast(s, o.dataType), o.name)(exprId = o.exprId)

@@ -29,8 +29,9 @@ final class ResultCache(maxEntries: Int = 256, maxRows: Int = 500000) {
           size() > maxEntries
       })
 
-  @volatile var hits: Long = 0
-  @volatile var misses: Long = 0
+  private val hitCount, missCount = new java.util.concurrent.atomic.AtomicLong
+  def hits: Long = hitCount.get
+  def misses: Long = missCount.get
 
   /** Keys whose results proved over-budget: never probe them again (the
     * probe itself costs a full execution). LRU-bounded like the cache. */
@@ -43,7 +44,7 @@ final class ResultCache(maxEntries: Int = 256, maxRows: Int = 500000) {
 
   def get(spark: SparkSession, key: String): Option[DataFrame] =
     Option(lru.get(key)).map { e =>
-      hits += 1
+      hitCount.incrementAndGet()
       spark.createDataFrame(
         new java.util.ArrayList[Row](java.util.Arrays.asList(e.rows: _*)),
         e.schema)
@@ -54,7 +55,7 @@ final class ResultCache(maxEntries: Int = 256, maxRows: Int = 500000) {
     * THE FIRST over-budget execution pays the probe as an extra run; the
     * key is then negative-cached and never probed again. */
   def put(spark: SparkSession, key: String, df: DataFrame): DataFrame = {
-    misses += 1
+    missCount.incrementAndGet()
     if (tooBig.containsKey(key)) return df
     val taken = df.limit(maxRows + 1).collect()
     if (taken.length > maxRows) { tooBig.put(key, true); df }

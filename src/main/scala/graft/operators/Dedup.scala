@@ -700,7 +700,23 @@ object Dedup {
     * skew (the round-18 1M-family measurement motivated the broadcast;
     * a filter over the classified index is strictly better — per-doc
     * parallel with zero exchanges before the per-id aggregation). */
-  case class RepIndex(rep: DataFrame, repSigs: DataFrame, inverted: DataFrame)
+  case class RepIndex(rep: DataFrame, repSigs: DataFrame, inverted: DataFrame,
+                      source: Int)
+
+  /** The semantic hash of `sigs`' analyzed plan: the [[RepIndex]] source
+    * record, which every index user checks against the `sigs` it is
+    * given, so an index of another signature table fails loudly. */
+  def fingerprint(sigs: DataFrame): Int = sigs.queryExecution.analyzed.semanticHash()
+
+  /** `index` once its source matches `sigs`, or an index built from
+    * `withG` (`sigs` with its set digest). */
+  private def indexFor(sigs: DataFrame, withG: DataFrame,
+                       index: Option[RepIndex]): RepIndex =
+    index.fold(repIndexFromSigs(withG)) { i =>
+      require(i.source == fingerprint(sigs),
+        "RepIndex was built from another signature table than the sigs it is used with")
+      i
+    }
 
   /** Build a [[RepIndex]] from a signature table (pooled persists —
     * prepare-once callers should write the three tables to parquet and
@@ -713,7 +729,7 @@ object Dedup {
     val inv = repSigs.select(col("id"), explode(col("hs")).as("g"))
     val inverted = pooledPersist(inv.join(dfc.filter(col("c") >= 2), Seq("g"))
       .select(col("id"), col("g"), col("c")))
-    RepIndex(rep, repSigs, inverted)
+    RepIndex(rep, repSigs, inverted, fingerprint(sigs))
   }
 
   /** [[ngramJaccardPairsBlocked]] from a pre-computed [[signatures]]
@@ -767,7 +783,7 @@ object Dedup {
     // shingle would blow the cap); its explicit persists make the
     // two-branch sharing of the classified index real and give AQE
     // exact build-side stats.
-    val idx = index.getOrElse(repIndexFromSigs(withG))
+    val idx = indexFor(sigs, withG, index)
     val (rep, repSigs, invC) = (idx.rep, idx.repSigs, idx.inverted)
     val members = withG.select(col("g"), col("id"))
     val hs = repSigs.select(col("id"), col("hs"))
@@ -880,7 +896,7 @@ object Dedup {
     val withG = withSetDigest(sigs)
     // df over representatives (the blocked contract's basis); callers
     // with prepare-once artifacts pass the [[RepIndex]] in
-    val idx = index.getOrElse(repIndexFromSigs(withG))
+    val idx = indexFor(sigs, withG, index)
     val keyed = pooledPersist(stopProfileKeys(idx, dfCap))
     // buckets of 2..bucketCap members pair up; both the size aggregate
     // and the self-join key on the 16-byte digest, never the profile
@@ -953,7 +969,7 @@ object Dedup {
                           dfCap: Int = 50,
                           index: Option[RepIndex] = None): DataFrame = {
     val withG = withSetDigest(sigs)
-    val idx = index.getOrElse(repIndexFromSigs(withG))
+    val idx = indexFor(sigs, withG, index)
     val rep = idx.rep
     val keyed = stopProfileKeys(idx, dfCap).withColumnRenamed("id", "rid")
     // members inherit their representative's profile bucket (replica

@@ -1,24 +1,30 @@
 package graft.prepare
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path => JPath, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Multimodal, Quantization, Similarity}
 
-/** Shared pipeline intermediates as WRITTEN prepare artifacts.
+/** Everything derived from a corpus, under one root per (build,
+  * corpus identity) ([[artifactRoot]]): the shared pipeline intermediates
+  * below, and the staged copies, prepared and bucketed layouts and
+  * stream state of the entries, all named by [[artifactPath]].
   *
   * The expensive corpus-scale stages behind the dedup/ANN entries —
   * the hashed-shingle signature table, the shared-shingle pair counts,
   * the verified jaccard>=0.5 pair set, the shingle document
   * frequencies, the IVF index — are prepare-once-query-many, exactly
   * like the rollup layouts. They are therefore materialized as ZSTD
-  * parquet under `target/prepared/pipeline/<build key>/<corpus>/<name>`
-  * on first use and READ back on every use after that, including from a
-  * fresh session/JVM: the build runs once per corpus and build, not once
-  * per session. The first write under a build's root deletes the roots
-  * of other builds ([[pruneStaleRoots]]).
+  * parquet under [[artifactPath]] on first use ([[staged]]) and READ
+  * back on every use after that, including from a fresh session/JVM: the
+  * build runs once per corpus and build, not once per session. The first
+  * write under a root deletes the roots of other builds and of other
+  * identities of the same corpus ([[pruneStaleRoots]]).
   * Oracles are unaffected: DuckDB recomputes from raw text, and the
   * hash-verified jaccard equals the string-verified one (hashing
   * preserves set cardinalities w.h.p.).
@@ -63,26 +69,56 @@ object ArtifactStore {
     }
   }
 
-  /** `target/prepared/pipeline/<build key>/<corpus>`: the key
+  /** `target/prepared/pipeline/<build key>/<corpus>-<identity>`, the one
+    * root of everything derived from corpus `dir`: artifacts, staged
+    * copies, prepared and bucketed layouts, stream state. The build key
     * ([[DefMarker.buildKey]]) moves with any edit to the classes that
     * build artifacts, so no derived table (e.g. pq_codes <- pq_codebooks_i2)
     * outlives the code that wrote it, which the oracle, reading the same
-    * parquet, would otherwise "confirm". */
+    * parquet, would otherwise "confirm"; the identity ([[corpusKey]])
+    * moves with the fixture's path and files, so two fixtures never share
+    * state and a fixture rewritten in place is rebuilt from. */
   private def artifactRoot(dir: String): String =
-    s"$PipelineRoot/${DefMarker.buildKey}/" + dir.replaceAll("[^A-Za-z0-9.]+", "_")
+    s"$PipelineRoot/${DefMarker.buildKey}/${corpusName(dir)}-${corpusKey(dir)}"
   private[graft] def artifactPath(dir: String, name: String): String =
     s"${artifactRoot(dir)}/$name"
   private val PipelineRoot = "target/prepared/pipeline"
 
+  /** The corpus's absolute path as one directory name (no `-`, which
+    * separates it from the identity). */
+  private def corpusName(dir: String): String =
+    absolute(dir).toString.replaceAll("[^A-Za-z0-9.]+", "_")
+  private def absolute(dir: String): JPath =
+    Paths.get(dir).toAbsolutePath.normalize
+
+  /** MD5 of the corpus's identity: its absolute path and the (relative
+    * path, length, mtime) of every file under it, in path order. Also the
+    * suffix of the catalog tables the corpus's layouts register. */
+  private[graft] def corpusKey(dir: String): String = {
+    val root = absolute(dir)
+    val walk = if (Files.isDirectory(root)) Files.walk(root) else java.util.stream.Stream.empty[JPath]()
+    val files = try walk.iterator.asScala.filter(Files.isRegularFile(_)).map(f =>
+      s"${root.relativize(f)}|${Files.size(f)}|${Files.getLastModifiedTime(f).toMillis}").toSeq.sorted
+    finally walk.close()
+    DefMarker.hex(java.security.MessageDigest.getInstance("MD5")
+      .digest((root.toString +: files).mkString("\n").getBytes("UTF-8")))
+  }
+
   /** Delete every root under `target/prepared/pipeline` but this build's
-    * (the legacy `v9` root included): only the build that wrote a root
-    * reads it, so each edit to a hashed package would otherwise leave a
-    * full set of artifacts behind. Runs before each artifact write, which
-    * happens once per (build, corpus, artifact). */
-  private def pruneStaleRoots(): Unit =
-    Option(new java.io.File(PipelineRoot).listFiles).toSeq.flatten
-      .filter(_.getName != DefMarker.buildKey)
-      .foreach(org.apache.spark.network.util.JavaUtils.deleteRecursively)
+    * (the legacy `v9` root included), and every other identity of
+    * corpus `dir` under this build's: only the build and the fixture
+    * state that wrote a root read it, so each edit to a hashed package or
+    * a fixture would otherwise leave a full set of derived state behind.
+    * Runs before each stage-once write and each fresh state dir. */
+  private def pruneStaleRoots(dir: String): Unit = {
+    def under(d: java.io.File) = Option(d.listFiles).toSeq.flatten
+    val own = new java.io.File(artifactRoot(dir))
+    val build = own.getParentFile
+    (under(build.getParentFile).filter(_.getName != build.getName) ++
+      under(build).filter(f => f.getName.startsWith(s"${corpusName(dir)}-") &&
+        f.getName != own.getName))
+      .foreach(JavaUtils.deleteRecursively)
+  }
 
   /** Placeholder in oracle SQL for the corpus's absolute artifact root:
     * oracles of entries whose trained state is parquet-persisted (the
@@ -117,18 +153,40 @@ object ArtifactStore {
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(resolveOracle(v, sfDir))}" }
       .mkString("{", ",", "}"))
 
-  /** Write `build` to the artifact path once — a finished write leaves
-    * `_SUCCESS`, which later sessions and JVMs take as the guard — and
-    * return the path. */
-  private def writeOnce(dir: String, name: String, build: => DataFrame): String = {
-    val path = artifactPath(dir, name)
-    if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-      pruneStaleRoots()
-      build.write.mode("overwrite")
-        .option("compression", "zstd").parquet(path)
+  /** The artifact path of `name`, written once by `write` (given the
+    * path to write to): any writer — parquet, CSV, JSON, ORC, a file copy,
+    * a loop of appends. `write` fills `<path>.partial`, emptied first of
+    * whatever a killed run left there; when it returns, `_SUCCESS` is
+    * written and the dir renamed into place, so a path without
+    * `_SUCCESS` was never finished and is rewritten. Serialized with
+    * [[memo]]'s builds. */
+  private[graft] def staged(dir: String, name: String)(write: String => Unit): String =
+    lock.synchronized {
+      val path = artifactPath(dir, name)
+      val done = Paths.get(path, "_SUCCESS")
+      if (!Files.exists(done)) {
+        pruneStaleRoots(dir)
+        val partial = s"$path.partial"
+        Seq(path, partial).foreach(p => JavaUtils.deleteRecursively(new java.io.File(p)))
+        write(partial)
+        Files.createDirectories(Paths.get(partial))
+        Files.write(Paths.get(partial, "_SUCCESS"), Array.emptyByteArray)
+        Files.move(Paths.get(partial), Paths.get(path))
+      }
+      path
     }
+
+  /** An empty directory for state that lives one invocation: a streaming
+    * query's checkpoint and sink start from nothing every time. */
+  private[graft] def fresh(dir: String, name: String): String = {
+    pruneStaleRoots(dir)
+    val path = artifactPath(dir, name)
+    JavaUtils.deleteRecursively(new java.io.File(path))
     path
   }
+
+  private def writeParquet(df: => DataFrame)(path: String): Unit =
+    df.write.option("compression", "zstd").parquet(path)
 
   /** The persisted scan of artifact `name`, built by `build` on first use. */
   private[graft] def artifact(s: SparkSession, dir: String, name: String)
@@ -142,7 +200,7 @@ object ArtifactStore {
       // re-reading a constant index table per pass is not part of any
       // operator's cost (round-8 bench showed +31% on the blocked
       // jaccard from exactly that re-read).
-      s.read.parquet(writeOnce(dir, name, build))
+      s.read.parquet(staged(dir, name)(writeParquet(build)))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
@@ -248,7 +306,8 @@ object ArtifactStore {
       Dedup.RepIndex(
         artifact(s, dir, "rep_map")(built.rep),
         artifact(s, dir, "rep_sigs")(built.repSigs),
-        artifact(s, dir, "rep_inverted")(built.inverted))
+        artifact(s, dir, "rep_inverted")(built.inverted),
+        Dedup.fingerprint(docSigs(s, dir)))
     }
 
   /** Trained IVF centroids persisted as `(bucket, centroid)` and
@@ -422,13 +481,10 @@ object ArtifactStore {
 
   /** The deterministic clip table staged as 4 range-partitioned parquet
     * files (`media_stream`) for the media file-stream source — four real
-    * micro-batches at maxFilesPerTrigger=1. Versioned like every other
-    * artifact: the clip bytes are BUILT from the video fixture formula,
-    * so an unbumped formula edit must not silently reuse stale blobs the
-    * way a verbatim events copy safely can. */
+    * micro-batches at maxFilesPerTrigger=1. */
   private[graft] def mediaStreamDir(s: SparkSession, dir: String): String =
-    memo(s, dir, "media_stream")(writeOnce(dir, "media_stream",
+    memo(s, dir, "media_stream")(staged(dir, "media_stream")(writeParquet(
       Multimodal.videoMediaTable(s, docs(s, dir), "doc_id")
         .select(col("media_id"), col("blob"))
-        .repartitionByRange(4, col("media_id"))))
+        .repartitionByRange(4, col("media_id")))))
 }

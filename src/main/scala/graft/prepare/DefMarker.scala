@@ -72,7 +72,7 @@ private[graft] object DefMarker {
     } finally jar.foreach(_.close())
   }
 
-  private def hex(digest: Array[Byte]): String = digest.map("%02x".format(_)).mkString
+  private[graft] def hex(digest: Array[Byte]): String = digest.map("%02x".format(_)).mkString
 
   private def fsOf(spark: SparkSession, root: Path): FileSystem =
     root.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -19,6 +19,13 @@ import org.apache.spark.sql.types._
   */
 object StreamOps {
 
+  /** The raw events schema a file stream over them declares (streams
+    * cannot infer one), `ts` as `tsType`. */
+  def eventsSchema(tsType: DataType = TimestampType): StructType = StructType(Seq(
+    StructField("event_id", LongType), StructField("ts", tsType),
+    StructField("user_id", LongType), StructField("event_type", StringType),
+    StructField("value", DoubleType), StructField("props", StringType)))
+
   /** Open a parquet directory/file as a stream. Schema must be supplied
     * (streaming sources cannot infer); nanos timestamps arrive as longs
     * and are converted like the batch path. */

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import org.apache.spark.sql.types._
+
+import graft.prepare.ArtifactStore
 
 /** Streaming performance bench, two artifacts:
   *
@@ -16,12 +17,9 @@ import org.apache.spark.sql.types._
   *    ops included: watermarked window agg,
   *    dropDuplicatesWithinWatermark, flatMapGroupsWithState
   *    sessionization, last-write upsert, checkpointed near-dup gate).
-  *    Entries with PERSISTENT checkpoints (stream_upsert,
-  *    stream_dedup_near) get their checkpoint + sink dirs deleted before
-  *    EVERY pass, warm included — with the checkpoint left in place,
-  *    AvailableNow finds zero new files and each "timed" pass would be a
-  *    no-op batch plus a sink re-read (round-12 advice; same integrity
-  *    bug class as the toRdd protocol fix).
+  *    Every invocation of a checkpointed entry (stream_upsert,
+  *    stream_dedup_near) starts from an empty checkpoint and sink, so
+  *    each timed pass processes the whole input.
   *
   * 2. Steady-state latency (`target/stream_latency.json`): the
   *    watermarked window agg and the FMGWS sessionizer run under
@@ -35,18 +33,11 @@ import org.apache.spark.sql.types._
   */
 object BenchStream {
 
-  private def deleteRec(path: java.io.File): Unit = {
-    if (path.isDirectory) path.listFiles().foreach(deleteRec)
-    path.delete()
-    ()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val passes = if (args.length > 1) args(1).toInt else 3
     val spark = graft.GraftSession.create("bench-stream")
 
-    val sfName = new java.io.File(sfDir).getName
     val inputRows = graft.sources.ParquetNanos
       .read(spark, s"$sfDir/events.parquet").count()
     // stream_dedup_near streams only the doc_id%10<2 subset (the "new
@@ -64,26 +55,19 @@ object BenchStream {
     val allDocRows = graft.sources.ParquetNanos
       .read(spark, s"$sfDir/documents.parquet").count()
 
-    // (entry, input-row base for rows/s, state dirs reset before EVERY
-    // pass — checkpoint+sink only, never the staged input fixtures)
-    val shapes: Seq[(String, Long, Seq[String])] = Seq(
-      ("stream_window_agg", inputRows, Nil),
-      ("stream_dedup", inputRows, Nil),
-      ("stream_upsert", inputRows,
-        Seq(s"target/tmp/stream_upsert_$sfName")),
-      ("stream_sessionize", inputRows, Nil),
-      ("stream_dedup_near", docRows,
-        Seq(s"target/tmp/stream_dedup_near_$sfName")),
-      ("stream_media_decode", allDocRows, Nil))
+    // (entry, input-row base for rows/s)
+    val shapes: Seq[(String, Long)] = Seq(
+      ("stream_window_agg", inputRows),
+      ("stream_dedup", inputRows),
+      ("stream_upsert", inputRows),
+      ("stream_sessionize", inputRows),
+      ("stream_dedup_near", docRows),
+      ("stream_media_decode", allDocRows))
 
     val qs = graft.SparkEntry.queries
-    val results = shapes.map { case (name, rows, resetDirs) =>
-      def reset(): Unit =
-        resetDirs.map(new java.io.File(_)).filter(_.exists()).foreach(deleteRec)
-      reset()
+    val results = shapes.map { case (name, rows) =>
       qs(name)(spark, sfDir).queryExecution.toRdd.count() // warm (JIT + source listing)
       val times = (1 to passes).map { _ =>
-        reset()
         val t0 = System.nanoTime()
         qs(name)(spark, sfDir).queryExecution.toRdd.count()
         (System.nanoTime() - t0) / 1e9
@@ -103,8 +87,8 @@ object BenchStream {
     Files.writeString(Paths.get("target/stream_bench.json"), json + "\n")
     println(json)
 
-    latencyPhase(spark, sfDir, sfName)
-    statePhase(spark, sfDir, sfName)
+    latencyPhase(spark, sfDir)
+    statePhase(spark, sfDir)
     spark.stop()
   }
 
@@ -113,21 +97,15 @@ object BenchStream {
     * per-batch latency is the progress log's triggerExecution duration
     * (includes source listing, state store commit, and sink write). */
   private def latencyPhase(spark: org.apache.spark.sql.SparkSession,
-                           sfDir: String, sfName: String): Unit = {
+                           sfDir: String): Unit = {
     import spark.implicits._
-    val stageDir = new java.io.File(s"target/tmp/events_stream16_$sfName")
-    if (!stageDir.exists()) {
+    val stageDir = ArtifactStore.staged(sfDir, "events_stream16") { p =>
       spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")
-        .repartitionByRange(16, col("event_id"))
-        .write.mode("overwrite").parquet(stageDir.toString)
+        .repartitionByRange(16, col("event_id")).write.parquet(p)
     }
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    def src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stageDir.toString)
+    def src = spark.readStream.schema(graft.streaming.StreamOps.eventsSchema())
+      .option("maxFilesPerTrigger", "1").parquet(stageDir)
 
     def run(name: String, build: () => org.apache.spark.sql.DataFrame,
             mode: OutputMode): (String, Double, Double, Int) = {
@@ -187,11 +165,9 @@ object BenchStream {
     * give increasing file mod times, which is the file source's
     * processing order. */
   private def statePhase(spark: org.apache.spark.sql.SparkSession,
-                         sfDir: String, sfName: String): Unit = {
+                         sfDir: String): Unit = {
     val nSlices = 24
-    val stageDir =
-      new java.io.File(s"target/tmp/events_timeslices_$sfName")
-    if (!stageDir.exists()) {
+    val stageDir = ArtifactStore.staged(sfDir, "events_timeslices") { p =>
       spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       val ev = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")
       val b = ev.agg(min(unix_millis(col("ts"))), max(unix_millis(col("ts"))))
@@ -201,15 +177,11 @@ object BenchStream {
         val a = lo + (hi - lo) * i / nSlices
         val z = lo + (hi - lo) * (i + 1) / nSlices
         ev.filter(unix_millis(col("ts")) >= a && unix_millis(col("ts")) < z)
-          .coalesce(1).write.mode("append").parquet(stageDir.toString)
+          .coalesce(1).write.mode("append").parquet(p)
       }
     }
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    def src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stageDir.toString)
+    def src = spark.readStream.schema(graft.streaming.StreamOps.eventsSchema())
+      .option("maxFilesPerTrigger", "1").parquet(stageDir)
 
     final case class BatchState(inputRows: Long, stateRows: Long,
                                 stateBytes: Long)

@@ -68,10 +68,7 @@ object MakeSfN {
       val dst = java.nio.file.Paths.get(s"$outDir/$name.parquet")
       java.nio.file.Files.move(part.toPath, dst,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      def rmRec(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmRec)); f.delete()
-      }
-      rmRec(new java.io.File(tmp))
+      org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(tmp))
       println(s"wrote $dst")
     }
 

@@ -639,6 +639,20 @@ class EngineSpec extends SparkSpec {
     assert(e2.cache.hits == h0 + 1 && first == second)
   }
 
+  test("result-cache hits lose no update under concurrent clients") {
+    val e2 = Engine.forDir(spark, sfDir)
+    val json = """{"select":["event_type",{"MAX":"value"}],"from":"events","group_by":["event_type"]}"""
+    e2.executeJson(json).collect()
+    val h0 = e2.cache.hits
+    val (threads, each) = (8, 100)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try (1 to threads).map(_ => pool.submit(new Runnable {
+      def run(): Unit = (1 to each).foreach(_ => e2.executeJson(json))
+    })).foreach(_.get())
+    finally pool.shutdown()
+    assert(e2.cache.hits == h0 + threads * each)
+  }
+
   test("runBatch CSV output is RFC 4180-quoted (commas, quotes, newlines)") {
     import SparkSpecBase.implicits._
     val df = Seq(("a,b", """say "hi""""), ("line1\nline2", "plain"))

@@ -40,15 +40,36 @@ class JaccardSpec extends SparkSpec {
   }
 
   test("jaccard native agrees between codegen and interpreted eval") {
-    // filter + projection duplication exercises the codegen path; a
-    // collect of the raw expression exercises interpreted eval
+    // the same filter + projection plan under each expression factory
+    // mode (whole-stage codegen off in the interpreted arm, which would
+    // otherwise compile the stage anyway); the local input is kept a
+    // relation, not folded on the driver, so each arm evaluates the
+    // kernel in its own mode
     val df = Seq(
       (Seq(1L, 2L, 3L, 4L), Seq(3L, 4L, 5L, 6L)),
       (Seq(10L), Seq(10L))).toDF("a", "b")
-    val viaPlan = df
-      .withColumn("j", JaccardSimilarity.jaccardNative(col("a"), col("b")))
-      .filter(col("j") >= 0.3).select(col("j")).collect().map(_.getDouble(0)).sorted
-    assert(viaPlan.toSeq === Seq(2.0 / 6.0, 1.0))
+    val confs = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage",
+      "spark.sql.optimizer.excludedRules")
+    val saved = confs.map(k => k -> spark.conf.getOption(k))
+    val excluded = (saved(2)._2.toSeq :+
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation").mkString(",")
+    try Seq("CODEGEN_ONLY", "NO_CODEGEN").foreach { mode =>
+      spark.conf.set(confs(0), mode)
+      spark.conf.set(confs(1), mode == "CODEGEN_ONLY")
+      spark.conf.set(confs(2), excluded)
+      val q = df
+        .withColumn("j", JaccardSimilarity.jaccardNative(col("a"), col("b")))
+        .filter(col("j") >= 0.3).select(col("j"))
+      val plan = q.queryExecution.executedPlan
+      assert(plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.FilterExec]), plan)
+      assert(plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]) ==
+        (mode == "CODEGEN_ONLY"), plan)
+      val viaPlan = q.collect().map(_.getDouble(0)).sorted
+      assert(viaPlan.toSeq === Seq(2.0 / 6.0, 1.0), mode)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("a native kernel given an uncastable input fails at analysis") {
@@ -257,6 +278,20 @@ class JaccardSpec extends SparkSpec {
     assert(famRows(Dedup.stopProfileFamilies(sigs, dfCap = 3,
         index = Some(idx)))
       === famRows(Dedup.stopProfileFamilies(sigs, dfCap = 3)))
+  }
+
+  test("a RepIndex used with another corpus's sigs fails loudly") {
+    val sigsA = Seq((1L, Seq(1L, 2L, 3L)), (2L, Seq(1L, 2L, 4L))).toDF("id", "hs")
+    val sigsB = Seq((1L, Seq(7L, 8L, 9L)), (2L, Seq(7L, 8L, 6L))).toDF("id", "hs")
+    val idx = Some(Dedup.repIndexFromSigs(sigsA))
+    Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+      Dedup.ngramJaccardPairsBlockedFromSigs(_, index = idx),
+      Dedup.stopProfilePairsFromSigs(_, index = idx),
+      Dedup.stopProfileFamilies(_, index = idx)).foreach { pass =>
+      pass(sigsA) // its own sigs pass
+      val e = intercept[IllegalArgumentException](pass(sigsB))
+      assert(e.getMessage.contains("another signature table"), e.getMessage)
+    }
   }
 
   test("signatures + FromSigs variants equal the text-based operators") {

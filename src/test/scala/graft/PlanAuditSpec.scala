@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Engine
@@ -47,8 +48,7 @@ class PlanAuditSpec extends SparkSpec {
     // box inside that range over the same layout
     val entry = SparkEntry.queries("scan_zorder_box")(spark, sfDir)
     assert(entry.queryExecution.sparkPlan.toString.contains("z_cell"))
-    val sf = new java.io.File(sfDir).getName.replace(".", "_")
-    val path = s"target/warehouse/$sf/events_zorder"
+    val path = graft.prepare.ArtifactStore.artifactPath(sfDir, "events_zorder")
     val t0 = java.time.Instant.parse("2024-01-08T00:00:00Z").getEpochSecond
     val t1 = java.time.Instant.parse("2024-01-13T00:00:00Z").getEpochSecond
     val df = graft.prepare.ZOrder.boxScan(spark, path, "user_id", "ts_sec",
@@ -267,9 +267,16 @@ class PlanAuditSpec extends SparkSpec {
       """{"select":["event_type",{"SUM":"value"}],"from":"events",
          "group_by":["event_type"]}""")
     assert(eng.lastRoute.toString.contains("Routed"))
-    val plan = physical(df)
-    assert(!plan.contains("events_stream") && !plan.contains("prepared/sf0.001/events"),
-      plan)
+    // every relation the query reads, against the fact and rollup dirs
+    // of the root the engine serves (a plan string truncates long
+    // locations; the analyzed plan still names a cached rollup's files)
+    val root = new java.io.File(SparkEntry.preparedRoot(spark, sfDir)).getCanonicalPath
+    val roots = df.queryExecution.analyzed.collect {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location.rootPaths
+    }.flatten.map(p => new java.io.File(p.toUri.getPath).getCanonicalPath)
+    assert(roots.nonEmpty && new java.io.File(root, "events").isDirectory, roots)
+    assert(roots.forall(_.startsWith(s"$root/aggregates/")), roots)
+    assert(!roots.exists(_.startsWith(s"$root/events")), roots)
   }
 
   /** A rollup route and a z route over the small prepared root, each
@@ -755,6 +762,7 @@ class PlanAuditSpec extends SparkSpec {
     // strategy decision itself lives in the BroadcastHashJoin node's
     // build side, which the static plan does contain.
     import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
     import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
     val facts = Seq("orders.parquet", "lineitem.parquet", "customer.parquet")

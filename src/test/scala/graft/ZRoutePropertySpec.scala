@@ -1,6 +1,8 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Properties}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.propBoolean
 
 import org.apache.spark.sql.functions.{col, max, min}
@@ -88,6 +90,19 @@ object ZRoutePropertySpec extends Properties("zroute-vs-scan") {
     Gen.choose(0, 400).map(v =>
       Seq(s"""{"col":"value","op":"gt","val":$v}""")))
 
+  /** The run's case count, and how many of its cases compared non-empty
+    * answers: parity over empty answers passes whatever the route drops. */
+  private val cases, nonEmpty = new AtomicInteger
+  @volatile private var runLength = Test.Parameters.default.minSuccessfulTests
+  override def overrideParameters(p: Test.Parameters): Test.Parameters = {
+    runLength = p.minSuccessfulTests
+    p
+  }
+  /** The least share of non-empty cases a run may have: a run over the
+    * spec fixture measured 0.81 (81 of 100), about five standard
+    * deviations above this. */
+  private val NonEmptyFloor = 0.6
+
   property("z-routed rows == scanned rows for random 2-D-bounded queries") =
     // NoShrink: shrinking drops conditions, which legitimately un-routes
     // the query and would report a vacuous counterexample
@@ -99,7 +114,12 @@ object ZRoutePropertySpec extends Properties("zroute-vs-scan") {
       val routeTaken = zEngine.lastRoute
       val got = routed.collect().map(_.getLong(0)).toSet
       val want = scanEngine.executeJson(json).collect().map(_.getLong(0)).toSet
+      if (want.nonEmpty) nonEmpty.incrementAndGet()
+      val n = cases.incrementAndGet()
+      // the run's last case carries the floor over all of its cases
+      val floor = n < runLength || nonEmpty.get >= NonEmptyFloor * n
       (routeTaken == Engine.ZRouted("z_user_ts")) :| s"route=$routeTaken" &&
-        (got == want) :| s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)} where=[$where]"
+        (got == want) :| s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)} where=[$where]" &&
+        floor :| s"only ${nonEmpty.get} of $n cases compared non-empty answers"
     }
 }
