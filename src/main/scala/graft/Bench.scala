@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main. Prints ONE JSON line:
@@ -25,6 +26,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * target/bench_detail.json so a flagged run can be audited after the
   * fact (stdout carries only the compact line — the driver's output-tail
   * capture truncated the inline detail in earlier rounds).
+  *
+  * Generated-code churn: each warm pass also counts the classes Spark
+  * compiled for it ([[compilesOf]]). Every entry's per-pass counts go
+  * to the detail file as "warm_compiles"; stdout's "warm_compiles" names
+  * only the entries whose last warm pass compiled anything. A stable
+  * plan compiles nothing once warm, so a count there is code churn at
+  * that scale (AQE can pick other joins at sf0.1 than the sf0.001 of
+  * `CodegenCacheSpec`).
   *
   * Measurement hygiene (round-6 lesson): the relational group is warmed
   * and measured COMPLETELY before any pipeline query runs, because the
@@ -138,6 +147,16 @@ object Bench {
     ((System.nanoTime() - start) / 1e9, rows, df)
   }
 
+  /** The result of `f` and the generated classes Spark compiled while it
+    * ran, on any thread of this JVM. A compile is a miss of Spark's
+    * generated-class cache, so a warm pass over a stable plan compiles
+    * none ([[GraftSession.CodegenCacheEntries]]). */
+  def compilesOf[T](f: => T): (T, Long) = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val result = f
+    (result, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_BENCH_ONLY: comma-separated headline subset, for scale
@@ -153,25 +172,32 @@ object Bench {
     SparkEntry.preparedEngine(spark, sfDir) // prepare phase (not timed per-query)
     val prepareSec = (System.nanoTime() - t0) / 1e9
 
-    def timed(name: String): Double =
-      try timeOne(spark, sfDir, name)._1
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
+    /** Wall seconds and generated classes compiled of one timed pass
+      * of `name`; (-1, -1) when it fails. */
+    def timed(name: String): (Double, Long) =
+      try {
+        val ((sec, _, _), compiled) = compilesOf(timeOne(spark, sfDir, name))
+        (sec, compiled)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); (-1.0, -1L) }
 
     /** Measure one group: untimed JIT-warmup pass, one timed cold pass,
       * then [[WarmPasses]] timed warm passes (pass-wise, so the passes
       * alternate through the whole group like real workloads do).
       * `release` runs between pipeline passes to drop operator-internal
-      * pooled persists — shared prepare-once tables survive by design. */
+      * pooled persists — shared prepare-once tables survive by design.
+      * Returns the cold seconds, and each entry's warm seconds and warm
+      * compiles per pass. */
     def measure(group: Seq[String], release: () => Unit)
-        : (Seq[(String, Double)], Map[String, Seq[Double]]) = {
+        : (Seq[(String, Double)], Map[String, Seq[Double]], Map[String, Seq[Long]]) = {
       group.foreach(timed) // untimed JIT warmup for this group only
       release()
-      val cold = group.map(n => n -> timed(n))
+      val cold = group.map(n => n -> timed(n)._1)
       val warm = (1 to WarmPasses).map { _ =>
         release(); group.map(n => n -> timed(n)).toMap
       }
-      (cold, group.map(n => n -> warm.map(_(n))).toMap)
+      (cold, group.map(n => n -> warm.map(_(n)._1)).toMap,
+        group.map(n => n -> warm.map(_(n)._2)).toMap)
     }
 
     val noop = () => ()
@@ -192,6 +218,11 @@ object Bench {
       n -> warmAll(n).filter(_ >= 0).minOption.getOrElse(-1.0))
     val coldExt = ext._1
     val warmAllExt: Map[String, Seq[Double]] = ext._2
+    // generated classes each warm pass compiled: 0 over a stable plan
+    // whose classes fit the codegen cache; churn shows as a count
+    val warmCompiles: Map[String, Seq[Long]] = rel._3 ++ pipe._3 ++ ext._3
+    val lastPassCompiles = (active ++ activeExt).flatMap(n =>
+      warmCompiles(n).lastOption.filter(_ > 0).map(n -> _))
     val warmBestExt = activeExt.map(n =>
       n -> warmAllExt(n).filter(_ >= 0).minOption.getOrElse(-1.0))
 
@@ -216,6 +247,8 @@ object Bench {
       xs.map { case (k, vs) =>
         "\"" + k + "\":" + vs.map(v => f"$v%.3f").mkString("[", ",", "]")
       }.mkString("{", ",", "}")
+    def fmtCounts(xs: Iterable[(String, String)]) =
+      xs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = warmBest.map(_._2).filter(_ >= 0).sum
     val coldTotal = cold.map(_._2).filter(_ >= 0).sum
     val totalExt = warmBestExt.map(_._2).filter(_ >= 0).sum
@@ -294,6 +327,8 @@ object Bench {
       s""""cold_total_sec":${f"$coldTotal%.3f"},"prepare_sec":${f"$prepareSec%.3f"},""" +
       group2 +
       s""""warm_passes":${fmtSeq((active ++ activeExt).map(n => n -> warmMap(n)))},""" +
+      s""""warm_compiles":${fmtCounts((active ++ activeExt).map(n =>
+        n -> warmCompiles(n).mkString("[", ",", "]")))},""" +
       (if (only.isEmpty) "" else
         s""""subset":${only.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},""") +
       s""""contended":${suspects.nonEmpty},""" +
@@ -310,6 +345,8 @@ object Bench {
     println(
       s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",""" +
       s""""queries":${fmt(warmBest)},""" +
+      s""""warm_compiles":${fmtCounts(lastPassCompiles.map { case (n, c) =>
+        n -> c.toString })},""" +
       group2Compact +
       s""""cold_total_sec":${f"$coldTotal%.3f"},"prepare_sec":${f"$prepareSec%.3f"},""" +
       (if (only.isEmpty) "" else

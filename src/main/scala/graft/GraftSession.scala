@@ -10,9 +10,45 @@ import org.apache.spark.sql.SparkSession
   *  - TIMESTAMP(NANOS) parquet interop (see [[graft.sources.ParquetNanos]]);
   *  - AQE on (runtime coalescing + skew-join splitting);
   *  - InferFiltersFromGenerate excluded (clones expensive generator-input
-  *    expressions into vacuous filters — see [[graft.functions.Staging]]).
+  *    expressions into vacuous filters — see [[graft.functions.Staging]]);
+  *  - a generated-class cache that holds the engine's whole working set
+  *    ([[CodegenCacheEntries]]), so a warm pass compiles nothing.
   */
 object GraftSession {
+
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100): a stable
+    * working set larger than the cache recompiles every class on every
+    * pass, although the same classes come back each time. Measured
+    * working sets (cache entries, counted as Janino compiles under a
+    * cache too large to evict; a class used on both sides compiles
+    * once for the driver's class loader and once for the tasks'): one
+    * `graft.Verify` run of all 202 entries at sf0.01 needs 1,715, so
+    * 4,000 covers it with 2x headroom; under the default, every warm
+    * pass of the 35 headline entries at sf0.001 recompiled 451 classes,
+    * under this size none. Memory at the end of that Verify run,
+    * default cache -> this one: metaspace 205 -> 218 MB, heap after GC
+    * 143 -> 192 MB (a cache key holds its class's source text).
+    * The cache is one per JVM and sized when Spark first generates
+    * code, from the session that does so: every session builder must
+    * carry this value ([[codegenConfs]]). Code that churns — a plan
+    * that emits new code for every query — is a bug a larger cache
+    * would only hide; `CodegenCacheSpec` fails on it. */
+  val CodegenCacheEntries: Int = 4000
+
+  /** The generated-code settings of every session (test sessions too):
+    *  - the class cache sized to [[CodegenCacheEntries]];
+    *  - no whole-stage codegen id in generated class names. AQE numbers
+    *    the stages it re-plans in the order their inputs finish, so the
+    *    same stage can be `...Stage3` in one pass and `...Stage13` in
+    *    the next: same code, new class text, a cache miss. Measured at
+    *    sf0.001 over the headline set: `dedup_ngram_blocked` recompiled
+    *    0-20 classes and `dedup_minhash` 0-4 per warm pass with the ids
+    *    in, and none for this reason with them out. The id stays in the
+    *    generated source's comment. */
+  val codegenConfs: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.codegen.useIdInClassName" -> "false")
 
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
@@ -68,6 +104,7 @@ object GraftSession {
       // real 100 TB partitions — the stock gate fires on its own.
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+      .config(codegenConfs)
       // root log level from context START (setLogLevel only applies
       // after init): keeps the ~90 lines of startup INFO out of the
       // driver's BENCH tail capture, where they crowded the one-line

@@ -112,9 +112,13 @@ object Prepare {
       .parquet(s"$outRoot/events")
 
     // 2. Rollup tables. Computed from the freshly written partitioned
-    //    layout (cheaper re-read: columnar + pruned) — each is one
-    //    partial-aggregate shuffle, output is tiny.
-    val fact = EventTime.withDerived(ParquetNanos.read(spark, s"$outRoot/events"))
+    //    layout (cheaper re-read: columnar + pruned); output is tiny. A
+    //    layout no larger than one scan split is read as one partition
+    //    (oneSplit), so each rollup is a one-task job with no shuffle
+    //    and the z write scans in one task; a larger layout keeps its
+    //    splits and each rollup is one partial-aggregate shuffle.
+    val fact = EventTime.withDerived(
+      ParquetNanos.oneSplit(ParquetNanos.read(spark, s"$outRoot/events")))
     defaultAggregates().foreach { d =>
       d.build(fact).write
         .mode(SaveMode.Overwrite)

@@ -22,17 +22,22 @@ import graft.{Bench, GraftSession, SparkEntry}
   * layouts, pipeline artifacts), then `passes` warm passes, all timed by
   * [[graft.Bench.timeOne]] with pooled dedup intermediates released
   * before each warm pass; the row count; the Spark jobs the last warm
-  * pass launched (a routed DSL query is one); the AQE-final
+  * pass launched (a routed DSL query is one) and the generated classes
+  * it compiled (0 once the entry's code is in Spark's class cache; more
+  * means the plan emits new code per pass); the AQE-final
   * shuffle-exchange count (the number `PlanFingerprintSpec` pins); the
-  * final plan's join/exchange/aggregate/scan skeleton and the operators
-  * that call a native kernel, with broadcast sizes; and the
+  * final plan's join/exchange/aggregate/scan skeleton, its cached
+  * subplans (`InMemoryTableScan`/`InMemoryRelation`: one relation read
+  * by two scans is computed once) and the operators that call a native
+  * kernel, with broadcast sizes; and the
   * effective value of each overridden conf. PLANS.md ("One dev probe")
   * maps each retired single-purpose probe to its recorded finding and
   * to the `Probe` command that reproduces its entry-level number. */
 object Probe {
 
   final case class Record(entry: String, coldS: Double, warmS: Seq[Double],
-                          rows: Long, jobs: Int, exchanges: Int, skeleton: Seq[String],
+                          rows: Long, jobs: Int, compiles: Long, exchanges: Int,
+                          skeleton: Seq[String],
                           broadcasts: Seq[String], confs: Seq[(String, String)])
 
   private val Usage = "usage: graft.tools.Probe <entry[,entry...]> <sfDir> [passes] " +
@@ -57,14 +62,16 @@ object Probe {
         val (coldS, rows, df) = Bench.timeOne(spark, sfDir, name)
         val warm = (1 to passes).map { _ =>
           graft.operators.Dedup.releaseIntermediates()
-          jobsOf(spark)(Bench.timeOne(spark, sfDir, name)._1)
+          val ((sec, compiles), jobs) =
+            jobsOf(spark)(Bench.compilesOf(Bench.timeOne(spark, sfDir, name)._1))
+          (sec, jobs, compiles)
         }
         val broadcasts = broadcastExchanges(df).map { b =>
           def metric(m: String) = b.metrics.get(m).fold(-1L)(_.value)
           s"rows=${metric("numOutputRows")} bytes=${metric("dataSize")}"
         }
-        Record(name, coldS, warm.map(_._1), rows, warm.last._2, shuffleExchanges(df),
-          skeleton(finalPlan(df)), broadcasts, confs)
+        Record(name, coldS, warm.map(_._1), rows, warm.last._2, warm.last._3,
+          shuffleExchanges(df), skeleton(finalPlan(df)), broadcasts, confs)
       }
     } finally previous.foreach { case (k, v) =>
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
@@ -130,7 +137,7 @@ object Probe {
   private def skeleton(plan: SparkPlan): Seq[String] =
     plan.toString.linesIterator.filter(l => l.contains("Join") ||
       l.contains("Exchange") || l.contains("HashAggregate") ||
-      l.contains("Sort ") || l.contains("FileScan") ||
+      l.contains("Sort ") || l.contains("FileScan") || l.contains("InMemory") ||
       l.contains("static_invoke(graft.")).toSeq
 
   /** One `key=value` conf override; anything else fails loudly. */
@@ -153,7 +160,8 @@ object Probe {
     try run(spark, names, positional(1), passes, overrides).foreach { r =>
       println(f"PROBE ${r.entry} cold=${r.coldS}%.3f s warm=" +
         r.warmS.map(t => f"$t%.3f").mkString("[", ",", "]") +
-        f" min=${r.warmS.min}%.3f s rows=${r.rows} jobs=${r.jobs} exchanges=${r.exchanges}")
+        f" min=${r.warmS.min}%.3f s rows=${r.rows} jobs=${r.jobs} " +
+        s"compiles=${r.compiles} exchanges=${r.exchanges}")
       r.confs.foreach { case (k, v) => println(s"  CONF $k = $v") }
       r.skeleton.foreach(l => println(s"  PLAN $l"))
       r.broadcasts.foreach(b => println(s"  BROADCAST $b"))

@@ -312,6 +312,18 @@ class PlanAuditSpec extends SparkSpec {
     assert(jobs == 2, s"$jobs Spark jobs for a batch of two routed queries")
   }
 
+  test("Prepare.run over a small fixture reads its fact layout as one split") {
+    // the layout write, then per rollup one job over the one-partition
+    // fact re-read, the z-layout write, and the stats over the rollups;
+    // a fact re-read in its file splits planned a multi-task scan and a
+    // shuffle stage per rollup (16 jobs at sf0.001)
+    val pinned = 11
+    val raw = graft.sources.ParquetNanos.read(spark, s"$sfDir/events.parquet")
+    val (_, jobs) = Probe.jobsOf(spark)(graft.prepare.Prepare.run(spark, raw,
+      "target/tmp/spec_prepare_jobs", zorder = graft.prepare.Prepare.defaultZOrder))
+    assert(jobs <= pinned, s"Prepare.run launched $jobs Spark jobs, pinned $pinned")
+  }
+
   test("a rollup larger than one scan split keeps its exchange plan and its answer") {
     val root = SparkEntry.preparedRoot(spark, sfDir)
     val rollupBytes = new java.io.File(s"$root/aggregates/agg_type_day_value")

@@ -130,6 +130,7 @@ class PlanFingerprintSpec extends SparkSpec {
     assert(r.confs == Seq("spark.sql.shuffle.partitions" -> "3"))
     assert(r.warmS.length == 1 && r.coldS > 0)
     assert(r.jobs >= 1, s"a warm pass that returns rows launched ${r.jobs} jobs")
+    assert(r.compiles == 0, s"a warm pass compiled ${r.compiles} generated classes")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions,
       "override not restored")
   }
