@@ -460,10 +460,13 @@ object AnalyticsEntries {
 
     // MERGE INTO a BUCKETED base snapshot — same semantics (and oracle)
     // as ext_merge_upsert, but the base lives in the layout Cdc's scale
-    // notes promise: bucketed on the merge key with bucket count ==
-    // spark.sql.shuffle.partitions, so the compacted delta arrives from
-    // its own compaction groupBy already hash-partitioned on the key and
-    // the full-outer join runs with ZERO exchange anywhere — the base is
+    // notes promise: bucketed on the merge key with bucket count == the
+    // width the delta's shuffle starts at (`numShufflePartitions`, which
+    // under GraftSession is AQE's initialPartitionNum, not
+    // spark.sql.shuffle.partitions: a narrower base is re-shuffled to the
+    // delta's width), so the compacted delta arrives from its own
+    // compaction groupBy already hash-partitioned on the key and the
+    // full-outer join runs with ZERO exchange anywhere — the base is
     // read co-located and the delta's single compaction shuffle is the
     // whole data movement. At 100 TB this is how a snapshot absorbs a
     // daily delta: bucketing is a one-time layout cost amortized over
@@ -476,7 +479,7 @@ object AnalyticsEntries {
           .filter(pmod(col("c_custkey"), lit(3)) =!= 0)
           .select(col("c_custkey").as("key"), col("c_acctbal").as("bal")),
         s"merge_base_bkt_$sf", "key",
-        s.conf.get("spark.sql.shuffle.partitions").toInt,
+        s.sessionState.conf.numShufflePartitions,
         ArtifactStore.artifactPath(dir, "merge_base_bkt"))
       val base = s.table(s"merge_base_bkt_$sf")
       val delta = Cdc.latestPerKeyAgg(tbl(s, dir, "orders"), Seq("o_custkey"),

@@ -30,13 +30,13 @@ object GraftSession {
     * default cache -> this one: metaspace 205 -> 218 MB, heap after GC
     * 143 -> 192 MB (a cache key holds its class's source text).
     * The cache is one per JVM and sized when Spark first generates
-    * code, from the session that does so: every session builder must
-    * carry this value ([[codegenConfs]]). Code that churns — a plan
+    * code, from the session that does so, and every session comes from
+    * [[builder]] ([[codegenConfs]]). Code that churns — a plan
     * that emits new code for every query — is a bug a larger cache
     * would only hide; `CodegenCacheSpec` fails on it. */
   val CodegenCacheEntries: Int = 4000
 
-  /** The generated-code settings of every session (test sessions too):
+  /** The generated-code settings of every session:
     *  - the class cache sized to [[CodegenCacheEntries]];
     *  - no whole-stage codegen id in generated class names. AQE numbers
     *    the stages it re-plans in the order their inputs finish, so the

@@ -79,21 +79,17 @@ object SparkEntry {
 
   /** Temp-view prefix unique per sf dir, so spark.sql entries never read a
     * view another dir's invocation registered. */
-  private def viewPrefix(dir: String): String =
+  private[graft] def viewPrefix(dir: String): String =
     "graft_" + dir.replaceAll("[^A-Za-z0-9]", "_") + "_"
   private val tpchViewsRegistered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def registerTpchViews(s: SparkSession, dir: String): Unit =
+  private[graft] def registerTpchViews(s: SparkSession, dir: String): Unit =
     if (tpchViewsRegistered.add(s.hashCode() + ":" + dir)) {
       Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem").foreach { t =>
         tbl(s, dir, t).createOrReplaceTempView(viewPrefix(dir) + t)
       }
     }
-  /** Test-only access (TpchSuiteSpec restates q21's EXISTS formulation). */
-  def registerTpchViewsForTest(s: SparkSession, dir: String): Unit =
-    registerTpchViews(s, dir)
-  def viewPrefixForTest(dir: String): String = viewPrefix(dir)
 
   // ------------------------------------------------------------- flagship
 

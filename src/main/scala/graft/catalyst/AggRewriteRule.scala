@@ -44,15 +44,16 @@ import graft.engine.{AggTableDef, AggregateRouter}
   * conjunct constrains `a` (every DSL op already rejects nulls). Any other
   * shape (PLANS.md "One containment proof" lists them) leaves the plan
   * untouched, and nothing throws out of the optimizer.
+  *
+  * One install route: [[GraftExtensions]] injects the rule into every
+  * session [[graft.GraftSession]] builds, among the operator-optimization
+  * rules. It stays inert until [[AggRewriteRule.configure]] points that
+  * session's [[AggRewriteRule.Registry]] at a prepared layout, and the
+  * registry counts the session's rewrites.
   */
 case class AggRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
 
   private val reg = AggRewriteRule.registryFor(spark)
-
-  private val rewrites = new java.util.concurrent.atomic.AtomicLong
-
-  /** Count of successful rewrites (for tests/inspection). */
-  def fired: Long = rewrites.get
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val path = reg.factPath.getOrElse(return plan)
@@ -68,7 +69,7 @@ case class AggRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] with Pr
     sub <- Try(AggregateRouter.executeOn(q, d, residual, reg.rollupLoader(d.name))
       .queryExecution.analyzed).toOption
   } yield {
-    rewrites.incrementAndGet()
+    reg.rewrites.incrementAndGet()
     // zip stops at agg.output: a COUNT(*) added by translate is dropped
     Project(agg.output.zip(sub.output).map { case (o, s) =>
       Alias(if (s.dataType == o.dataType) s else Cast(s, o.dataType), o.name)(exprId = o.exprId)
@@ -188,11 +189,16 @@ case class AggRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] with Pr
 object AggRewriteRule {
 
   /** Mutable per-session registry the rule reads (extensions are
-    * installed at session build time, before any layout exists). */
+    * installed at session build time, before any layout exists), and
+    * the session's count of successful rewrites. */
   final class Registry {
     @volatile var factPath: Option[String] = None
     @volatile var defs: Seq[AggTableDef] = Nil
     @volatile var rollupLoader: String => DataFrame = null
+    private[catalyst] val rewrites = new java.util.concurrent.atomic.AtomicLong
+
+    /** Count of successful rewrites in this session (for tests/inspection). */
+    def fired: Long = rewrites.get
   }
 
   private val registries = new java.util.concurrent.ConcurrentHashMap[SparkSession, Registry]()
@@ -200,28 +206,14 @@ object AggRewriteRule {
   def registryFor(spark: SparkSession): Registry =
     registries.computeIfAbsent(spark, _ => new Registry)
 
-  /** Install the rule on an existing session (experimental-methods route —
-    * equivalent to SparkSessionExtensions.injectOptimizerRule but usable
-    * after session construction). Idempotent. */
-  def install(spark: SparkSession): AggRewriteRule = {
-    val existing = spark.experimental.extraOptimizations
-      .collectFirst { case r: AggRewriteRule => r }
-    existing.getOrElse {
-      val rule = AggRewriteRule(spark)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ rule
-      rule
-    }
-  }
-
-  /** Point the rule at a prepared layout. */
+  /** Point the rule [[GraftExtensions]] injected into `spark` at a
+    * prepared layout; other sessions are left as they are. */
   def configure(spark: SparkSession, factPath: String,
-                defs: Seq[AggTableDef], loader: String => DataFrame): AggRewriteRule = {
-    val rule = install(spark)
+                defs: Seq[AggTableDef], loader: String => DataFrame): Registry = {
     val reg = registryFor(spark)
     reg.factPath = Some(factPath)
     reg.defs = defs
     reg.rollupLoader = loader
-    rule
+    reg
   }
 }

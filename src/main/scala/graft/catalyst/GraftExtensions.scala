@@ -2,21 +2,21 @@ package graft.catalyst
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** SparkSessionExtensions entry point — the idiomatic install route for
-  * the engine's Catalyst extensions:
+/** SparkSessionExtensions entry point — the one install route for the
+  * engine's Catalyst extensions. [[graft.GraftSession.builder]] applies
+  * it to every session, tests' included:
   *
   * {{{
   *   spark.sql.extensions=graft.catalyst.GraftExtensions
-  *   // or
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
+  *   // or, on a session builder
+  *   builder.withExtensions(new GraftExtensions)
   * }}}
   *
-  * Injects [[AggRewriteRule]] into the optimizer; the rule stays inert
-  * until [[AggRewriteRule.configure]] points it at a prepared layout
-  * (extensions are applied at session build time, before any layout
-  * exists — the per-session registry bridges that gap).
-  * [[AggRewriteRule.install]] remains available for sessions built
-  * without extensions.
+  * Injects [[AggRewriteRule]] into the optimizer, one instance per
+  * session; the rule stays inert until [[AggRewriteRule.configure]]
+  * points that session's registry at a prepared layout (extensions are
+  * applied at session build time, before any layout exists — the
+  * per-session registry bridges that gap and counts the rewrites).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
@@ -31,7 +31,7 @@ object GraftExtensions {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-  val cosineSimDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+  private val cosineSimDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("cosine_sim"),
     new ExpressionInfo(classOf[graft.functions.CosineSimilarity].getName,
       null, "cosine_sim",

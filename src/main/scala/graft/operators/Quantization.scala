@@ -76,27 +76,16 @@ object Quantization {
     * cutoffs — restates exactly in SQL: this is the fully-hash-verified
     * member of the quantized-ANN family.
     *
-    * This convenience form trains + encodes inline; the production shape
-    * is [[int8TopKFromCodes]] over a WRITE-TIME-persisted code column
-    * (the round-16 judge's finding #2: re-encoding the corpus per query
-    * through interpreted HOFs was the one comparable-workload bench row
-    * >2x its DuckDB twin — quantization is prepare-phase work, paid once). */
-  def int8TopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-               vecCol: String, k: Int, refine: Int = 4): DataFrame = {
-    val ranges = trainRanges(corpus, vecCol)
-    val codes = corpus.select(col(idCol).as("n_id"),
-      encode(col(vecCol), ranges).as("codes"))
-    int8TopKFromCodes(codes, corpus, queries, idCol, vecCol, k, ranges, refine)
-  }
-
-  /** [[int8TopK]] from a pre-encoded code table `codes` (n_id, codes) —
-    * the production layout: the scan reads the 4x-smaller code column
-    * only; the float column is touched exclusively by the refine*k
-    * re-rank join. Per-pair scoring is ONE native fused loop
-    * ([[graft.functions.CosineSimilarity]] on the decoded-double /
-    * query-double arrays — bit-identical to the three separate
-    * index-order folds it replaces); the interpreted decode HOF runs
-    * once per CORPUS ROW, below the broadcast join, never per pair. */
+    * The codes come from a pre-encoded code table `codes` (n_id, codes)
+    * persisted at WRITE time (re-encoding the corpus per query through
+    * interpreted HOFs made this entry the one comparable-workload bench
+    * row >2x its DuckDB twin — quantization is prepare-phase work, paid
+    * once), so the scan reads the 4x-smaller code column only; the float column is touched
+    * exclusively by the refine*k re-rank join. Per-pair scoring is ONE
+    * native fused loop ([[graft.functions.CosineSimilarity]] on the
+    * decoded-double / query-double arrays — bit-identical to the three
+    * separate index-order folds it replaces); the interpreted decode HOF
+    * runs once per CORPUS ROW, below the broadcast join, never per pair. */
   def int8TopKFromCodes(codes: DataFrame, corpus: DataFrame,
                         queries: DataFrame, idCol: String, vecCol: String,
                         k: Int, ranges: Array[(Double, Double)],

@@ -85,14 +85,6 @@ object TextAnalysis {
   def cjkCount(text: Column): Column =
     regexp_count(text, lit("[\\x{4e00}-\\x{9fff}]"))
 
-  /** Count of ASCII punctuation characters. */
-  def punctCount(text: Column): Column =
-    regexp_count(text, lit("[\\p{Punct}]"))
-
-  /** Count of digit characters. */
-  def digitCount(text: Column): Column =
-    regexp_count(text, lit("[0-9]"))
-
   private val enStop = Seq("the", "and", "of", "to", "in", "is", "that")
   private val langMarkers: Seq[(String, Seq[String])] = Seq(
     "de" -> Seq("der", "und", "die", "nicht", "das"),
@@ -360,15 +352,5 @@ object TextAnalysis {
     Relational.topKPerGroup(scored, Seq("id"),
         Seq(("tfidf", true), ("token", false)), topPerDoc)
       .select(col("id"), col("token"), round(col("tfidf"), 4).as("tfidf"))
-  }
-
-  /** Convenience: full per-document text-analysis projection. */
-  def analyze(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    df.withColumn("n_tokens", tokenCount(t))
-      .withColumn("n_tokens_bpe", tokenCountBpe(t))
-      .withColumn("lang_pred", langId(t))
-      .withColumn("quality", qualityScore(t))
-      .withColumn("fp_md5", fingerprintMd5(t))
   }
 }

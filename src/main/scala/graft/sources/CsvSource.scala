@@ -4,26 +4,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** CSV ingestion, both reference styles (SURVEY §2.1 S1/S2).
+/** CSV ingestion in the reference's permissive style (SURVEY §2.1 S2;
+  * the S1 strict read is `s1_csv_strict`'s own schema'd read).
   *
   * Raw reference input is `events_part_*.csv` with NULLs encoded as either
   * the empty string or the literal "null" (prepare_optimized.py:53-54,
   * baseline/main.py:68,70). Spark's csv reader takes a single nullValue,
-  * so the strict reader handles "" (default) and the permissive reader
+  * so a strict read handles "" (default) and the permissive reader
   * reproduces the baseline's all-VARCHAR + TRY_CAST pipeline
   * (baseline/main.py:39-73): read everything as string, map both null
   * encodings to NULL, then cast — a failed cast yields NULL, exactly
   * DuckDB's TRY_CAST.
   */
 object CsvSource {
-
-  /** S1: schema'd read, "" and "null" both as NULL via nullValue. */
-  def readStrict(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read
-      .schema(schema)
-      .option("header", "true")
-      .option("nullValue", "null") // "" is additionally treated as null for non-string types
-      .csv(path)
 
   /** S2: all-VARCHAR + TRY_CAST-style permissive read. Handles both null
     * encodings for every type including strings, and never throws on

@@ -17,13 +17,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Test-only: materialize the optimizer rules an extensions object
-    * would inject into a session (buildOptimizerRules is private[sql]). */
-  def builtOptimizerRules(
-      ext: org.apache.spark.sql.SparkSessionExtensions,
-      session: org.apache.spark.sql.SparkSession)
-      : Seq[org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
-    ext.buildOptimizerRules(session.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
 }

@@ -218,13 +218,14 @@ object DslPropertySpec extends Properties("dsl-vs-sql") {
   // ---- API over the prepared fact parquet, with the Catalyst rule
   // ---- configured, is rewritten exactly when the DSL routes
 
-  /** The rule pointed at the prepared layout, and its fact table read
-    * straight from parquet (no catalog, no derived columns). */
-  private lazy val ruleAndFact: (AggRewriteRule, DataFrame) = {
+  /** The session's rule pointed at the prepared layout (its registry
+    * counts the rewrites), and its fact table read straight from
+    * parquet (no catalog, no derived columns). */
+  private lazy val ruleAndFact: (AggRewriteRule.Registry, DataFrame) = {
     val root = SparkEntry.preparedRoot(spark, SparkSpecBase.sfDir)
-    val rule = AggRewriteRule.configure(spark, s"$root/events",
+    val reg = AggRewriteRule.configure(spark, s"$root/events",
       Prepare.defaultAggregates(), name => spark.read.parquet(s"$root/aggregates/$name"))
-    (rule, spark.read.parquet(s"$root/events"))
+    (reg, spark.read.parquet(s"$root/events"))
   }
 
   /** A routable query, half the time with one residual on a non-key
@@ -249,13 +250,13 @@ object DslPropertySpec extends Properties("dsl-vs-sql") {
       val prepared = SparkEntry.preparedEngine(spark, SparkSpecBase.sfDir)
       val routed = prepared.execute(q)
       val didRoute = prepared.lastRoute.toString.contains("Routed")
-      val (rule, fact) = ruleAndFact
-      val before = rule.fired
+      val (reg, fact) = ruleAndFact
+      val before = reg.fired
       val viaApi = Compiler.compileOn(spark, q, fact)
       val isFolded = viaApi.queryExecution.optimizedPlan.collectFirst {
         case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
       }.isEmpty
-      val fired = rule.fired > before // read after optimization ran the rule
+      val fired = reg.fired > before // read after optimization ran the rule
       if (isFolded) println(s"CATALYST-FOLDED #${folded.incrementAndGet()} query=$q")
       val scanned = engine.execute(q)
       val ok = (isFolded || fired == didRoute) &&

@@ -454,9 +454,10 @@ class PlanAuditSpec extends SparkSpec {
 
   test("bucketed-base merge/upsert: zero exchange on the base side") {
     // the 100 TB merge plan Cdc's scale notes promise: the snapshot is
-    // bucketed on the merge key (bucket count == shuffle partitions), so
-    // the full-outer join reads the base co-located and the only data
-    // movement in the whole plan is the delta's own compaction shuffle
+    // bucketed on the merge key (bucket count == the width the delta's
+    // shuffle starts at), so the full-outer join reads the base
+    // co-located and the only data movement in the whole plan is the
+    // delta's own compaction shuffle
     // exchanges only exist post-EnsureRequirements, so audit the
     // EXECUTED (AQE-final) plan — sparkPlan never contains them
     val df = SparkEntry.queries("ext_merge_upsert_bucketed")(spark, sfDir)

@@ -14,12 +14,12 @@ import graft.tools.Probe
   * fix or a justified re-pin with the reasoning in the commit.
   *
   * Counts are AQE-final (executed first) at sf0.001 under the shared
-  * test session, with pooled dedup intermediates dropped first so suite
+  * test session, which is the shipped [[GraftSession.builder]] session
+  * at 8 cores, with pooled dedup intermediates dropped first so suite
   * ordering cannot change which upstream stages appear as cached scans.
-  * Regenerate with `runMain graft.tools.Probe <headline entries>
-  * <sf0.001 dir> 1` (its `exchanges=` field). The probe's session confs
-  * can read higher (ext_merge_upsert_bucketed: 2 against its pin of 1,
-  * see its pin); a count is a regression only when this spec fails. */
+  * Regenerate with `SPARK_GRAFT_CPUS=8 runMain graft.tools.Probe
+  * <headline entries> <sf0.001 dir> 1` (its `exchanges=` field), which
+  * builds the identical session. */
 class PlanFingerprintSpec extends SparkSpec {
 
   private val pinned: Map[String, Int] = Map(
@@ -57,11 +57,11 @@ class PlanFingerprintSpec extends SparkSpec {
     "ext_funnel" -> 2,
     "ext_global_agg" -> 0,
     "ext_merge_upsert" -> 2,
-    // a GraftSession probe reads 2: its
-    // spark.sql.adaptive.coalescePartitions.initialPartitionNum (8 x
-    // cores) shuffles the delta side wider than the table's
-    // shuffle.partitions buckets, so the bucketed base side re-shuffles
-    // too; the probe with that conf set to the core count reads 1
+    // the delta's compaction shuffle only: the base is bucketed at the
+    // width that shuffle starts at (AQE's initialPartitionNum, 8 x
+    // cores), so the merge reads it co-located; bucketed at
+    // shuffle.partitions (the core count), the base re-shuffled and
+    // this read 2
     "ext_merge_upsert_bucketed" -> 1,
     "ext_moving_avg" -> 1,
     "ext_pack_sequences" -> 1,

@@ -4,21 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all Spark-backed suites (one JVM-wide
-  * session — creating one per suite would dominate test wall-clock). */
+  * session — creating one per suite would dominate test wall-clock).
+  * It is the session production ships, [[GraftSession.builder]] with
+  * its extensions and confs, at a fixed 8 cores so plan pins do not
+  * depend on the machine. */
 object SparkSpecBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config(GraftSession.codegenConfs)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder("8").appName("graft-tests").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -94,8 +94,8 @@ class TpchSuiteSpec extends SparkSpec {
   }
 
   test("q21 aggregate decomposition equals the correlated EXISTS formulation") {
-    SparkEntry.registerTpchViewsForTest(spark, sfDir)
-    val v = SparkEntry.viewPrefixForTest(sfDir)
+    SparkEntry.registerTpchViews(spark, sfDir)
+    val v = SparkEntry.viewPrefix(sfDir)
     val exists = spark.sql(
       s"""SELECT s_name, count(*) AS numwait FROM ${v}supplier s
           JOIN ${v}lineitem l1 ON s.s_suppkey = l1.l_suppkey
